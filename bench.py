@@ -232,22 +232,16 @@ HEADLINE = [
     # the in-gate refit comparison is part of the gated query, so the
     # benched cost includes it) and Lee-et-al exact substring dedup
     # (two-phase hash-lossless 50-gram detection + island merge +
-    # HOF-fold rewrite). docs_jpeg_roundtrip_stats stays out for the
-    # embedding_dup_clusters reason: its wall is the Python JPEG codec
-    # over a FIXED 512-doc fixture — codec speed, not engine
-    # throughput, and invariant to sf — it stays driver-gated for
-    # correctness instead.
+    # HOF-fold rewrite).
     "embedding_pq_index_serve",
     "docs_exact_substring_dedup",
     # round-8 continuation (appended): the distributed BPE trainer
     # (8 vocab-bounded merge rounds) and DSIR importance selection —
-    # both engine-throughput queries that scale with sf. The PNG,
-    # GIF and ADPCM round-trip gates stay out for the JPEG reason:
-    # fixed 512-doc codec fixtures, sf-invariant, driver-gated for
-    # correctness instead. docs_bpe_encode_stats stays out because
-    # its wall is ~85% the trainer already benched below (encode
-    # itself is one vocab-bounded join, measured by its own gate);
-    # benching it would double-count training.
+    # both engine-throughput queries that scale with sf.
+    # docs_bpe_encode_stats stays out because its wall is ~85% the
+    # trainer already benched below (encode itself is one
+    # vocab-bounded join, measured by its own gate); benching it would
+    # double-count training.
     "docs_bpe_train_merges",
     "docs_dsir_topk_select",
 ]

@@ -6,15 +6,9 @@ shape, ``mapInPandas`` signature, partitioning behavior. Decode status
 by format: uncompressed 24-bit BMP and PCM16 WAV decode FOR REAL
 (stdlib struct + numpy — ``decode_image_real`` / ``decode_audio_real``
 below, round-trip-tested against the in-repo encoders, with a
-dead-letter quarantine mode for corrupt payloads); compressed JPEG /
-PNG / GIF / IMA-ADPCM decode FOR REAL since round 8 (operators/
-jpeg.py, png.py, gif.py, adpcm.py); MPEG-1 Audio Layer I decodes FOR
-REAL to the exact subband domain since round 9 (operators/mpeg1.py —
-PCM synthesis alone stays stubbed pending the normative ISO Table
-3-B.3 window, unavailable here). Still honestly stubbed end-to-end:
-MP3 (Layer III Huffman/IMDCT) and H.264 — ``decode_image_meta`` keeps
-the documented deterministic fake for those; swapping it for
-Pillow/av is a one-function change.
+dead-letter quarantine mode for corrupt payloads). Every other format
+goes through ``decode_image_meta``'s documented deterministic fake;
+swapping it for Pillow/av is a one-function change.
 
 At 100 TB: binary payloads dominate row size, so these operators run
 ``mapInPandas`` (Arrow-batched, streaming per partition — never

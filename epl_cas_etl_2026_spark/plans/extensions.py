@@ -9006,202 +9006,6 @@ def docs_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL-JPEG ROUND-TRIP under the hard gate (round-8; operators/jpeg.py):
-# deterministic flat-color JPEGs are encoded in-plan (mapInPandas, one
-# baseline-JFIF payload per doc: luma L = doc_id*37 % 256, dims
-# 8+doc_id%9 × 8+doc_id%7 — non-MCU-multiple on purpose), then decoded
-# by the REAL baseline decoder (Huffman → dequant → IDCT → luma
-# stats). The oracle is EXACT arithmetic, not a re-implementation:
-# a flat block quantizes to a DC-only spectrum, so the decoded value
-# is v = clip(q00·round(8(L−128)/q00)/8 + 128, 0, 255) with q00 = 5 at
-# quality 85 — SQL-computable per doc. Tie-safety: 8(L−128)/5 has
-# fractional part in {0,±.2,±.4,±.6,±.8}, never .5, so numpy
-# nearest-rounding and SQL ROUND agree for every L; v/255·1000 can
-# never land exactly on a +0.5 floor boundary (v has 1/8 granularity;
-# (102k+51)/400 is never ≡ 0 mod 50/400). The doc_id < 512 cap bounds
-# fixture GENERATION (the decode itself is scan-stage parallel at any
-# scale); padding is edge-replicate, so flat stays flat and the
-# non-multiple dims still decode to the exact model value.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_jpeg_roundtrip_stats",
-    """
-    WITH d AS (
-      SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(doc_id * 37 % 256 AS BIGINT) AS L,
-             CAST(8 + doc_id % 9 AS BIGINT) AS w,
-             CAST(8 + doc_id % 7 AS BIGINT) AS h
-      FROM documents WHERE doc_id < 512
-    ),
-    v AS (
-      SELECT doc_id, w, h,
-             LEAST(GREATEST(
-               5.0 * ROUND(8.0 * (L - 128) / 5.0, 0) / 8.0 + 128.0,
-               0.0), 255.0) AS vv
-      FROM d
-    )
-    SELECT CAST(doc_id % 8 AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(w) AS BIGINT) AS sum_width,
-           CAST(SUM(h) AS BIGINT) AS sum_height,
-           CAST(SUM(CAST(FLOOR(vv / 255.0 * 1000.0 + 0.5) AS BIGINT))
-                AS BIGINT) AS sum_luma_milli,
-           CAST(SUM(3) AS BIGINT) AS sum_components
-    FROM v GROUP BY 1 ORDER BY 1
-    """,
-)
-def docs_jpeg_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.jpeg import (
-        decode_jpeg_real,
-        encode_jpeg_baseline,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(F.col("doc_id") < 512)
-    )
-
-    def enc(it):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                L = int(d) * 37 % 256
-                w = 8 + int(d) % 9
-                h = 8 + int(d) % 7
-                img = _np.full((h, w, 3), float(L))
-                payloads.append(
-                    encode_jpeg_baseline(w, h, rgb_rows=img, quality=85)
-                )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    enc_df = docs.mapInPandas(enc, "doc_id long, payload binary")
-    dec = decode_jpeg_real(enc_df, id_col="doc_id", on_error="fail")
-    return (
-        dec.groupBy((F.col("id") % 8).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("width").cast("long").alias("sum_width"),
-            F.sum("height").cast("long").alias("sum_height"),
-            F.sum("mean_luma_milli").cast("long").alias("sum_luma_milli"),
-            F.sum("n_components").cast("long").alias("sum_components"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
-# REAL-PNG ROUND-TRIP under the hard gate (round-8; operators/png.py):
-# deterministic RGB gradient images — pixel (r, c) of doc d has
-# s = (d*7 + r*3 + c*5) % 256, channels (s, s+85, s+170 mod 256),
-# dims (5 + d%12) × (5 + d%11) — are encoded in-plan with ADAPTIVE
-# per-row filter selection (gradients force Sub/Up/Paeth rows, so the
-# gate exercises real filter reconstruction, not just filter 0) and
-# Adam7 interlace on every doc_id % 3 == 0 (all seven passes
-# reassembled in-gate). PNG is lossless, so the oracle is the
-# generation arithmetic itself: DuckDB recomputes the per-pixel luma
-# accumulator Σ(299R + 587G + 114B) over generate_series — EXACT
-# integers end to end, no rounding anywhere, hence no tie-safety
-# argument needed at all (the strongest oracle form a codec gate can
-# have; the JPEG gate needs a quantization model, this needs none).
-# doc_id < 512 bounds fixture GENERATION only — the decode itself is
-# scan-stage parallel at any corpus size.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_png_roundtrip_stats",
-    """
-    WITH d AS (
-      SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(5 + doc_id % 12 AS BIGINT) AS w,
-             CAST(5 + doc_id % 11 AS BIGINT) AS h
-      FROM documents WHERE doc_id < 512
-    ),
-    px AS (
-      SELECT d.doc_id, d.w, d.h,
-             (d.doc_id * 7 + r.r * 3 + c.c * 5) % 256 AS s
-      FROM d
-      JOIN generate_series(0, 14) AS r(r) ON r.r < d.h
-      JOIN generate_series(0, 15) AS c(c) ON c.c < d.w
-    ),
-    per_doc AS (
-      SELECT doc_id, w, h,
-             SUM(299 * s + 587 * ((s + 85) % 256)
-                 + 114 * ((s + 170) % 256)) AS luma_sum,
-             COUNT(*) AS n_px
-      FROM px GROUP BY doc_id, w, h
-    )
-    SELECT CAST(doc_id % 8 AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(w) AS BIGINT) AS sum_width,
-           CAST(SUM(h) AS BIGINT) AS sum_height,
-           CAST(SUM(luma_sum) AS BIGINT) AS sum_luma,
-           CAST(SUM(n_px) AS BIGINT) AS sum_px
-    FROM per_doc GROUP BY 1 ORDER BY 1
-    """,
-)
-def docs_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.png import (
-        decode_png_real,
-        encode_png,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(F.col("doc_id") < 512)
-    )
-
-    def enc(it):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 12, 5 + d % 11
-                rr, cc = _np.mgrid[0:h, 0:w]
-                s = (d * 7 + rr * 3 + cc * 5) % 256
-                img = _np.stack(
-                    [s, (s + 85) % 256, (s + 170) % 256], axis=-1
-                ).astype(_np.uint8)
-                payloads.append(
-                    encode_png(
-                        w, h, pixels=img, interlace=(d % 3 == 0),
-                        filter_mode="adaptive",
-                    )
-                )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    enc_df = docs.mapInPandas(enc, "doc_id long, payload binary")
-    dec = decode_png_real(enc_df, id_col="doc_id", on_error="fail")
-    return (
-        dec.groupBy((F.col("id") % 8).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("width").cast("long").alias("sum_width"),
-            F.sum("height").cast("long").alias("sum_height"),
-            F.sum("luma_sum").cast("long").alias("sum_luma"),
-            F.sum("n_px").cast("long").alias("sum_px"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
 # DISTRIBUTED BPE TOKENIZER TRAINING (round-8). docs_bpe_merge_step
 # gates ONE merge over the word stream; this is the real trainer
 # shape: classic character-level BPE (Sennrich et al. 2016) over the
@@ -9663,141 +9467,6 @@ def docs_dsir_topk_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_w.select(
         "doc_id", "lang", "source", "n_grams", "weight_q"
     ).orderBy(F.desc("weight_q"), "doc_id").limit(_DSIR_K)
-
-
-# ---------------------------------------------------------------------------
-# REAL-ADPCM ROUND-TRIP under the hard gate (round-8;
-# operators/adpcm.py): deterministic IMA-ADPCM WAV payloads are built
-# in-plan DIRECTLY from nibble streams (nib_i = (d + 7i) % 16, i<64,
-# predictor seed d*331 % 4096 − 2048, step-index seed d % 89 — every
-# one of the 89 step-table rows is seeded by some doc), decoded by the
-# REAL decoder (container parse → block header → nibble unpack →
-# integer state machine), and compared against an oracle that REPLAYS
-# THE STATE MACHINE ITSELF: the IMA recurrence is pure integer
-# shifts/adds/clamps, so DuckDB runs it exactly as a list_reduce fold
-# with the public step/index tables as literals. No rounding model,
-# no float anywhere — the oracle is a genuine third implementation of
-# the decoder, stronger than the JPEG gate's closed-form model. The
-# ENCODER (sample→nibble quantizer) is validated in
-# tests/test_adpcm_real.py via round-trip SNR + an independent
-# reference implementation; the fixture-from-nibbles path keeps the
-# GATE exact. doc_id < 512 bounds fixture generation only.
-# ---------------------------------------------------------------------------
-def _adpcm_oracle() -> str:
-    from epl_cas_etl_2026_spark.operators.adpcm import (
-        INDEX_TABLE,
-        STEP_TABLE,
-    )
-
-    stv = "[" + ", ".join(str(v) for v in STEP_TABLE) + "]"
-    itv = "[" + ", ".join(str(v) for v in INDEX_TABLE) + "]"
-    # State rides a flat BIGINT list [idx, p0, p1, ..., pk] — NOT a
-    # struct: DuckDB v1.0.0 misbinds struct-field accumulator
-    # references inside list_reduce (each field expression sees a
-    # different accumulator snapshot — probed, reproducible), while
-    # flat-list accumulators fold correctly.
-    step = "st.stv[acc[1] + 1]"
-    diff = (
-        f"({step} // 8"
-        f" + CASE WHEN (x[1] & 4) <> 0 THEN {step} ELSE 0 END"
-        f" + CASE WHEN (x[1] & 2) <> 0 THEN {step} // 2 ELSE 0 END"
-        f" + CASE WHEN (x[1] & 1) <> 0 THEN {step} // 4 ELSE 0 END)"
-    )
-    p2 = (
-        "LEAST(GREATEST(CASE WHEN (x[1] & 8) <> 0"
-        f" THEN acc[len(acc)] - {diff}"
-        f" ELSE acc[len(acc)] + {diff} END,"
-        " -32768), 32767)"
-    )
-    i2 = "LEAST(GREATEST(acc[1] + st.itv[x[1] + 1], 0), 88)"
-    return f"""
-    WITH st AS (
-      SELECT CAST({stv} AS BIGINT[]) AS stv,
-             CAST({itv} AS BIGINT[]) AS itv
-    ),
-    d AS (
-      SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(doc_id * 331 % 4096 - 2048 AS BIGINT) AS pred0,
-             CAST(doc_id % 89 AS BIGINT) AS idx0
-      FROM documents WHERE doc_id < 512
-    ),
-    dec AS (
-      SELECT doc_id,
-             list_reduce(
-               list_prepend([idx0, pred0],
-                 list_transform(range(64),
-                   i -> [(doc_id + 7 * i) % 16])),
-               (acc, x) -> [{i2}] || acc[2:] || [{p2}]
-             )[2:] AS seq
-      FROM d CROSS JOIN st
-    ),
-    per_doc AS (
-      SELECT doc_id,
-             len(seq) AS n_samples,
-             CAST(list_aggregate(seq, 'sum') AS BIGINT) AS sum_pred,
-             CAST(list_aggregate(list_transform(seq, s -> abs(s)),
-                                 'sum') AS BIGINT) AS sum_abs,
-             CAST(list_aggregate(list_transform(seq, s -> s * s),
-                                 'sum') AS BIGINT) AS energy
-      FROM dec
-    )
-    SELECT CAST(doc_id % 8 AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_samples) AS BIGINT) AS sum_samples,
-           CAST(SUM(sum_pred) AS BIGINT) AS sum_pred,
-           CAST(SUM(sum_abs) AS BIGINT) AS sum_abs,
-           CAST(SUM(energy) AS BIGINT) AS energy
-    FROM per_doc GROUP BY 1 ORDER BY 1
-    """
-
-
-@_register("docs_adpcm_roundtrip_stats", _adpcm_oracle())
-def docs_adpcm_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.adpcm import (
-        adpcm_payload_from_nibbles,
-        decode_adpcm_real,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(F.col("doc_id") < 512)
-    )
-
-    def enc(it):
-        import pandas as _pd
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payloads.append(
-                    adpcm_payload_from_nibbles(
-                        [(d + 7 * i) % 16 for i in range(64)],
-                        pred0=d * 331 % 4096 - 2048,
-                        idx0=d % 89,
-                    )
-                )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    enc_df = docs.mapInPandas(enc, "doc_id long, payload binary")
-    dec = decode_adpcm_real(enc_df, id_col="doc_id", on_error="fail")
-    return (
-        dec.groupBy((F.col("id") % 8).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_samples").cast("long").alias("sum_samples"),
-            F.sum("sum_pred").cast("long").alias("sum_pred"),
-            F.sum("sum_abs").cast("long").alias("sum_abs"),
-            F.sum("energy").cast("long").alias("energy"),
-        )
-        .orderBy("bucket")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -10284,120 +9953,6 @@ def embedding_nsw_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL-GIF ROUND-TRIP under the hard gate (round-8 continuation;
-# operators/gif.py): the fourth real image codec. Deterministic
-# palette images (n_colors = 4 + d%13, palette channels and indices
-# all closed-form in doc_id) are LZW-encoded in-plan — variable-width
-# codes, CLEAR/EOI, sub-block framing — with 4-pass interlace on
-# every doc_id % 4 == 0, then decoded by the real decoder. GIF is
-# lossless on indexed pixels, so the oracle is the generation
-# arithmetic itself (the PNG gate's strongest-form oracle): DuckDB
-# recomputes Σ(299R + 587G + 114B) over generate_series from the same
-# palette formulas. Exact integers end to end; no rounding model.
-# doc_id < 512 bounds fixture generation only.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_gif_roundtrip_stats",
-    """
-    WITH d AS (
-      SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(6 + doc_id % 11 AS BIGINT) AS w,
-             CAST(6 + doc_id % 9 AS BIGINT) AS h,
-             CAST(4 + doc_id % 13 AS BIGINT) AS nc
-      FROM documents WHERE doc_id < 512
-    ),
-    px AS (
-      SELECT d.doc_id, d.w, d.h, d.nc,
-             (d.doc_id + r.r * 5 + c.c * 3) % d.nc AS i
-      FROM d
-      JOIN generate_series(0, 13) AS r(r) ON r.r < d.h
-      JOIN generate_series(0, 15) AS c(c) ON c.c < d.w
-    ),
-    per_doc AS (
-      SELECT doc_id, w, h, nc,
-             -- the decoder reports the GCT size, which the format
-             -- pads to a power of two (4..16 -> 4/8/16)
-             CASE WHEN nc <= 4 THEN 4
-                  WHEN nc <= 8 THEN 8
-                  ELSE 16 END AS nc_padded,
-             SUM(299 * ((doc_id * 31 + i * 17) % 256)
-                 + 587 * ((doc_id * 13 + i * 29) % 256)
-                 + 114 * ((doc_id * 7 + i * 41) % 256)) AS luma_sum,
-             COUNT(*) AS n_px
-      FROM px GROUP BY doc_id, w, h, nc
-    )
-    SELECT CAST(doc_id % 8 AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(w) AS BIGINT) AS sum_width,
-           CAST(SUM(h) AS BIGINT) AS sum_height,
-           CAST(SUM(nc_padded) AS BIGINT) AS sum_colors,
-           CAST(SUM(luma_sum) AS BIGINT) AS sum_luma,
-           CAST(SUM(n_px) AS BIGINT) AS sum_px
-    FROM per_doc GROUP BY 1 ORDER BY 1
-    """,
-)
-def docs_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.gif import (
-        decode_gif_real,
-        encode_gif,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(F.col("doc_id") < 512)
-    )
-
-    def enc(it):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h, nc = 6 + d % 11, 6 + d % 9, 4 + d % 13
-                rr, cc = _np.mgrid[0:h, 0:w]
-                idx = (d + rr * 5 + cc * 3) % nc
-                pal = [
-                    (
-                        (d * 31 + i * 17) % 256,
-                        (d * 13 + i * 29) % 256,
-                        (d * 7 + i * 41) % 256,
-                    )
-                    for i in range(nc)
-                ]
-                payloads.append(
-                    encode_gif(
-                        w, h, indices=idx.astype(_np.uint8),
-                        palette=pal, interlace=(d % 4 == 0),
-                        comment="epl-cas-etl-2026-spark fixture",
-                    )
-                )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    enc_df = docs.mapInPandas(enc, "doc_id long, payload binary")
-    dec = decode_gif_real(enc_df, id_col="doc_id", on_error="fail")
-    return (
-        dec.groupBy((F.col("id") % 8).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("width").cast("long").alias("sum_width"),
-            F.sum("height").cast("long").alias("sum_height"),
-            F.sum("n_colors").cast("long").alias("sum_colors"),
-            F.sum("luma_sum").cast("long").alias("sum_luma"),
-            F.sum("n_px").cast("long").alias("sum_px"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
 # ZIP INGESTION (round-8 continuation; sources/archive.py): the other
 # container corpora arrive in, next to WARC — and unlike WARC the
 # members are REALLY compressed (stdlib DEFLATE) and CRC-verified on
@@ -10656,130 +10211,6 @@ def docs_dedup_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=cfg["shingle_n"],
         use_md5=True,
     ).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# REAL MPEG-1 LAYER I SUBBAND DECODE under the hard gate (round-9;
-# operators/mpeg1.py — the r8 codec-family pattern one format
-# further): deterministic single-channel Layer I streams are built
-# in-plan DIRECTLY from integer code streams (per doc d < 256, two
-# frames; subband sb allocated iff (d+sb)%3 != 0 with nb = 2+((d+sb)%14)
-# sample bits; scalefactor index 3*((d+7*sb+f)%11) — a multiple of 3,
-# so sf = 2^(1-idx/3) is an exact power of two and the whole gate
-# stays in integer arithmetic; codes (d*31+f*101+sb*12+j) % 2^nb),
-# then decoded by the REAL decoder (syncword walk → header → bit
-# allocation → scalefactors → nb-bit sample unpack → exact
-# requantization numerators). The oracle REPLAYS THE FIXTURE FORMULAS
-# AND THE REQUANTIZATION ARITHMETIC in SQL — every bit the decoder
-# unpacks must reproduce the generating formula for the hash to
-# match. sum_num_scaled = Σ sum_shift * 2^(13 - sfidx/3) is the
-# requantized subband energy numerator at the common 2^12 scale
-# (denominator 2^nb - 1 rides in the nb group key). PCM synthesis is
-# HONESTLY STUBBED (the ISO Table 3-B.3 window is a printed normative
-# table, unavailable here); decode is exact to the subband domain.
-# doc_id < 256 bounds fixture generation only (sf-invariant gate,
-# stays out of bench like the other codec fixtures).
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_mpeg1_subband_stats",
-    """
-    WITH d AS (
-      SELECT CAST(doc_id AS BIGINT) AS d FROM documents WHERE doc_id < 256
-    ),
-    g AS (
-      SELECT d, f.range AS f, sb.range AS sb,
-             2 + ((d + sb.range) % 14) AS nb,
-             3 * ((d + 7 * sb.range + f.range) % 11) AS sfidx
-      FROM d, range(2) f, range(32) sb
-      WHERE (d + sb.range) % 3 <> 0
-    ),
-    c AS (
-      SELECT g.*,
-             ((d * 31 + f * 101 + sb * 12 + j.range)
-                % (CAST(1 AS BIGINT) << nb))
-               - (CAST(1 AS BIGINT) << (nb - 1)) + 1 AS shift
-      FROM g, range(12) j
-    ),
-    per AS (
-      SELECT nb, d, f, sb, sfidx, CAST(SUM(shift) AS BIGINT) AS sum_shift
-      FROM c GROUP BY nb, d, f, sb, sfidx
-    )
-    SELECT CAST(nb AS BIGINT) AS nb,
-           CAST(COUNT(*) AS BIGINT) AS n_subband_frames,
-           CAST(SUM(sum_shift) AS BIGINT) AS sum_shift_total,
-           CAST(SUM(sum_shift * (CAST(1 AS BIGINT) << (13 - sfidx // 3)))
-                AS BIGINT) AS sum_num_scaled
-    FROM per GROUP BY nb ORDER BY nb
-    """,
-)
-def docs_mpeg1_subband_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.mpeg1 import (
-        decode_mpeg1_subbands_real,
-        encode_mpeg1_l1,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(F.col("doc_id") < 256)
-    )
-
-    def enc(it):
-        import pandas as _pd
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = []
-                for f in range(2):
-                    alloc = [
-                        0 if (d + sb) % 3 == 0 else 2 + ((d + sb) % 14)
-                        for sb in range(32)
-                    ]
-                    sfidx = [
-                        3 * ((d + 7 * sb + f) % 11) for sb in range(32)
-                    ]
-                    codes = [
-                        [
-                            (d * 31 + f * 101 + sb * 12 + j)
-                            % (1 << alloc[sb])
-                            if alloc[sb]
-                            else 0
-                            for j in range(12)
-                        ]
-                        for sb in range(32)
-                    ]
-                    frames.append(
-                        {"alloc": alloc, "sfidx": sfidx, "codes": codes}
-                    )
-                payloads.append(encode_mpeg1_l1(frames))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    enc_df = docs.mapInPandas(enc, "doc_id long, payload binary")
-    dec = decode_mpeg1_subbands_real(enc_df, id_col="doc_id", on_error="fail")
-    return (
-        dec.groupBy("nb")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_subband_frames"),
-            F.sum("sum_shift").cast("long").alias("sum_shift_total"),
-            F.sum(
-                F.col("sum_shift")
-                * F.expr(
-                    "shiftleft(CAST(1 AS BIGINT),"
-                    " CAST(13 - (sfidx div 3) AS INT))"
-                )
-            )
-            .cast("long")
-            .alias("sum_num_scaled"),
-        )
-        .orderBy("nb")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ plan-string snapshots — AQE re-plans freely within them.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -197,6 +198,21 @@ def test_gate_ledger_fresh_against_head():
 
     findings = ledger_staleness()
     assert findings == [], "stale gate ledger:\n  " + "\n  ".join(findings)
+
+
+def test_queries_md_matches_registry():
+    """QUERIES.md is the driver-contract index: a registry edit that
+    skips `python tools/gen_queries_md.py` must fail here rather than
+    leave the index listing queries that no longer exist (or missing
+    new ones)."""
+    from tools.gen_queries_md import render
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "QUERIES.md")) as f:
+        committed = f.read()
+    assert committed == render(), (
+        "QUERIES.md is stale — run python tools/gen_queries_md.py"
+    )
 
 
 def test_ledger_staleness_detects_doctored_ledger():
@@ -521,47 +537,6 @@ def test_exact_substring_dedup_single_scan_jvm_rewrite(spark, sf_oracle):
     # scan reads only the three columns the query needs
     m = re.search(r"ReadSchema: [^\n]*", plan)
     assert m and "lang" not in m.group(0), m.group(0)
-
-
-def test_jpeg_roundtrip_scan_pruned_and_two_arrow_stages(spark, sf_oracle):
-    """The real-JPEG gate query must push the doc_id<512 fixture cap
-    into the parquet scan, read ONLY doc_id, and spend exactly two
-    Arrow batch stages (encode, decode) — no joins, no row-at-a-time
-    Python eval."""
-    plan = _plan(spark, sf_oracle, "docs_jpeg_roundtrip_stats")
-    pushed = _pushed(plan)
-    assert "LessThan(doc_id,512)" in pushed, pushed
-    m = re.search(r"ReadSchema: [^\n]*", plan)
-    assert m and "struct<doc_id:bigint>" in m.group(0), m and m.group(0)
-    assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan, re.findall(r"\w*Join\w*", plan)
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["docs_png_roundtrip_stats", "docs_gif_roundtrip_stats"],
-)
-def test_lossless_codec_gates_scan_pruned_two_arrow_stages(
-    spark, sf_oracle, name
-):
-    """The PNG/GIF gates share the JPEG gate's plan contract: fixture
-    cap pushed to the scan, doc_id-only read schema, exactly two
-    Arrow stages (encode, decode), no joins."""
-    plan = _plan(spark, sf_oracle, name)
-    assert "LessThan(doc_id,512)" in _pushed(plan), _pushed(plan)
-    m = re.search(r"ReadSchema: [^\n]*", plan)
-    assert m and "struct<doc_id:bigint>" in m.group(0), m and m.group(0)
-    assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan, re.findall(r"\w*Join\w*", plan)
-
-
-def test_adpcm_roundtrip_plan_contract(spark, sf_oracle):
-    plan = _plan(spark, sf_oracle, "docs_adpcm_roundtrip_stats")
-    assert "LessThan(doc_id,512)" in _pushed(plan), _pushed(plan)
-    assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
-    assert "Join" not in plan
 
 
 def test_dsir_broadcasts_terms_and_takes_ordered(spark, sf_oracle):

@@ -36,7 +36,8 @@ def about(fn) -> str:
     return " ".join(text.split())[:150]
 
 
-def main() -> None:
+def render() -> str:
+    """The full QUERIES.md text for the current registry."""
     lines = [
         "# QUERIES — driver-contract index (auto-generated)",
         "",
@@ -55,8 +56,12 @@ def main() -> None:
         mod = fn.__module__.rsplit(".", 1)[-1]
         oracle = "sql" if name in ORACLES else "rows-only"
         lines.append(f"| `{name}` | {oracle} | {mod} | {about(fn)} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     with open("QUERIES.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(render())
     print(f"QUERIES.md: {len(QUERIES)} queries, {len(ORACLES)} oracles")
 
 
