@@ -48,12 +48,7 @@ from epl_cas_etl_2026_spark.functions.scalars import (
     territorio,
 )
 from epl_cas_etl_2026_spark.functions.scalars import territorio as territorio_col
-from epl_cas_etl_2026_spark.operators.ranking import (
-    MAX_GLOBAL_WINDOW_ROWS,
-    competition_rank,
-    two_phase_competition_rank,
-    two_phase_row_number,
-)
+from epl_cas_etl_2026_spark.operators.ranking import competition_rank
 from epl_cas_etl_2026_spark.operators.reshape import pivot_matrix
 
 FACT_TABLES = {
@@ -367,7 +362,6 @@ def ranking_sucursales(
     periodo_id: int | None = None,
     grupo_id: int | None = None,
     territorio_filtro: str | None = None,
-    force_scale_path: bool | None = None,
 ) -> DataFrame:
     """GET /api/ranking/sucursales/<tipo> (app.py:666-756): dynamic
     optional filters (P10) over an outer join that preserves branches
@@ -462,83 +456,22 @@ def ranking_sucursales(
     # partition-dependent order (grupo is NOT used — it is nullable
     # via the left join, and Spark's ASC puts NULLs first while
     # DuckDB's puts them last)
-    # Two physical strategies, one semantics (equivalence pinned by
-    # tests/test_api_quirks.py::test_sucursales_two_phase_matches_window,
-    # which forces BOTH paths over a tie-heavy randomized fixture):
-    #
-    # · window path — the cheap plan for the dashboard-scale frames
-    #   this endpoint actually serves (~10³ branches): two
-    #   single-partition windows over the post-aggregation frame.
-    # · scale path — the reference's position semantics decompose:
-    #   scored branches take a competition rank on promedio alone
-    #   (the NULL tail never affects a rank above it) via
-    #   two_phase_competition_rank; exact-zero branches take
-    #   (count of scored) + a two-phase row_number over the UNIQUE
-    #   (sucursal, sucursal_id) key; pendientes stay NULL. No
-    #   unpartitioned WindowExec anywhere.
-    #
-    # The choice is a measured decision rule (the SKEW_BENCH pattern):
-    # the post-aggregation frame is branch-grained, so its row count
-    # equals the FILTERED DIM COUNT — one cheap scan of sucursales,
-    # not a materialization of the joined frame — checked against the
-    # window-runaway threshold. This replaces the former raise_error
-    # guard, which the sf1 rehearsal's 150k-branch fixture tripped.
-    use_scale = force_scale_path
-    if use_scale is None:
-        use_scale = s.count() > MAX_GLOBAL_WINDOW_ROWS
-    if use_scale:
-        shaped = shaped.localCheckpoint(eager=False)  # 3 rank consumers
+    # Two single-partition windows over the post-aggregation
+    # (branch-grained) frame. A range-partitioned two-phase variant
+    # measured slower even at 150k branches, so there is one path.
     display_order = [
         F.desc_nulls_last("promedio"),
         F.desc("__ez"),
         F.asc("sucursal"),
         F.asc("sucursal_id"),
     ]
-    if not use_scale:
-        w_rank = Window.orderBy(F.desc_nulls_last("promedio"))
-        w_rn = Window.orderBy(*display_order)
-        rank_expr = F.when(
-            F.col("promedio").isNotNull(),
-            F.rank().over(w_rank).cast("long"),
-        ).when(F.col("__ez"), F.row_number().over(w_rn).cast("long"))
-        ranked = shaped.withColumn("posicion", rank_expr)
-    else:
-        scored = two_phase_competition_rank(
-            shaped.filter(F.col("promedio").isNotNull()), "promedio"
-        )
-        n_scored = scored.agg(
-            F.count(F.lit(1)).cast("long").alias("__n_scored")
-        )
-        ez = (
-            two_phase_row_number(
-                shaped.filter(F.col("promedio").isNull() & F.col("__ez")),
-                [F.asc("sucursal"), F.asc("sucursal_id")],
-            )
-            .crossJoin(F.broadcast(n_scored))
-            .withColumn(
-                "posicion",
-                (F.col("__rn") + F.col("__n_scored")).cast("long"),
-            )
-            .drop("__rn", "__n_scored")
-        )
-        pending = shaped.filter(
-            F.col("promedio").isNull() & ~F.col("__ez")
-        ).withColumn("posicion", F.lit(None).cast("long"))
-        cols = [
-            "sucursal",
-            "sucursal_id",
-            "grupo",
-            "clasificacion",
-            "promedio",
-            "supervisiones",
-            "__ez",
-            "posicion",
-        ]
-        ranked = (
-            scored.select(*cols)
-            .unionByName(ez.select(*cols))
-            .unionByName(pending.select(*cols))
-        )
+    w_rank = Window.orderBy(F.desc_nulls_last("promedio"))
+    w_rn = Window.orderBy(*display_order)
+    rank_expr = F.when(
+        F.col("promedio").isNotNull(),
+        F.rank().over(w_rank).cast("long"),
+    ).when(F.col("__ez"), F.row_number().over(w_rn).cast("long"))
+    ranked = shaped.withColumn("posicion", rank_expr)
     return ranked.orderBy(*display_order).select(
         "sucursal",
         "grupo",

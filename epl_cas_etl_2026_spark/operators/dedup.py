@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from epl_cas_etl_2026_spark.functions.text import words
+from epl_cas_etl_2026_spark.sources.parquet import spread_scan
 
 
 def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -168,10 +169,7 @@ def minhash_signature_agg(
     # the full shingle stream (~8× the corpus text), while without it
     # the per-seed mins partial-aggregate map-side and the groupBy
     # shuffles ~one 16-long row per (doc, partition) — the slim plan.
-    sc = sh.sparkSession.sparkContext
-    target = min(32, sc.defaultParallelism)
-    if sh.rdd.getNumPartitions() < target:
-        sh = sh.repartition(target, F.col(id_col))
+    sh = spread_scan(sh, F.col(id_col))
     h1, h2 = _km_hash_pair(F.col("__sh"), use_md5)
     base = sh.select(F.col(id_col), h1.alias("__h1"), h2.alias("__h2"))
     derived = base.select(
@@ -475,11 +473,7 @@ def simhash_near_dup_pairs(
     else:
         # spread the hashing stage when the local scan is a single
         # split (at scale the scan has plenty of splits — no exchange)
-        sc = docs.sparkSession.sparkContext
-        target = min(32, sc.defaultParallelism)
-        if docs.rdd.getNumPartitions() < target:
-            docs = docs.repartition(target)
-        hashed = docs.select(
+        hashed = spread_scan(docs).select(
             F.col(id_col), simhash60_udf()(F.col(text_col)).alias("h")
         ).localCheckpoint(eager=False)  # not persist(): cache-block
         # locks serialize concurrent consumer stages (r11 session-3)

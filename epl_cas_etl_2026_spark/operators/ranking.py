@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 #: Above this many input rows, an unpartitioned competition_rank —
@@ -80,62 +81,86 @@ def competition_rank(
     return ranked.orderBy(*order)
 
 
+def range_partition_offsets(
+    df: DataFrame,
+    order_by: Sequence[Column],
+    groups: Sequence[str] = (),
+    weight: str | None = None,
+    num_range_partitions: int | None = None,
+) -> tuple[DataFrame, WindowSpec]:
+    """The range-partition + prefix-offset kernel behind every two-phase
+    window (the three below and ``windows.two_phase_cumsum``) — no
+    single-partition WindowExec anywhere.
+
+    Phase 1: range-partition on ``(*groups, *order_by)`` — each
+    partition holds a contiguous slice of the global order (with
+    ``groups``: of one or more groups' orders, a group spanning
+    contiguous partitions); rows are tagged ``__pid``. Phase 2: the
+    per-(``__pid``, group) totals — row counts, or ``sum(weight)`` —
+    become running offsets on the driver (O(#partitions × #groups)
+    rows) and are broadcast-joined back as ``__offset``.
+
+    Returns ``(frame, w)`` where ``w`` is the partition-local window
+    ``partitionBy(__pid, *groups).orderBy(*order_by)``: the global value
+    is ``f.over(w) + __offset``. Callers drop ``__pid`` and ``__offset``.
+    """
+    spark = df.sparkSession
+    n = num_range_partitions or spark.sparkContext.defaultParallelism
+    keys = ["__pid", *groups]
+    parted = df.repartitionByRange(
+        n, *[F.col(g) for g in groups], *order_by
+    ).withColumn("__pid", F.spark_partition_id())
+    # one materialization so the totals job and the caller's window job
+    # see the same (sampled) range partitioning; lazy — the totals
+    # collect below is the first action and materializes the checkpoint
+    # itself (one job, not an eager materialization plus a count)
+    parted = parted.localCheckpoint(eager=False)
+    total = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    rows = parted.groupBy(*keys).agg(total.alias("__t")).collect()
+    offsets, running = [], {}
+    for r in sorted(rows, key=lambda r: r["__pid"]):
+        g = tuple(r[c] for c in groups)
+        acc = running.get(g, 0)
+        offsets.append((r["__pid"], *g, acc))
+        running[g] = acc + (r["__t"] or 0)
+    offset_df = spark.createDataFrame(
+        offsets,
+        StructType(
+            [parted.schema[c] for c in keys]
+            + [StructField("__offset", LongType())]
+        ),
+    )
+    w = Window.partitionBy(*keys).orderBy(*order_by)
+    return parted.join(F.broadcast(offset_df), keys), w
+
+
 def two_phase_competition_rank(
     df: DataFrame,
     score_col: str,
     rank_col: str = "posicion",
     num_range_partitions: int | None = None,
 ) -> DataFrame:
-    """Scalable GLOBAL competition rank — no single-partition
-    WindowExec anywhere.
-
-    Phase 1: ``repartitionByRange`` on the score (descending, NULLS
-    LAST) — equal scores co-locate, so ties never straddle partition
-    boundaries; each partition then ranks locally with a window
-    PARTITIONED by ``spark_partition_id()`` (parallel sort).
-
-    Phase 2: per-partition row counts (one tiny agg, #partitions rows)
-    become prefix-sum offsets on the driver and broadcast back; the
-    global rank is ``local_rank + offset[pid]``.
+    """Scalable GLOBAL competition rank over
+    :func:`range_partition_offsets` on the score (descending, NULLS
+    LAST): equal scores co-locate, so ties never straddle a partition
+    boundary and ``local rank + offset`` is the global rank.
 
     Semantics identical to :func:`competition_rank` with no
     ``partition_by``: RANK tie gaps, NULL scores unranked. The serial
     work is O(#partitions), not O(rows) — this is the path for
     fact-grained frames the guard in :func:`competition_rank` rejects.
     """
-    spark = df.sparkSession
-    n = num_range_partitions or spark.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, F.desc_nulls_last(score_col)).withColumn(
-        "__pid", F.spark_partition_id()
+    parted, w = range_partition_offsets(
+        df, [F.desc_nulls_last(score_col)],
+        num_range_partitions=num_range_partitions,
     )
-    # one materialization so the counts job and the rank job see the
-    # same (sampled) range partitioning; lazy — the counts job below is
-    # the first action and materializes the checkpoint itself (one job,
-    # not a separate eager materialization + a cached count)
-    parted = parted.localCheckpoint(eager=False)
-
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    offset_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-
-    w = Window.partitionBy("__pid").orderBy(F.desc_nulls_last(score_col))
-    return (
-        parted.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            rank_col,
-            F.when(
-                F.col(score_col).isNotNull(),
-                (F.rank().over(w) + F.col("__offset")).cast("long"),
-            ),
-        )
-        .drop("__pid", "__offset")
-    )
+    return parted.withColumn(
+        rank_col,
+        F.when(
+            F.col(score_col).isNotNull(),
+            (F.rank().over(w) + F.col("__offset")).cast("long"),
+        ),
+    ).drop("__pid", "__offset")
 
 
 def two_phase_row_number(
@@ -145,46 +170,19 @@ def two_phase_row_number(
     num_range_partitions: int | None = None,
 ) -> DataFrame:
     """Scalable GLOBAL row_number over a UNIQUE sort key — the
-    companion of :func:`two_phase_competition_rank` for the positional
-    (non-tie-sharing) half of ranking semantics.
-
-    Phase 1: ``repartitionByRange`` on the sort columns (global order
-    across partitions by construction); local row_number with a window
-    PARTITIONED by ``spark_partition_id()``. Phase 2: per-partition
-    counts → prefix-sum offsets (driver work O(#partitions)) broadcast
-    back; global row_number = local + offset.
+    positional (non-tie-sharing) companion of
+    :func:`two_phase_competition_rank`, on the same kernel.
 
     The caller must pass a sort key that is unique per row (callers
     here append a unique id as the last column) — with duplicates the
     boundary split between equal keys would be sampling-dependent.
     """
-    spark = df.sparkSession
-    n = num_range_partitions or spark.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *order_by).withColumn(
-        "__pid", F.spark_partition_id()
+    parted, w = range_partition_offsets(
+        df, order_by, num_range_partitions=num_range_partitions
     )
-    # lazy: the counts collect right below materializes the checkpoint
-    parted = parted.localCheckpoint(eager=False)
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in parted.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    offset_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    return (
-        parted.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            rn_col,
-            (F.row_number().over(w) + F.col("__offset")).cast("long"),
-        )
-        .drop("__pid", "__offset")
-    )
+    return parted.withColumn(
+        rn_col, (F.row_number().over(w) + F.col("__offset")).cast("long")
+    ).drop("__pid", "__offset")
 
 
 def two_phase_grouped_row_number(
@@ -197,59 +195,19 @@ def two_phase_grouped_row_number(
     """Scalable PER-GROUP row_number when the group count is SMALL —
     the straggler case a plain ``Window.partitionBy(group)`` cannot
     survive (5 groups ⇒ 5 reducers own the whole table; at 100 TB
-    each sorts 20 TB serially).
+    each sorts 20 TB serially). Runs the kernel with
+    ``groups=(group_col,)``: offsets are per-group running counts.
 
-    Phase 1: ``repartitionByRange(group, *order)`` — each partition
-    holds a contiguous slice of ONE OR MORE groups' sort orders, and
-    a group's rows span contiguous partitions; local row_number over
-    ``(pid, group)``. Phase 2: per-(pid, group) counts → per-group
-    running offsets on the driver (O(#partitions × #groups), small by
-    precondition) broadcast back; global per-group row_number =
-    local + offset.
-
-    Same unique-sort-key precondition as :func:`two_phase_row_number`.
+    Same unique-sort-key precondition as :func:`two_phase_row_number`;
+    groups must be non-null.
     """
-    spark = df.sparkSession
-    n = num_range_partitions or spark.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(
-        n, F.col(group_col), *order_by
-    ).withColumn("__pid", F.spark_partition_id())
-    # lazy: the counts collect right below materializes the checkpoint
-    parted = parted.localCheckpoint(eager=False)
-    counts = (
-        parted.groupBy("__pid", group_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+    parted, w = range_partition_offsets(
+        df, order_by, groups=(group_col,),
+        num_range_partitions=num_range_partitions,
     )
-    per_group: dict = {}
-    for r in counts:
-        per_group.setdefault(r[group_col], []).append(
-            (r["__pid"], r["cnt"])
-        )
-    offsets = []
-    for g, lst in per_group.items():
-        acc = 0
-        for pid, cnt in sorted(lst):
-            offsets.append((pid, g, acc))
-            acc += cnt
-    if not offsets:  # empty input: no offsets to join, rank is moot
-        return parted.drop("__pid").withColumn(
-            rn_col, F.lit(None).cast("long")
-        )
-    # schema inferred from data so the group column's type carries
-    # through (string/int/...); groups must be non-null by precondition
-    offset_df = spark.createDataFrame(
-        offsets, ["__pid", group_col, "__offset"]
-    )
-    w = Window.partitionBy("__pid", group_col).orderBy(*order_by)
-    return (
-        parted.join(F.broadcast(offset_df), ["__pid", group_col])
-        .withColumn(
-            rn_col,
-            (F.row_number().over(w) + F.col("__offset")).cast("long"),
-        )
-        .drop("__pid", "__offset")
-    )
+    return parted.withColumn(
+        rn_col, (F.row_number().over(w) + F.col("__offset")).cast("long")
+    ).drop("__pid", "__offset")
 
 
 def intra_group_rank(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.vectors import cosine, dot, to_double
+from epl_cas_etl_2026_spark.sources.parquet import spread_scan
 
 
 def cosine_topk(
@@ -174,10 +175,7 @@ def band_lsh_pairs(
     # dots per row); small local scans give 1-2 splits which would
     # serialize it, so spread ONLY when the scan is under-parallel —
     # at scale the scan has plenty of splits and no exchange happens.
-    sc = embeddings.sparkSession.sparkContext
-    target = min(32, sc.defaultParallelism)
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread_scan(embeddings)
     # The n_planes×dim sign-bit projection is dense linear algebra —
     # the one stage built-in Column ops can't express efficiently
     # (zip_with/aggregate HOFs are interpreted per element; a fully
@@ -273,10 +271,7 @@ def band_lsh_calibration_pairs(
     a threshold would drop.
     """
     assert len(planes) == n_bands * rows_per_band
-    sc = embeddings.sparkSession.sparkContext
-    target = min(32, sc.defaultParallelism)
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread_scan(embeddings)
     band_keys = _band_keys_udf(planes, n_bands, rows_per_band)
     with_keys = embeddings.select(
         F.col(id_col),

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from epl_cas_etl_2026_spark.operators.ranking import range_partition_offsets
+
 
 def latest_per_key(
     df: DataFrame,
@@ -137,39 +139,15 @@ def two_phase_cumsum(
     num_range_partitions: int | None = None,
 ) -> DataFrame:
     """Distributed global cumulative sum — no single-partition window:
-    range-partition on the order column, cumsum locally per partition
-    (window PARTITIONED by spark_partition_id), then add prefix
-    offsets built from the per-partition totals (#partitions rows on
-    the driver). The same prefix-offset shape as
-    two_phase_competition_rank; serial work is O(#partitions)."""
-    spark = df.sparkSession
-    n = num_range_partitions or spark.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, F.asc(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
+    :func:`~epl_cas_etl_2026_spark.operators.ranking.range_partition_offsets`
+    on the order column with ``sum(value_col)`` as the partition
+    weight, then a partition-local running sum plus the offset. Serial
+    work is O(#partitions)."""
+    parted, w = range_partition_offsets(
+        df, [F.asc(order_col)], weight=value_col,
+        num_range_partitions=num_range_partitions,
     )
-    # lazy: the totals collect right below materializes the checkpoint
-    parted = parted.localCheckpoint(eager=False)
-    totals = {
-        r["__pid"]: r["t"]
-        for r in parted.groupBy("__pid")
-        .agg(F.sum(value_col).alias("t"))
-        .collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(n):
-        offsets.append((pid, acc))
-        acc += totals.get(pid, 0) or 0
-    offset_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(F.asc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        parted.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            out_col,
-            (F.sum(value_col).over(w) + F.col("__offset")).cast("long"),
-        )
-        .drop("__pid", "__offset")
-    )
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return parted.withColumn(
+        out_col, (F.sum(value_col).over(w) + F.col("__offset")).cast("long")
+    ).drop("__pid", "__offset")

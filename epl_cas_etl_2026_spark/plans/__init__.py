@@ -1,7 +1,8 @@
 """Query plans: named (spark, sf_dir) -> DataFrame callables plus their
 ANSI-SQL oracle twins (run by DuckDB over the same parquet).
 
-``QUERIES`` / ``ORACLES`` aggregate every module's registry; the driver
+``QUERIES`` / ``ORACLES`` are the gate-ordered view of the one registry
+(``plans/registry.py``) that every module registers into; the driver
 contract (``__spark_entry__.py``) re-exports them.
 
 Ordering note: the external correctness gate checks the first 50
@@ -16,60 +17,29 @@ COVERAGE.md §"Driver-gate rotation"; invariants are pinned by
 tests/test_plan_audit.py.
 """
 
-from epl_cas_etl_2026_spark.plans import (
-    dataprep,
-    decision_support,
-    domain_api,
-    enrich,
-    extensions,
-    graph,
-    lifecycle,
-    relational,
-    retrieval,
-    setjoin,
-    sketches,
-    streaming_gate,
-    warehouse,
-    winnow,
-)
+# Importing a module runs its @_register decorators into the one
+# registry (plans/registry.py), so this import order IS the
+# registration order that gate_order breaks ties on. Keep it.
+from epl_cas_etl_2026_spark.plans import relational
+from epl_cas_etl_2026_spark.plans import dataprep
+from epl_cas_etl_2026_spark.plans import domain_api
+from epl_cas_etl_2026_spark.plans import extensions
+from epl_cas_etl_2026_spark.plans import lifecycle
+from epl_cas_etl_2026_spark.plans import decision_support
+from epl_cas_etl_2026_spark.plans import retrieval
+from epl_cas_etl_2026_spark.plans import graph
+from epl_cas_etl_2026_spark.plans import streaming_gate
+from epl_cas_etl_2026_spark.plans import winnow
+from epl_cas_etl_2026_spark.plans import sketches
+from epl_cas_etl_2026_spark.plans import enrich
+from epl_cas_etl_2026_spark.plans import setjoin
+from epl_cas_etl_2026_spark.plans import warehouse
+from epl_cas_etl_2026_spark.plans import registry
 from epl_cas_etl_2026_spark.plans.gate_policy import gate_order
 
-_ALL_QUERIES = {
-    **relational.QUERIES,
-    **dataprep.QUERIES,
-    **domain_api.QUERIES,
-    **extensions.QUERIES,
-    **lifecycle.QUERIES,
-    **decision_support.QUERIES,
-    **retrieval.QUERIES,
-    **graph.QUERIES,
-    **streaming_gate.QUERIES,
-    **winnow.QUERIES,
-    **sketches.QUERIES,
-    **enrich.QUERIES,
-    **setjoin.QUERIES,
-    **warehouse.QUERIES,
-}
-_ALL_ORACLES = {
-    **relational.ORACLES,
-    **dataprep.ORACLES,
-    **domain_api.ORACLES,
-    **extensions.ORACLES,
-    **lifecycle.ORACLES,
-    **decision_support.ORACLES,
-    **retrieval.ORACLES,
-    **graph.ORACLES,
-    **streaming_gate.ORACLES,
-    **winnow.ORACLES,
-    **sketches.ORACLES,
-    **enrich.ORACLES,
-    **setjoin.ORACLES,
-    **warehouse.ORACLES,
-}
+_ORDER = gate_order(registry.QUERIES, registry.ORACLES)
 
-_ORDER = gate_order(_ALL_QUERIES, _ALL_ORACLES)
-
-QUERIES = {name: _ALL_QUERIES[name] for name in _ORDER}
-ORACLES = {name: _ALL_ORACLES[name] for name in _ORDER if name in _ALL_ORACLES}
+QUERIES = {name: registry.QUERIES[name] for name in _ORDER}
+ORACLES = {name: registry.ORACLES[name] for name in _ORDER if name in registry.ORACLES}
 
 __all__ = ["QUERIES", "ORACLES"]

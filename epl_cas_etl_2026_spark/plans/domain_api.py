@@ -30,11 +30,9 @@ from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark import api
 from epl_cas_etl_2026_spark.functions.scalars import det_avg_sql
+from epl_cas_etl_2026_spark.plans.registry import register as _register
 from epl_cas_etl_2026_spark.schemas import PERIODOS_SCHEMA
 from epl_cas_etl_2026_spark.sources.parquet import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 # grupo base names: the reference's 11 territory keywords (8 local +
 # 3 mixto, app.py:46-47) plus the PLOG-overbreadth trap name
@@ -168,16 +166,6 @@ _TERRITORIO_CASE = """
               OR lower(nombre) LIKE '%grupo saltillo%'
          THEN 'mixto' ELSE 'foranea' END
 """
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

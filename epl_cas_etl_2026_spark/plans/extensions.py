@@ -35,20 +35,8 @@ from epl_cas_etl_2026_spark.operators.multimodal import (
     decode_image_meta,
     with_binary_payload,
 )
+from epl_cas_etl_2026_spark.plans.registry import ORACLES, register as _register
 from epl_cas_etl_2026_spark.sources.parquet import load_table, spread_scan
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -4526,7 +4514,7 @@ def docs_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the identical banding + exact-cosine pairs, then closes them with a
 # recursive CTE.
 # ---------------------------------------------------------------------------
-def _register_embedding_dup_clusters() -> None:
+def _add_embedding_dup_clusters() -> None:
     inner = ORACLES["embedding_near_dup_cosine"]
     oracle = f"""
     WITH RECURSIVE p AS ({inner}),
@@ -4565,7 +4553,7 @@ def _register_embedding_dup_clusters() -> None:
         )
 
 
-_register_embedding_dup_clusters()
+_add_embedding_dup_clusters()
 
 
 # ---------------------------------------------------------------------------
@@ -5577,11 +5565,7 @@ def docs_simhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # hash the corpus ONCE — the Arrow simhash UDF is the expensive
     # stage; the three banding configs share it (was 3 hash passes)
-    sc = docs.sparkSession.sparkContext
-    target = min(32, sc.defaultParallelism)
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target)
-    hashed = docs.select(
+    hashed = spread_scan(docs).select(
         "doc_id", simhash60_udf()(F.col("text")).alias("h")
     ).localCheckpoint(eager=False)  # not persist(): see the KMV note
     stats = []

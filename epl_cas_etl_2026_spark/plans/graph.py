@@ -26,10 +26,8 @@ from epl_cas_etl_2026_spark.operators.graph import (
     RANK_SCALE,
     pagerank_fixed_point,
 )
+from epl_cas_etl_2026_spark.plans.registry import register as _register
 from epl_cas_etl_2026_spark.sources.parquet import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 _ITERATIONS = 5
 
@@ -99,16 +97,6 @@ def _pagerank_oracle(iterations: int) -> str:
     LIMIT 10
     """.format(last=iterations)
     )
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -30,10 +30,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from epl_cas_etl_2026_spark.plans.registry import ORACLES, QUERIES
 from epl_cas_etl_2026_spark.sources.parquet import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 _SPLIT = "1998-01-01 00:00:00"
 _N_LOCS = 50

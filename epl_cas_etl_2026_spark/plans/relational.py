@@ -32,20 +32,8 @@ from epl_cas_etl_2026_spark.operators.windows import (
     top_n_per_key,
     with_next_value,
 )
+from epl_cas_etl_2026_spark.plans.registry import register as _register
 from epl_cas_etl_2026_spark.sources.parquet import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _dsum(col, alias: str, scale: int = 2):

@@ -37,21 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from epl_cas_etl_2026_spark.functions.scalars import det_avg, det_avg_sql
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from epl_cas_etl_2026_spark.plans.registry import ORACLES, register as _register
 
 _run_ids = itertools.count()
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,9 +756,7 @@ def orders_stream_cdc_merge_gate(
 # when psi_micronats crosses the 0.2 bar.
 # ---------------------------------------------------------------------------
 def _psi_oracle_sql() -> str:
-    from epl_cas_etl_2026_spark.plans import dataprep
-
-    return dataprep.ORACLES["events_psi_drift"]
+    return ORACLES["events_psi_drift"]
 
 
 @_register("events_stream_psi_drift_gate", _psi_oracle_sql())
@@ -982,9 +968,7 @@ def events_stream_static_enrich_gate(
 # a fair gate.
 # ---------------------------------------------------------------------------
 def _ewma_oracle_sql() -> str:
-    from epl_cas_etl_2026_spark.plans import extensions
-
-    return extensions.ORACLES["events_user_ewma_dyadic"]
+    return ORACLES["events_user_ewma_dyadic"]
 
 
 @_register("events_stream_stateful_ewma_gate", _ewma_oracle_sql())

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
@@ -65,24 +65,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def spread_scan(df: DataFrame, max_target: int = 32) -> DataFrame:
-    """Round-robin repartition to the core count when a scan is
-    under-parallel — the single-row-group local testdata files give
-    ONE split, so any per-row-expensive stage pipelined onto the scan
-    (gram hashing, shingle builds, md5-per-word) runs serialized on
+def spread_scan(df: DataFrame, *keys: Column) -> DataFrame:
+    """Repartition to ``min(32, defaultParallelism)`` partitions when a
+    scan is under-parallel (round-robin, or hash on ``keys`` when
+    given); otherwise return ``df`` itself.
+
+    Precondition: the repartition reorders rows, so the caller must be
+    insensitive to row order (aggregates, joins, per-row maps), never
+    a consumer of the scan's file order.
+
+    Why: the single-row-group local testdata files give ONE split, so
+    any per-row-expensive stage pipelined onto the scan (gram hashing,
+    shingle builds, md5-per-word, LSH projections) runs serialized on
     one task. At scale the scan has plenty of splits and this is a
-    no-op (the gate never fires), exactly the band_lsh_pairs /
-    minhash_signature_agg idiom, shared here so plan-level queries can
-    use it. Apply ONLY where the scan-stage work dominates the cost of
-    exchanging the raw rows — r12 measured it a per-query decision
-    (wins: exact-substring grams 2.11→0.42 s, winnow fingerprints,
-    DSIR md5 pass, lineitem moments; losses: queries whose map-side
-    partial agg already collapses the stream, e.g. market-basket,
-    kneser-ney, gopher)."""
-    sc = df.sparkSession.sparkContext
-    target = min(max_target, sc.defaultParallelism)
+    no-op (the gate never fires). Apply ONLY where the scan-stage work
+    dominates the cost of exchanging the raw rows — r12 measured it a
+    per-query decision (wins: exact-substring grams 2.11→0.42 s, winnow
+    fingerprints, DSIR md5 pass, lineitem moments; losses: queries
+    whose map-side partial agg already collapses the stream, e.g.
+    market-basket, kneser-ney, gopher)."""
+    target = min(32, df.sparkSession.sparkContext.defaultParallelism)
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
+        return df.repartition(target, *keys)
     return df
 
 

@@ -206,13 +206,13 @@ def test_heatmap_mixto_falls_through_unfiltered(quirk_tables):
         api.heatmap_matrix(quirk_tables, "operativas", territorio="bogus")
 
 
-def test_sucursales_two_phase_matches_window(spark):
-    """Equivalence pin for the round-7 scale rewrite: the two-phase
-    range-partitioned ranking (two_phase_competition_rank +
-    two_phase_row_number, no unpartitioned WindowExec) must reproduce
-    the reference loop's position semantics exactly. Randomized
-    200-branch fixture with heavy ties, exact-zero branches and
-    pendientes; expected positions recomputed in pure Python."""
+def test_sucursales_positions_match_reference_loop(spark):
+    """ranking_sucursales must reproduce the reference loop's position
+    semantics exactly (app.py:724-748): competition rank on the rounded
+    promedio, exact-zero branches consecutive after every scored one,
+    pendientes unranked. Randomized 200-branch fixture with heavy ties,
+    exact-zero branches and pendientes; expected positions recomputed
+    in pure Python."""
     import random
 
     rng = random.Random(7)
@@ -263,16 +263,8 @@ def test_sucursales_two_phase_matches_window(spark):
         "sucursales": sucursales,
         "supervisiones_operativas": sup,
     }
-    out = api.ranking_sucursales(
-        tables, "operativas", force_scale_path=True
-    ).collect()
-    out_window = api.ranking_sucursales(
-        tables, "operativas", force_scale_path=False
-    ).collect()
+    out = api.ranking_sucursales(tables, "operativas").collect()
     assert len(out) == n_branch
-    # both physical strategies, one result
-    key = lambda r: (r["sucursal"], r["posicion"], r["promedio"])  # noqa: E731
-    assert sorted(map(key, out)) == sorted(map(key, out_window))
 
     # pure-Python expectation from the raw fixture
     import collections

@@ -18,7 +18,7 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_iterative_closure_matches_recursive_cte():
-    from epl_cas_etl_2026_spark.plans.extensions import ORACLES
+    from epl_cas_etl_2026_spark.plans import ORACLES
     from tools.rehearse_sf1 import CLOSURE_FINAL, build_cc_comp
 
     con = duckdb_connection(SF)

@@ -11,12 +11,19 @@ import re
 
 import pytest
 
-from epl_cas_etl_2026_spark.plans import decision_support as ds
+from epl_cas_etl_2026_spark.plans import QUERIES, decision_support
+
+# this module's queries only (the registry is shared by all plan modules)
+_QUERIES = {
+    n: fn
+    for n, fn in QUERIES.items()
+    if fn.__module__ == decision_support.__name__
+}
 
 
 def _plan(spark, sf_dir, name: str) -> str:
     return (
-        ds.QUERIES[name](spark, sf_dir)
+        _QUERIES[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -29,7 +36,7 @@ def _pushed(plan: str) -> str:
     return " ".join(re.findall(r"PushedFilters: \[[^\n]*", plan))
 
 
-@pytest.mark.parametrize("name", sorted(ds.QUERIES))
+@pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_no_cartesian_product(spark, sf_oracle, name):
     # BroadcastNestedLoopJoin appears ONLY as the 1-row scalar-subquery
     # cross join (Q11 total, Q22 stats); a CartesianProduct anywhere is
@@ -85,7 +92,7 @@ def test_q20_part_prefix_pushed_and_semi_join(spark, sf_oracle):
 def test_q15_ties_kept_exactly(spark, sf_oracle):
     # decimal-exact equality join against the scalar max: every supplier
     # tied at the max must appear (no float-rounded max can drop ties)
-    df = ds.QUERIES["top_supplier_q15"](spark, sf_oracle)
+    df = _QUERIES["top_supplier_q15"](spark, sf_oracle)
     rows = df.collect()
     assert len(rows) >= 1
     assert len({r.total_revenue for r in rows}) == 1

@@ -9,7 +9,12 @@ from epl_cas_etl_2026_spark.operators.graph import (
     RANK_SCALE,
     pagerank_fixed_point,
 )
-from epl_cas_etl_2026_spark.plans import graph as g
+from epl_cas_etl_2026_spark.plans import QUERIES, graph
+
+# this module's queries only (the registry is shared by all plan modules)
+_QUERIES = {
+    n: fn for n, fn in QUERIES.items() if fn.__module__ == graph.__name__
+}
 
 
 def _ranks(spark, nodes, edges, iterations):
@@ -54,7 +59,7 @@ def test_rejects_zero_iterations(spark):
 def test_query_rank_mass_bounded(spark, sf_oracle):
     # total emitted mass can never exceed the initial corpus mass
     # (dangling truncation only removes mass); the top-10 is sorted
-    rows = g.QUERIES["docs_word_pagerank"](spark, sf_oracle).collect()
+    rows = _QUERIES["docs_word_pagerank"](spark, sf_oracle).collect()
     assert 0 < len(rows) <= 10
     keys = [(-r.rank_micros, r.word) for r in rows]
     assert keys == sorted(keys)

@@ -3,6 +3,7 @@ salted two-phase aggregation matches the plain aggregate."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.sources.layout import (
@@ -11,7 +12,7 @@ from epl_cas_etl_2026_spark.sources.layout import (
     scan_partition_pruned,
     write_partitioned,
 )
-from epl_cas_etl_2026_spark.sources.parquet import load_table
+from epl_cas_etl_2026_spark.sources.parquet import load_table, spread_scan
 
 
 def test_partitioned_write_prunes(spark, sf_smoke, tmp_path):
@@ -132,6 +133,29 @@ def test_two_phase_cumsum_no_single_partition(spark, sf_smoke):
     ordered = sorted(rows)
     # cumsum of all-ones over the global order == 1..n
     assert [rows[k] for k in ordered] == list(range(1, len(ordered) + 1))
+
+
+def test_spread_scan_returns_parallel_frame_unchanged(spark):
+    df = spark.range(0, 64, numPartitions=32)
+    assert spread_scan(df) is df
+
+
+def test_spread_scan_spreads_single_split_frame(spark):
+    df = spark.range(0, 64, numPartitions=1)
+    out = spread_scan(df)
+    target = min(32, spark.sparkContext.defaultParallelism)
+    assert out.rdd.getNumPartitions() == target
+    # reordered, never changed (the order-insensitivity precondition)
+    assert sorted(r.id for r in out.collect()) == list(range(64))
+
+
+def test_spread_scan_keyed_plans_hash_partitioning(spark):
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: the gate never fires")
+    df = spark.range(0, 64, numPartitions=1)
+    out = spread_scan(df, F.col("id"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(id#" in plan
 
 
 def test_ivf_index_partitioned_probe_prunes(spark, sf_smoke, tmp_path):

@@ -139,7 +139,8 @@ def test_gate_window_follows_policy_rule():
     sort over recorded facts — so no query can be hand-curated into or
     out of the gated window."""
     from epl_cas_etl_2026_spark.plans import ORACLES, QUERIES
-    from epl_cas_etl_2026_spark.plans import _ALL_ORACLES, _ALL_QUERIES
+    from epl_cas_etl_2026_spark.plans.registry import ORACLES as _ALL_ORACLES
+    from epl_cas_etl_2026_spark.plans.registry import QUERIES as _ALL_QUERIES
     from epl_cas_etl_2026_spark.plans.gate_policy import (
         GATE_CAP,
         classify,

@@ -10,12 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.operators.windows import two_phase_cumsum
-from epl_cas_etl_2026_spark.plans.dataprep import (
-    QUERIES as DP_QUERIES,
-)
-from epl_cas_etl_2026_spark.plans.sketches import (
-    QUERIES as SK_QUERIES,
-)
+from epl_cas_etl_2026_spark.plans import QUERIES
 from epl_cas_etl_2026_spark.plans.winnow import (
     DF_CAP,
     POS_SCALE,
@@ -126,7 +121,7 @@ def test_kmv_single_scan_output_unchanged(spark, sf_smoke):
     exact columns plus the invariant est >= 0."""
     rows = {
         r["entity"]: r
-        for r in SK_QUERIES["events_kmv_theta_intersection"](
+        for r in QUERIES["events_kmv_theta_intersection"](
             spark, sf_smoke
         ).collect()
     }
@@ -155,8 +150,6 @@ def test_winnow_overlap_plan_is_join_free(spark, sf_smoke):
     """Physical-plan pin: the rewritten overlap query must keep the
     join-free single-(h)-exchange shape (one more Exchange for the
     final pair count, plus whatever AQE adds around the top-10)."""
-    from epl_cas_etl_2026_spark.plans.winnow import QUERIES
-
     df = QUERIES["docs_winnow_overlap_pairs"](spark, sf_smoke)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

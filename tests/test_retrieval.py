@@ -5,12 +5,17 @@ from __future__ import annotations
 
 import pytest
 
-from epl_cas_etl_2026_spark.plans import retrieval as r
+from epl_cas_etl_2026_spark.plans import QUERIES, retrieval
+
+# this module's queries only (the registry is shared by all plan modules)
+_QUERIES = {
+    n: fn for n, fn in QUERIES.items() if fn.__module__ == retrieval.__name__
+}
 
 
 def _plan(spark, sf_dir, name: str) -> str:
     return (
-        r.QUERIES[name](spark, sf_dir)
+        _QUERIES[name](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -30,7 +35,7 @@ _TOPK_FINAL = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(r.QUERIES))
+@pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_no_cartesian_and_topk_short_circuit(spark, sf_oracle, name):
     plan = _plan(spark, sf_oracle, name)
     assert "CartesianProduct" not in plan
@@ -62,14 +67,14 @@ def test_bm25_term_filter_precedes_tf_shuffle(spark, sf_oracle):
 def test_bm25_scores_monotone_in_term_hits(spark, sf_oracle):
     # semantic pin: every returned score is positive and the result is
     # sorted desc with doc_id tiebreak
-    rows = r.QUERIES["docs_bm25_topk"](spark, sf_oracle).collect()
+    rows = _QUERIES["docs_bm25_topk"](spark, sf_oracle).collect()
     assert rows and all(row.score_millis > 0 for row in rows)
     keys = [(-row.score_millis, row.doc_id) for row in rows]
     assert keys == sorted(keys)
 
 
 def test_inverted_index_postings_sorted(spark, sf_oracle):
-    rows = r.QUERIES["docs_inverted_index_rarest"](spark, sf_oracle).collect()
+    rows = _QUERIES["docs_inverted_index_rarest"](spark, sf_oracle).collect()
     assert len(rows) == 5
     for row in rows:
         ids = [int(x) for x in row.postings.split(",")]
