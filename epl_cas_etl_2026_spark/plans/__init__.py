@@ -9,12 +9,14 @@ Ordering note: the external correctness gate checks the first 50
 entries of ``QUERIES`` per round (observed cap in CORRECTNESS_r01-r03).
 The order is computed by ``gate_policy.gate_order`` — a uniform
 priority rule over recorded facts (committed CORRECTNESS rounds, the
-plan-fingerprint ledger, the testdata generation), NOT a curated name
-list: never-green queries first, then plan-changed-since-green, then
+fingerprint ledger, the testdata generation), NOT a curated name list:
+never-green queries first, then changed-since-green, then
 green-only-on-stale-data, then current-green oldest-round-first, ties
-by registration order. See gate_policy.py's module docstring and
-COVERAGE.md §"Driver-gate rotation"; invariants are pinned by
-tests/test_plan_audit.py.
+by registration order. A query's fingerprint covers every package
+definition it reaches, so an edit to a shared helper re-gates its
+queries on its own; the ledger tool runs only at round start. See
+gate_policy.py's module docstring and COVERAGE.md §"Driver-gate
+rotation"; invariants are pinned by tests/test_plan_audit.py.
 """
 
 # Importing a module runs its @_register decorators into the one

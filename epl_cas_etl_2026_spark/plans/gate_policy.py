@@ -6,30 +6,38 @@ under the hard gate each round is decided HERE, by a uniform rule over
 recorded facts — never by a hand-curated name list:
 
 priority 0  never hash-green in any committed CORRECTNESS_r*.json
-priority 1  hash-green before, but the (plan source + oracle SQL)
-            fingerprint differs from the ledger entry recorded at its
-            last green row — the plan changed and must re-gate
-priority 2  hash-green with an unchanged plan, but only against an
-            older testdata generation (the driver regenerated parquet
-            between rounds; old rows are expired evidence)
+priority 1  hash-green before, but the query's fingerprint differs from
+            the ledger entry recorded at its last green row — the code
+            it runs changed and must re-gate
+priority 2  hash-green with an unchanged fingerprint, but only against
+            an older testdata generation (the driver regenerated
+            parquet between rounds; old rows are expired evidence)
 priority 3  hash-green against the current data generation with an
-            unchanged plan — re-validated oldest-round first
+            unchanged fingerprint — re-validated oldest-round first
 
 Ties break on registration order (module import order), so coverage
 rotates mechanically: once a priority-2 query earns a current-gen row
 it drops to priority 3 and the next registration-order block floats
 into the window the following round.
 
+A query's fingerprint (``fingerprint_query``) is transitive: its
+oracle SQL plus the source of every top-level package definition
+(function, class or module-level constant) the query reaches by name.
+An edit to a shared operator or helper therefore moves the
+fingerprint of every query that reaches it, and those queries re-gate
+on their own; there is no hand-kept list of changed queries.
+
 Facts come from two places:
 
 - ``CORRECTNESS_r*.json`` at the repo root — the driver's own records
   (committed each round; parsed, never edited).
 - ``gate_ledger.json`` next to this module — per-query fingerprints
-  taken at each query's last green row, the current data-generation id,
-  and a fingerprint of the sf0.01 testdata so a regeneration is
-  detected loudly instead of silently expiring evidence. Regenerate
-  with ``python tools/update_gate_ledger.py`` at round start, BEFORE
-  editing any plan (tests/test_plan_audit.py pins staleness).
+  taken at each query's last green row, the data generation each round
+  ran on, and a fingerprint of the sf0.01 testdata so a regeneration is
+  detected loudly instead of silently expiring evidence. It is written
+  only by ``python tools/update_gate_ledger.py`` at round start, which
+  records fingerprints solely for rounds the ledger has not seen yet;
+  a PR that edits code never runs it.
 
 Every fact-read degrades gracefully (missing file → conservative
 classification), so the driver's import of ``__spark_entry__`` can
@@ -39,9 +47,11 @@ priority 0 and the order is plain registration order.
 
 from __future__ import annotations
 
+import ast
+import functools
 import glob
 import hashlib
-import inspect
+import importlib.util
 import json
 import os
 import re
@@ -53,19 +63,150 @@ LEDGER_PATH = os.path.join(_HERE, "gate_ledger.json")
 
 GATE_CAP = 50  # observed driver cap: first 50 queries() entries/round
 
+_PKG = __name__.split(".")[0]  # fingerprints follow names into this package only
+
+
+def _bindings(node: ast.Import | ast.ImportFrom, package: str) -> dict:
+    """Names an import statement binds → (module, attribute or None)."""
+    if isinstance(node, ast.Import):  # `import a.b` binds a; `as x` binds a.b
+        tops = {a: a.name if a.asname else a.name.split(".")[0] for a in node.names}
+        return {a.asname or top: (top, None) for a, top in tops.items()}
+    base = node.module or ""
+    if node.level:
+        base = importlib.util.resolve_name("." * node.level + base, package)
+    return {a.asname or a.name: (base, a.name) for a in node.names}
+
+
+def _references(node: ast.AST, package: str) -> tuple[frozenset, dict]:
+    """Dotted name chains a definition reads (``x``, ``mod.attr``) and
+    the bindings of its function-local imports. Decorators are skipped:
+    they register or wrap a definition, they are not what it computes."""
+    chains: set[tuple[str, ...]] = set()
+    local: dict = {}
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            local.update(_bindings(n, package))
+        elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            chains.add((n.id,))
+        elif isinstance(n, ast.Attribute):
+            parts, v = [], n
+            while isinstance(v, ast.Attribute):
+                parts.append(v.attr)
+                v = v.value
+            if isinstance(v, ast.Name):
+                chains.add((v.id, *reversed(parts)))
+        skip = {id(d) for d in getattr(n, "decorator_list", ())}
+        stack.extend(c for c in ast.iter_child_nodes(n) if id(c) not in skip)
+    return frozenset(chains), local
+
+
+@functools.lru_cache(maxsize=None)
+def _definitions(modname: str) -> tuple[dict, dict] | None:
+    """(definitions, module-level import bindings) of one package module,
+    None for anything else. A definition is a top-level function, class
+    or assigned name: ``{name: (source text, name chains, local import
+    bindings)}``; the parse tree is dropped once these are extracted.
+    The module is imported, never looked up in ``sys.modules``, so a
+    fingerprint does not depend on which lazily imported modules happen
+    to be loaded already."""
+    if modname != _PKG and not modname.startswith(_PKG + "."):
+        return None
+    try:
+        module = importlib.import_module(modname)
+        with open(module.__file__, encoding="utf-8") as f:
+            source = f.read()
+    except (ImportError, OSError):  # an attribute name, not a module
+        return None
+    lines = source.splitlines()
+    defs: dict = {}
+    imports: dict = {}
+    for node in ast.parse(source).body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            imports.update(_bindings(node, module.__package__))
+            continue
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [
+                t.id
+                for target in targets
+                for t in ast.walk(target)
+                if isinstance(t, ast.Name) and isinstance(t.ctx, ast.Store)
+            ]
+        else:
+            continue
+        text = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+        chains, local = _references(node, module.__package__)
+        for name in names:  # a re-assigned name is defined by every statement
+            t0, c0, l0 = defs.get(name, ("", frozenset(), {}))
+            defs[name] = (t0 + "\n" + text, c0 | chains, {**l0, **local})
+    return defs, imports
+
+
+def _resolve(modname: str, attr: str | None) -> tuple[str, str | None] | None:
+    """``modname.attr`` → (module, definition name), or (module, None)
+    when it names a package module; None outside the package."""
+    index = _definitions(modname)
+    if index is None or attr is None:
+        return index and (modname, None)
+    defs, imports = index
+    if attr in defs:
+        return modname, attr
+    if attr in imports:
+        return _resolve(*imports[attr])
+    sub = f"{modname}.{attr}"
+    return (sub, None) if _definitions(sub) is not None else None
+
+
+@functools.lru_cache(maxsize=None)
+def _edges(modname: str, name: str) -> tuple[tuple[str, str], ...]:
+    """The package definitions one definition reads by name."""
+    defs, imports = _definitions(modname)
+    _text, chains, local = defs[name]
+    out = set()
+    for head, *attrs in chains:
+        binding = local.get(head) or ((modname, head) if head in defs else imports.get(head))
+        node = binding and _resolve(*binding)
+        for attr in attrs:
+            if node and node[1] is None:
+                node = _resolve(node[0], attr)
+        if node and node[1]:
+            out.add(node)
+    return tuple(sorted(out))
+
+
+def _reachable(fn: Callable) -> set[tuple[str, str]] | None:
+    """(module, name) of every package definition the query function
+    reaches, its own top-level definition included; None when ``fn``
+    is not defined in the package."""
+    root = (fn.__module__, fn.__qualname__.split(".")[0])
+    index = _definitions(root[0])
+    if index is None or root[1] not in index[0]:
+        return None
+    seen, stack = {root}, [root]
+    while stack:
+        for dep in _edges(*stack.pop()):
+            if dep not in seen:
+                seen.add(dep)
+                stack.append(dep)
+    return seen
+
 
 def fingerprint_query(fn: Callable, oracle_sql: str | None) -> str:
-    """Identity of a query's semantics as gated: its Spark-side source
-    plus its oracle SQL. Either changing means prior green rows no
+    """Identity of a query's semantics as gated: its oracle SQL plus the
+    source of every top-level package definition reachable from the
+    query function. Changing any of them means prior green rows no
     longer vouch for the current code."""
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # builtins / exec'd code — be loud-ish
-        src = repr(fn)
     h = hashlib.sha256()
-    h.update(src.encode())
-    h.update(b"\x00")
-    h.update((oracle_sql or "").encode())
+    reached = _reachable(fn)
+    if reached is None:  # not a package definition: the repr's address
+        h.update(repr(fn).encode())  # differs per process, so never vouched
+    for modname, name in sorted(reached or ()):
+        h.update(f"{modname}:{name}\x00{_definitions(modname)[0][name][0]}\x00".encode())
+    h.update(b"\x00" + (oracle_sql or "").encode())
     return h.hexdigest()
 
 
@@ -82,79 +223,6 @@ def testdata_fingerprint(sf_dir: str = "/root/testdata/sf0.01") -> str:
     except OSError:
         return "unavailable"
     return h.hexdigest()
-
-
-def current_module_hashes(pkg_root: str | None = None) -> dict[str, str]:
-    """Content hash per engine module OUTSIDE plans/ (plans are covered
-    by per-query fingerprints). The ledger records these at refresh
-    time; a mismatch later means an engine module changed without a
-    ledger run — i.e. without a decision about which queries must
-    re-gate (``--assume-changed``)."""
-    if pkg_root is None:
-        pkg_root = os.path.dirname(_HERE)
-    hashes: dict[str, str] = {}
-    for dirpath, _dirs, files in os.walk(pkg_root):
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            rel = os.path.relpath(os.path.join(dirpath, fname), pkg_root)
-            if rel.startswith("plans"):
-                continue
-            with open(os.path.join(dirpath, fname), "rb") as f:
-                hashes[rel] = hashlib.sha256(f.read()).hexdigest()
-    return hashes
-
-
-def ledger_staleness(
-    ledger: dict | None = None,
-    module_hashes: dict[str, str] | None = None,
-    rounds: dict[int, dict] | None = None,
-) -> list[str]:
-    """Findings that mean the ledger no longer describes HEAD and
-    ``tools/update_gate_ledger.py`` must run (with ``--assume-changed``
-    for any semantically-moved queries). Empty list = fresh. Pinned by
-    tests/test_plan_audit.py so a forgotten refresh fails a `gate`
-    test instead of silently leaving changed queries vouched by old
-    fingerprints."""
-    ledger = load_ledger() if ledger is None else ledger
-    if not ledger:
-        return ["gate_ledger.json missing or unreadable"]
-    findings: list[str] = []
-    recorded = ledger.get("module_hashes", {})
-    current = current_module_hashes() if module_hashes is None else module_hashes
-    for rel in sorted(set(recorded) | set(current)):
-        if recorded.get(rel) != current.get(rel):
-            findings.append(f"engine module changed since ledger: {rel}")
-    module_hashes_diverge = bool(findings)
-    rounds = load_correctness_rounds() if rounds is None else rounds
-    if rounds:
-        latest = max(rounds)
-        known = ledger.get("data_gen_by_round", {})
-        if str(latest) not in known:
-            # Round-boundary case (r10 verdict, finding #1): the driver
-            # drops CORRECTNESS_r{N}.json AFTER the builder's final
-            # commit, so at the next round's start the newest round is
-            # always unmapped. That is "pending refresh", not staleness
-            # — PROVIDED every engine-module hash still matches HEAD
-            # (nothing changed since the ledger vouched for the tree).
-            # A newer-but-unmapped round WITH diverged module hashes is
-            # indistinguishable from editing code against an unrefreshed
-            # ledger and stays a hard finding.
-            known_rounds = [int(k) for k in known if str(k).isdigit()]
-            pending_refresh = (
-                bool(known_rounds)
-                and latest > max(known_rounds)
-                and not module_hashes_diverge
-            )
-            if not pending_refresh:
-                findings.append(
-                    f"CORRECTNESS round r{latest} not mapped to a data "
-                    "generation in the ledger"
-                )
-    fp = testdata_fingerprint()
-    if fp != "unavailable" and ledger.get("testdata_fingerprint") != fp:
-        findings.append("testdata fingerprint differs from ledger")
-    return findings
 
 
 def load_ledger(path: str = LEDGER_PATH) -> dict:

@@ -72,9 +72,6 @@ _GATE_MODULES = {
     "test_attribution_rag",
     "test_pii_scrub",
     "test_layout",
-    # the real BMP / PCM16 WAV decode path in operators/multimodal.py:
-    # round trips and quarantine mode (~25 s)
-    "test_multimodal_real",
 }
 
 

@@ -189,18 +189,6 @@ def test_gate_ledger_matches_current_testdata():
     )
 
 
-def test_gate_ledger_fresh_against_head():
-    """Round-9 verdict item 5: the ledger refresh is run-by-hand, so a
-    forgotten run after an engine-module edit must fail HERE — changed
-    helper semantics would otherwise stay vouched by fingerprints taken
-    before the change. Fix: rerun tools/update_gate_ledger.py, passing
-    --assume-changed for every query whose semantics the edit moved."""
-    from epl_cas_etl_2026_spark.plans.gate_policy import ledger_staleness
-
-    findings = ledger_staleness()
-    assert findings == [], "stale gate ledger:\n  " + "\n  ".join(findings)
-
-
 def test_queries_md_matches_registry():
     """QUERIES.md is the driver-contract index: a registry edit that
     skips `python tools/gen_queries_md.py` must fail here rather than
@@ -216,124 +204,110 @@ def test_queries_md_matches_registry():
     )
 
 
-def test_ledger_staleness_detects_doctored_ledger():
-    """The staleness checker itself: a ledger whose module hashes,
-    round map, or testdata fingerprint lag HEAD is flagged with one
-    finding per divergence (deliberately-stale unit fixture)."""
-    from epl_cas_etl_2026_spark.plans.gate_policy import (
-        current_module_hashes,
-        ledger_staleness,
-        load_ledger,
-        testdata_fingerprint,
-    )
-
-    real = load_ledger()
-    assert real, "gate_ledger.json missing"
-    mods = current_module_hashes()
-    rounds = {7: {}, 9: {}}
-
-    fresh = {
-        "module_hashes": mods,
-        "data_gen_by_round": {"7": "g1", "9": "g2"},
-        "testdata_fingerprint": testdata_fingerprint(),
-    }
-    assert ledger_staleness(fresh, mods, rounds) == []
-
-    # one edited module, one missing round mapping, wrong testdata pin
-    stale = dict(fresh)
-    stale["module_hashes"] = {
-        **mods, "sources/versioned.py": "0" * 64, "sources/new_mod.py": "1" * 64
-    }
-    stale["data_gen_by_round"] = {"7": "g1"}
-    stale["testdata_fingerprint"] = "not-the-real-one"
-    findings = ledger_staleness(stale, mods, rounds)
-    assert any("sources/versioned.py" in f for f in findings)
-    assert any("sources/new_mod.py" in f for f in findings)
-    assert any("r9" in f for f in findings)
-    assert any("testdata fingerprint" in f for f in findings)
-    # the empty ledger degrades to a single loud finding
-    assert ledger_staleness({}, mods, rounds) == [
-        "gate_ledger.json missing or unreadable"
-    ]
+_PARQUET = "epl_cas_etl_2026_spark.sources.parquet"
 
 
-def test_ledger_staleness_round_boundary_is_pending_not_stale():
-    """Round-10 verdict finding #1: the driver drops
-    CORRECTNESS_r{N}.json AFTER the builder's final commit, so at every
-    round start the newest round is unmapped. With module hashes equal
-    to HEAD that is "pending refresh" — no finding — but the moment any
-    engine module diverges it reverts to a hard finding (editing code
-    against an unrefreshed ledger must still fail loudly)."""
-    from epl_cas_etl_2026_spark.plans.gate_policy import (
-        current_module_hashes,
-        ledger_staleness,
-        testdata_fingerprint,
-    )
+def _fingerprints() -> dict[str, str]:
+    from epl_cas_etl_2026_spark.plans import ORACLES
+    from epl_cas_etl_2026_spark.plans.gate_policy import fingerprint_query
 
-    mods = current_module_hashes()
-    ledger = {
-        "module_hashes": mods,
-        "data_gen_by_round": {"7": "g1", "9": "g2"},
-        "testdata_fingerprint": testdata_fingerprint(),
-    }
-    # newest round (11) postdates every ledger-known round, tree
-    # untouched → pending refresh, suite stays green across the boundary
-    rounds = {7: {}, 9: {}, 11: {}}
-    assert ledger_staleness(ledger, mods, rounds) == []
-
-    # same boundary but an engine module changed → hard finding again
-    edited = {**mods, "sources/versioned.py": "f" * 64}
-    findings = ledger_staleness(ledger, edited, rounds)
-    assert any("r11" in f for f in findings)
-
-    # an unmapped latest round that is NOT newer than every known round
-    # (here: only r11 known, latest is r9) is a doctored ledger, not a
-    # boundary artifact — hard finding even with clean module hashes
-    doctored = dict(ledger)
-    doctored["data_gen_by_round"] = {"11": "g2"}
-    findings = ledger_staleness(doctored, mods, {7: {}, 9: {}})
-    assert any("r9" in f for f in findings)
-
-    # an empty round map can never claim the boundary exemption
-    empty_map = dict(ledger)
-    empty_map["data_gen_by_round"] = {}
-    findings = ledger_staleness(empty_map, mods, {9: {}})
-    assert any("r9" in f for f in findings)
+    return {n: fingerprint_query(fn, ORACLES.get(n)) for n, fn in QUERIES.items()}
 
 
-def test_assume_changed_is_sticky_until_next_round():
-    """The r6/r10 ledger trap, closed: names passed once via
-    --assume-changed persist in the ledger and keep applying on plain
-    re-runs — until a NEWER CORRECTNESS round lands, which gated the
-    changed code and obsoletes the exclusion."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "ugl",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "update_gate_ledger.py",
+@pytest.mark.parametrize(
+    "name, must_move, must_stay",
+    [
+        (
+            "spread_scan",
+            # direct, via operators/dedup, via operators/similarity
+            ["lineitem_moments_stats", "docs_simhash_near_dup", "embedding_near_dup_cosine"],
+            ["api_estados_counts"],
         ),
-    )
-    ugl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ugl)
+        # a module constant read by load_table
+        ("_CANON_TS_TABLES", ["events_user_sessions", "api_estados_counts"], []),
+    ],
+    ids=["spread_scan", "module_constant"],
+)
+def test_definition_edit_moves_exactly_its_consumers(monkeypatch, name, must_move, must_stay):
+    """The fingerprint is transitive: an edit to a shared helper or
+    constant re-gates exactly the queries that reach it, with no
+    hand-kept list of changed queries. The edit is made to the cached
+    definition text, not to the file."""
+    from epl_cas_etl_2026_spark.plans import gate_policy
 
-    ledger = {
-        "assume_changed_pending": {"as_of_round": 9, "names": ["q_a", "q_b"]}
+    before = _fingerprints()
+    real = gate_policy._definitions
+
+    def edited(modname):
+        index = real(modname)
+        if modname != _PARQUET:
+            return index
+        defs, imports = index
+        text, chains, local = defs[name]
+        return {**defs, name: (text + "\n# edited", chains, local)}, imports
+
+    monkeypatch.setattr(gate_policy, "_definitions", edited)
+    after = _fingerprints()
+    moved = {n for n in before if before[n] != after[n]}
+    assert moved == {
+        n for n, fn in QUERIES.items() if (_PARQUET, name) in gate_policy._reachable(fn)
     }
-    # same round still latest: pending names keep applying, CLI unions
-    assert ugl.effective_assume_changed(set(), ledger, 9) == {"q_a", "q_b"}
-    assert ugl.effective_assume_changed({"q_c"}, ledger, 9) == {
-        "q_a", "q_b", "q_c",
-    }
-    # a newer round landed: its rows gated the changed code — only the
-    # fresh CLI names apply
-    assert ugl.effective_assume_changed(set(), ledger, 10) == set()
-    assert ugl.effective_assume_changed({"q_c"}, ledger, 10) == {"q_c"}
-    # no pending block at all: plain CLI behavior
-    assert ugl.effective_assume_changed({"q_c"}, {}, 9) == {"q_c"}
+    assert set(must_move) <= moved
+    assert not set(must_stay) & moved
+
+
+def test_fingerprints_independent_of_loaded_modules():
+    """Function-local imports are resolved by importing the package
+    module, so the fingerprints taken when ``plans`` is first imported
+    equal those taken after every package module is loaded (a lookup in
+    sys.modules would make them depend on what was imported before)."""
+    import subprocess
+    import sys
+
+    code = """if 1:
+        import importlib, pkgutil
+        import epl_cas_etl_2026_spark as pkg
+        from epl_cas_etl_2026_spark.plans import ORACLES, QUERIES, gate_policy as gp
+        fps = lambda: {n: gp.fingerprint_query(f, ORACLES.get(n)) for n, f in QUERIES.items()}
+        before = fps()
+        for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+            importlib.import_module(m.name)
+        gp._definitions.cache_clear()
+        gp._edges.cache_clear()
+        print(sorted(n for n in before if before[n] != fps()[n]))
+    """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.splitlines()[-1] == "[]"
+
+
+def test_ledger_tool_records_each_round_once(monkeypatch):
+    """tools/update_gate_ledger.py records fingerprints only for rounds
+    the ledger has not mapped yet: a second run in the same round keeps
+    the first fingerprint (a re-run after an edit cannot vouch for the
+    edit), and a newer round re-records it. The committed ledger has
+    the tool's exact shape."""
+    from epl_cas_etl_2026_spark.plans.gate_policy import load_ledger
+    from tools import update_gate_ledger as ugl
+
+    tree = {"fp": "fp-v1"}
+    monkeypatch.setattr(ugl, "fingerprint_query", lambda fn, sql: tree["fp"])
+    queries, oracles = {"q_a": None, "q_b": None}, {"q_a": "SELECT 1", "q_b": "SELECT 1"}
+    rounds = {12: {"q_a": {"hash_match": True}, "q_b": {"hash_match": False}}}
+    ledger = ugl.refresh({"current_data_gen": "g2"}, rounds, queries, oracles, "td")
+    assert ledger["fingerprints"] == {"q_a": "fp-v1"}
+    assert ledger["data_gen_by_round"] == {"12": "g2"}
+
+    tree["fp"] = "fp-v2"  # the code changed after round 12 was gated
+    assert ugl.refresh(ledger, rounds, queries, oracles, "td") == ledger
+
+    rounds[13] = {"q_a": {"hash_match": True}}
+    newer = ugl.refresh(ledger, rounds, queries, oracles, "td")
+    assert newer["fingerprints"] == {"q_a": "fp-v2"}
+    assert newer["data_gen_by_round"] == {"12": "g2", "13": "g2"}
+    assert set(load_ledger()) == set(newer)
 
 
 # ---- round-4 additions: plan-shape pins for the new operators ----

@@ -7,13 +7,15 @@ comparator. Exits non-zero on any failure.
 Usage: python tools/rehearse_gate.py [--all | --changed]
            [--sf /root/testdata/sf0.01] [--queries a,b,c]
 
---changed (round-7 verdict item 7: keep local certification sub-5-min
-as the registry grows) rehearses ONLY queries the gate ledger cannot
-vouch for: never hash-green in any committed CORRECTNESS round, or
-with a (plan source + oracle SQL) fingerprint that differs from the
-one recorded at their last green row — i.e. gate_policy priorities 0
-and 1. An unchanged tree rehearses nothing; a one-query edit
-rehearses that query in seconds instead of the 395 s full sweep.
+--changed rehearses ONLY queries the gate ledger cannot vouch for:
+never hash-green in any committed CORRECTNESS round, or with a
+fingerprint that differs from the one recorded at their last green
+row — i.e. gate_policy priorities 0 and 1. The fingerprint covers the
+oracle SQL and every package definition the query reaches, so an edit
+to a shared operator or helper selects every query that reaches it
+without a hand-kept list. An unchanged tree rehearses nothing; a
+one-query edit rehearses that query in seconds instead of the full
+sweep.
 """
 
 from __future__ import annotations

@@ -1,35 +1,26 @@
-"""Refresh epl_cas_etl_2026_spark/plans/gate_ledger.json from recorded
-facts. Run at ROUND START, before editing any plan, so each query's
-working-tree source still equals the source the driver just gated.
+"""Record epl_cas_etl_2026_spark/plans/gate_ledger.json facts for
+CORRECTNESS rounds the ledger has not seen yet. Run it once at ROUND
+START, after the driver's CORRECTNESS_r{N}.json lands and before any
+code is edited, so the working tree is the tree the driver just gated.
 
 What it does:
-- records a fingerprint (plan source + oracle SQL) for every query that
-  is hash-green in the latest CORRECTNESS round; keeps the previously
-  recorded fingerprint for queries whose last green row is older (their
-  gated source may predate the tree — never overwrite history with the
-  present);
-- drops fingerprints named via --assume-changed (for backfilling known
-  plan changes that happened after a query's last green row);
+- for every CORRECTNESS round not yet in ``data_gen_by_round``, records
+  the current tree's fingerprint (``gate_policy.fingerprint_query``:
+  oracle SQL plus every package definition the query reaches) for each
+  query hash-green in that round, then maps the round to the current
+  data generation. Rounds already mapped are never re-recorded, so a
+  re-run after a code edit cannot vouch for the edit; the edited
+  queries stay at gate priority 1 until a newer round gates them;
 - pins the current testdata fingerprint, bumping the data-generation id
   when the parquet files changed since the last ledger (which expires
   all prior-generation green rows via the policy's priority 2);
-- maps every CORRECTNESS round file to the data generation it ran on
-  (new rounds default to the current generation).
+- drops fingerprints of queries that no longer exist.
 
-Usage: python tools/update_gate_ledger.py [--assume-changed a,b,c]
-
---assume-changed is STICKY since round 10: names are persisted in the
-ledger (``assume_changed_pending``) and stay excluded from fingerprint
-re-recording on every later run, until a NEWER CORRECTNESS round lands
-(whose rows gated the changed code, so re-recording becomes correct
-and the pending set clears automatically). This closes the r6/r10
-"ledger trap" where a later plain run silently re-vouched an edited
-query that happened to be green in the latest round's window.
+Usage: python tools/update_gate_ledger.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -47,122 +38,42 @@ from epl_cas_etl_2026_spark.plans.gate_policy import (
 )
 
 
-def effective_assume_changed(
-    cli_names: set[str], ledger: dict, latest: int
-) -> set[str]:
-    """CLI names ∪ the ledger's pending set — unless a CORRECTNESS
-    round NEWER than the one the pending set was recorded against has
-    landed (its rows gated the changed code, so prior exclusions are
-    obsolete and only the fresh CLI names apply)."""
-    pend = ledger.get("assume_changed_pending", {})
-    if pend.get("as_of_round") == latest:
-        return cli_names | set(pend.get("names", []))
-    return cli_names
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--assume-changed",
-        default="",
-        help="comma-separated query names whose plans changed after "
-        "their last green row (fingerprints dropped → re-gate); "
-        "sticky via the ledger until the next CORRECTNESS round",
-    )
-    args = ap.parse_args()
-
-    ledger = load_ledger()
-    rounds = load_correctness_rounds()
-    if not rounds:
-        raise SystemExit("no CORRECTNESS_r*.json found — nothing to record")
-    latest = max(rounds)
-    assume_changed = effective_assume_changed(
-        {s for s in args.assume_changed.split(",") if s}, ledger, latest
-    )
-
-    current_fp = testdata_fingerprint()
+def refresh(ledger: dict, rounds: dict, queries, oracles, testdata_fp: str) -> dict:
+    """The ledger after recording every round it has not mapped yet."""
     current_gen = ledger.get("current_data_gen", "g2")
-    if ledger.get("testdata_fingerprint") not in (None, current_fp):
+    if ledger.get("testdata_fingerprint") not in (None, testdata_fp):
         current_gen = f"g{int(current_gen.lstrip('g')) + 1}"
         print(f"testdata changed → data generation bumped to {current_gen}")
 
     gen_by_round = dict(ledger.get("data_gen_by_round", {}))
-    for r in rounds:
-        gen_by_round.setdefault(str(r), current_gen)
-
-    # Helper-change detection: query fingerprints cover the query fn +
-    # oracle only, so a semantic change inside a shared operator module
-    # is invisible to them. Record a content hash per engine module
-    # (shared with gate_policy.ledger_staleness, which a `gate` test
-    # runs — a forgotten refresh fails pytest); when one changed since
-    # the last ledger, list the queries whose SOURCE references that
-    # module so the operator can re-run with --assume-changed on the
-    # affected names.
-    import inspect
-
-    from epl_cas_etl_2026_spark.plans.gate_policy import current_module_hashes
-
-    module_hashes = current_module_hashes()
-    prev_hashes = ledger.get("module_hashes", {})
-    changed_mods = sorted(
-        rel
-        for rel, h in module_hashes.items()
-        if prev_hashes and prev_hashes.get(rel) != h
-    )
-    if changed_mods:
-        print("engine modules changed since last ledger:")
-        for rel in changed_mods:
-            mod_token = rel[:-3].replace(os.sep, ".").replace(".__init__", "")
-            users = []
-            for qname, fn in QUERIES.items():
-                try:
-                    src = inspect.getsource(fn)
-                except (OSError, TypeError):
-                    continue
-                if mod_token.split(".")[-1] in src or mod_token in src:
-                    users.append(qname)
-            print(f"  {rel} — queries referencing it: {', '.join(users) or '-'}")
-        print(
-            "review the diffs; re-run with --assume-changed "
-            "<affected,query,names> if semantics moved"
-        )
-
     fingerprints = dict(ledger.get("fingerprints", {}))
-    for name in assume_changed:
-        fingerprints.pop(name, None)
-    refreshed = 0
-    for name, row in rounds[latest].items():
-        if name in assume_changed:
-            # an assume-changed query must NOT have its fingerprint
-            # re-recorded from the current tree even if it was green in
-            # the latest round — the green predates the change
-            continue
-        if name in QUERIES and _is_green(row, name in ORACLES):
-            fingerprints[name] = fingerprint_query(
-                QUERIES[name], ORACLES.get(name)
-            )
-            refreshed += 1
-    # drop entries for queries that no longer exist
-    fingerprints = {n: fp for n, fp in fingerprints.items() if n in QUERIES}
-
-    out = {
-        "assume_changed_pending": {
-            "as_of_round": latest,
-            "names": sorted(assume_changed),
-        },
+    for r in sorted(r for r in rounds if str(r) not in gen_by_round):
+        recorded = 0
+        for name, row in rounds[r].items():
+            if name in queries and _is_green(row, name in oracles):
+                fingerprints[name] = fingerprint_query(queries[name], oracles.get(name))
+                recorded += 1
+        gen_by_round[str(r)] = current_gen
+        print(f"round r{r:02d}: {recorded} fingerprints recorded")
+    return {
         "current_data_gen": current_gen,
         "data_gen_by_round": gen_by_round,
-        "testdata_fingerprint": current_fp,
-        "module_hashes": dict(sorted(module_hashes.items())),
-        "fingerprints": dict(sorted(fingerprints.items())),
+        "fingerprints": {n: fp for n, fp in sorted(fingerprints.items()) if n in queries},
+        "testdata_fingerprint": testdata_fp,
     }
+
+
+def main() -> None:
+    rounds = load_correctness_rounds()
+    if not rounds:
+        raise SystemExit("no CORRECTNESS_r*.json found — nothing to record")
+    out = refresh(load_ledger(), rounds, QUERIES, ORACLES, testdata_fingerprint())
     with open(LEDGER_PATH, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")
     print(
-        f"ledger written: round r{latest:02d}, gen {current_gen}, "
-        f"{refreshed} fingerprints refreshed, "
-        f"{len(fingerprints)} total"
+        f"ledger written: gen {out['current_data_gen']}, "
+        f"{len(out['fingerprints'])} fingerprints"
     )
 
 
