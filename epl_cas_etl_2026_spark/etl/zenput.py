@@ -29,12 +29,17 @@ def parse_submissions(raw_json_df: DataFrame, json_col: str = "value") -> DataFr
     Input: one JSON document per row (e.g. from ``spark.read.text`` on
     a landing dir, or a REST extract). Output: typed columns + the
     nested ``answers`` array kept for downstream explodes.
+
+    A line that does not parse, or parses without an ``id`` (the
+    natural key), is dropped: ``from_json`` gives it a NULL id, and
+    loading it would write an all-NULL master row whose surrogate
+    ``xxhash64(NULL)`` every such row shares.
     """
     from epl_cas_etl_2026_spark.schemas import ZENPUT_SUBMISSION_SCHEMA
 
     parsed = raw_json_df.select(
         F.from_json(F.col(json_col), ZENPUT_SUBMISSION_SCHEMA).alias("s")
-    )
+    ).filter(F.col("s.id").isNotNull())
     return parsed.select(
         F.col("s.id").cast("string").alias("zenput_submission_id"),
         F.col("s.smetadata.location.id").alias("zenput_location_id"),
@@ -158,46 +163,3 @@ def extract_detail_items(
             F.col("value").alias("porcentaje"),
         )
     )
-
-
-def parse_submissions_with_quarantine(
-    raw_json_df: DataFrame, json_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """S9 with corrupt-record routing: the reference's per-row loop
-    would raise (or silently skip) on malformed submissions
-    (etl_sync.py:206-224 assumes well-formed dicts); at pipeline scale
-    a bad page must neither kill the job nor vanish. PERMISSIVE-style
-    split: ``from_json`` yields NULL for unparseable documents, so one
-    pass tags each raw line and the two outputs are filter twins of
-    the SAME parsed frame (Catalyst collapses this to a single parse —
-    no double scan when both sides are consumed in one plan; callers
-    that materialize both should persist the tagged frame).
-
-    Returns ``(good, quarantine)``: ``good`` has the
-    :func:`parse_submissions` schema; ``quarantine`` carries the raw
-    line for replay/repair (the landing-dir analogue of a dead-letter
-    queue).
-    """
-    from epl_cas_etl_2026_spark.schemas import ZENPUT_SUBMISSION_SCHEMA
-
-    tagged = raw_json_df.select(
-        F.col(json_col).alias("__raw"),
-        F.from_json(F.col(json_col), ZENPUT_SUBMISSION_SCHEMA).alias("s"),
-    )
-    # a parse failure surfaces as a NULL struct; an all-NULL struct from
-    # a syntactically-valid-but-wrong-shape document has a NULL id too,
-    # which the reference would also reject (id is the natural key)
-    bad = F.col("s").isNull() | F.col("s.id").isNull()
-    quarantine = tagged.filter(bad).select(F.col("__raw").alias("raw_json"))
-    good = tagged.filter(~bad).select(
-        F.col("s.id").cast("string").alias("zenput_submission_id"),
-        F.col("s.smetadata.location.id").alias("zenput_location_id"),
-        F.col("s.smetadata.created_by.display_name").alias("supervisor"),
-        F.to_timestamp(F.col("s.smetadata.date_submitted")).alias(
-            "fecha_supervision"
-        ),
-        F.col("s.smetadata.lat").alias("lat_entrega"),
-        F.col("s.smetadata.lon").alias("lon_entrega"),
-        F.col("s.answers").alias("answers"),
-    )
-    return good, quarantine

@@ -11,9 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# A small deterministic stopword list for quality scoring / lang-id.
-STOPWORDS = ("the", "a", "and", "of", "to", "in")
-
 # BPE-ish tokenizer regex: letter runs, digit runs, single punctuation.
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
@@ -41,15 +38,6 @@ def alpha_ratio(text: Column) -> Column:
     return F.length(clean).cast("double") / F.nullif(
         F.length(text).cast("double"), F.lit(0.0)
     )
-
-
-def stopword_ratio(text: Column, stopwords=STOPWORDS) -> Column:
-    """Fraction of whitespace tokens that are stopwords; natural prose
-    sits in a known band, keyword soup doesn't."""
-    toks = words(F.lower(text))
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits.cast("double") / F.nullif(F.size(toks).cast("double"), F.lit(0.0))
 
 
 def quality_class(text: Column) -> Column:

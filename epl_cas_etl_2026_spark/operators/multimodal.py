@@ -87,41 +87,6 @@ def frame_sample_stub(
     )
 
 
-RESIZE_META_SCHEMA = (
-    "id long, fake_width int, fake_height int, target_width int, target_height int"
-)
-
-
-def resize_image_stub(
-    df: DataFrame,
-    target: tuple[int, int] = (224, 224),
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Image-resize plumbing via mapInPandas: consumes the payload
-    batch-wise and emits per-image source + target dimensions. STUB:
-    real code would decode, ``Image.resize(target)``, and emit the new
-    payload; the Arrow batch shape, schema, and partition behavior here
-    are exactly what that implementation uses."""
-    tw, th = target
-    cols = [id_col, payload_col]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blens = pdf[payload_col].map(len)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "fake_width": (blens % 640).astype("int32"),
-                    "fake_height": (blens % 480).astype("int32"),
-                    "target_width": tw,
-                    "target_height": th,
-                }
-            )
-
-    return df.select(*cols).mapInPandas(batches, RESIZE_META_SCHEMA)
-
-
 def audio_chunk_stub(
     df: DataFrame,
     id_col: str = "doc_id",

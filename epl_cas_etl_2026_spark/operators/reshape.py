@@ -1,37 +1,16 @@
-"""Reshaping operators (SURVEY.md §2.3 J4, §2.4 A10-A13).
+"""Reshaping operators (SURVEY.md §2.4 A10).
 
-The reference builds its heatmap matrix in Python (app.py:1153-1184)
-over a CROSS JOIN densified grid (app.py:1141-1151), and computes
-unweighted average-of-averages (app.py:1186-1202) plus a *weighted*
-regrouped average (PLOG agrupación — app.py:65-89) in separate
-round-trips. All of that is one lazy plan here.
+The reference builds its heatmap matrix in Python (app.py:1153-1184);
+``api.heatmap_matrix`` densifies the (grupo × periodo) grid, averages
+it in one lazy plan and pivots it wide with ``pivot_matrix``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def densified_matrix(
-    rows_dim: DataFrame,
-    cols_dim: DataFrame,
-    facts: DataFrame,
-    row_key: str,
-    col_key: str,
-    agg: Column,
-) -> DataFrame:
-    """J4 — CROSS JOIN densification: one cell per (row, col) even when
-    no fact lands there (app.py:1141-1151). Both dims are tiny →
-    Catalyst broadcasts the cross join; the fact agg is pre-reduced
-    BEFORE joining onto the grid so the cross join never touches fact
-    cardinality (at 100 TB the grid stays |rows|×|cols|).
-    """
-    cells = facts.groupBy(row_key, col_key).agg(agg.alias("cell"))
-    grid = rows_dim.crossJoin(cols_dim)
-    return grid.join(cells, [row_key, col_key], "left")
 
 
 def pivot_matrix(
@@ -49,45 +28,4 @@ def pivot_matrix(
         long_df.groupBy(row_key)
         .pivot(col_key, list(col_values))
         .agg(F.first(value_col))
-    )
-
-
-def avg_of_avgs(
-    df: DataFrame,
-    outer_keys: Sequence[str],
-    inner_keys: Sequence[str],
-    value_col: str,
-    out_col: str = "promedio",
-) -> DataFrame:
-    """A11/A12 — UNWEIGHTED two-level average (app.py:1186-1202):
-    mean over per-(outer,inner) means, NOT the pooled mean. The two
-    semantics diverge whenever inner cells have different counts —
-    the reference's dashboard relies on the unweighted one.
-    """
-    inner = df.groupBy(*outer_keys, *inner_keys).agg(
-        F.avg(value_col).alias("__inner_avg")
-    )
-    return inner.groupBy(*outer_keys).agg(F.avg("__inner_avg").alias(out_col))
-
-
-def regrouped_avg(
-    df: DataFrame,
-    name_col: str,
-    value_col: str,
-    prefix: str = "PLOG",
-    group_out: str = "agrupacion",
-    out_col: str = "promedio",
-) -> DataFrame:
-    """A13 — WEIGHTED regrouped average: members whose name starts with
-    ``prefix`` collapse into one agrupación whose average pools ALL
-    member rows (app.py:65-89 — explicitly not avg-of-member-avgs).
-    """
-    keyed = df.withColumn(
-        group_out,
-        F.when(F.col(name_col).startswith(prefix), F.lit(prefix)).otherwise(
-            F.col(name_col)
-        ),
-    )
-    return keyed.groupBy(group_out).agg(
-        F.avg(value_col).alias(out_col), F.count("*").alias("n_rows")
     )

@@ -898,8 +898,8 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Event-time windows (SURVEY.md §2.9 T4 extension): tumbling & sliding.
-# Batch expression here; streaming/windows.py runs the same logic under
-# Structured Streaming with a watermark.
+# plans/streaming_gate.py runs the tumbling window under Structured
+# Streaming against this query's oracle.
 # ---------------------------------------------------------------------------
 @_register(
     "events_tumbling_hourly",

@@ -155,7 +155,9 @@ def _resolve(modname: str, attr: str | None) -> tuple[str, str | None] | None:
     defs, imports = index
     if attr in defs:
         return modname, attr
-    if attr in imports:
+    # a package that imports its own submodule binds it to itself
+    # (`from pkg import sub` inside pkg); that name is the submodule
+    if attr in imports and imports[attr] != (modname, attr):
         return _resolve(*imports[attr])
     sub = f"{modname}.{attr}"
     return (sub, None) if _definitions(sub) is not None else None

@@ -30,7 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from epl_cas_etl_2026_spark.plans.registry import ORACLES, QUERIES
+from epl_cas_etl_2026_spark.plans.registry import register as _register
 from epl_cas_etl_2026_spark.sources.parquet import load_table
 
 _SPLIT = "1998-01-01 00:00:00"
@@ -128,6 +128,7 @@ _LIFECYCLE_ORACLE = f"""
 """
 
 
+@_register("etl_sync_lifecycle_stats", _LIFECYCLE_ORACLE)
 def etl_sync_lifecycle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epl_cas_etl_2026_spark.etl.pipeline import (
         period_transition,
@@ -251,10 +252,6 @@ def etl_sync_lifecycle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["etl_sync_lifecycle_stats"] = etl_sync_lifecycle_stats
-ORACLES["etl_sync_lifecycle_stats"] = _LIFECYCLE_ORACLE
-
-
 # ---------------------------------------------------------------------------
 # Transactional-MERGE lifecycle under the hard gate: drive the
 # VersionedTable commit primitive (sources/versioned.py) end-to-end —
@@ -266,7 +263,7 @@ ORACLES["etl_sync_lifecycle_stats"] = _LIFECYCLE_ORACLE
 # ---------------------------------------------------------------------------
 _V_CUT = "1999-01-01"
 
-ORACLES["orders_versioned_merge_stats"] = f"""
+_MERGE_ORACLE = f"""
     WITH cents AS (
       SELECT o_custkey, o_orderdate,
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -298,6 +295,7 @@ ORACLES["orders_versioned_merge_stats"] = f"""
     """
 
 
+@_register("orders_versioned_merge_stats", _MERGE_ORACLE)
 def orders_versioned_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epl_cas_etl_2026_spark.sources.versioned import VersionedTable
 
@@ -363,9 +361,6 @@ def orders_versioned_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["orders_versioned_merge_stats"] = orders_versioned_merge_stats
-
-
 # ---------------------------------------------------------------------------
 # OPTIMISTIC-CONCURRENCY COMMIT (round-9; closes the r8 verdict's
 # VersionedTable writer-vs-writer gap): the commit protocol is now
@@ -385,7 +380,7 @@ QUERIES["orders_versioned_merge_stats"] = orders_versioned_merge_stats
 _CAS_CUT1 = "1997-01-01"
 _CAS_CUT2 = "1998-01-01"
 
-ORACLES["orders_versioned_cas_stats"] = f"""
+_CAS_ORACLE = f"""
     WITH cents AS (
       SELECT o_custkey, o_orderdate,
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -433,6 +428,7 @@ ORACLES["orders_versioned_cas_stats"] = f"""
     """
 
 
+@_register("orders_versioned_cas_stats", _CAS_ORACLE)
 def orders_versioned_cas_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epl_cas_etl_2026_spark.sources.versioned import (
         CommitConflictError,
@@ -525,9 +521,6 @@ def orders_versioned_cas_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["orders_versioned_cas_stats"] = orders_versioned_cas_stats
-
-
 # ---------------------------------------------------------------------------
 # VACUUM / WRITER-RACE AUDIT under the hard gate (round-10): drives
 # the retention semantics the round-9 ADVICE hardened
@@ -546,7 +539,7 @@ QUERIES["orders_versioned_cas_stats"] = orders_versioned_cas_stats
 # recomputed by the DuckDB oracle from `orders` alone; the protocol
 # outcomes are spec constants.
 # ---------------------------------------------------------------------------
-ORACLES["orders_versioned_vacuum_audit"] = f"""
+_VACUUM_ORACLE = f"""
     WITH cents AS (
       SELECT o_custkey, o_orderdate,
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -586,6 +579,7 @@ ORACLES["orders_versioned_vacuum_audit"] = f"""
     """
 
 
+@_register("orders_versioned_vacuum_audit", _VACUUM_ORACLE)
 def orders_versioned_vacuum_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -681,6 +675,3 @@ def orders_versioned_vacuum_audit(
     return spark.createDataFrame(rows, "metric string, value long").orderBy(
         "metric"
     )
-
-
-QUERIES["orders_versioned_vacuum_audit"] = orders_versioned_vacuum_audit

@@ -3,25 +3,24 @@ source → windowed aggregation → memory sink, AvailableNow trigger)
 inside a batch `queries()` entry and hash-compare its result against
 the batch SQL oracle.
 
-Why this exists: every other streaming path in the repo is verified by
-pytest only (the external gate executes batch callables). AvailableNow
-makes a streaming job terminate after consuming the available input,
-so the gate can drive the actual streaming engine — state store,
-incremental execution, sink commit — and still get a deterministic
-DataFrame back. The oracle is the plain batch SQL over the same
-parquet: streaming-vs-batch equivalence under the hash gate.
+This module is the package's one Structured Streaming surface: the
+external gate executes batch callables, and AvailableNow makes a
+streaming job terminate after consuming the available input, so the
+gate can drive the actual streaming engine — state store, incremental
+execution, sink commit — and still get a deterministic DataFrame back.
+The oracle is the plain batch SQL over the same parquet:
+streaming-vs-batch equivalence under the hash gate.
 
 Scale/semantics notes:
 
-- The tumbling aggregation is the same windowed_agg logic the batch
-  query (events_tumbling_hourly) and the pytest streams use — one
-  definition, three execution modes.
+- Each gate writes its own streaming aggregation; the tumbling gate's
+  oracle is the same SQL as the batch query events_tumbling_hourly's,
+  so the two execution modes are held to one result.
 - Complete output mode + memory sink is the gate-harness shape
   (results are a few hundred window rows); production writes append
-  mode to parquet/Delta with a watermark — that path is covered by
-  tests/test_streaming.py. Watermark eviction is deliberately NOT used
-  here: complete mode retains state, and an append-mode single-batch
-  run would hold back unfinalized windows.
+  mode to parquet/Delta with a watermark. Watermark eviction is
+  deliberately NOT used here: complete mode retains state, and an
+  append-mode single-batch run would hold back unfinalized windows.
 - Timestamp canonicalization mirrors sources/parquet.load_table for
   both testdata generations (int64-nanos and TIMESTAMP_NTZ micros).
 """
@@ -380,8 +379,7 @@ def events_stream_dedup_watermark_gate(
 # ---------------------------------------------------------------------------
 # STREAM-STREAM inner join under the hard gate: the fifth gate query,
 # exercising the dual-sided join state store (each side buffers rows
-# and probes the other side's state) — the one streaming operator
-# class previously covered only by pytest (streaming/joins.py).
+# and probes the other side's state).
 #
 # Shape: click→purchase attribution — purchases (even event ids) join
 # clicks (odd ids) of the same user within [click.ts, click.ts + 1 h].

@@ -132,14 +132,6 @@ PERIODOS_SCHEMA = T.StructType(
     ]
 )
 
-GRUPOS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.IntegerType(), False),
-        T.StructField("nombre", T.StringType()),
-        T.StructField("activo", T.BooleanType()),
-    ]
-)
-
 SUCURSALES_SCHEMA = T.StructType(
     [
         T.StructField("id", T.IntegerType(), False),
@@ -153,28 +145,6 @@ SUCURSALES_SCHEMA = T.StructType(
         T.StructField("latitud", T.DoubleType()),
         T.StructField("longitud", T.DoubleType()),
         T.StructField("zenput_location_id", T.StringType()),
-    ]
-)
-
-SUPERVISIONES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("zenput_submission_id", T.StringType()),
-        T.StructField("sucursal_id", T.IntegerType()),
-        T.StructField("periodo_id", T.IntegerType()),
-        T.StructField("supervisor", T.StringType()),
-        T.StructField("fecha_supervision", T.TimestampType()),
-        T.StructField("calificacion_general", T.DoubleType()),
-        T.StructField("lat_entrega", T.DoubleType()),
-        T.StructField("lon_entrega", T.DoubleType()),
-    ]
-)
-
-DETAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("supervision_id", T.LongType()),
-        T.StructField("item_id", T.IntegerType()),
-        T.StructField("porcentaje", T.DoubleType()),
     ]
 )
 

@@ -1,48 +1,16 @@
-"""Physical table layout for scale: partitioned + bucketed writes.
+"""Skew salting for joins on a known-hot key.
 
-SURVEY.md §1.4: at production scale the facts are partitioned by
-``periodo_id`` (every dashboard query filters on it — reference
-app.py:354, 453, 673), so a period-scoped query scans 1/|periods| of
-the data via partition pruning before a single row is read. Dims stay
-unpartitioned (broadcast side).
-
-``write_partitioned``/``scan_partition_pruned`` demonstrate the layout
-on plain parquet; on a cluster the same calls target object storage.
-``with_salt``/``unsalt_agg`` implement two-phase salted aggregation for
-skewed keys — the manual fallback when AQE skew handling (enabled in
-``session.get_spark``) isn't applicable, e.g. a single hot group key
-that dominates a groupBy.
+``salted_skew_join`` spreads a hot join key over ``n_salts`` reducers by
+salting the fact side (``with_salt``) and replicating the dim side —
+the manual fallback when AQE skew handling (enabled in
+``session.get_spark``) isn't applicable. The ``warehouse`` plans and
+``tools/bench_skew.py`` use it.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet write: one directory per
-    partition value; equality/IN filters on ``partition_cols`` prune
-    whole directories at planning time."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def scan_partition_pruned(spark, path: str, **equals) -> DataFrame:
-    """Read back with partition-pruning filters (kwargs are
-    col == value equality predicates). The resulting plan's scan shows
-    ``PartitionFilters`` — verified by tests/test_layout.py."""
-    df = spark.read.parquet(path)
-    for col, val in equals.items():
-        df = df.filter(F.col(col) == F.lit(val))
-    return df
 
 
 def with_salt(df: DataFrame, n_salts: int, salt_col: str = "__salt") -> DataFrame:
@@ -52,150 +20,6 @@ def with_salt(df: DataFrame, n_salts: int, salt_col: str = "__salt") -> DataFram
     crc32-of-key variants would re-skew when one key dominates."""
     return df.withColumn(
         salt_col, F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
-    )
-
-
-def salted_two_phase_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: phase 1 aggregates
-    on (key, salt) — the hot key splits across ``n_salts`` partial
-    groups — phase 2 merges the partials on the key alone. Supported
-    ``aggs``: {out_col: "sum:col" | "count:*"} (the decomposable ones;
-    avg = sum+count merged by the caller).
-
-    Spark's hash aggregate already does map-side partials, which covers
-    most skew; this helper exists for the residual case where even the
-    merged partials for ONE key overwhelm a single reducer — the same
-    reason the reference's PLOG regroup (A13) would hot-spot at scale.
-    """
-    salted = with_salt(df, n_salts)
-    phase1_aggs = []
-    phase2_aggs = []
-    for out, spec in aggs.items():
-        op, col = spec.split(":", 1)
-        if op == "sum":
-            phase1_aggs.append(F.sum(col).alias(f"__p_{out}"))
-            phase2_aggs.append(F.sum(f"__p_{out}").alias(out))
-        elif op == "count":
-            phase1_aggs.append(F.count(F.lit(1)).alias(f"__p_{out}"))
-            phase2_aggs.append(F.sum(f"__p_{out}").cast("long").alias(out))
-        else:
-            raise ValueError(f"unsupported agg spec: {spec}")
-    partial = salted.groupBy(*keys, "__salt").agg(*phase1_aggs)
-    return partial.groupBy(*keys).agg(*phase2_aggs)
-
-
-def explain_has(df: DataFrame, needle: str) -> bool:
-    """True if the formatted physical plan mentions ``needle`` —
-    used by tests to assert pruning/broadcast decisions."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return needle in buf.getvalue()
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort_col: str | None = None,
-) -> None:
-    """Bucketed managed-table write: rows are hash-clustered into
-    ``n_buckets`` files by ``bucket_col``. Two tables bucketed the same
-    way join WITHOUT a shuffle — the join becomes per-bucket, which at
-    100 TB removes the single largest cost of a fact⋈fact join (e.g.
-    orders ⋈ lineitem on the order key). Requires saveAsTable (bucket
-    metadata lives in the catalog, not the parquet footer).
-
-    Orphan-location guard: with an in-memory catalog (fresh session,
-    no Hive metastore) a previous session's table DIRECTORY can
-    survive while the catalog entry did not, and saveAsTable refuses
-    the location. Only in that orphaned state (dir exists, table not
-    in catalog) the stale directory is removed."""
-    spark = df.sparkSession
-    if not spark.catalog.tableExists(table_name):
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(wh, table_name.lower())
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-    w = df.write.mode("overwrite").format("parquet")
-    if sort_col:
-        w = w.bucketBy(n_buckets, bucket_col).sortBy(sort_col)
-    else:
-        w = w.bucketBy(n_buckets, bucket_col)
-    w.saveAsTable(table_name)
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the physical plan."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return sum(
-        1
-        for line in buf.getvalue().splitlines()
-        if line.strip().startswith("(") and ") Exchange" in line
-    )
-
-
-def read_evolving(spark, path: str, **options) -> DataFrame:
-    """Read a parquet dataset whose schema evolved across write
-    generations (columns added over time — the normal state of a
-    long-lived 100 TB table). ``mergeSchema`` unions the per-file
-    footers: old files surface the new columns as NULL, and column
-    pruning still reaches every generation (footer-level, per file).
-    Cost note: schema merge reads every footer once at planning time —
-    on a huge table pin the contract schema with ``.schema(...)``
-    instead; this entry point is for the exploration/backfill path."""
-    return spark.read.option("mergeSchema", "true").parquet(path, **options)
-
-
-def compact_small_files(
-    df: DataFrame,
-    path: str,
-    target_file_rows: int,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction — the maintenance job every streaming /
-    incremental sink needs (thousands of per-batch files destroy scan
-    planning and NameNode/listing time at scale). Rewrites ``df`` to
-    ``path`` with ~``target_file_rows`` rows per file via
-    ``maxRecordsPerFile`` as the hard cap plus a round-robin
-    ``repartition`` to the target file count, so files come out evenly
-    sized (coalesce would pack unevenly and overflow the cap). The
-    one shuffle is the point of a compaction job. Returns the number
-    of files written."""
-    import os
-
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_file_rows))  # ceil
-    writer = (
-        df.repartition(n_files)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_file_rows)
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-    return sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
     )
 
 

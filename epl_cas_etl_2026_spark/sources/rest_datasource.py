@@ -27,9 +27,9 @@ Transport is pluggable by URL scheme: ``http(s)://`` uses ``requests``
 ``file://`` pages through a local JSONL file with identical
 pagination + watermark semantics — the offline twin used by tests.
 
-Rows come back as raw JSON strings (schema ``value string``) so the
-downstream pipeline is byte-identical with the landing-dir pattern
-(sources/rest.py): ``etl/zenput.parse_submissions`` consumes either.
+Rows come back as raw JSON strings (schema ``value string``), the same
+shape ``spark.read.text`` gives over the sync job's landing files, so
+``etl/zenput.parse_submissions`` consumes either.
 """
 
 from __future__ import annotations
@@ -60,9 +60,6 @@ class ZenputRestDataSource(DataSource):
 
     def reader(self, schema) -> "ZenputRestReader":
         return ZenputRestReader(self.options)
-
-    def streamReader(self, schema) -> "ZenputRestStreamReader":
-        return ZenputRestStreamReader(self.options)
 
 
 class ZenputRestReader(DataSourceReader):
@@ -138,8 +135,7 @@ class ZenputRestReader(DataSourceReader):
             import requests
         except ImportError as e:  # pragma: no cover - no network here
             raise RuntimeError(
-                "requests not available; use a file:// endpoint or the "
-                "landing-dir pattern (sources/rest.py)"
+                "requests not available; use a file:// endpoint"
             ) from e
         params: dict = {
             "form_id": self.form_id,
@@ -161,210 +157,3 @@ class ZenputRestReader(DataSourceReader):
 def register(spark) -> None:
     """Idempotently register the source with a session."""
     spark.dataSource.register(ZenputRestDataSource)
-
-
-# ---------------------------------------------------------------------------
-# S3 as a TRUE stream source: the incremental-watermark loop becomes a
-# Structured Streaming micro-batch source whose offset (records
-# consumed so far, post-watermark) is persisted by the ENGINE's
-# checkpoint — replacing the reference's hand-rolled sync_checkpoints
-# table (etl_sync.py:504-566). Each micro-batch reads only the delta;
-# partitions within a batch are page-sized slices, so a large catch-up
-# batch still fetches pages in parallel.
-# ---------------------------------------------------------------------------
-try:
-    from pyspark.sql.datasource import DataSourceStreamReader
-except ImportError:  # pragma: no cover - pre-4.0 PySpark
-    DataSourceStreamReader = object  # type: ignore[assignment,misc]
-
-
-class RecordSlice(InputPartition):
-    """A [start, start+count) record range owned by one task."""
-
-    def __init__(self, start: int, count: int):
-        self.start = start
-        self.count = count
-
-
-class ZenputRestStreamReader(DataSourceStreamReader):
-    def __init__(self, options):
-        # reuse the batch reader's transport + watermark semantics
-        self._r = ZenputRestReader(options)
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def latestOffset(self) -> dict:
-        """Current end of the feed. file:// counts matched records; an
-        HTTP deployment would hit the API's count endpoint (or walk
-        short pages) — driver-side, once per micro-batch."""
-        r = self._r
-        if r.endpoint.startswith("file://"):
-            pos = 0
-            page = 0
-            while True:
-                recs = r._fetch_page_file(pos)
-                pos += len(recs)
-                page += 1
-                if len(recs) < r.page_size or page >= r.max_pages:
-                    return {"pos": pos}
-        pos = 0
-        page = 0
-        while True:
-            recs = r._fetch_page_http(pos)
-            pos += len(recs)
-            page += 1
-            if len(recs) < r.page_size or page >= r.max_pages:
-                return {"pos": pos}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["pos"], end["pos"]
-        size = self._r.page_size
-        return [
-            RecordSlice(s, min(size, hi - s)) for s in range(lo, hi, size)
-        ] or [RecordSlice(lo, 0)]
-
-    def read(self, partition: RecordSlice):
-        r = self._r
-        if partition.count <= 0:
-            return
-        # a record slice maps 1:1 onto the API's offset/limit params
-        if r.endpoint.startswith("file://"):
-            recs = r._fetch_page_file(partition.start)[: partition.count]
-        else:
-            recs = r._fetch_page_http(partition.start)[: partition.count]
-        for rec in recs:
-            yield (rec if isinstance(rec, str) else json.dumps(rec),)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-# ---------------------------------------------------------------------------
-# The WRITE side of the data-source lifecycle (S4/S7 as a pluggable
-# sink): a two-phase-commit JSONL push writer. Production shape is the
-# HTTP POST-back (acknowledge/annotate processed submissions —
-# reference etl_sync.py's status updates); the file:// twin used by
-# tests exercises the SAME commit protocol against a local directory:
-#
-#   tasks write part-<partition>.jsonl.tmp (idempotent under retry —
-#   a re-attempt overwrites its own temp file), return a commit
-#   message; ONLY the driver's commit() renames temps into place and
-#   stamps a _SUCCESS manifest (file list + row counts). abort()
-#   removes temps. Readers that require the manifest therefore never
-#   observe a half-written job — the same contract Hadoop
-#   FileOutputCommitter v1 / Delta commits provide.
-# ---------------------------------------------------------------------------
-try:
-    from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-except ImportError:  # pragma: no cover - pre-4.0 PySpark
-    DataSourceWriter = object  # type: ignore[assignment,misc]
-
-    class WriterCommitMessage:  # type: ignore[no-redef]
-        pass
-
-
-class PartFile(WriterCommitMessage):
-    def __init__(self, temp_path: str, final_path: str, n_rows: int):
-        self.temp_path = temp_path
-        self.final_path = final_path
-        self.n_rows = n_rows
-
-
-class ZenputPushWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool):
-        self.endpoint = options.get("endpoint") or options.get("path")
-        if not self.endpoint:
-            raise ValueError("zenput_push: 'endpoint' option is required")
-        if not self.endpoint.startswith("file://"):
-            raise ValueError(
-                "zenput_push: only file:// endpoints are supported in this "
-                "environment (the HTTP POST transport needs a network)"
-            )
-        self.dir = self.endpoint[len("file://"):]
-        self.overwrite = overwrite
-        # generation prefix, fixed DRIVER-SIDE before tasks serialize:
-        # append jobs must not collide with (and silently clobber) a
-        # prior job's part-N files of the same partition id
-        import json as _json
-        import os as _os
-
-        self.gen = 0
-        manifest_path = _os.path.join(self.dir, "_SUCCESS")
-        if not overwrite and _os.path.exists(manifest_path):
-            try:
-                with open(manifest_path) as f:
-                    self.gen = int(_json.load(f).get("gen", 0)) + 1
-            except (OSError, ValueError):
-                self.gen = 1
-
-    def write(self, iterator):
-        import json as _json
-        import os as _os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        _os.makedirs(self.dir, exist_ok=True)
-        stem = f"part-{self.gen:03d}-{pid:05d}.jsonl"
-        temp = _os.path.join(self.dir, stem + ".tmp")
-        final = _os.path.join(self.dir, stem)
-        n = 0
-        # write-then-rename inside the task would break the commit
-        # contract — the temp file only becomes visible via driver
-        # commit(); a retried attempt simply rewrites its temp file
-        with open(temp, "w") as f:
-            for row in iterator:
-                d = row.asDict(recursive=True) if hasattr(row, "asDict") else row
-                f.write(_json.dumps(d, default=str, sort_keys=True) + "\n")
-                n += 1
-        return PartFile(temp, final, n)
-
-    def commit(self, messages):
-        import json as _json
-        import os as _os
-
-        if self.overwrite:
-            for name in _os.listdir(self.dir):
-                if name.endswith(".jsonl") or name == "_SUCCESS":
-                    _os.remove(_os.path.join(self.dir, name))
-        manifest = []
-        for m in messages:
-            if m is None:
-                continue
-            _os.replace(m.temp_path, m.final_path)
-            manifest.append(
-                {
-                    "file": _os.path.basename(m.final_path),
-                    "rows": m.n_rows,
-                }
-            )
-        with open(_os.path.join(self.dir, "_SUCCESS"), "w") as f:
-            _json.dump({"gen": self.gen, "parts": manifest}, f, sort_keys=True)
-
-    def abort(self, messages):
-        import os as _os
-
-        for m in messages or []:
-            if m is None:
-                continue
-            try:
-                _os.remove(m.temp_path)
-            except OSError:
-                pass
-
-
-class ZenputPushDataSource(DataSource):
-    """`df.write.format("zenput_push").option("endpoint", ...)`."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "zenput_push"
-
-    def writer(self, schema, overwrite: bool) -> "ZenputPushWriter":
-        return ZenputPushWriter(self.options, overwrite)
-
-
-def register_push(spark) -> None:
-    """Idempotently register the push sink with a session."""
-    spark.dataSource.register(ZenputPushDataSource)

@@ -72,6 +72,10 @@ _GATE_MODULES = {
     "test_attribution_rag",
     "test_pii_scrub",
     "test_layout",
+    # the sync job's tests: without them no ETL test runs in the
+    # default tier, and a change that breaks run_incremental_sync
+    # would pass it (22 tests, ~70 s at 4 cores)
+    "test_etl_pipeline",
 }
 
 

@@ -181,17 +181,6 @@ def test_signbit_bucket_groups_similar_vectors(spark):
     assert by[0] != by[3]  # opposite vector lands elsewhere
 
 
-def test_resize_stub_batch_shape(spark, docs):
-    from epl_cas_etl_2026_spark.operators.multimodal import resize_image_stub
-
-    payload = with_binary_payload(docs, "text")
-    out = {r["id"]: r for r in resize_image_stub(payload, (128, 96)).collect()}
-    assert out[1]["target_width"] == 128 and out[1]["target_height"] == 96
-    assert out[1]["fake_width"] == len(
-        "the quick brown fox jumps over the lazy dog"
-    ) % 640
-
-
 def test_audio_chunk_fanout_covers_payload(spark, docs):
     from epl_cas_etl_2026_spark.operators.multimodal import audio_chunk_stub
 

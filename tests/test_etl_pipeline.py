@@ -27,6 +27,7 @@ from epl_cas_etl_2026_spark.etl.zenput import (
 from epl_cas_etl_2026_spark.schemas import (
     CATALOGO_SCHEMA,
     PERIODOS_SCHEMA,
+    SUCURSALES_SCHEMA,
 )
 
 
@@ -509,29 +510,33 @@ def test_submission_without_answers_survives(spark):
     assert extract_detail_items(parsed, catalog).count() == 0
 
 
-def test_parse_quarantine_routes_malformed_rows(spark):
-    from epl_cas_etl_2026_spark.etl.zenput import (
-        parse_submissions_with_quarantine,
-    )
+def test_sync_skips_malformed_and_keyless_lines(spark, tmp_path):
+    """A landing line that does not parse, or parses without an id,
+    loads nothing: it must not become an all-NULL master row whose
+    surrogate id is xxhash64(NULL)."""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
 
-    good_doc = (
-        '{"id": 7, "smetadata": {"location": {"id": "L1"},'
-        ' "created_by": {"display_name": "Ana"},'
-        ' "date_submitted": "2026-03-01T10:00:00", "lat": 1.0, "lon": 2.0},'
-        ' "answers": []}'
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "p0.jsonl").write_text(
+        json.dumps(_submission(7)) + "\n"
+        + "{not json at all\n"
+        + '{"answers": []}\n'
     )
-    rows = [
-        (good_doc,),
-        ("{not json at all",),            # syntactically broken
-        ('{"answers": []}',),             # valid JSON, no natural key
-    ]
-    raw = spark.createDataFrame(rows, "value string")
-    good, quarantine = parse_submissions_with_quarantine(raw)
-    g = good.collect()
-    q = quarantine.collect()
-    assert [r.zenput_submission_id for r in g] == ["7"]
-    assert g[0].supervisor == "Ana"
-    assert len(q) == 2 and all(r.raw_json for r in q)
+    sucursales = spark.createDataFrame(
+        [(10, "Centro", "1", "NL", "MTY", 1, True, "local", 25.0, -100.0, "LOC-001")],
+        SUCURSALES_SCHEMA,
+    )
+    periodos = spark.createDataFrame(
+        [(1, "P1", "Periodo 1", dt.date(2026, 2, 1), dt.date(2026, 2, 28), True)],
+        PERIODOS_SCHEMA,
+    )
+    catalog = spark.createDataFrame([(1, "CF", "CUARTO FRIO", 1)], CATALOGO_SCHEMA)
+    wh = str(tmp_path / "wh")
+    n = run_incremental_sync(spark, str(landing), wh, sucursales, periodos, catalog)
+    assert n == 1
+    master = spark.read.parquet(f"{wh}/supervisiones_operativas").collect()
+    assert [r.zenput_submission_id for r in master] == ["7"]
 
 
 def test_append_idempotent_zero_row_first_run_materializes_sink(spark, tmp_path):

@@ -1,87 +1,25 @@
-"""Physical-layout tests: partition pruning is visible in the plan and
-salted two-phase aggregation matches the plain aggregate."""
+"""Physical-layout tests: partition pruning and runtime filters are
+visible in the plan, distributed ranking and cumsum avoid a
+single-partition window, and the salted skew join matches the plain
+join."""
 
 from __future__ import annotations
+
+import contextlib
+import io
 
 import pytest
 from pyspark.sql import functions as F
 
-from epl_cas_etl_2026_spark.sources.layout import (
-    explain_has,
-    salted_two_phase_agg,
-    scan_partition_pruned,
-    write_partitioned,
-)
 from epl_cas_etl_2026_spark.sources.parquet import load_table, spread_scan
 
 
-def test_partitioned_write_prunes(spark, sf_smoke, tmp_path):
-    orders = load_table(spark, sf_smoke, "orders").withColumn(
-        "order_year", F.year("o_orderdate")
-    )
-    path = str(tmp_path / "orders_by_year")
-    write_partitioned(orders, path, ["order_year"])
-
-    pruned = scan_partition_pruned(spark, path, order_year=2001)
-    # the partition predicate must show up as a partition filter on the
-    # scan, not a post-scan row filter
-    assert explain_has(pruned, "PartitionFilters: [isnotnull(order_year")
-    full = spark.read.parquet(path)
-    expected = full.filter(F.col("order_year") == 2001).count()
-    assert pruned.count() == expected and expected > 0
-
-
-def test_salted_agg_matches_plain(spark, sf_smoke):
-    orders = load_table(spark, sf_smoke, "orders")
-    plain = {
-        (r["o_orderstatus"],): (r["n"], r["total"])
-        for r in orders.groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("o_totalprice").alias("total"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["o_orderstatus"],): (r["n"], r["total"])
-        for r in salted_two_phase_agg(
-            orders,
-            ["o_orderstatus"],
-            {"n": "count:*", "total": "sum:o_totalprice"},
-            n_salts=8,
-        ).collect()
-    }
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        assert plain[k][0] == salted[k][0]
-        assert abs(plain[k][1] - salted[k][1]) < 1e-6 * abs(plain[k][1])
-
-
-def test_bucketed_join_skips_shuffle(spark, sf_smoke, tmp_path):
-    """orders ⋈ lineitem on the order key: bucketed tables join with
-    ZERO exchanges; plain parquet needs two (one per side)."""
-    from epl_cas_etl_2026_spark.sources.layout import (
-        count_exchanges,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, sf_smoke, "orders")
-    lineitem = load_table(spark, sf_smoke, "lineitem")
-
-    plain = orders.join(
-        lineitem.hint("shuffle_hash"),
-        orders.o_orderkey == lineitem.l_orderkey,
-    )
-    assert count_exchanges(plain) >= 2
-
-    write_bucketed(orders, "orders_b", "o_orderkey", 4)
-    write_bucketed(lineitem, "lineitem_b", "l_orderkey", 4)
-    ob, lb = spark.table("orders_b"), spark.table("lineitem_b")
-    bucketed = ob.join(
-        lb.hint("shuffle_hash"), ob.o_orderkey == lb.l_orderkey
-    )
-    assert count_exchanges(bucketed) == 0
-    assert bucketed.count() == plain.count()
+def explain_has(df, needle: str) -> bool:
+    """True if the formatted physical plan mentions ``needle``."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return needle in buf.getvalue()
 
 
 def test_two_phase_rank_no_single_partition_window(spark, sf_smoke):
@@ -165,11 +103,11 @@ def test_ivf_index_partitioned_probe_prunes(spark, sf_smoke, tmp_path):
     assigned = kmeans_fit(emb, k=4, iters=1).select("vec_id", "cluster")
     index = emb.join(assigned, "vec_id")
     path = str(tmp_path / "ivf_index")
-    write_partitioned(index, path, ["cluster"])
+    index.write.partitionBy("cluster").parquet(path)
 
     # probing one coarse cluster must be a partition-pruned scan —
     # the IVF promise: the query touches 1/k of the data at the scan
-    probe = scan_partition_pruned(spark, path, cluster=2)
+    probe = spark.read.parquet(path).filter(F.col("cluster") == 2)
     assert explain_has(probe, "PartitionFilters: [isnotnull(cluster")
     full = spark.read.parquet(path)
     expected = full.filter(F.col("cluster") == 2).count()
@@ -216,48 +154,6 @@ def test_runtime_bloom_filter_injects_on_fact_fact_join(spark, sf_smoke):
         )
 
 
-def test_read_evolving_merges_schema_generations(spark, tmp_path):
-    """Columns added in later write generations surface as NULL for
-    old files; pruning still works per generation."""
-    from epl_cas_etl_2026_spark.sources.layout import read_evolving
-
-    path = str(tmp_path / "evolving")
-    gen1 = spark.createDataFrame([(1, "a")], "id long, name string")
-    gen1.write.parquet(path + "/gen=1")
-    gen2 = spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, name string, score double"
-    )
-    gen2.write.parquet(path + "/gen=2")
-
-    df = read_evolving(spark, path)
-    assert set(df.columns) == {"id", "name", "score", "gen"}
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].score is None and rows[2].score == 9.5
-
-
-def test_compact_small_files(spark, tmp_path):
-    """A fragmented sink (many tiny files) compacts to ~ceil(n/target)
-    files without losing rows."""
-    from epl_cas_etl_2026_spark.sources.layout import compact_small_files
-
-    src = str(tmp_path / "fragmented")
-    df = spark.range(1000).withColumn("v", F.col("id") % 7)
-    df.repartition(50).write.parquet(src)  # 50 tiny files
-    import os
-
-    n_src_files = sum(
-        1 for f in os.listdir(src) if f.endswith(".parquet")
-    )
-    assert n_src_files >= 40
-
-    dst = str(tmp_path / "compacted")
-    n_files = compact_small_files(
-        spark.read.parquet(src), dst, target_file_rows=400
-    )
-    assert n_files == 3  # ceil(1000/400)
-    assert spark.read.parquet(dst).count() == 1000
-
-
 def test_salted_skew_join_matches_plain_join(spark, sf_smoke):
     """Skew-salted join == plain join (same rows), with the join keys
     carrying the salt so a hot key spreads over n_salts reducers."""
@@ -292,7 +188,7 @@ def test_dynamic_partition_pruning_on_dim_filter(spark, sf_smoke, tmp_path):
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_by_year_dpp")
-    write_partitioned(orders, path, ["order_year"])
+    orders.write.partitionBy("order_year").parquet(path)
     fact = spark.read.parquet(path)
 
     dim = spark.createDataFrame(

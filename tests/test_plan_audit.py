@@ -283,6 +283,18 @@ def test_fingerprints_independent_of_loaded_modules():
     assert out.stdout.splitlines()[-1] == "[]"
 
 
+def test_package_binding_its_own_submodule_resolves():
+    """``plans/__init__.py`` runs ``from epl_cas_etl_2026_spark.plans
+    import registry``, which binds ``registry`` to (plans, registry)
+    inside plans itself. The resolver reads that binding as the
+    submodule instead of following it back to itself forever."""
+    from epl_cas_etl_2026_spark.plans import gate_policy
+
+    edges = gate_policy._edges("epl_cas_etl_2026_spark.plans", "_ORDER")
+    registry = "epl_cas_etl_2026_spark.plans.registry"
+    assert {(registry, "QUERIES"), (registry, "ORACLES")} <= set(edges)
+
+
 def test_ledger_tool_records_each_round_once(monkeypatch):
     """tools/update_gate_ledger.py records fingerprints only for rounds
     the ledger has not mapped yet: a second run in the same round keeps

@@ -1,68 +1,16 @@
-"""S2/S3 — paginated extract → landing dir → Spark read (the extract
-loop is driver-side by nature; everything after landing is
-distributed). HTTP is faked: the container has no network."""
+"""S2 — the paginated Zenput extract as a Spark data source
+(``spark.read.format("zenput_rest")``). HTTP is faked with the
+``file://`` transport, which pages a local JSONL file."""
 
 from __future__ import annotations
 
 import json
 
 from epl_cas_etl_2026_spark.etl.zenput import parse_submissions
-from epl_cas_etl_2026_spark.sources.rest import PAGE_SIZE, extract_to_landing
+from epl_cas_etl_2026_spark.sources.rest_datasource import register
 
 
-def _fake_pages():
-    # exactly-100 page then a short page (the two termination shapes,
-    # etl_sync.py:96-114 / FIXTURES.md §A6)
-    full = [
-        {"id": i, "smetadata": {"location": {"id": f"L{i}"},
-         "created_by": {"display_name": "Ana"},
-         "date_submitted": "2026-02-10T14:30:00Z", "lat": 1.0, "lon": 2.0},
-         "answers": []}
-        for i in range(PAGE_SIZE)
-    ]
-    short = [
-        {"id": 1000 + i, "smetadata": {"location": {"id": "LX"},
-         "created_by": {"display_name": "Luis"},
-         "date_submitted": "2026-02-11T10:00:00Z", "lat": 1.0, "lon": 2.0},
-         "answers": []}
-        for i in range(7)
-    ]
-    yield full
-    yield short
-
-
-def test_extract_lands_pages_and_spark_reads(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    n = extract_to_landing(_fake_pages, landing)
-    assert n == PAGE_SIZE + 7
-
-    raw = spark.read.text(landing)
-    parsed = parse_submissions(raw)
-    assert parsed.count() == PAGE_SIZE + 7
-    assert parsed.filter("zenput_location_id = 'LX'").count() == 7
-
-
-def test_landing_is_restart_safe(tmp_path):
-    landing = str(tmp_path / "landing2")
-    extract_to_landing(_fake_pages, landing)
-    # second extract overwrites the same page files (idempotent rename)
-    n2 = extract_to_landing(_fake_pages, landing)
-    assert n2 == PAGE_SIZE + 7
-
-    import os
-
-    files = sorted(os.listdir(landing))
-    assert files == ["page-000000.jsonl", "page-000001.jsonl"]
-    with open(os.path.join(landing, "page-000001.jsonl")) as f:
-        assert len(f.readlines()) == 7
-
-
-# ---------------------------------------------------------------------------
-# Python Data Source (S2 as a first-class spark.read format).
-# ---------------------------------------------------------------------------
 def _write_feed(path, n, start_day=1):
-    import json
-
     with open(path, "w") as f:
         for i in range(n):
             day = start_day + i % 20
@@ -91,8 +39,6 @@ def _write_feed(path, n, start_day=1):
 
 
 def test_datasource_reads_all_pages(spark, tmp_path):
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register
-
     feed = tmp_path / "feed.jsonl"
     _write_feed(str(feed), 250)
     register(spark)
@@ -109,8 +55,6 @@ def test_datasource_reads_all_pages(spark, tmp_path):
 
 
 def test_datasource_watermark_pushdown(spark, tmp_path):
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register
-
     feed = tmp_path / "feed.jsonl"
     _write_feed(str(feed), 100)
     register(spark)
@@ -128,9 +72,6 @@ def test_datasource_watermark_pushdown(spark, tmp_path):
 
 
 def test_datasource_feeds_parse_submissions(spark, tmp_path):
-    from epl_cas_etl_2026_spark.etl.zenput import parse_submissions
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register
-
     feed = tmp_path / "feed.jsonl"
     _write_feed(str(feed), 42)
     register(spark)
@@ -143,128 +84,3 @@ def test_datasource_feeds_parse_submissions(spark, tmp_path):
     assert parsed.count() == 42
     row = parsed.filter(parsed.zenput_submission_id == "7").collect()[0]
     assert row["zenput_location_id"] == "LOC-2"
-
-
-def test_datasource_stream_reads_only_delta(spark, tmp_path):
-    """S3 engine-native: the stream source's record offset lives in
-    the ENGINE checkpoint; a second availableNow run after the feed
-    grows picks up only the delta."""
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register
-
-    feed = tmp_path / "stream_feed.jsonl"
-    _write_feed(str(feed), 30)
-    register(spark)
-    stream = (
-        spark.readStream.format("zenput_rest")
-        .option("endpoint", f"file://{feed}")
-        .option("page_size", "10")
-        .load()
-    )
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    def run():
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    assert spark.read.parquet(sink).count() == 30
-
-    # feed grows by 12 records; same checkpoint -> only the delta
-    _write_feed(str(feed), 42)
-    run()
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 42  # 30 + the 12-record delta, no re-reads
-    import json as _json
-
-    ids = sorted(_json.loads(r.value)["id"] for r in rows)
-    assert ids == list(range(42))
-
-
-def test_push_sink_two_phase_commit(spark, tmp_path):
-    """zenput_push writes JSONL parts via the task/driver commit
-    protocol: parts appear only after commit, with a _SUCCESS manifest
-    whose row counts sum to the input."""
-    import json
-    import os
-
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register_push
-
-    register_push(spark)
-    out = tmp_path / "push"
-    df = spark.range(0, 100).selectExpr(
-        "id", "concat('rec_', id) AS payload"
-    ).repartition(4)
-    (
-        df.write.format("zenput_push")
-        .mode("overwrite")
-        .option("endpoint", f"file://{out}")
-        .save()
-    )
-    names = sorted(os.listdir(out))
-    assert "_SUCCESS" in names
-    assert not [n for n in names if n.endswith(".tmp")]  # no orphan temps
-    manifest = json.loads((out / "_SUCCESS").read_text())
-    assert sum(p["rows"] for p in manifest["parts"]) == 100
-    rows = []
-    for n in names:
-        if n.endswith(".jsonl"):
-            rows += [json.loads(x) for x in (out / n).read_text().splitlines()]
-    assert sorted(r["id"] for r in rows) == list(range(100))
-    assert all(r["payload"] == f"rec_{r['id']}" for r in rows)
-
-
-def test_push_sink_overwrite_replaces_prior_job(spark, tmp_path):
-    import json
-    import os
-
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register_push
-
-    register_push(spark)
-    out = tmp_path / "push"
-    for hi in (50, 10):
-        (
-            spark.range(0, hi)
-            .write.format("zenput_push")
-            .mode("overwrite")
-            .option("endpoint", f"file://{out}")
-            .save()
-        )
-    manifest = json.loads((out / "_SUCCESS").read_text())
-    total = sum(p["rows"] for p in manifest["parts"])
-    assert total == 10
-    n_rows = 0
-    for n in os.listdir(out):
-        if n.endswith(".jsonl"):
-            n_rows += len((out / n).read_text().splitlines())
-    assert n_rows == 10
-
-
-def test_push_sink_append_generations_do_not_collide(spark, tmp_path):
-    import json
-    import os
-
-    from epl_cas_etl_2026_spark.sources.rest_datasource import register_push
-
-    register_push(spark)
-    out = tmp_path / "push"
-    for _ in range(2):
-        (
-            spark.range(0, 20)
-            .write.format("zenput_push")
-            .mode("append")
-            .option("endpoint", f"file://{out}")
-            .save()
-        )
-    n_rows = 0
-    for n in os.listdir(out):
-        if n.endswith(".jsonl"):
-            n_rows += len((out / n).read_text().splitlines())
-    assert n_rows == 40  # second append added, not clobbered
-    assert json.loads((out / "_SUCCESS").read_text())["gen"] == 1

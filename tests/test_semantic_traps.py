@@ -3,16 +3,62 @@ item 2) on tiny literal DataFrames."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
+from epl_cas_etl_2026_spark import api
 from epl_cas_etl_2026_spark.functions.scalars import color_class, territorio
 from epl_cas_etl_2026_spark.operators.ranking import competition_rank
-from epl_cas_etl_2026_spark.operators.reshape import (
-    avg_of_avgs,
-    densified_matrix,
-    regrouped_avg,
-)
+
+
+@pytest.fixture(scope="module")
+def dashboard(spark):
+    """Dashboard tables for the A11/A13/J4 traps, read through the
+    endpoints: 'OTRA' scores 100 in CAS-01 and 50 three times in
+    CAS-02; 'PLOG A' (one row of 100) and 'PLOG B' (two rows of 50)
+    collapse into the PLOG agrupación; 'SIN DATOS' has no supervisions."""
+    periodos = spark.createDataFrame(
+        [
+            (1, "CAS-01", "Periodo 1", dt.date(2026, 1, 1), dt.date(2026, 3, 31), False),
+            (2, "CAS-02", "Periodo 2", dt.date(2026, 4, 1), dt.date(2026, 6, 30), True),
+        ],
+        "id int, codigo string, nombre string, fecha_inicio date, "
+        "fecha_fin date, activo boolean",
+    )
+    grupos = spark.createDataFrame(
+        [(1, "PLOG A", True), (2, "PLOG B", True), (3, "OTRA", True), (4, "SIN DATOS", True)],
+        "id int, nombre string, activo boolean",
+    )
+    sucursales = spark.createDataFrame(
+        [
+            (1, "Suc A", 1, True, "local", 25.0, -100.0),
+            (2, "Suc B", 2, True, "local", 25.1, -100.1),
+            (3, "Suc O", 3, True, "local", 25.2, -100.2),
+            (4, "Suc S", 4, True, "local", 25.3, -100.3),
+        ],
+        "id int, nombre string, grupo_operativo_id int, activo boolean, "
+        "clasificacion string, latitud double, longitud double",
+    )
+    sup = spark.createDataFrame(
+        [
+            (1, 1, 1, 100.0),
+            (2, 2, 1, 50.0),
+            (3, 2, 1, 50.0),
+            (4, 3, 1, 100.0),
+            (5, 3, 2, 50.0),
+            (6, 3, 2, 50.0),
+            (7, 3, 2, 50.0),
+        ],
+        "id long, sucursal_id int, periodo_id int, calificacion_general double",
+    )
+    return {
+        "periodos_cas": periodos,
+        "grupos_operativos": grupos,
+        "sucursales": sucursales,
+        "supervisiones_operativas": sup,
+    }
 
 
 def test_competition_rank_tie_gaps_and_null_tail(spark):
@@ -47,30 +93,22 @@ def test_left_join_filter_in_on_preserves_dims(spark):
     assert got == {1: 1, 2: 0}  # g2 preserved with 0 — NOT dropped
 
 
-def test_unweighted_vs_weighted_average_differ(spark):
-    # A11 vs A13 (app.py:1186-1189 vs 65-89).
-    df = spark.createDataFrame(
-        [("g", "p1", 100.0), ("g", "p2", 50.0), ("g", "p2", 50.0), ("g", "p2", 50.0)],
-        "grupo string, periodo string, score double",
-    )
-    unweighted = avg_of_avgs(df, ["grupo"], ["periodo"], "score").collect()[0]
-    assert unweighted["promedio"] == 75.0  # (100 + 50) / 2
-    pooled = df.groupBy("grupo").agg(F.avg("score").alias("a")).collect()[0]
-    assert pooled["a"] == 62.5  # (100+50+50+50)/4 — must NOT be used
+def test_unweighted_vs_weighted_average_differ(dashboard):
+    # A11 vs A13 (app.py:1186-1189 vs 65-89): the heatmap's overall is
+    # the mean of period averages, the ranking's is the pooled mean.
+    heat = {r.grupo: r for r in api.heatmap_matrix(dashboard).collect()}
+    assert heat["OTRA"].promedio_general == 75.0  # (100 + 50) / 2
+    ranked = {r.entidad: r for r in api.ranking_grupos(dashboard).collect()}
+    assert ranked["OTRA"].promedio == 62.5  # (100+50+50+50)/4
 
 
-def test_regrouped_avg_pools_member_rows(spark):
-    # A13: PLOG agrupación pools ALL member supervisions.
-    df = spark.createDataFrame(
-        [("PLOG A", 100.0), ("PLOG B", 50.0), ("PLOG B", 50.0), ("OTRA", 80.0)],
-        "nombre string, score double",
-    )
-    got = {
-        r["agrupacion"]: (r["promedio"], r["n_rows"])
-        for r in regrouped_avg(df, "nombre", "score").collect()
-    }
-    assert got["PLOG"] == (pytest.approx(200.0 / 3), 3)
-    assert got["OTRA"] == (80.0, 1)
+def test_regrouped_avg_pools_member_rows(dashboard):
+    # A13: the PLOG agrupación pools ALL member supervisions, not the
+    # mean of member averages (which would be 75.0).
+    rows = {r.entidad: r for r in api.ranking_grupos(dashboard).collect()}
+    assert "PLOG A" not in rows and "PLOG B" not in rows
+    assert rows["PLOG"].promedio == round(200.0 / 3, 2)
+    assert rows["PLOG"].supervisiones == 3
 
 
 def test_color_class_boundaries_and_null(spark):
@@ -115,20 +153,17 @@ def test_territorio_reference_default_lists(spark):
     assert got == [t for _, t in cases]
 
 
-def test_densified_matrix_has_every_cell(spark):
-    # J4 (app.py:1141-1151): empty cells exist with NULL.
-    rows_dim = spark.createDataFrame([("g1",), ("g2",)], "g string")
-    cols_dim = spark.createDataFrame([("p1",), ("p2",)], "p string")
-    facts = spark.createDataFrame(
-        [("g1", "p1", 10.0)], "g string, p string, v double"
+def test_densified_matrix_has_every_cell(dashboard):
+    # J4 (app.py:1141-1151): every active group gets a row and every
+    # period a column; cells without supervisions are NULL.
+    rows = {r.grupo: r.asDict() for r in api.heatmap_matrix(dashboard).collect()}
+    assert set(rows) == {"PLOG A", "PLOG B", "OTRA", "SIN DATOS", "EPL CAS"}
+    assert all(set(r) >= {"CAS-01", "CAS-02"} for r in rows.values())
+    assert rows["PLOG A"]["CAS-01"] == 100.0
+    assert rows["PLOG A"]["CAS-02"] is None
+    assert all(
+        rows["SIN DATOS"][c] is None for c in ("CAS-01", "CAS-02", "promedio_general")
     )
-    cells = densified_matrix(
-        rows_dim, cols_dim, facts, "g", "p", F.avg("v")
-    ).collect()
-    assert len(cells) == 4
-    vals = {(r["g"], r["p"]): r["cell"] for r in cells}
-    assert vals[("g1", "p1")] == 10.0
-    assert vals[("g2", "p2")] is None
 
 
 def test_as_of_join_strict_vs_inclusive(spark):

@@ -1,438 +1,8 @@
-"""Structured Streaming tests: windowed agg with watermark over a file
-source, and the foreachBatch incremental ETL wrapper (T1/T5)."""
+"""Structured Streaming tests for plans/streaming_gate.py: a gate
+query equals its batch twin, and the fixture-feed helpers lay out
+files the way the gates' file sources consume them."""
 
 from __future__ import annotations
-
-import json
-import time
-
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from epl_cas_etl_2026_spark.streaming.windows import (
-    incremental_zenput_stream,
-    run_stream_to_memory,
-    stream_events_from_dir,
-    windowed_agg,
-)
-
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
-def _write_events(path, rows):
-    with open(path, "w") as f:
-        for ts, et, v in rows:
-            f.write(json.dumps({"ts": ts, "event_type": et, "value": v}) + "\n")
-
-
-def test_stream_tumbling_window_with_watermark(spark, tmp_path):
-    src = tmp_path / "events_in"
-    src.mkdir()
-    _write_events(
-        src / "batch1.json",
-        [
-            ("2024-01-01T10:05:00", "click", 1.0),
-            ("2024-01-01T10:45:00", "click", 3.0),
-            ("2024-01-01T11:10:00", "view", 5.0),
-        ],
-    )
-    stream = stream_events_from_dir(spark, str(src), EVENT_SCHEMA)
-    assert stream.isStreaming
-    win = windowed_agg(stream, "1 hour", watermark="2 hours")
-    q = run_stream_to_memory(win, "win_test", output_mode="update")
-    try:
-        q.processAllAvailable()
-        out = spark.sql(
-            "select window_start, event_type, n_events from win_test"
-        ).collect()
-        got = {(str(r["window_start"]), r["event_type"]): r["n_events"] for r in out}
-        assert got[("2024-01-01 10:00:00", "click")] == 2
-        assert got[("2024-01-01 11:00:00", "view")] == 1
-    finally:
-        q.stop()
-
-
-def test_windowed_agg_same_logic_batch(spark):
-    # the SAME transformation applied to a batch frame (one definition,
-    # two execution modes)
-    batch = spark.createDataFrame(
-        [("2024-01-01 10:05:00", "click", 1.0)], "ts string, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    out = windowed_agg(batch, "1 hour").collect()
-    assert out[0]["n_events"] == 1
-
-
-def test_incremental_etl_foreachbatch(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "page-000000.jsonl").write_text(
-        json.dumps({"id": 1, "smetadata": {"location": {"id": "L1"},
-                    "created_by": {"display_name": "Ana"},
-                    "date_submitted": "2026-02-10T14:30:00Z",
-                    "lat": 1.0, "lon": 2.0},
-                    "answers": []}) + "\n"
-    )
-    seen: list[int] = []
-
-    def process(batch_df, batch_id):
-        from epl_cas_etl_2026_spark.etl.zenput import parse_submissions
-
-        seen.append(parse_submissions(batch_df).count())
-
-    q = incremental_zenput_stream(
-        spark, str(landing), str(tmp_path / "ckpt"), process
-    )
-    q.awaitTermination(60)
-    assert sum(seen) == 1
-
-    # second run with no new files → checkpoint prevents reprocessing (T1)
-    seen.clear()
-    q2 = incremental_zenput_stream(
-        spark, str(landing), str(tmp_path / "ckpt"), process
-    )
-    q2.awaitTermination(60)
-    assert sum(seen) == 0
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.stateful import (
-        running_totals_with_state,
-    )
-
-    src = tmp_path / "stateful_in"
-    src.mkdir()
-    _write_events(
-        src / "b1.json",
-        [("2024-01-01T10:00:00", "click", 1.0), ("2024-01-01T10:01:00", "click", 2.0)],
-    )
-    stream = stream_events_from_dir(spark, str(src), EVENT_SCHEMA)
-    out = running_totals_with_state(stream)
-    q = run_stream_to_memory(out, "state_test", output_mode="update")
-    try:
-        q.processAllAvailable()
-        # second micro-batch: state must carry over, not reset
-        _write_events(src / "b2.json", [("2024-01-01T10:02:00", "click", 4.0)])
-        q.processAllAvailable()
-        rows = spark.sql(
-            "select * from state_test order by n_events desc"
-        ).collect()
-        latest = rows[0]
-        assert latest["event_type"] == "click"
-        assert latest["n_events"] == 3          # 2 from batch1 + 1 from batch2
-        assert latest["total_value"] == 7.0     # 1+2 carried into 4
-    finally:
-        q.stop()
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.windows import stream_dedup
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    src = tmp_path / "dedup_in"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"key": "a", "ts": "2024-01-01T10:00:00", "v": 1.0},
-                {"key": "a", "ts": "2024-01-01T10:00:05", "v": 2.0},  # dup key
-                {"key": "b", "ts": "2024-01-01T10:01:00", "v": 3.0},
-            ]
-        )
-    )
-    stream = (
-        spark.readStream.schema(schema).json(str(src))
-    )
-    deduped = stream_dedup(stream, ["key"], watermark="10 minutes")
-    q = run_stream_to_memory(deduped, "dedup_test", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("select key from dedup_test").collect()
-        assert sorted(r["key"] for r in rows) == ["a", "b"]
-    finally:
-        q.stop()
-
-
-def test_stream_session_agg(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.windows import stream_session_agg
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"user_id": 1, "ts": "2024-01-01T10:00:00"},
-                {"user_id": 1, "ts": "2024-01-01T10:10:00"},  # same session
-                {"user_id": 1, "ts": "2024-01-01T12:00:00"},  # new session
-            ]
-        )
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    sess = stream_session_agg(stream, gap="30 minutes", watermark="1 hour")
-    q = run_stream_to_memory(sess, "sess_test", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            "select user_id, n_events from sess_test order by session_start"
-        ).collect()
-        # append mode emits only watermark-closed sessions: the first
-        # (2-event) session closed when event time advanced to 12:00
-        assert [(r["user_id"], r["n_events"]) for r in rows] == [(1, 2)]
-    finally:
-        q.stop()
-
-
-def test_stream_static_enrichment_join(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.windows import stream_enrich_static
-
-    schema = T.StructType(
-        [
-            T.StructField("loc", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    src = tmp_path / "enrich_in"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"loc": "L1", "ts": "2024-01-01T10:00:00"},
-                {"loc": "L9", "ts": "2024-01-01T10:01:00"},  # no dim row
-            ]
-        )
-    )
-    dim = spark.createDataFrame(
-        [("L1", "Sucursal A")], "loc string, nombre string"
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    enriched = stream_enrich_static(stream, dim, "loc")
-    q = run_stream_to_memory(enriched, "enrich_test", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = {r["loc"]: r["nombre"] for r in spark.sql(
-            "select loc, nombre from enrich_test").collect()}
-        assert rows == {"L1": "Sucursal A", "L9": None}
-    finally:
-        q.stop()
-
-
-def test_incremental_corpus_stream(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.corpus import (
-        incremental_corpus_stream,
-    )
-
-    landing = tmp_path / "docs_in"
-    landing.mkdir()
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    good = "the quick brown fox jumps over the lazy dog again and again"
-    (landing / "b1.json").write_text(
-        "\n".join(
-            json.dumps(d)
-            for d in [
-                {"doc_id": 1, "text": good, "lang": "en", "source": "s1"},
-                {"doc_id": 2, "text": good, "lang": "en", "source": "s1"},  # dup
-                {"doc_id": 3, "text": "tiny", "lang": "en", "source": "s1"},  # gated
-            ]
-        )
-    )
-    q = incremental_corpus_stream(spark, str(landing), corpus, ckpt)
-    q.awaitTermination(60)
-    out1 = spark.read.parquet(corpus)
-    assert [r["doc_id"] for r in out1.collect()] == [1]
-
-    # a later file: one new doc + a cross-batch duplicate of doc 1
-    (landing / "b2.json").write_text(
-        "\n".join(
-            json.dumps(d)
-            for d in [
-                {"doc_id": 9, "text": good, "lang": "en", "source": "s2"},  # dup of 1
-                {"doc_id": 10, "text": good + " with brand new words too",
-                 "lang": "en", "source": "s2"},
-            ]
-        )
-    )
-    q2 = incremental_corpus_stream(spark, str(landing), corpus, ckpt)
-    q2.awaitTermination(60)
-    out2 = spark.read.parquet(corpus)
-    assert sorted(r["doc_id"] for r in out2.collect()) == [1, 10]
-
-    # re-run with nothing new: checkpoint + anti-join → no growth
-    q3 = incremental_corpus_stream(spark, str(landing), corpus, ckpt)
-    q3.awaitTermination(60)
-    assert spark.read.parquet(corpus).count() == 2
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    from epl_cas_etl_2026_spark.streaming.joins import stream_interval_join
-
-    pschema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("p_ts", T.TimestampType()),
-            T.StructField("p_id", T.LongType()),
-        ]
-    )
-    cschema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("c_ts", T.TimestampType()),
-            T.StructField("c_id", T.LongType()),
-        ]
-    )
-    pdir, cdir = tmp_path / "p_in", tmp_path / "c_in"
-    pdir.mkdir(); cdir.mkdir()
-    (pdir / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"user_id": 1, "p_ts": "2024-01-01T10:30:00", "p_id": 100},
-                {"user_id": 2, "p_ts": "2024-01-01T10:40:00", "p_id": 101},
-            ]
-        )
-    )
-    (cdir / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                # in the lookback hour before user 1's purchase
-                {"user_id": 1, "c_ts": "2024-01-01T10:00:00", "c_id": 7},
-                # same instant as purchase → strictly-before excludes it
-                {"user_id": 2, "c_ts": "2024-01-01T10:40:00", "c_id": 8},
-                # too old for user 1 (> 1h before)
-                {"user_id": 1, "c_ts": "2024-01-01T09:00:00", "c_id": 9},
-            ]
-        )
-    )
-    purchases = spark.readStream.schema(pschema).json(str(pdir))
-    clicks = spark.readStream.schema(cschema).json(str(cdir))
-    joined = stream_interval_join(
-        purchases, clicks, "user_id", "p_ts", "c_ts", lookback="1 hour"
-    ).select("p_id", "c_id")
-    q = run_stream_to_memory(joined, "ssj_test", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = {(r["p_id"], r["c_id"]) for r in spark.sql(
-            "select p_id, c_id from ssj_test").collect()}
-        assert rows == {(100, 7)}
-    finally:
-        q.stop()
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Same running totals on Spark 4's transformWithStateInPandas —
-    typed ValueState carried across micro-batches by the engine.
-    Requires the RocksDB state store provider and protobuf in the
-    Python env (the TWS worker's state-server protocol) — skipped
-    where either is missing."""
-    import pytest
-
-    from epl_cas_etl_2026_spark.streaming.stateful import running_totals_tws
-
-    if running_totals_tws is None:
-        pytest.skip("transformWithState needs PySpark >= 4.0 + protobuf")
-
-    src = tmp_path / "tws_in"
-    src.mkdir()
-    _write_events(
-        src / "b1.json",
-        [("2024-01-01T10:00:00", "click", 1.0), ("2024-01-01T10:01:00", "click", 2.0)],
-    )
-    stream = stream_events_from_dir(spark, str(src), EVENT_SCHEMA)
-    out = running_totals_tws(stream)
-    q = run_stream_to_memory(out, "tws_test", output_mode="update")
-    try:
-        q.processAllAvailable()
-        _write_events(src / "b2.json", [("2024-01-01T10:02:00", "click", 4.0)])
-        q.processAllAvailable()
-        rows = spark.sql(
-            "select * from tws_test order by n_events desc"
-        ).collect()
-        latest = rows[0]
-        assert latest["event_type"] == "click"
-        assert latest["n_events"] == 3
-        assert latest["total_value"] == 7.0
-    finally:
-        q.stop()
-
-
-def test_incremental_near_dup_stream(spark, tmp_path):
-    """Daily-ingest near-dup loop: batch 2 is deduped against batch 1
-    through the PERSISTED signature index only (the corpus text is
-    read solely for the exact-Jaccard verify of banded candidates)."""
-    from epl_cas_etl_2026_spark.streaming.corpus import (
-        incremental_near_dup_stream,
-    )
-
-    landing = tmp_path / "nd_in"
-    landing.mkdir()
-    corpus = str(tmp_path / "nd_corpus")
-    index = str(tmp_path / "nd_index")
-    ckpt = str(tmp_path / "nd_ckpt")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    (landing / "b1.json").write_text(
-        "\n".join(
-            json.dumps(d)
-            for d in [
-                {"doc_id": 1, "text": base, "lang": "en", "source": "s1"},
-                # near-dup of 1 (one word differs) → dropped in-batch
-                {"doc_id": 2, "text": base.replace("kappa", "lambda"),
-                 "lang": "en", "source": "s1"},
-                {"doc_id": 3, "text": "one two three four five six seven",
-                 "lang": "en", "source": "s1"},
-            ]
-        )
-    )
-    q = incremental_near_dup_stream(spark, str(landing), corpus, index, ckpt)
-    q.awaitTermination(90)
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(corpus).collect()
-    ) == [1, 3]
-    assert spark.read.parquet(index).count() == 2  # signatures of 1, 3
-
-    (landing / "b2.json").write_text(
-        "\n".join(
-            json.dumps(d)
-            for d in [
-                # near-dup of doc 1 across batches → dropped via index
-                {"doc_id": 10, "text": base.replace("iota", "mu"),
-                 "lang": "en", "source": "s2"},
-                {"doc_id": 11, "text": "wholly different words in here now",
-                 "lang": "en", "source": "s2"},
-            ]
-        )
-    )
-    q2 = incremental_near_dup_stream(spark, str(landing), corpus, index, ckpt)
-    q2.awaitTermination(90)
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(corpus).collect()
-    ) == [1, 3, 11]
-    assert spark.read.parquet(index).count() == 3
-
-    # replay with nothing new: checkpoint → no growth
-    q3 = incremental_near_dup_stream(spark, str(landing), corpus, index, ckpt)
-    q3.awaitTermination(90)
-    assert spark.read.parquet(corpus).count() == 3
 
 
 def test_stream_tumbling_gate_matches_batch(spark, sf_oracle):
