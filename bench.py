@@ -152,9 +152,7 @@ HEADLINE = [
     "docs_bloom_novelty_check",
     "customers_k_anonymity_audit",
     # round-6 late additions: the dataprep governance layer (appended
-    # — prefix subsets stay valid). events_stream_psi_drift_gate stays
-    # out like the other six streaming gates: it times the micro-batch
-    # harness, not the engine.
+    # — prefix subsets stay valid).
     "events_psi_drift",
     "orders_label_majority_vote",
     "orders_target_encoding_oof",
@@ -179,10 +177,6 @@ HEADLINE = [
     # round-7 additions (appended — prefix subsets stay valid):
     # DOULION sparsified triangles (the sf1-runnable twin of the exact
     # count) and batch PQ-ADC serving (16 queries, one plan).
-    # embedding_graph_batch_topk stays out for the embedding_dup_clusters
-    # reason: its wall is dominated by per-hop driver-loop scheduler
-    # floor at local scale, which measures the scheduler, not the
-    # engine — it stays driver-gated for correctness instead.
     "docs_near_dup_triangles_doulion",
     "embedding_pq_batch_topk",
     # round-7 mid-round additions: Holt linear-trend smoothing (exact
@@ -194,7 +188,6 @@ HEADLINE = [
     "orders_label_fleiss_kappa",
     # round-7 late additions: SCD2 point-in-time lookup (as-of
     # composition) and the Matryoshka dim-truncation recall sweep.
-    # The stateful-EWMA gate stays out (streaming-gate convention).
     "events_scd2_temporal_join",
     "embedding_dim_truncation_recall",
     # bit-identical 2-iteration Newton logistic regression (one
@@ -238,28 +231,17 @@ HEADLINE = [
     # round-8 continuation (appended): the distributed BPE trainer
     # (8 vocab-bounded merge rounds) and DSIR importance selection —
     # both engine-throughput queries that scale with sf.
-    # docs_bpe_encode_stats stays out because its wall is ~85% the
-    # trainer already benched below (encode itself is one
-    # vocab-bounded join, measured by its own gate); benching it would
-    # double-count training.
     "docs_bpe_train_merges",
     "docs_dsir_topk_select",
 ]
 
 # Rotating tail (round-9 rotation rule — see the freeze note above):
 # at most 4 entries, newest addition evicts the oldest once full; the
-# frozen 126 are never evicted. docs_dedup_index_serve is the r9
-# engine-scale addition (persisted-signature probe of the daily batch;
-# min-of-3 amortizes the first-touch index build exactly like the
-# embedding_pq_index_serve precedent). orders_versioned_cas_stats and
-# docs_dedup_index_build stay out: their wall is commit I/O on
-# entity-grained frames — artifact certification, not engine
-# throughput — so they stay driver-gated for correctness instead.
+# frozen 126 are never evicted.
 ROTATING = [
     # r11 rotation: embedding_lsh_estimate_error in (the embedding
     # estimator-calibration twin — banded candidates + Arrow pairwise
-    # verify, engine throughput), docs_dedup_index_serve out (oldest;
-    # its r9/r10 walls stay in the committed records).
+    # verify, engine throughput), the oldest entry out.
     "docs_gopher_repetition_stats",
     "docs_ccnet_perplexity_buckets",
     # r10: estimator-calibration audit (banded candidates + per-pair

@@ -203,43 +203,6 @@ def append_idempotent(
     return n
 
 
-def merge_upsert(
-    sink: DataFrame, updates: DataFrame, key: str
-) -> DataFrame:
-    """Full MERGE semantics (WHEN MATCHED THEN UPDATE, WHEN NOT MATCHED
-    THEN INSERT — the reference's ON CONFLICT target state,
-    etl_sync.py:250-254) expressed on immutable storage: one
-    full-outer join on the key, update rows win column-wise via
-    coalesce. The caller overwrites the sink with the result (Delta
-    does this transactionally per file group; plain parquet rewrites
-    the table — same result, coarser granularity).
-
-    Shuffle profile: one exchange per side on the key — identical to
-    what Delta MERGE's join executes underneath. For append-only
-    no-update flows use the cheaper ``append_idempotent``.
-
-    Contract: ``updates`` must be unique on ``key`` (like MERGE's
-    source relation — duplicate source keys would multiply rows);
-    dedup upstream with ``dedup_against_sink``/``dropDuplicates``."""
-    cols = sink.columns
-    assert set(updates.columns) == set(cols), "merge requires same schema"
-    s = sink.alias("s")
-    u = updates.alias("u")
-    joined = s.join(u, F.col(f"s.{key}") == F.col(f"u.{key}"), "full_outer")
-    # ROW-wise pick (UPDATE SET * semantics): a matched update replaces
-    # the whole row, including columns it sets to NULL — a column-wise
-    # coalesce would silently keep stale sink values there.
-    take_update = F.col(f"u.{key}").isNotNull()
-    return joined.select(
-        *[
-            F.when(take_update, F.col(f"u.{c}"))
-            .otherwise(F.col(f"s.{c}"))
-            .alias(c)
-            for c in cols
-        ]
-    )
-
-
 # ---------------------------------------------------------------------------
 # T1 — checkpoint high-water mark.
 # ---------------------------------------------------------------------------
@@ -352,14 +315,18 @@ def period_transition(
     """etl_sync.py:504-566: when every active branch has a supervision
     in the active period, deactivate it and activate the next period
     by fecha_inicio. Returns the new periodos table (overwrite of an
-    ~8-row dim — trivially cheap)."""
+    ~8-row dim — trivially cheap). Coverage is the reference's
+    COUNT(DISTINCT sucursal_id), which skips NULL: a supervision whose
+    branch FK did not resolve covers no branch."""
     total_branches = sucursales.filter(F.col("activo")).count()
     active = periodos.filter(F.col("activo") == True)  # noqa: E712
     if active.count() == 0:
         return periodos
     active_id = active.collect()[0]["id"]
     covered = (
-        supervisiones.filter(F.col("periodo_id") == active_id)
+        supervisiones.filter(
+            (F.col("periodo_id") == active_id) & F.col("sucursal_id").isNotNull()
+        )
         .select("sucursal_id")
         .distinct()
         .count()

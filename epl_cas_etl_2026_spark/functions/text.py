@@ -41,8 +41,8 @@ def alpha_ratio(text: Column) -> Column:
 
 
 def quality_class(text: Column) -> Column:
-    """Composite keep/review/drop quality verdict (length + alpha
-    ratio + stopword band)."""
+    """Composite keep/review/drop quality verdict: fewer than 5 tokens
+    drops, an alpha ratio under 0.8 goes to review, the rest is kept."""
     n = token_count(text)
     ar = alpha_ratio(text)
     return (
@@ -93,7 +93,7 @@ def greedy_pair_merge(
     the rewritten prefix; a merge consumes its right token so
     overlapping occurrences ('a a a' with pair (a,a)) merge only once
     — exactly the BPE training rule. Mirrors the DuckDB list_reduce
-    shape in plans/extensions.docs_bpe_merge_step's oracle."""
+    fold in plans/extensions.docs_bpe_train_merges' oracle."""
     return F.aggregate(
         arr,
         F.array().cast("array<string>"),

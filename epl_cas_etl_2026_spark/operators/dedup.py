@@ -107,35 +107,6 @@ def _km_hash_pair(s: Column, use_md5: bool) -> tuple[Column, Column]:
     return h1, h2
 
 
-def minhash_signature(
-    text: Column, n_hashes: int = 16, shingle_n: int = 3, use_md5: bool = False
-) -> Column:
-    """MinHash signature as one array column: for each derived hash
-    function, the min over the shingle set. Pure expression tree —
-    fine for ad-hoc use on narrow data; the LSH pipeline uses
-    :func:`minhash_signature_agg` (explode + groupBy-min), which scales
-    and stays inside codegen."""
-    sh = shingles(text, shingle_n)
-    pairs = F.transform(
-        sh,
-        lambda s: F.struct(
-            _km_hash_pair(s, use_md5)[0].alias("h1"),
-            _km_hash_pair(s, use_md5)[1].alias("h2"),
-        ),
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    pairs,
-                    lambda p: (p["h1"] + F.lit(seed) * p["h2"]) % F.lit(_KM_P),
-                )
-            )
-            for seed in range(n_hashes)
-        ]
-    )
-
-
 def minhash_signature_agg(
     df: DataFrame,
     id_col: str,

@@ -25,7 +25,6 @@ around them stays native and codegen'd.
 from __future__ import annotations
 
 import math
-import os
 import random
 
 from pyspark.sql import DataFrame
@@ -885,198 +884,15 @@ def ivfpq_topk(
 
 
 # ---------------------------------------------------------------------------
-# Graph ANN (NSW-style; Malkov & Yashunin's HNSW is the hierarchical
-# refinement of the same navigable-small-world idea — public
-# algorithms). Two pieces:
-#   * knn_graph — a distributed M-NN neighbor-graph build:
-#     banded-LSH candidate pairs (sub-quadratic, the band_lsh_pairs
-#     machinery) → per-node top-M by exact cosine, UNIONed with a
-#     deterministic ring edge i→(i+1) mod n that plays NSW's
-#     long-link/connectivity role (beam search can never strand in an
-#     isolated LSH component). Adjacency is (id, neighbors array) —
-#     ~M ids per node; at scale it's written bucketed by id so probes
-#     prune.
-#   * graph_beam_search_topk — best-first beam search over that
-#     graph: each hop filters the adjacency to the current frontier
-#     (an IN-list of ≤ ef ids — a pushed scan filter at scale),
-#     explodes neighbors, scores the unvisited ones with exact
-#     cosine (JVM expressions), and keeps the top-ef visited set.
-#     Driver state is bounded: ≤ ef×M new ids per hop, ids+dists
-#     only. The hierarchy of full HNSW is a sequential-serving
-#     latency optimization; for batch/Spark serving the flat NSW
-#     beam search is the idiomatic shape.
-# ---------------------------------------------------------------------------
-def knn_graph(
-    emb: DataFrame,
-    dim: int,
-    m_neighbors: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_sim: float = 0.8,
-    target_recall: float = 0.9,
-    seed: int = 11,
-) -> DataFrame:
-    """Build the (id, neighbors array<struct<nb,sim>>) M-NN graph.
-
-    Candidates come from banded hyperplane LSH sized for the corpus
-    (lsh_params_for), so the build is ~O(n·b) candidate pairs, never
-    all-pairs; the ring edge guarantees weak connectivity whatever the
-    LSH recall. Neighbor lists are per-node top-M by exact cosine —
-    one window over the candidate edges, partitioned by node.
-    """
-    from pyspark.sql import Window
-
-    # the ring edge below is (id+1) % n, which is only a ring when ids
-    # are EXACTLY 0..n-1 — with gaps the shifted join silently drops
-    # dangling edges and the connectivity guarantee (the reason the
-    # ring exists) is void while every gated invariant still passes.
-    # Guard the precondition loudly. count+min+max in ONE agg job — the
-    # guard costs no extra Spark action over the count the sizing needs.
-    bounds = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.col(id_col)).alias("lo"),
-        F.max(F.col(id_col)).alias("hi"),
-    ).collect()[0]
-    n = bounds["n"]
-    if n > 0 and (bounds["lo"] != 0 or bounds["hi"] != n - 1):
-        raise ValueError(
-            f"knn_graph ring edge requires contiguous {id_col} 0..n-1; "
-            f"got min={bounds['lo']} max={bounds['hi']} n={n} — "
-            "re-index ids (e.g. zipWithIndex/row_number) before the build"
-        )
-    b, r = lsh_params_for(n, target_sim, target_recall)
-    planes = [
-        [round(x, 4) for x in p] for p in hyperplanes(dim, b * r, seed=seed)
-    ]
-    pairs = band_lsh_pairs(
-        emb, planes, n_bands=b, rows_per_band=r,
-        id_col=id_col, vec_col=vec_col, threshold=-1.0,
-    )
-    # ring edges for connectivity (exact cosine via one shifted join)
-    ring = (
-        emb.select(
-            F.col(id_col).alias("id_a"),
-            ((F.col(id_col) + 1) % n).alias("id_b"),
-            to_double(F.col(vec_col)).alias("va"),
-        )
-        .join(
-            emb.select(
-                F.col(id_col).alias("id_b"),
-                to_double(F.col(vec_col)).alias("vb"),
-            ),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
-        )
-    )
-    edges = pairs.unionByName(ring).filter(F.col("id_a") != F.col("id_b"))
-    # symmetric adjacency, deduped (an LSH pair and a ring edge can
-    # coincide), top-M per node
-    sym = (
-        edges.select("id_a", "id_b", "sim")
-        .unionByName(
-            edges.select(
-                F.col("id_b").alias("id_a"),
-                F.col("id_a").alias("id_b"),
-                "sim",
-            )
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.max("sim").alias("sim"))
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("sim"), F.asc("id_b"))
-    return (
-        sym.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= m_neighbors)
-        .groupBy(F.col("id_a").alias(id_col))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id_b").alias("nb"), "sim"))
-            ).alias("neighbors")
-        )
-    )
-
-
-def graph_beam_search_topk(
-    emb: DataFrame,
-    graph: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    ef: int = 48,
-    max_hops: int = 8,
-    entry_ids: tuple[int, ...] = (0,),
-    exclude_ids: tuple[int, ...] = (),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Best-first beam search: returns (result_df, n_visited, hops).
-
-    Each hop runs two pruned Spark jobs — an adjacency probe filtered
-    to the frontier ids and an exact-cosine scoring of the newly
-    discovered ids (both IN-list filters that push to the scans at
-    scale). Terminates when no frontier id improves the beam or after
-    ``max_hops``. Driver holds only (id, sim) pairs, ≤ ef×M per hop.
-    """
-    spark = emb.sparkSession
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim_expr = F.round(cosine(to_double(F.col(vec_col)), qlit), 6)
-
-    def score(ids):
-        rows = (
-            emb.filter(F.col(id_col).isin(list(ids)))
-            .select(F.col(id_col).alias("id"), sim_expr.alias("sim"))
-            .collect()
-        )
-        return {r["id"]: r["sim"] for r in rows}
-
-    visited = score(set(entry_ids))
-    frontier = sorted(visited, key=lambda i: (-visited[i], i))
-    hops = 0
-    while frontier and hops < max_hops:
-        hops += 1
-        nbr_rows = (
-            graph.filter(F.col(id_col).isin(frontier))
-            .select(F.explode("neighbors").alias("e"))
-            .select(F.col("e.nb").alias("nb"))
-            .distinct()
-            .collect()
-        )
-        new_ids = {r["nb"] for r in nbr_rows} - set(visited)
-        if not new_ids:
-            break
-        visited.update(score(new_ids))
-        beam = sorted(visited, key=lambda i: (-visited[i], i))[:ef]
-        # expand only beam members discovered this hop — the
-        # best-first rule; if none made the beam, search has converged
-        frontier = [i for i in beam if i in new_ids]
-    served = [
-        (int(i), float(visited[i]))
-        for i in sorted(visited, key=lambda i: (-visited[i], i))
-        if i not in exclude_ids
-    ][:k]
-    out = spark.createDataFrame(served, f"{id_col} long, sim double")
-    return out, len(visited), hops
-
-
-# ---------------------------------------------------------------------------
 # BATCH multi-query ANN serving (round-7): a production pipeline
-# scores a query TABLE, not one vector per driver invocation. Both
-# serving families get a batch form here:
-#   * pq_adc_batch_topk — ONE plan for Q queries: the per-query ADC
-#     lookup tables are computed IN-PLAN (query subvectors ⋈ broadcast
-#     codebook frame, zip_with distances) instead of as driver-side
-#     numpy literals, so Q scales without Q driver loops; the code
-#     scan is the true batch-ADC cost O(n·m·Q) with map-side partial
-#     aggregation, per-query shortlists via one window, exact re-rank
-#     against the broadcast query vectors.
-#   * graph_beam_search_batch — the NSW beam search with ONE pair of
-#     pruned Spark jobs per hop for ALL queries together (adjacency
-#     probe over the union frontier; scoring over the union of newly
-#     discovered (q, id) pairs), instead of 2·hops jobs per query.
-#     Driver state stays bounded: ≤ Q·ef·M (id, sim) pairs per hop.
+# scores a query TABLE, not one vector per driver invocation.
+# pq_adc_batch_topk runs ONE plan for Q queries: the per-query ADC
+# lookup tables are computed IN-PLAN (query subvectors ⋈ broadcast
+# codebook frame, zip_with distances) instead of as driver-side numpy
+# literals, so Q scales without Q driver loops; the code scan is the
+# true batch-ADC cost O(n·m·Q) with map-side partial aggregation,
+# per-query shortlists via one window, exact re-rank against the
+# broadcast query vectors.
 # ---------------------------------------------------------------------------
 def pq_adc_batch_topk(
     emb: DataFrame,
@@ -1224,115 +1040,3 @@ def pq_adc_batch_serve(
         .withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= topk)
     )
-
-
-def graph_beam_search_batch(
-    emb: DataFrame,
-    graph: DataFrame,
-    query_vecs: dict,
-    k: int = 10,
-    ef: int = 48,
-    max_hops: int = 8,
-    entry_ids: tuple[int, ...] = (0,),
-    exclude_own_id: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Best-first beam search for MANY queries in lockstep.
-
-    ``query_vecs``: {q_id: query vector}. Per hop exactly TWO Spark
-    jobs serve every still-active query: (1) one adjacency probe
-    filtered to the UNION of all frontiers (an IN-list that pushes to
-    the scan at scale), (2) one scoring job over the union of newly
-    discovered (q_id, id) pairs — the pair list enters as a driver
-    createDataFrame (bounded by Q·ef·M), joins ``emb`` on id, and the
-    per-row cosine runs against the broadcast query-vector frame.
-    Queries whose beam stops improving drop out of the union frontier
-    individually. Returns (result_df, visited_counts, hops): the
-    DataFrame is (q_id, id, sim, rank) with rank 1..k per query by
-    (-sim, id); per query identical to :func:`graph_beam_search_topk`
-    with the same parameters.
-    """
-    spark = emb.sparkSession
-    qframe = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in query_vecs.items()],
-        f"q_id long, __qv array<double>",
-    )
-    sim_expr = F.round(cosine(to_double(F.col(vec_col)), F.col("__qv")), 6)
-
-    def score_pairs(pairs):
-        """pairs: [(q_id, id)] -> {(q_id, id): sim} in one job."""
-        if not pairs:
-            return {}
-        pdf = spark.createDataFrame(
-            [(int(q), int(i)) for q, i in pairs], f"q_id long, {id_col} long"
-        )
-        rows = (
-            pdf.join(emb.select(id_col, vec_col), id_col)
-            .join(F.broadcast(qframe), "q_id")
-            .select("q_id", F.col(id_col).alias("id"), sim_expr.alias("sim"))
-            .collect()
-        )
-        return {(r["q_id"], r["id"]): r["sim"] for r in rows}
-
-    visited = {q: {} for q in query_vecs}  # q -> {id: sim}
-    entry_scores = score_pairs(
-        [(q, e) for q in query_vecs for e in entry_ids]
-    )
-    for (q, i), s in entry_scores.items():
-        visited[q][i] = s
-    frontier = {
-        q: sorted(visited[q], key=lambda i: (-visited[q][i], i))
-        for q in query_vecs
-    }
-    hops = 0
-    while any(frontier.values()) and hops < max_hops:
-        hops += 1
-        union_frontier = sorted({i for f in frontier.values() for i in f})
-        nbr_rows = (
-            graph.filter(F.col(id_col).isin(union_frontier))
-            .select(F.col(id_col).alias("fid"), F.explode("neighbors").alias("e"))
-            .select("fid", F.col("e.nb").alias("nb"))
-            .collect()
-        )
-        nbrs_of: dict = {}
-        for r in nbr_rows:
-            nbrs_of.setdefault(r["fid"], set()).add(r["nb"])
-        new_pairs = []
-        new_ids_by_q = {}
-        for q, f in frontier.items():
-            new_q = set()
-            for fid in f:
-                new_q |= nbrs_of.get(fid, set())
-            new_q -= set(visited[q])
-            new_ids_by_q[q] = new_q
-            new_pairs += [(q, i) for i in sorted(new_q)]
-        if not new_pairs:
-            break
-        scored = score_pairs(new_pairs)
-        for (q, i), s in scored.items():
-            visited[q][i] = s
-        for q in frontier:
-            beam = sorted(
-                visited[q], key=lambda i: (-visited[q][i], i)
-            )[:ef]
-            frontier[q] = [i for i in beam if i in new_ids_by_q.get(q, ())]
-    served = []
-    for q in sorted(visited):
-        ranked = [
-            i
-            for i in sorted(visited[q], key=lambda i: (-visited[q][i], i))
-            if not (exclude_own_id and i == q)
-        ][:k]
-        served += [
-            (int(q), int(i), float(visited[q][i]), r + 1)
-            for r, i in enumerate(ranked)
-        ]
-    out = spark.createDataFrame(
-        served, f"q_id long, {id_col} long, sim double, rank int"
-    )
-    visited_stats = {
-        q: {"n_visited": len(v), "own_visited": q in v}
-        for q, v in visited.items()
-    }
-    return out, visited_stats, hops

@@ -30,7 +30,6 @@ from epl_cas_etl_2026_spark.plans import lifecycle
 from epl_cas_etl_2026_spark.plans import decision_support
 from epl_cas_etl_2026_spark.plans import retrieval
 from epl_cas_etl_2026_spark.plans import graph
-from epl_cas_etl_2026_spark.plans import streaming_gate
 from epl_cas_etl_2026_spark.plans import winnow
 from epl_cas_etl_2026_spark.plans import sketches
 from epl_cas_etl_2026_spark.plans import enrich

@@ -44,11 +44,8 @@ _PSI_ALERT_MICRONATS = 200_000  # PSI > 0.2
 
 
 def psi_bin_col(value, vmin, vmax):
-    """Clamped equal-width bin index — THE binning semantics, shared by
-    the batch query below and the streaming gate
-    (plans/streaming_gate.events_stream_psi_drift_gate) so the two
-    Spark constructions cannot fork silently (they already share the
-    oracle SQL verbatim)."""
+    """Clamped equal-width bin index, the oracle's ``binned`` CASE: a
+    degenerate reference range (vmax == vmin) puts every value in bin 0."""
     width = (vmax - vmin) / float(_PSI_BINS)
     return (
         F.when(
@@ -66,8 +63,8 @@ def psi_bin_col(value, vmin, vmax):
 
 
 def psi_smoothed(c, n):
-    """Laplace-1 smoothed bin probability — shared with the streaming
-    gate for the same reason as psi_bin_col."""
+    """Laplace-1 smoothed bin probability, so an empty bin keeps the
+    PSI log term finite."""
     return (c + 1).cast("double") / (n + _PSI_BINS).cast("double")
 
 

@@ -163,11 +163,10 @@ def _resolve(modname: str, attr: str | None) -> tuple[str, str | None] | None:
     return (sub, None) if _definitions(sub) is not None else None
 
 
-@functools.lru_cache(maxsize=None)
-def _edges(modname: str, name: str) -> tuple[tuple[str, str], ...]:
-    """The package definitions one definition reads by name."""
+def _targets(modname: str, chains, local: dict) -> set[tuple[str, str]]:
+    """The package definitions that name chains read in ``modname``
+    (``local`` = function-local import bindings, shadowing the module's)."""
     defs, imports = _definitions(modname)
-    _text, chains, local = defs[name]
     out = set()
     for head, *attrs in chains:
         binding = local.get(head) or ((modname, head) if head in defs else imports.get(head))
@@ -177,7 +176,14 @@ def _edges(modname: str, name: str) -> tuple[tuple[str, str], ...]:
                 node = _resolve(node[0], attr)
         if node and node[1]:
             out.add(node)
-    return tuple(sorted(out))
+    return out
+
+
+@functools.lru_cache(maxsize=None)
+def _edges(modname: str, name: str) -> tuple[tuple[str, str], ...]:
+    """The package definitions one definition reads by name."""
+    _text, chains, local = _definitions(modname)[0][name]
+    return tuple(sorted(_targets(modname, chains, local)))
 
 
 def _reachable(fn: Callable) -> set[tuple[str, str]] | None:

@@ -221,8 +221,8 @@ def docs_inverted_index_rarest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FOLD over the tag-encoded position stream (pos*2+tag), O(|A|+|B|)
 # per doc — never the |A|×|B| cross product. DuckDB twin folds the
 # same encoded stream with the flat-BIGINT-list accumulator +
-# prepended-init sentinel (the events_cusum_drift_alarms pattern;
-# struct accumulators misbind in list_reduce).
+# prepended-init sentinel (struct accumulators misbind in
+# list_reduce).
 #
 # Scale shape (100 TB): term selection is one map-side-combined
 # groupBy(word) (the only shuffle); the scoring pass is per-row
@@ -370,7 +370,7 @@ def docs_phrase_proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape (100 TB): each list is a TakeOrderedAndProject top-50
 # over its scorer (BM25: term-filtered aggregate; cosine: brute scan
-# at test scale, IVF/graph ANN in the serving path — both exist in
+# at test scale, IVF ANN in the serving path — both exist in
 # operators/similarity.py); the fusion itself is a 50∪50-row
 # full-outer join — driver-bounded regardless of corpus size.
 # ---------------------------------------------------------------------------
@@ -535,7 +535,7 @@ def docs_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scan computing all |Q| rankings via per-query top-k; metrics are
 # |Q|-row aggregates. The per-query window here partitions on qid
 # (|Q| = 5 groups) — at production scale the top-k comes from the ANN
-# serving path (embedding_ivfpq_topk / graph ANN) and this harness
+# serving path (embedding_ivfpq_topk) and this harness
 # scores its output; the brute ranking doubles as the recall oracle.
 # ---------------------------------------------------------------------------
 _EVAL_QIDS = (1, 2, 3, 4, 5)

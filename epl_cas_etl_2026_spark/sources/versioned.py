@@ -1,8 +1,7 @@
 """Versioned parquet table: the lakehouse commit primitive (immutable
 snapshot directories + put-if-absent commit markers) built on plain
-parquet — snapshot isolation, time travel, TRANSACTIONAL MERGE, and
-(round 9) OPTIMISTIC WRITER-VS-WRITER CONCURRENCY without a
-Delta/Iceberg runtime in the environment.
+parquet — snapshot isolation, time travel, and (round 9) concurrent
+writers without a Delta/Iceberg runtime in the environment.
 
 Layout:
 
@@ -22,16 +21,10 @@ Commit protocol:
 1. the new snapshot is fully written to ``v=N_<nonce>/`` — readers
    resolve markers and never see a partial dir;
 2. the writer atomically creates ``_commits/N`` (O_EXCL). EXACTLY ONE
-   of any number of concurrent writers targeting version N wins; the
-   losers get ``CommitConflictError`` and their orphan dirs are
-   cleaned immediately (and by ``vacuum`` after a crash);
-3. ``commit(df, expected_version=...)`` is full compare-and-swap: the
-   commit fails cleanly if the table's latest version moved past the
-   base the writer read — the Delta ConcurrentModificationException
-   contract. ``merge_commit`` pins its base snapshot automatically, so
-   a MERGE computed against a stale snapshot can never clobber a
-   concurrent commit (no lost updates).
-4. old snapshots stay readable (``version=``) until vacuumed — time
+   of any number of concurrent writers targeting version N wins; a
+   loser renames its data dir to the next version and retries there
+   (blind append: every commit lands, none is lost);
+3. old snapshots stay readable (``version=``) until vacuumed — time
    travel and long-running readers get a consistent snapshot for free.
 
 Failure matrix (every writer/vacuum interleaving and what it leaves):
@@ -43,8 +36,8 @@ Failure matrix (every writer/vacuum interleaving and what it leaves):
   orphan dir — same as above (never served, aged out by ``vacuum``).
   A stale ``.tmp_`` marker staging file may also remain in
   ``_commits/`` — swept by ``vacuum`` under the same grace window.
-- lost put-if-absent race (CAS mode): the loser removes its own dir
-  and raises ``CommitConflictError``; nothing for ``vacuum`` to do.
+- lost put-if-absent race: the loser retargets its dir at the next
+  version; nothing for ``vacuum`` to do.
 - concurrent ``vacuum`` vs an in-flight writer: an unpublished attempt
   dir younger than ``grace_seconds`` is SKIPPED (Delta-style
   retention) — age is the only thing separating a live attempt from a
@@ -80,11 +73,6 @@ never touched at all; graceless, a published dir can be missing only
 for the instant between vacuum's rename-aside and its marker-driven
 restore, which the reader-side retry covers.
 
-MERGE (``merge_commit``) = etl.pipeline.merge_upsert's full-outer
-join (the exact join Delta MERGE executes) + a snapshot commit, so
-the reference's ON CONFLICT upsert (etl_sync.py:250-254) becomes an
-atomic table-version transition instead of an in-place overwrite.
-
 Tables written by the pre-round-9 layout (plain ``v=N`` dirs + a
 ``_latest`` pointer file) remain readable: marker-less roots fall back
 to the legacy pointer.
@@ -106,14 +94,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from epl_cas_etl_2026_spark.etl.pipeline import merge_upsert
-
 
 class CommitConflictError(RuntimeError):
-    """Raised when a compare-and-swap commit loses: the table's latest
-    version is not the ``expected_version`` the writer based its work
-    on, or another writer won the put-if-absent race for the same
-    target version. The table is untouched; re-read and retry."""
+    """Raised when a concurrent graceless ``vacuum`` removed a commit's
+    data dir between the write and the marker publish. The marker is
+    unpublished, so the table is untouched; retry the commit."""
 
 
 class VersionedTable:
@@ -186,34 +171,15 @@ class VersionedTable:
         return spark.read.parquet(path)
 
     # -- write --------------------------------------------------------------
-    def commit(self, df: DataFrame, expected_version: int | None = None) -> int:
+    def commit(self, df: DataFrame) -> int:
         """Write ``df`` as the next snapshot, then publish it with a
         put-if-absent commit marker. Readers resolve markers BEFORE or
-        AFTER the publish — never a half-written directory.
-
-        ``expected_version`` turns the commit into a compare-and-swap:
-        the caller asserts the latest version it based this snapshot
-        on (``None`` base for a first commit via ``expected_version``
-        left at its default, or pass -1 to assert the table is empty).
-        If the table moved, ``CommitConflictError`` is raised and
-        nothing is published. With the default (no expectation), the
-        commit retargets past concurrent winners instead of failing —
-        blind-append semantics."""
+        AFTER the publish — never a half-written directory. A commit
+        that loses the marker race to a concurrent writer retargets
+        past it instead of failing — blind-append semantics."""
         os.makedirs(self._commits_dir(), exist_ok=True)
-        if expected_version is not None:
-            base = None if expected_version < 0 else expected_version
-            current = self.latest_version()
-            if current != base:
-                raise CommitConflictError(
-                    f"{self.root}: expected base version {base}, "
-                    f"table is at {current}"
-                )
-            # target is pinned from the EXPECTATION, never re-read:
-            # a concurrent winner of this slot is caught by O_EXCL below
-            new = 0 if base is None else base + 1
-        else:
-            current = self.latest_version()
-            new = 0 if current is None else current + 1
+        current = self.latest_version()
+        new = 0 if current is None else current + 1
         nonce = uuid.uuid4().hex[:12]
         data_dir = os.path.join(self.root, f"v={new}_{nonce}")
         df.write.mode("overwrite").parquet(data_dir)
@@ -234,14 +200,8 @@ class VersionedTable:
             try:
                 os.link(tmp, self._marker_path(new))
             except FileExistsError:
-                # another writer published this version first
-                if expected_version is not None:
-                    shutil.rmtree(data_dir, ignore_errors=True)
-                    raise CommitConflictError(
-                        f"{self.root}: version {new} was committed "
-                        "concurrently (base moved)"
-                    )
-                # blind append: retarget the SAME data dir at the next slot
+                # another writer published this version first: retarget
+                # the SAME data dir at the next slot
                 new += 1
                 continue
             finally:
@@ -262,25 +222,6 @@ class VersionedTable:
                     "re-read and retry (run vacuum with a grace window)"
                 )
             return new
-
-    def merge_commit(self, updates: DataFrame, key: str, spark: SparkSession) -> int:
-        """Transactional MERGE: full-outer upsert against the latest
-        snapshot, committed as a NEW version via compare-and-swap on
-        the base version — a MERGE computed against a snapshot that a
-        concurrent writer has since superseded fails with
-        ``CommitConflictError`` instead of silently dropping that
-        writer's rows (Delta's ConcurrentModificationException
-        contract). Concurrent readers of the old version keep their
-        snapshot (isolation); a failure before the marker publish
-        leaves the table at the old version."""
-        current = self.latest_version()
-        if current is None:
-            return self.commit(updates, expected_version=-1)
-        merged = merge_upsert(self.read(spark, version=current), updates, key)
-        # materialize the join BEFORE the write job starts overwriting
-        # anything — read-your-own-writes safety, same reason
-        # etl.pipeline.sync_job pins batches via localCheckpoint
-        return self.commit(merged.localCheckpoint(), expected_version=current)
 
     def vacuum(
         self, keep_last: int = 1, grace_seconds: float = 3600.0

@@ -39,7 +39,7 @@ def sf_oracle() -> str:
 # queries whose fingerprints moved, in 1-2 min, against the same
 # dtype-strict comparator (test_oracle_differential re-walks ALL
 # registered queries — 9+ min — and stays in the once-per-round full
-# suite with the property/streaming tail). Marking is by module
+# suite with the property tail). Marking is by module
 # (keeps the mark out of 700 test bodies); a new pin-style module
 # joins the loop by adding its basename. Measured at r9: ~200 s total.
 _GATE_MODULES = {
@@ -57,8 +57,8 @@ _GATE_MODULES = {
     # the fast operator/plan pins (~90 s extra at 8 cores, measured
     # from the r12 full-run junit timings), keeping the default tier
     # ≈3 min nominal / <10 min on a 2.5×-slow host window. The heavy
-    # tails (test_oracle_differential 635 s, test_properties 90 s,
-    # streaming suites) stay in the once-per-round full run:
+    # tails (test_oracle_differential 635 s, test_properties 90 s)
+    # stay in the once-per-round full run:
     # `pytest -m "gate or not gate"`.
     "test_retrieval",
     "test_retrieval_eval",
@@ -70,7 +70,6 @@ _GATE_MODULES = {
     "test_enrich",
     "test_substring_dedup",
     "test_attribution_rag",
-    "test_pii_scrub",
     "test_layout",
     # the sync job's tests: without them no ETL test runs in the
     # default tier, and a change that breaks run_incremental_sync

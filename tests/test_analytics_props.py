@@ -361,54 +361,6 @@ def test_ivfpq_recall_and_probe_discipline(spark):
         assert abs(float(((v - q) ** 2).sum()) - ed) < 1e-6
 
 
-def test_graph_ann_recall_and_sim_exactness(spark):
-    """NSW-style graph ANN (knn_graph + graph_beam_search_topk): on
-    the clustered fixture the beam search must recover most of the
-    global exact-cosine top-10, and every served sim must equal an
-    independent numpy cosine recompute (to rounding tolerance). Recall
-    lives here, not in the gate (testdata-regeneration safety)."""
-    from pyspark.sql import functions as F
-
-    from epl_cas_etl_2026_spark.operators.similarity import (
-        graph_beam_search_topk,
-        knn_graph,
-        to_double,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    graph = knn_graph(emb, dim=64, m_neighbors=8).localCheckpoint(
-        eager=False
-    )
-    vecs = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=float)
-        for r in emb.select("vec_id", "embedding").collect()
-    }
-    q = vecs[0]
-    out, n_visited, hops = graph_beam_search_topk(
-        emb, graph, [float(x) for x in q], k=10, ef=48, max_hops=8,
-        entry_ids=(0,), exclude_ids=(0,),
-    )
-    rows = out.collect()
-    assert len(rows) == 10 and hops >= 1 and n_visited > 10
-
-    def cos(a, b):
-        return float(a @ b / (np.sqrt(a @ a) * np.sqrt(b @ b)))
-
-    # served sims == independent numpy cosine (rounded 6dp Spark-side)
-    for r in rows:
-        assert abs(r["sim"] - cos(vecs[r["vec_id"]], q)) < 2e-6
-
-    true10 = {
-        vid
-        for _, vid in sorted(
-            ((-cos(v, q), vid) for vid, v in vecs.items() if vid != 0)
-        )[:10]
-    }
-    served = {r["vec_id"] for r in rows}
-    # measured 10/10 on the clustered fixture; >= 8 leaves margin
-    assert len(served & true10) >= 8
-
-
 # --------------------------------------------------------------------------
 # Round-6 ops: benchmark decontamination, Efraimidis-Spirakis weighted
 # sampling, KMV/theta distinct-intersection sketch.

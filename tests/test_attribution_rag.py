@@ -213,34 +213,3 @@ def test_orc_roundtrip_exact_stats(spark, tmp_path):
     assert got["sum_orderkey"] == 15
     assert got["pair_checksum"] == sum(k * c for k, c in cents.items())
     assert got["n_statuses"] == 3
-
-
-def test_stream_static_enrich_gate_matches_batch_join(spark, tmp_path):
-    """The streaming enrichment result must equal the hand-built batch
-    expectation: user_id % 25 keys onto the 2-row nation fixture."""
-    import datetime as dt
-
-    ev_rows = [
-        (1, dt.datetime(2024, 1, 1, 1), 0, "click", 1.0, "{}"),
-        (2, dt.datetime(2024, 1, 1, 2), 25, "view", 2.0, "{}"),
-        (3, dt.datetime(2024, 1, 1, 3), 1, "click", 3.5, "{}"),
-        (4, dt.datetime(2024, 1, 1, 4), 26, "view", 4.0, "{}"),
-        (5, dt.datetime(2024, 1, 1, 5), 7, "error", 9.0, "{}"),  # no dim row
-    ]
-    d = _write(spark, tmp_path, "events", ev_rows, _EV_SCHEMA)
-    _write(
-        spark, tmp_path, "nation",
-        [(0, "ALGERIA", 0, "x"), (1, "ARGENTINA", 1, "y")],
-        "n_nationkey int, n_name string, n_regionkey int, n_comment string",
-    )
-    from epl_cas_etl_2026_spark.plans.streaming_gate import (
-        events_stream_static_enrich_gate,
-    )
-
-    got = {r["nation"]: r.asDict()
-           for r in events_stream_static_enrich_gate(spark, d).collect()}
-    assert set(got) == {"ALGERIA", "ARGENTINA"}
-    assert got["ALGERIA"]["n_events"] == 2          # users 0 and 25
-    assert got["ALGERIA"]["value_cents"] == 100 + 200
-    assert got["ARGENTINA"]["n_events"] == 2        # users 1 and 26
-    assert got["ARGENTINA"]["value_cents"] == 350 + 400

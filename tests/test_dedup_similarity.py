@@ -1,4 +1,4 @@
-"""Unit tests for dedup / similarity / text / multimodal operators."""
+"""Unit tests for dedup / similarity / text operators."""
 
 from __future__ import annotations
 
@@ -18,11 +18,6 @@ from epl_cas_etl_2026_spark.operators.dedup import (
     near_dup_pairs,
     shingles,
     simhash64,
-)
-from epl_cas_etl_2026_spark.operators.multimodal import (
-    decode_image_meta,
-    frame_sample_stub,
-    with_binary_payload,
 )
 from epl_cas_etl_2026_spark.operators.similarity import (
     ann_topk_lsh,
@@ -120,24 +115,6 @@ def test_ann_lsh_same_bucket_recall(spark, vectors):
     assert approx and approx[0]["vec_id"] in (0, 1, 4)
 
 
-def test_multimodal_meta_batch_shape(spark, docs):
-    payload = with_binary_payload(docs, "text")
-    meta = decode_image_meta(payload, id_col="doc_id").collect()
-    by_id = {r["id"]: r for r in meta}
-    assert by_id[1]["byte_len"] == len("the quick brown fox jumps over the lazy dog")
-    assert by_id[1]["fake_width"] == by_id[1]["byte_len"] % 640
-    assert len(by_id[1]["checksum"]) == 32
-
-
-def test_frame_sample_fanout(spark, docs):
-    payload = with_binary_payload(docs, "text")
-    frames = frame_sample_stub(payload, id_col="doc_id", n_frames=4)
-    assert frames.filter(F.col("id") == 1).count() == 4
-    idx = [r["frame_index"] for r in
-           frames.filter(F.col("id") == 1).orderBy("frame_index").collect()]
-    assert idx == [0, 1, 2, 3]
-
-
 def test_language_id_first_max_wins(spark):
     from epl_cas_etl_2026_spark.functions.text import lang_scores
 
@@ -179,28 +156,6 @@ def test_signbit_bucket_groups_similar_vectors(spark):
     by = {r["vec_id"]: r["bucket"] for r in b}
     assert by[0] == by[1]  # near-identical directions share a bucket
     assert by[0] != by[3]  # opposite vector lands elsewhere
-
-
-def test_audio_chunk_fanout_covers_payload(spark, docs):
-    from epl_cas_etl_2026_spark.operators.multimodal import audio_chunk_stub
-
-    payload = with_binary_payload(docs, "text")
-    chunks = audio_chunk_stub(payload, chunk_bytes=16).filter(F.col("id") == 1)
-    rows = chunks.orderBy("chunk_index").collect()
-    total = rows[0]["total_bytes"]
-    assert sum(r["chunk_len"] for r in rows) == total      # full coverage
-    assert rows[-1]["chunk_len"] == total - rows[-1]["byte_offset"]
-    assert all(0 < r["chunk_len"] <= 16 for r in rows)
-
-
-def test_audio_chunk_empty_payload_emits_no_rows(spark):
-    from epl_cas_etl_2026_spark.operators.multimodal import audio_chunk_stub
-
-    df = spark.createDataFrame([(1, ""), (2, "abc")], "doc_id long, text string")
-    payload = with_binary_payload(df, "text")
-    rows = audio_chunk_stub(payload, chunk_bytes=16).collect()
-    # empty payload → sequence(0,-1) guard → no chunk rows (not [0,-1])
-    assert {r["id"] for r in rows} == {2}
 
 
 def test_band_lsh_pairs_finds_planted_near_dup(spark):

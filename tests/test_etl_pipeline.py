@@ -209,6 +209,15 @@ def test_period_transition(spark):
             period_transition(periodos, partial, sucursales).collect()}
     assert out2 == {1: True, 2: False}  # not all covered → no transition
 
+    # coverage is COUNT(DISTINCT sucursal_id), which skips NULL: a
+    # supervision whose branch FK did not resolve covers no branch
+    null_fk = spark.createDataFrame(
+        [(1, 1), (None, 1)], "sucursal_id int, periodo_id int"
+    )
+    out3 = {r["id"]: r["activo"] for r in
+            period_transition(periodos, null_fk, sucursales).collect()}
+    assert out3 == {1: True, 2: False}
+
 
 def test_run_incremental_sync_end_to_end(spark, tmp_path):
     """The full run_sync lifecycle (SURVEY.md §3.2): load → re-run is a
@@ -406,23 +415,6 @@ def test_append_idempotent_prunes_sink_scan(spark, tmp_path):
     assert "PushedFilters" in plan or "fecha_supervision" in plan
     assert append_idempotent(spark, batch2, path, "k", prune_col="fecha_supervision") == 1
     assert spark.read.parquet(path).count() == 3
-
-
-def test_merge_upsert_row_semantics(spark):
-    from epl_cas_etl_2026_spark.etl.pipeline import merge_upsert
-
-    sink = spark.createDataFrame(
-        [("a", 1.0, "keep"), ("b", 2.0, "old")],
-        "k string, score double, note string",
-    )
-    updates = spark.createDataFrame(
-        [("b", None, "new"), ("c", 3.0, "ins")],
-        "k string, score double, note string",
-    )
-    out = {r["k"]: (r["score"], r["note"]) for r in merge_upsert(sink, updates, "k").collect()}
-    assert out["a"] == (1.0, "keep")        # untouched
-    assert out["b"] == (None, "new")        # WHOLE row replaced (null kept)
-    assert out["c"] == (3.0, "ins")         # inserted
 
 
 def test_quality_checks_count_violations(spark):

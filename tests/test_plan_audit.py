@@ -295,6 +295,54 @@ def test_package_binding_its_own_submodule_resolves():
     assert {(registry, "QUERIES"), (registry, "ORACLES")} <= set(edges)
 
 
+# definitions in plans/ that no registered query reaches, each with the
+# consumer outside the package that keeps it
+_UNREACHED_ALLOWED = {
+    "extensions._SIMHASH_PAIRS_SQL": "tools/rehearse_sf1.py",
+    "winnow._winnow_fp_udf": "reference implementation in test_sketch_fingerprint",
+    "winnow._with_fingerprints_udf": "reference implementation in test_sketch_fingerprint",
+}
+
+
+def test_every_plans_definition_is_reachable():
+    """Every top-level definition in a plans/ module is reached from a
+    registered query or from a ``@_register(...)`` decorator (how
+    oracle constants are read), unless the allowlist names its
+    consumer. Deleting a query family must delete its helpers too."""
+    import ast
+
+    from epl_cas_etl_2026_spark.plans import gate_policy as gp, registry
+
+    package = "epl_cas_etl_2026_spark.plans"
+    plans_dir = os.path.dirname(gp.__file__)
+    modules = [
+        f"{package}.{f[:-3]}"
+        for f in sorted(os.listdir(plans_dir))
+        if f.endswith(".py") and f[:-3] not in ("__init__", "gate_policy", "registry")
+    ]
+    reached = set().union(*(gp._reachable(fn) for fn in registry.QUERIES.values()))
+    stack = []
+    for mod in modules:
+        with open(os.path.join(plans_dir, mod.rsplit(".", 1)[1] + ".py")) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            for dec in getattr(node, "decorator_list", ()):
+                if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "_register":
+                    stack.extend(gp._targets(mod, *gp._references(dec, package)))
+    while stack:
+        node = stack.pop()
+        if node not in reached:
+            reached.add(node)
+            stack.extend(gp._edges(*node))
+    unreached = {
+        f"{mod.rsplit('.', 1)[1]}.{name}"
+        for mod in modules
+        for name in gp._definitions(mod)[0]
+        if (mod, name) not in reached
+    }
+    assert unreached == set(_UNREACHED_ALLOWED)
+
+
 def test_ledger_tool_records_each_round_once(monkeypatch):
     """tools/update_gate_ledger.py records fingerprints only for rounds
     the ledger has not mapped yet: a second run in the same round keeps
@@ -541,25 +589,3 @@ def test_dsir_broadcasts_terms_and_takes_ordered(spark, sf_oracle):
     assert "SortMergeJoin" not in plan, re.findall(r"\w*Join\w*", plan)
     # the one nested-loop join is the broadcast 1-row totals frame
     assert plan.count("BroadcastNestedLoopJoin") <= 1
-
-
-def test_pii_scrub_is_pure_scan_stage(spark, sf_oracle):
-    """The scrub must be whole-stage-codegen string work over the
-    scan — no Python eval, no joins, and only the final per-source
-    aggregation exchange."""
-    plan = _plan(spark, sf_oracle, "docs_pii_scrub_stats")
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "Join" not in plan
-    exchanges = set(re.findall(r"hashpartitioning\((\w+)#", plan))
-    assert exchanges <= {"source"}, exchanges
-    m = re.search(r"ReadSchema: [^\n]*", plan)
-    assert m and "lang" not in m.group(0), m and m.group(0)
-
-
-def test_warc_ingest_single_arrow_pair_one_exchange(spark, sf_oracle):
-    plan = _plan(spark, sf_oracle, "docs_warc_ingest_stats")
-    assert plan.count("MapInPandas") == 2  # build files, parse records
-    assert "Join" not in plan
-    exchanges = set(re.findall(r"hashpartitioning\((\w+)#", plan))
-    assert exchanges <= {"rec_type"}, exchanges

@@ -1,5 +1,5 @@
 """Versioned-table commit primitive: snapshot isolation, time travel,
-transactional MERGE, vacuum (sources/versioned.py)."""
+concurrent blind appends, vacuum (sources/versioned.py)."""
 
 from __future__ import annotations
 
@@ -30,22 +30,6 @@ def test_commit_and_time_travel(spark, tmp_path):
         t.read(spark, version=9)
 
 
-def test_merge_commit_upserts_transactionally(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(1, "a"), (2, "b")]))
-    snapshot_before = t.read(spark, version=0)
-    v = t.merge_commit(_df(spark, [(2, "B"), (3, "c")]), "k", spark)
-    assert v == 1
-    assert sorted(map(tuple, t.read(spark).collect())) == [
-        (1, "a"),
-        (2, "B"),
-        (3, "c"),
-    ]
-    # a reader holding the pre-merge snapshot still sees the old rows
-    # (snapshot isolation — the merge never mutated v=0)
-    assert sorted(map(tuple, snapshot_before.collect())) == [(1, "a"), (2, "b")]
-
-
 def test_failed_commit_leaves_pointer_untouched(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "t"))
     t.commit(_df(spark, [(1, "a")]))
@@ -73,103 +57,7 @@ def test_vacuum_keeps_recent_versions(spark, tmp_path):
     assert t.latest_version() == 3
 
 
-# -- round-9: optimistic concurrency (compare-and-swap commits) -----------
-
-
-def test_cas_stale_commit_rejected(spark, tmp_path):
-    from epl_cas_etl_2026_spark.sources.versioned import CommitConflictError
-
-    t = VersionedTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(1, "a")]), expected_version=-1)
-    t.commit(_df(spark, [(1, "b")]), expected_version=0)
-    # writer based on version 0 after the table moved to 1: clean reject
-    with pytest.raises(CommitConflictError):
-        t.commit(_df(spark, [(1, "stale")]), expected_version=0)
-    assert t.latest_version() == 1
-    assert sorted(map(tuple, t.read(spark).collect())) == [(1, "b")]
-    # an empty-table expectation on a non-empty table also rejects
-    with pytest.raises(CommitConflictError):
-        t.commit(_df(spark, [(9, "x")]), expected_version=-1)
-
-
-def test_cas_conflict_publishes_nothing(spark, tmp_path):
-    from epl_cas_etl_2026_spark.sources.versioned import CommitConflictError
-
-    t = VersionedTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(1, "a")]))
-    t.commit(_df(spark, [(2, "b")]))
-    with pytest.raises(CommitConflictError):
-        t.commit(_df(spark, [(3, "c")]), expected_version=0)
-    # no new version, no orphan served, and vacuum finds nothing extra
-    assert t.latest_version() == 1
-    assert t.vacuum(keep_last=2) == []
-
-
-def test_merge_commit_cas_rejects_concurrent_base_move(spark, tmp_path):
-    from epl_cas_etl_2026_spark.sources import versioned as vmod
-
-    t = VersionedTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(1, "a")]))
-
-    # interleave: another writer lands a commit AFTER merge_commit read
-    # its base snapshot but BEFORE it publishes — simulated by hooking
-    # the merge join. The stale MERGE must NOT clobber the interloper.
-    real_merge = vmod.merge_upsert
-    fired = {"done": False}
-
-    def hooked(sink, updates, key):
-        out = real_merge(sink, updates, key)
-        if not fired["done"]:
-            fired["done"] = True
-            t.commit(_df(spark, [(7, "interloper")]))
-        return out
-
-    vmod.merge_upsert = hooked
-    try:
-        with pytest.raises(vmod.CommitConflictError):
-            t.merge_commit(_df(spark, [(2, "b")]), "k", spark)
-    finally:
-        vmod.merge_upsert = real_merge
-    assert sorted(map(tuple, t.read(spark).collect())) == [(7, "interloper")]
-    # a retry against the moved base succeeds and keeps the interloper
-    v = t.merge_commit(_df(spark, [(2, "b")]), "k", spark)
-    assert v == 2
-    assert sorted(map(tuple, t.read(spark).collect())) == [
-        (2, "b"),
-        (7, "interloper"),
-    ]
-
-
-def test_cas_racing_writers_exactly_one_wins(spark, tmp_path):
-    import threading
-
-    from epl_cas_etl_2026_spark.sources.versioned import CommitConflictError
-
-    t = VersionedTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(0, "base")]))
-    barrier = threading.Barrier(2)
-    results: dict[str, object] = {}
-
-    def writer(tag):
-        df = _df(spark, [(1, tag)])
-        barrier.wait()
-        try:
-            results[tag] = t.commit(df, expected_version=0)
-        except CommitConflictError:
-            results[tag] = "conflict"
-
-    threads = [threading.Thread(target=writer, args=(w,)) for w in ("A", "B")]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    outcomes = sorted(str(v) for v in results.values())
-    assert outcomes == ["1", "conflict"], outcomes
-    winner = next(k for k, v in results.items() if v == 1)
-    assert sorted(map(tuple, t.read(spark).collect())) == [(1, winner)]
-    # the loser's orphan attempt dir (if its write finished) is vacuumable
-    t.vacuum(keep_last=2)
-    assert t.latest_version() == 1
+# -- round-9: concurrent writers (put-if-absent commit markers) ----------
 
 
 def test_blind_append_racing_writers_both_land(spark, tmp_path):
@@ -213,7 +101,7 @@ def test_legacy_pointer_layout_still_readable(spark, tmp_path):
     assert sorted(map(tuple, t.read(spark).collect())) == [(1, "b")]
     assert sorted(map(tuple, t.read(spark, version=0).collect())) == [(1, "a")]
     # new commits on top of a legacy table use the marker protocol
-    v = t.commit(_df(spark, [(1, "c")]), expected_version=1)
+    v = t.commit(_df(spark, [(1, "c")]))
     assert v == 2
     assert sorted(map(tuple, t.read(spark).collect())) == [(1, "c")]
 
@@ -267,7 +155,7 @@ def test_writer_crash_after_write_before_marker(spark, tmp_path):
     assert t.vacuum(keep_last=1) == [1]
     assert not os.path.isdir(crashed) and not os.path.exists(staging)
     # the table is exactly as before the crash, and new commits proceed
-    assert t.commit(_df(spark, [(2, "b")]), expected_version=0) == 1
+    assert t.commit(_df(spark, [(2, "b")])) == 1
     assert sorted(map(tuple, t.read(spark).collect())) == [(2, "b")]
 
 
@@ -295,13 +183,13 @@ def test_commit_detects_vacuumed_data_dir(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(vmod.os, "link", link_then_vacuum)
     with pytest.raises(CommitConflictError):
-        t.commit(_df(spark, [(2, "b")]), expected_version=0)
+        t.commit(_df(spark, [(2, "b")]))
     monkeypatch.undo()
     # the marker was unpublished: readers still see version 0 and a
     # retry lands cleanly at version 1
     assert t.latest_version() == 0
     assert sorted(map(tuple, t.read(spark).collect())) == [(1, "a")]
-    assert t.commit(_df(spark, [(2, "b")]), expected_version=0) == 1
+    assert t.commit(_df(spark, [(2, "b")])) == 1
     assert sorted(map(tuple, t.read(spark).collect())) == [(2, "b")]
 
 

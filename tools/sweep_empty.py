@@ -26,21 +26,14 @@ EXPECTED_VALUEERRORS = {
     # the same by-design guard as kmeans_fit: empty input raises a
     # clear ValueError instead of training on nothing
     "embedding_pq_codes_invariants",
-    # the composed serving paths inherit the same init guards
-    # (IVF-PQ: kmeans_fit; graph ANN: the vec_id-0 query-row guard)
+    # the composed IVF-PQ serving path inherits kmeans_fit's guard
     "embedding_ivfpq_topk",
-    "embedding_graph_ann_topk",
     # round-8 persisted-index pair: build (and serve's build-on-first-
     # touch) run pq_fit, inheriting its deterministic-init guard
     "embedding_pq_index_build",
     "embedding_pq_index_serve",
-    # round-7 batch serving forms: same pq_fit / query-row init guards
+    # round-7 batch serving form: same pq_fit init guard
     "embedding_pq_batch_topk",
-    "embedding_graph_batch_topk",
-    # round-8 continuation: the persisted NSW pair's serve query has
-    # the same vec_id-0..15 query-row guard as graph_batch (the build
-    # side survives empty input — an empty adjacency commits fine)
-    "embedding_nsw_index_serve",
 }
 
 
