@@ -535,7 +535,7 @@ def heatmap_matrix(
     s = _active(tables["sucursales"]).select(
         F.col("id").alias("sucursal_id"), "grupo_operativo_id"
     )
-    f = tables[FACT_TABLES[tipo]].select(
+    f = _fact(tables, tipo, None).select(
         "sucursal_id", "periodo_id", "calificacion_general"
     )
     cell = (
@@ -611,38 +611,6 @@ def heatmap_matrix(
     # marg frame hides cardinality from AQE and Catalyst picks a
     # sort-merge)
     return wide.join(F.broadcast(overall), "grupo").orderBy("grupo")
-
-
-def dashboard_stats(
-    tables: dict, tipo: str = "operativas", periodo_id: int | None = None
-) -> DataFrame:
-    """One-row scorecard subset of :func:`kpis` — totals, coverage,
-    deterministic 2dp average, and the 4-bucket performance
-    distribution with percent-of-total (A6 + A14). Kept as the
-    compact frame the older tests and fixtures consume; the FULL
-    /api/kpis parity (accumulated vs period average, color class,
-    group count — app.py:342-432) is :func:`kpis`."""
-    f = _fact(tables, tipo, periodo_id)
-    # lazy 1-row total cross-joined in (no driver-side count action,
-    # and the plan snapshots the table at execution, not build, time)
-    totals = _active(tables["sucursales"]).agg(
-        F.count(F.lit(1)).cast("long").alias("sucursales_total")
-    )
-    agg = f.agg(
-        F.count("id").cast("long").alias("total_supervisiones"),
-        det_avg(F.col("calificacion_general")).alias("promedio_general"),
-        F.countDistinct("sucursal_id")
-        .cast("long")
-        .alias("sucursales_supervisadas"),
-        *bucket_counts(F.col("calificacion_general")),
-    )
-    return agg.crossJoin(totals).select(
-        "*",
-        pct_of(
-            F.col("sucursales_supervisadas"),
-            F.col("sucursales_total"),
-        ).alias("cobertura_pct"),
-    )
 
 
 def kpis(
@@ -862,11 +830,9 @@ def branch_latest(
     class; optional period filter (app.py:852-854)."""
     from pyspark.sql import Window
 
-    f = tables[FACT_TABLES[tipo]].filter(
+    f = _fact(tables, tipo, periodo_id).filter(
         F.col("sucursal_id") == sucursal_id
     )
-    if periodo_id is not None:
-        f = f.filter(F.col("periodo_id") == periodo_id)
     w = Window.partitionBy("sucursal_id").orderBy(
         F.desc("fecha_supervision"), F.desc("id")
     )
@@ -890,7 +856,7 @@ def branch_trend(
     order (W5, app.py:938-960)."""
     from pyspark.sql import Window
 
-    f = tables[FACT_TABLES[tipo]].filter(
+    f = _fact(tables, tipo, None).filter(
         F.col("sucursal_id") == sucursal_id
     )
     w = Window.partitionBy("sucursal_id").orderBy(
@@ -1004,7 +970,7 @@ def grupo_detalle_sucursales(
         .filter(F.col("grupo_operativo_id") == grupo_id)
         .select(F.col("id").alias("sucursal_id"), F.col("nombre"))
     )
-    f = tables[FACT_TABLES[tipo]].select(
+    f = _fact(tables, tipo, None).select(
         F.col("id").alias("sup_id"),
         F.col("sucursal_id").alias("f_sucursal_id"),
         "periodo_id",
@@ -1048,9 +1014,7 @@ def grupo_detalle_stats(
     s_all = tables["sucursales"].select(
         F.col("id").alias("sucursal_id"), "grupo_operativo_id"
     )
-    f = tables[FACT_TABLES[tipo]]
-    if periodo_id is not None:
-        f = f.filter(F.col("periodo_id") == periodo_id)
+    f = _fact(tables, tipo, periodo_id)
     prom = (
         f.join(s_all, f.sucursal_id == s_all.sucursal_id)
         .filter(F.col("grupo_operativo_id") == grupo_id)
@@ -1100,7 +1064,7 @@ def supervision_header(
     1015-1024): the supervision row with its period name LEFT-joined,
     the ``x if x else 0`` score coalescing, and the dd/MM/yyyy date
     label ('-' when NULL)."""
-    f = tables[FACT_TABLES[tipo]].filter(F.col("id") == supervision_id)
+    f = _fact(tables, tipo, None).filter(F.col("id") == supervision_id)
     p = tables["periodos_cas"].select(
         F.col("id").alias("pid"), F.col("nombre").alias("periodo")
     )
@@ -1154,7 +1118,7 @@ def periodos_with_data(tables: dict, tipo: str = "operativas") -> DataFrame:
     """Periods having supervisions — the reference's GROUP-BY-all-cols
     dedup expressed as a left-semi join (A9, app.py:253-259)."""
     p = tables["periodos_cas"]
-    f = tables[FACT_TABLES[tipo]].select("periodo_id")
+    f = _fact(tables, tipo, None).select("periodo_id")
     return (
         p.join(f, p.id == f.periodo_id, "left_semi")
         .select("id", "codigo", "nombre", "fecha_inicio", "fecha_fin")
@@ -1203,7 +1167,7 @@ def periodo_contexto(tables: dict, tipo: str = "operativas", hoy=None) -> DataFr
     p = tables["periodos_cas"].select(
         "id", "codigo", "nombre", "fecha_inicio", "fecha_fin", "activo"
     )
-    f = tables[FACT_TABLES[tipo]]
+    f = _fact(tables, tipo, None)
     base_cols = ["id", "codigo", "nombre", "fecha_inicio", "fecha_fin"]
     c1 = (
         p.filter(

@@ -52,21 +52,6 @@ def quality_class(text: Column) -> Column:
     )
 
 
-def normalize_text(text: Column) -> Column:
-    """Canonical form for fingerprinting: lowercase, strip
-    non-alphanumerics, collapse whitespace."""
-    t = F.lower(text)
-    t = F.regexp_replace(t, "[^a-z0-9 ]", " ")
-    t = F.regexp_replace(t, "\\s+", " ")
-    return F.trim(t)
-
-
-def fingerprint(text: Column) -> Column:
-    """Deterministic document fingerprint: md5 of the normalized text
-    (md5 so the DuckDB oracle computes the identical value)."""
-    return F.md5(normalize_text(text))
-
-
 def lang_scores(text: Column, markers: dict[str, tuple[str, ...]]) -> Column:
     """N-gram/marker-based language-ID heuristic: hits per language's
     marker list; returns the argmax language (ties → lexicographic)."""
@@ -103,21 +88,3 @@ def greedy_pair_merge(
         ).otherwise(F.concat(acc, F.array(x))),
     )
 
-
-def first_fit_pack(items: Column, capacity: int) -> Column:
-    """First-fit bin packing as a fold: accumulator is the bin-load
-    array; each item lands in the first bin it fits (array_position
-    over a predicate transform) or opens a new bin. Feed it a
-    size-DESCENDING list for the FFD 11/9·OPT+1 guarantee. Returns
-    the final bin loads."""
-
-    def step(acc, x):
-        fits = F.transform(acc, lambda v: v + x <= F.lit(capacity))
-        pos = F.array_position(fits, F.lit(True))
-        return F.when(pos == 0, F.concat(acc, F.array(x))).otherwise(
-            F.transform(
-                acc, lambda v, i: F.when(i + 1 == pos, v + x).otherwise(v)
-            )
-        )
-
-    return F.aggregate(items, F.array().cast("array<long>"), step)

@@ -30,17 +30,6 @@ from epl_cas_etl_2026_spark.functions.text import words
 from epl_cas_etl_2026_spark.sources.parquet import spread_scan
 
 
-def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact duplicate summary: total docs, distinct texts (by md5),
-    docs that are duplicates of an earlier doc."""
-    hashed = df.select(F.md5(F.col(text_col)).alias("h"))
-    return hashed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("h").alias("n_distinct"),
-        (F.count(F.lit(1)) - F.countDistinct("h")).alias("n_exact_dups"),
-    )
-
-
 def keep_first_exact(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Exact dedup keeping the lowest id per text hash (deterministic
     survivor selection — groupBy + min, one shuffle)."""

@@ -1204,9 +1204,9 @@ def events_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Decile lift / gains table — the standard model-evaluation artifact
 # for a propensity score (here: account balance "predicting" whether
 # the customer has placed an order), computed per market segment so
-# the ntile windows stay PARTITIONED (the parallel-window discipline
-# of customer_acctbal_deciles; a lift table is usually sliced by
-# cohort in production anyway). Decile 1 = highest scores; per decile:
+# the ntile windows stay PARTITIONED (parallel windows, never one
+# global partition; a lift table is usually sliced by cohort in
+# production anyway). Decile 1 = highest scores; per decile:
 # response rate, lift vs the segment's base rate, and cumulative
 # responder capture — the three numbers a targeting decision reads.
 #

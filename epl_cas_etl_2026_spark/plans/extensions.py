@@ -17,42 +17,19 @@ from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.text import (
     bpe_token_count,
-    fingerprint,
-    first_fit_pack,
     greedy_pair_merge,
-    lang_scores,
     quality_class,
     token_count,
 )
 from epl_cas_etl_2026_spark.functions.scalars import det_avg, det_avg_sql
-from epl_cas_etl_2026_spark.functions.vectors import cosine, dot, to_double
-from epl_cas_etl_2026_spark.operators.dedup import (
-    exact_dedup_stats,
-    near_dup_pairs,
-    simhash64,
-)
+from epl_cas_etl_2026_spark.functions.vectors import cosine, to_double
+from epl_cas_etl_2026_spark.operators.dedup import near_dup_pairs
 from epl_cas_etl_2026_spark.plans.registry import ORACLES, register as _register
 from epl_cas_etl_2026_spark.sources.parquet import load_table, spread_scan
 
 
 # ---------------------------------------------------------------------------
-# Exact dedup (hash-groupBy).
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_exact_dedup_stats",
-    """
-    SELECT COUNT(*) AS n_docs,
-           COUNT(DISTINCT md5(text)) AS n_distinct,
-           COUNT(*) - COUNT(DISTINCT md5(text)) AS n_exact_dups
-    FROM documents
-    """,
-)
-def docs_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup_stats(load_table(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# Text analysis: token counts (whitespace + BPE-ish regex), quality.
+# Text analysis: token counts (whitespace + BPE-ish regex).
 # ---------------------------------------------------------------------------
 @_register(
     "docs_token_stats",
@@ -77,93 +54,6 @@ def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.length(t)), 2).alias("avg_chars"),
         )
         .orderBy("lang")
-    )
-
-
-@_register(
-    "docs_quality_classes",
-    """
-    SELECT CASE WHEN len(string_split(text, ' ')) < 5 THEN 'drop'
-                WHEN length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) * 1.0
-                     / nullif(length(text), 0) < 0.8 THEN 'review'
-                ELSE 'keep' END AS calidad,
-           COUNT(*) AS n,
-           ROUND(AVG(n_chars), 2) AS avg_chars
-    FROM documents GROUP BY calidad ORDER BY calidad
-    """,
-)
-def docs_quality_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.withColumn("calidad", quality_class(F.col("text")))
-        .groupBy("calidad")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("n_chars"), 2).alias("avg_chars"),
-        )
-        .orderBy("calidad")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document fingerprinting (md5 of normalized text).
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_fingerprint_by_source",
-    """
-    SELECT source,
-           COUNT(*) AS n_docs,
-           COUNT(DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
-             '[^a-z0-9 ]', ' ', 'g'), '\\s+', ' ', 'g')))) AS n_fingerprints
-    FROM documents GROUP BY source ORDER BY source
-    """,
-)
-def docs_fingerprint_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.withColumn("fp", fingerprint(F.col("text")))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("fp").alias("n_fingerprints"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash (md5-hash variant so DuckDB reproduces it bit-for-bit).
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_simhash",
-    """
-    WITH toks AS (
-      SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-      FROM documents WHERE doc_id < 50
-    ),
-    hashed AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-      FROM toks
-    ),
-    bits AS (
-      SELECT doc_id, b,
-             SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-      FROM hashed, generate_series(0, 59) AS t(b)
-      GROUP BY doc_id, b
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN vote > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-    FROM bits GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    return (
-        docs.select(
-            "doc_id", simhash64(F.col("text"), use_md5=True).alias("simhash")
-        )
-        .orderBy("doc_id")
     )
 
 
@@ -716,149 +606,6 @@ def docs_minhash_estimate_error(
 
 
 # ---------------------------------------------------------------------------
-# SIMHASH ESTIMATOR CALIBRATION (round-11) — the third leg of the
-# estimator-audit family (docs_minhash_estimate_error pins the MinHash
-# Jaccard estimator, embedding_lsh_estimate_error the hyperplane-LSH
-# cosine estimator): for SimHash, hamming distance d over the P=60
-# sign bits estimates cos(pi*d/P) (Charikar SRP, STOC'02), commonly
-# used as a proxy for the cosine of the DISTINCT-TOKEN indicator
-# vectors the bit votes were built from. That proxy has a known bias —
-# the vote vector is not the indicator vector — and THIS gate
-# quantifies it: per hamming distance, the table-estimated cosine vs
-# the exact indicator cosine |A∩B|/sqrt(|A||B|) in integer millis.
-# The d→cos(pi*d/60) mapping is a 61-entry INTEGER LITERAL table
-# computed once in Python and injected verbatim into BOTH engines (the
-# _LSH_EST_MILLI precedent) — no engine evaluates cos(); the exact
-# side uses the proven FLOOR(ROUND(sim,6)*1000+0.5) half-up rule.
-#
-# 100 TB shape: candidates come from the 4×15-bit band join (never
-# all-pairs), and the calibration runs on a DETERMINISTIC 5% SAMPLE of
-# the candidate stream ((id_a*31+id_b) % 20 = 0, identical integer
-# arithmetic in both engines) applied BEFORE the pair-dedup — an
-# estimator audit does not need every pair, and the sample bounds the
-# exact-verify join linearly at any corpus size (this self-similar
-# corpus yields ~23k raw candidates per 500 docs; unfiltered dedup at
-# sf1 would shuffle ~227M pairs, the sampled one ~11M). Exact verify
-# joins the two distinct-token ARRAYS per sampled pair (the setjoin
-# lesson), built ONLY for docs that appear in some sampled pair
-# (semi-join pushdown).
-# ---------------------------------------------------------------------------
-_SIMHASH_P = 60
-_SIMHASH_EST_MILLI = [
-    int(math.floor(1000.0 * math.cos(math.pi * d / _SIMHASH_P) + 0.5))
-    for d in range(_SIMHASH_P + 1)
-]
-
-
-@_register(
-    "docs_simhash_estimate_error",
-    f"""
-    WITH sim AS ({_SIMHASH_SQL}),
-    banded AS (
-      SELECT doc_id, k AS band, (h >> (k * 15)) & 32767 AS key
-      FROM sim, generate_series(0, 3) AS t(k)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-      FROM banded a JOIN banded c
-        ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
-      WHERE (a.doc_id * 31 + c.doc_id) % 20 = 0
-    ),
-    wl AS (
-      SELECT doc_id, list_distinct(string_split(text, ' ')) AS s
-      FROM documents
-    ),
-    perpair AS (
-      SELECT CAST(bit_count(xor(sa.h, sb.h)) AS BIGINT) AS hamming,
-             CAST(FLOOR(ROUND(len(list_intersect(wa.s, wb.s))
-                              / sqrt(len(wa.s) * len(wb.s)), 6)
-                        * 1000 + 0.5) AS BIGINT) AS exact_milli
-      FROM cand
-      JOIN sim sa ON sa.doc_id = id_a
-      JOIN sim sb ON sb.doc_id = id_b
-      JOIN wl wa ON wa.doc_id = id_a
-      JOIN wl wb ON wb.doc_id = id_b
-    ),
-    curved AS (
-      SELECT hamming, exact_milli,
-             ([{', '.join(str(x) for x in _SIMHASH_EST_MILLI)}]
-             )[hamming + 1] AS est_cos_milli
-      FROM perpair
-    )
-    SELECT hamming,
-           CAST(est_cos_milli AS BIGINT) AS est_cos_milli,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(exact_milli) AS BIGINT) AS sum_exact_milli,
-           CAST(MIN(exact_milli) AS BIGINT) AS min_exact_milli,
-           CAST(MAX(exact_milli) AS BIGINT) AS max_exact_milli,
-           CAST(SUM(ABS(est_cos_milli - exact_milli)) AS BIGINT)
-             AS sum_abs_err_milli
-    FROM curved GROUP BY hamming, est_cos_milli ORDER BY hamming
-    """,
-)
-def docs_simhash_estimate_error(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from epl_cas_etl_2026_spark.functions.text import words
-    from epl_cas_etl_2026_spark.operators.dedup import simhash_near_dup_pairs
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sample = ((F.col("id_a") * 31 + F.col("id_b")) % 20) == 0
-    pairs = simhash_near_dup_pairs(
-        docs, max_hamming=_SIMHASH_P, pair_filter=sample
-    )
-    pairs = pairs.localCheckpoint(eager=False)  # 3 consumers below
-    # distinct-token arrays ONLY for docs in some sampled pair
-    touched = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    wl = docs.join(touched, "doc_id", "left_semi").select(
-        "doc_id", F.array_distinct(words(F.col("text"))).alias("s")
-    )
-    wa = wl.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
-    wb = wl.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
-    lut = F.array(*[F.lit(int(x)) for x in _SIMHASH_EST_MILLI])
-    perpair = (
-        pairs.join(wa, "id_a")
-        .join(wb, "id_b")
-        .select(
-            F.col("hamming").cast("long").alias("hamming"),
-            F.element_at(lut, (F.col("hamming") + 1).cast("int"))
-            .cast("long")
-            .alias("est_cos_milli"),
-            F.expr(
-                "CAST(FLOOR(ROUND(size(array_intersect(sa, sb))"
-                " / sqrt(size(sa) * size(sb)), 6) * 1000 + 0.5) AS BIGINT)"
-            ).alias("exact_milli"),
-        )
-    )
-    return (
-        perpair.groupBy("hamming", "est_cos_milli")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum("exact_milli").cast("long").alias("sum_exact_milli"),
-            F.min("exact_milli").cast("long").alias("min_exact_milli"),
-            F.max("exact_milli").cast("long").alias("max_exact_milli"),
-            F.sum(F.abs(F.col("est_cos_milli") - F.col("exact_milli")))
-            .cast("long")
-            .alias("sum_abs_err_milli"),
-        )
-        .select(
-            "hamming",
-            "est_cos_milli",
-            "n_pairs",
-            "sum_exact_milli",
-            "min_exact_milli",
-            "max_exact_milli",
-            "sum_abs_err_milli",
-        )
-        .orderBy("hamming")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Embedding similarity: brute-force cosine top-k (TakeOrderedAndProject).
 # ---------------------------------------------------------------------------
 @_register(
@@ -998,172 +745,6 @@ def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Snapshot diff — reconcile two versions of a table: one full-outer
-# join classifies every key as added / removed / changed / unchanged.
-# Versions simulated from orders key ranges with a planted "change"
-# (status flipped for every 10th overlapping key).
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_snapshot_diff",
-    """
-    WITH old AS (
-      SELECT o_orderkey AS k, o_orderstatus AS s FROM orders
-      WHERE o_orderkey < 150
-    ),
-    new AS (
-      SELECT o_orderkey AS k,
-             CASE WHEN o_orderkey % 10 = 0 THEN 'X' ELSE o_orderstatus END AS s
-      FROM orders WHERE o_orderkey >= 50 AND o_orderkey < 200
-    )
-    SELECT CASE WHEN o.k IS NULL THEN 'added'
-                WHEN n.k IS NULL THEN 'removed'
-                WHEN o.s IS DISTINCT FROM n.s THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           COUNT(*) AS n_rows
-    FROM old o FULL OUTER JOIN new n ON o.k = n.k
-    GROUP BY status ORDER BY status
-    """,
-)
-def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.incremental import dataset_diff
-
-    orders = load_table(spark, sf_dir, "orders")
-    old = orders.filter(F.col("o_orderkey") < 150).select(
-        F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
-    )
-    new = (
-        orders.filter(
-            (F.col("o_orderkey") >= 50) & (F.col("o_orderkey") < 200)
-        )
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.when(F.col("o_orderkey") % 10 == 0, F.lit("X"))
-            .otherwise(F.col("o_orderstatus"))
-            .alias("s"),
-        )
-    )
-    return dataset_diff(old, new, "k", ["s"]).orderBy("status")
-
-
-# ---------------------------------------------------------------------------
-# Incremental rollup maintenance — the stored state is built by
-# MERGING two batch-level partial aggregates (pre/post a date split),
-# never re-scanning history; the oracle recomputes the rollup
-# directly over all rows. Hash-equality here PROVES merge == direct
-# (exact decimal sums merge associatively).
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_incremental_rollup",
-    """
-    SELECT o_orderpriority,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(27,6))) AS DOUBLE), 2)
-             AS sum_price,
-           COUNT(*) AS n_rows
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def orders_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.incremental import (
-        merge_aggs,
-        partial_aggs,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    split = "1998-01-01"
-    state = partial_aggs(
-        orders.filter(F.col("o_orderdate") < split),
-        ["o_orderpriority"],
-        ["o_totalprice"],
-    )
-    delta = partial_aggs(
-        orders.filter(F.col("o_orderdate") >= split),
-        ["o_orderpriority"],
-        ["o_totalprice"],
-    )
-    merged = merge_aggs(state, delta, ["o_orderpriority"])
-    return merged.select(
-        "o_orderpriority",
-        F.round(F.col("sum_o_totalprice").cast("double"), 2).alias("sum_price"),
-        F.col("n_rows"),
-    ).orderBy("o_orderpriority")
-
-
-# ---------------------------------------------------------------------------
-# Data-quality constraint report — expectations-style checks as ONE
-# scan + one aggregation row per table (operators/quality.py), plus a
-# referential-integrity anti-join. The kind of gate a production
-# pipeline runs before publishing a table.
-# ---------------------------------------------------------------------------
-@_register(
-    "dq_orders_constraints",
-    """
-    SELECT * FROM (
-      SELECT 'o_custkey__nulls' AS chk,
-             CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS violations
-      FROM orders
-      UNION ALL
-      SELECT 'o_orderkey__dup_rows',
-             COUNT(*) - COUNT(DISTINCT o_orderkey) FROM orders
-      UNION ALL
-      SELECT 'o_orderstatus__bad_value',
-             CAST(SUM(CASE WHEN o_orderstatus IS NOT NULL
-                       AND o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END) AS BIGINT)
-      FROM orders
-      UNION ALL
-      SELECT 'o_totalprice__out_of_range',
-             CAST(SUM(CASE WHEN o_totalprice IS NOT NULL
-                       AND o_totalprice NOT BETWEEN 0 AND 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-      FROM orders
-      UNION ALL
-      SELECT 'o_custkey__orphans',
-             (SELECT COUNT(*) FROM orders o
-              WHERE o.o_custkey IS NOT NULL
-                AND NOT EXISTS (SELECT 1 FROM customer c
-                                WHERE c.c_custkey = o.o_custkey))
-    ) ORDER BY chk
-    """,
-)
-def dq_orders_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.quality import (
-        allowed_values_violations,
-        check_constraints,
-        fk_violations,
-        not_null_violations,
-        range_violations,
-        unique_violations,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    one_pass = check_constraints(
-        orders,
-        [
-            not_null_violations("o_custkey"),
-            unique_violations(orders, "o_orderkey"),
-            allowed_values_violations("o_orderstatus", ["O", "F", "P"]),
-            range_violations("o_totalprice", 0, 1_000_000),
-        ],
-    )
-    fk = fk_violations(orders, "o_custkey", customer, "c_custkey")
-    melted = one_pass.select(
-        F.explode(
-            F.create_map(
-                *[
-                    x
-                    for c in one_pass.columns
-                    for x in (F.lit(c), F.col(c).cast("long"))
-                ]
-            )
-        ).alias("chk", "violations")
-    )
-    fk_row = fk.select(
-        F.lit("o_custkey__orphans").alias("chk"),
-        F.col("o_custkey__orphans").cast("long").alias("violations"),
-    )
-    return melted.unionByName(fk_row).orderBy("chk")
-
-
-# ---------------------------------------------------------------------------
 # Distributed moments: stddev + correlation per group computed from
 # EXACT decimal moments (Σx, Σx², Σxy in integer cents), then the
 # same closed-form double arithmetic on both engines — immune to the
@@ -1235,275 +816,6 @@ def lineitem_moments_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("corr_qty_price"),
     ).orderBy("l_returnflag")
-
-
-# ---------------------------------------------------------------------------
-# Exact percentiles per group (sort-based distributed percentile —
-# linear interpolation, same formula in both engines). The sketch
-# path for 100 TB is approx_percentile (t-digest), engine-specific by
-# nature like HLL — the exact twin is the correctness anchor.
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_price_percentiles",
-    """
-    SELECT o_orderpriority,
-           ROUND(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-           ROUND(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-           ROUND(quantile_cont(o_totalprice, 0.99), 2) AS p99
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def orders_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(
-            F.round(F.percentile("o_totalprice", F.lit(0.5)), 2).alias("p50"),
-            F.round(F.percentile("o_totalprice", F.lit(0.9)), 2).alias("p90"),
-            F.round(F.percentile("o_totalprice", F.lit(0.99)), 2).alias("p99"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Weekly retention cohorts — users grouped by first-seen week, pivoted
-# on weeks-since-cohort (A10's pivot machinery on event data; the
-# standard activation/retention matrix).
-# ---------------------------------------------------------------------------
-@_register(
-    "events_weekly_retention",
-    """
-    WITH firsts AS (
-      SELECT user_id,
-             CAST(FLOOR(epoch_us(MIN(ts)) / 604800000000) AS BIGINT) AS cohort_week
-      FROM events GROUP BY user_id
-    ),
-    activity AS (
-      SELECT DISTINCT e.user_id, f.cohort_week,
-             CAST(FLOOR(epoch_us(e.ts) / 604800000000) AS BIGINT) - f.cohort_week
-               AS weeks_since
-      FROM events e JOIN firsts f ON e.user_id = f.user_id
-    )
-    SELECT cohort_week,
-           COUNT(DISTINCT CASE WHEN weeks_since = 0 THEN user_id END) AS w0,
-           COUNT(DISTINCT CASE WHEN weeks_since = 1 THEN user_id END) AS w1,
-           COUNT(DISTINCT CASE WHEN weeks_since = 2 THEN user_id END) AS w2,
-           COUNT(DISTINCT CASE WHEN weeks_since = 3 THEN user_id END) AS w3
-    FROM activity GROUP BY cohort_week ORDER BY cohort_week
-    """,
-)
-def events_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week = (F.floor(F.unix_micros("ts") / 604800000000)).cast("long")
-    firsts = ev.groupBy("user_id").agg(F.min(week).alias("cohort_week"))
-    activity = (
-        ev.join(firsts, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            (week - F.col("cohort_week")).alias("weeks_since"),
-        )
-        .distinct()
-    )
-    aggs = [
-        F.countDistinct(
-            F.when(F.col("weeks_since") == w, F.col("user_id"))
-        ).alias(f"w{w}")
-        for w in range(4)
-    ]
-    return activity.groupBy("cohort_week").agg(*aggs).orderBy("cohort_week")
-
-
-# ---------------------------------------------------------------------------
-# Set operations beyond UNION (engine breadth past the reference's
-# surface): INTERSECT and EXCEPT with proper bag→set semantics.
-# ---------------------------------------------------------------------------
-@_register(
-    "events_user_set_ops",
-    """
-    SELECT * FROM (
-      SELECT 'clicked_and_purchased' AS cohort, COUNT(*) AS n_users FROM (
-        SELECT user_id FROM events WHERE event_type = 'click'
-        INTERSECT
-        SELECT user_id FROM events WHERE event_type = 'purchase')
-      UNION ALL
-      SELECT 'clicked_never_purchased', COUNT(*) FROM (
-        SELECT user_id FROM events WHERE event_type = 'click'
-        EXCEPT
-        SELECT user_id FROM events WHERE event_type = 'purchase')
-    ) ORDER BY cohort
-    """,
-)
-def events_user_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    clickers = ev.filter(F.col("event_type") == "click").select("user_id")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id")
-    both = clickers.intersect(buyers).agg(
-        F.count(F.lit(1)).alias("n_users")
-    ).withColumn("cohort", F.lit("clicked_and_purchased"))
-    # subtract = EXCEPT DISTINCT (set semantics) — exceptAll would be
-    # bag difference and keep a user with more clicks than purchases
-    only = clickers.subtract(buyers).agg(
-        F.count(F.lit(1)).alias("n_users")
-    ).withColumn("cohort", F.lit("clicked_never_purchased"))
-    return both.unionByName(only).select("cohort", "n_users").orderBy("cohort")
-
-
-# ---------------------------------------------------------------------------
-# UNPIVOT (wide → long): the inverse of the A10 pivot, via the native
-# melt operator — round-trips the segment matrix back to long form.
-# ---------------------------------------------------------------------------
-@_register(
-    "region_segment_unpivot",
-    """
-    WITH wide AS (
-      SELECT r_name,
-             SUM(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BUILDING,
-             SUM(CASE WHEN c_mktsegment = 'MACHINERY' THEN 1 ELSE 0 END) AS MACHINERY
-      FROM region
-      JOIN nation ON n_regionkey = r_regionkey
-      JOIN customer ON c_nationkey = n_nationkey
-      GROUP BY r_name
-    )
-    SELECT r_name, seg, CAST(n AS BIGINT) AS n
-    FROM wide UNPIVOT (n FOR seg IN (BUILDING, MACHINERY))
-    ORDER BY r_name, seg
-    """,
-)
-def region_segment_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    customer = load_table(spark, sf_dir, "customer")
-    wide = (
-        region.join(nation, nation.n_regionkey == region.r_regionkey)
-        .join(customer, customer.c_nationkey == nation.n_nationkey)
-        .groupBy("r_name")
-        .agg(
-            F.sum(
-                F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0)
-            ).alias("BUILDING"),
-            F.sum(
-                F.when(F.col("c_mktsegment") == "MACHINERY", 1).otherwise(0)
-            ).alias("MACHINERY"),
-        )
-    )
-    return wide.unpivot(
-        "r_name", ["BUILDING", "MACHINERY"], "seg", "n"
-    ).orderBy("r_name", "seg")
-
-
-# ---------------------------------------------------------------------------
-# Sketch-path percentiles — approx_percentile (mergeable quantile
-# sketch): the 100 TB path next to the exact sort-based twin
-# (orders_price_percentiles). Like the HLL query, sketch estimates
-# are engine-specific → rows-only driver check; the exact twin is the
-# correctness anchor, and this query self-reports its error vs exact.
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_price_approx_quantiles",
-    """
-    SELECT
-      CAST(FLOOR(quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) * 100
-                 + 0.5) AS BIGINT) AS exact_p50_cents,
-      CAST(FLOOR(quantile_cont(CAST(o_totalprice AS DOUBLE), 0.9) * 100
-                 + 0.5) AS BIGINT) AS exact_p90_cents,
-      TRUE AS p50_within_1pct,
-      TRUE AS p90_within_1pct
-    FROM orders
-    """,
-)
-def orders_price_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch estimates are engine-specific, so the gated columns are
-    engine-independent: the EXACT interpolated percentiles (cent-
-    quantized via the cross-engine FLOOR(x*100+0.5) rule; both engines
-    use the continuous (n-1)*p convention) plus booleans asserting the
-    mergeable quantile sketch (accuracy 1/10000 — the 100 TB path)
-    landed within 1% relative of exact. A sketch drifting out of its
-    error bound now turns the row red instead of being unobservable."""
-    orders = load_table(spark, sf_dir, "orders")
-    price = F.col("o_totalprice").cast("double")
-    approx = F.approx_percentile(
-        price, F.array(F.lit(0.5), F.lit(0.9)), F.lit(10000)
-    )
-    exact_p50 = F.percentile(price, F.lit(0.5))
-    exact_p90 = F.percentile(price, F.lit(0.9))
-    return orders.agg(
-        approx[0].alias("a50"),
-        approx[1].alias("a90"),
-        exact_p50.alias("e50"),
-        exact_p90.alias("e90"),
-    ).select(
-        F.floor(F.col("e50") * 100 + 0.5).cast("long").alias("exact_p50_cents"),
-        F.floor(F.col("e90") * 100 + 0.5).cast("long").alias("exact_p90_cents"),
-        (F.abs(F.col("a50") - F.col("e50")) <= 0.01 * F.col("e50")).alias(
-            "p50_within_1pct"
-        ),
-        (F.abs(F.col("a90") - F.col("e90")) <= 0.01 * F.col("e90")).alias(
-            "p90_within_1pct"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Funnel conversion — ordered-sequence analytics (signup → click →
-# purchase, each step strictly after the previous FIRST occurrence).
-# Three stage frames chained by broadcast-size per-user timestamps;
-# shuffles only on user_id.
-# ---------------------------------------------------------------------------
-@_register(
-    "events_funnel_conversion",
-    """
-    WITH s1 AS (
-      SELECT user_id, MIN(ts) AS t1 FROM events
-      WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT e.user_id, MIN(e.ts) AS t2
-      FROM events e JOIN s1 ON e.user_id = s1.user_id
-      WHERE e.event_type = 'click' AND e.ts > s1.t1
-      GROUP BY e.user_id
-    ),
-    s3 AS (
-      SELECT e.user_id, MIN(e.ts) AS t3
-      FROM events e JOIN s2 ON e.user_id = s2.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-      GROUP BY e.user_id
-    )
-    SELECT * FROM (
-      SELECT 'step1_signup' AS step, COUNT(*) AS n_users FROM s1
-      UNION ALL SELECT 'step2_click_after_signup', COUNT(*) FROM s2
-      UNION ALL SELECT 'step3_purchase_after_click', COUNT(*) FROM s3
-    ) ORDER BY step
-    """,
-)
-def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-
-    def first_after(event_type: str, prev: DataFrame | None, prev_t: str, out_t: str):
-        step = ev.filter(F.col("event_type") == event_type)
-        if prev is not None:
-            step = step.join(prev, "user_id").filter(F.col("ts") > F.col(prev_t))
-        return step.groupBy("user_id").agg(F.min("ts").alias(out_t))
-
-    s1 = first_after("signup", None, "", "t1")
-    s2 = first_after("click", s1, "t1", "t2")
-    s3 = first_after("purchase", s2, "t2", "t3")
-    counts = [
-        s1.agg(F.count(F.lit(1)).alias("n_users")).withColumn(
-            "step", F.lit("step1_signup")
-        ),
-        s2.agg(F.count(F.lit(1)).alias("n_users")).withColumn(
-            "step", F.lit("step2_click_after_signup")
-        ),
-        s3.agg(F.count(F.lit(1)).alias("n_users")).withColumn(
-            "step", F.lit("step3_purchase_after_click")
-        ),
-    ]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out.select("step", "n_users").orderBy("step")
 
 
 # ---------------------------------------------------------------------------
@@ -1614,58 +926,6 @@ def docs_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("predicted_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("predicted_lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Character n-gram Jaccard near-dup — the exact small-subset baseline
-# (brute-force pairs over a bounded id range). The unbounded-scale
-# path is the MinHash/LSH pipeline above; this pins its quality.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_char_ngram_jaccard",
-    """
-    WITH grams AS (
-      SELECT doc_id,
-             list_distinct([text[i:i+3] FOR i IN range(1, length(text) - 2)]) AS g
-      FROM documents WHERE doc_id < 60
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(len(list_intersect(a.g, b.g)) * 1.0
-                 / nullif(len(list_distinct(a.g || b.g)), 0), 6) AS jaccard4
-    FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.g, b.g)) * 1.0
-          / nullif(len(list_distinct(a.g || b.g)), 0) >= 0.4
-    ORDER BY id_a, id_b
-    """,
-)
-def docs_char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    n = 4
-    # Guard: texts shorter than n chars would make sequence(1, len-3)
-    # DESCENDING (e.g. [1, 0]) and emit spurious grams where the
-    # oracle's range() is empty — same guard as dedup.shingles_of_words.
-    seq = F.when(
-        F.length("text") >= n,
-        F.sequence(F.lit(1), F.length("text") - (n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(seq, lambda i: F.col("text").substr(i, F.lit(n)))
-        ).alias("g"),
-    )
-    a = grams.select(F.col("doc_id").alias("id_a"), F.col("g").alias("ga"))
-    b = grams.select(F.col("doc_id").alias("id_b"), F.col("g").alias("gb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    union = F.size(F.array_union("ga", "gb")).cast("double")
-    jac = inter / F.nullif(union, F.lit(0.0))
-    return (
-        pairs.withColumn("jaccard4", F.round(jac, 6))
-        .filter(F.col("jaccard4") >= 0.4)
-        .select("id_a", "id_b", "jaccard4")
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -1939,10 +1199,9 @@ def embedding_lsh_auto_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF-style ANN: probe only the query vector's coarse bucket, exact
-# cosine inside it (the scale path next to brute-force topk above).
-# Coarse quantizer: 6 sign bits of the leading dims — fine for a
-# single-query probe (the pairwise case uses band_lsh_pairs above).
+# Sign-bit coarse quantizer for the ANN evals below: 6 sign bits of
+# the leading dims as the IVF bucket key (the pairwise case uses
+# band_lsh_pairs above).
 # ---------------------------------------------------------------------------
 _N_SIGNBITS = 6
 
@@ -1957,90 +1216,6 @@ def _signbits_col(vec, n_bits: int = _N_SIGNBITS) -> F.Column:
     for i in range(n_bits):
         key = key + F.when(vec[i] >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return key
-
-
-@_register(
-    "embedding_ann_ivf_signbits",
-    f"""
-    WITH b AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v, {_SIGNBITS_SQL} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT v AS qv, bucket AS qb FROM b WHERE vec_id = 0)
-    SELECT vec_id,
-           ROUND(list_dot_product(v, qv)
-                 / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS sim
-    FROM b, q
-    WHERE bucket = qb AND vec_id <> 0
-    ORDER BY sim DESC, vec_id LIMIT 5
-    """,
-)
-def embedding_ann_ivf_signbits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double(F.col("embedding")).alias("v")
-    )
-    bucketed = emb.withColumn("bucket", _signbits_col(F.col("v")))
-    q = bucketed.filter(F.col("vec_id") == 0).select(
-        F.col("v").alias("qv"), F.col("bucket").alias("qb")
-    )
-    probed = bucketed.join(F.broadcast(q), F.col("bucket") == F.col("qb")).filter(
-        F.col("vec_id") != 0
-    )
-    return (
-        probed.select(
-            "vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim")
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Multi-probe IVF ANN — probe the query's coarse bucket AND all
-# hamming-1 neighbor buckets (recall recovers without growing the
-# index): candidate set ~ (1 + n_bits)/2^n_bits of the data instead
-# of exact-bucket-only. Bucket distance via bit_count(xor).
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_ann_multiprobe",
-    f"""
-    WITH b AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v, {{signbits}} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT v AS qv, bucket AS qb FROM b WHERE vec_id = 0)
-    SELECT vec_id,
-           ROUND(list_dot_product(v, qv)
-                 / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS sim
-    FROM b, q
-    WHERE bit_count(xor(bucket, qb)) <= 1 AND vec_id <> 0
-    ORDER BY sim DESC, vec_id LIMIT 5
-    """.format(signbits="(" + " + ".join(
-        f"CASE WHEN embedding[{i + 1}] >= 0 THEN {1 << i} ELSE 0 END"
-        for i in range(6)
-    ) + ")"),
-)
-def embedding_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double(F.col("embedding")).alias("v")
-    )
-    bucketed = emb.withColumn("bucket", _signbits_col(F.col("v")))
-    q = bucketed.filter(F.col("vec_id") == 0).select(
-        F.col("v").alias("qv"), F.col("bucket").alias("qb")
-    )
-    probed = bucketed.join(
-        F.broadcast(q),
-        F.bit_count(
-            F.col("bucket").bitwiseXOR(F.col("qb")).cast("long")
-        ) <= 1,
-    ).filter(F.col("vec_id") != 0)
-    return (
-        probed.select(
-            "vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim")
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2370,206 +1545,9 @@ def embedding_dim_truncation_recall(
 
 
 # ---------------------------------------------------------------------------
-# Stopword ratio — share of function words per doc (with length and
-# repetition, the classic fluency signal: natural prose has a stable
-# stopword share, keyword spam and tables don't). Same explode →
-# filter → conditional-agg shape as language-ID.
-# ---------------------------------------------------------------------------
-_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-_STOPWORDS_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
-
-
-@_register(
-    "docs_stopword_stats",
-    f"""
-    WITH r AS (
-      SELECT lang,
-             len(list_filter(string_split(text, ' '),
-                             x -> list_contains([{_STOPWORDS_SQL}], x))) * 1.0
-               / nullif(len(string_split(text, ' ')), 0) AS ratio
-      FROM documents
-    )
-    SELECT lang,
-           ROUND(AVG(ratio), 4) AS avg_stopword_ratio,
-           CAST(SUM(CASE WHEN ratio < 0.05 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_low_stopword
-    FROM r GROUP BY lang ORDER BY lang
-    """,
-)
-def docs_stopword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_stop = F.size(
-        F.filter(toks, lambda t: t.isin(*_STOPWORDS))
-    )
-    ratio = n_stop * 1.0 / F.nullif(F.size(toks).cast("double"), F.lit(0.0))
-    return (
-        docs.withColumn("ratio", ratio)
-        .groupBy("lang")
-        .agg(
-            F.round(F.avg("ratio"), 4).alias("avg_stopword_ratio"),
-            F.sum(F.when(F.col("ratio") < 0.05, 1).otherwise(0)).alias(
-                "n_low_stopword"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Repetition ratio — distinct-token share per doc (the boilerplate /
-# degenerate-text signal pretraining filters use): per-lang average
-# and count of highly repetitive docs.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_repetition_ratio",
-    """
-    WITH r AS (
-      SELECT lang,
-             len(list_distinct(string_split(text, ' '))) * 1.0
-               / nullif(len(string_split(text, ' ')), 0) AS ratio
-      FROM documents
-    )
-    SELECT lang,
-           ROUND(AVG(ratio), 4) AS avg_distinct_ratio,
-           CAST(SUM(CASE WHEN ratio < 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_repetitive
-    FROM r GROUP BY lang ORDER BY lang
-    """,
-)
-def docs_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ratio = F.size(F.array_distinct(toks)) * 1.0 / F.nullif(
-        F.size(toks).cast("double"), F.lit(0.0)
-    )
-    return (
-        docs.withColumn("ratio", ratio)
-        .groupBy("lang")
-        .agg(
-            F.round(F.avg("ratio"), 4).alias("avg_distinct_ratio"),
-            F.sum(F.when(F.col("ratio") < 0.5, 1).otherwise(0)).alias(
-                "n_repetitive"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# TRUE IVF ANN — learned coarse quantizer: k-means centroids cluster
-# the embeddings, the query probes only its nearest centroid's
-# inverted list, exact cosine inside it. This is the production IVF
-# shape (faiss-style); the sign-bit variants above are the
-# quantizer-free alternatives. K-means is iterative (no closed-form
-# SQL twin), so — like its siblings embedding_kmeans_clusters /
-# embedding_pq_codes_invariants — the GATED output is the invariant
-# set any correct build satisfies and the oracle CAN restate:
-# complete coverage, the assignment argmin re-verified through an
-# INDEPENDENT code path (JVM least-of-zip_with distances vs the
-# Arrow/numpy argmin), cosine bounds on the served top-5, and the
-# top-5 fill check. Disagreement anywhere → a violation count > 0 →
-# hash red. Recall-vs-brute-force is property-tested in
-# tests/test_analytics_props.py (a hard recall bound in the gate
-# would break on a testdata regeneration without a code bug — the
-# events_mg_topk lesson).
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_ann_ivf_kmeans",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
-           CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_assigned,
-           CAST(8 AS BIGINT) AS n_clusters,
-           CAST(0 AS BIGINT) AS argmin_violations,
-           CAST(0 AS BIGINT) AS sim_range_violations,
-           true AS returned_ok
-    FROM embeddings
-    """,
-)
-def embedding_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.similarity import kmeans_fit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # coarse quantizer: k=8 centroids, 2 Lloyd iterations
-    assigned, centroids = kmeans_fit(
-        emb, k=8, iters=2, return_centroids=True
-    )
-    # pin: consumed by the argmin re-verify AND the serve-side list
-    # join — without this the Arrow argmin UDF re-runs per consumer
-    assigned = assigned.localCheckpoint(eager=False)
-    # invariant 1: coverage + argmin, re-verified JVM-side (the exact
-    # pattern of embedding_kmeans_clusters at k=8)
-    v = to_double(F.col("embedding"))
-    dists = [
-        F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    checked = assigned.join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    ).select("vec_id", "sq_dist", F.least(*dists).alias("best_expr"))
-    inv_assign = checked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_points"),
-        F.count_distinct("vec_id").cast("long").alias("n_assigned"),
-        F.sum(
-            F.when(F.col("sq_dist") > F.col("best_expr") + 1e-6, 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("argmin_violations"),
-    )
-    # invariant 2: the serve — probe the query's own list, exact
-    # cosine top-5 inside it; sims must be valid cosines and the
-    # result must fill min(5, |list| - 1) rows
-    lists = emb.join(assigned.select("vec_id", "cluster"), "vec_id")
-    q = lists.filter(F.col("vec_id") == 0).select(
-        to_double(F.col("embedding")).alias("qv"),
-        F.col("cluster").alias("qc"),
-    )
-    probed = lists.join(
-        F.broadcast(q), F.col("cluster") == F.col("qc")
-    ).filter(F.col("vec_id") != 0)
-    top5 = probed.select(
-        "vec_id",
-        F.round(cosine(to_double(F.col("embedding")), F.col("qv")), 6).alias(
-            "sim"
-        ),
-    ).orderBy(F.desc("sim"), F.asc("vec_id")).limit(5)
-    inv_serve = top5.agg(
-        F.count(F.lit(1)).cast("long").alias("n_returned"),
-        F.coalesce(
-            F.sum(F.when(F.abs(F.col("sim")) > 1.0 + 1e-9, 1).otherwise(0)),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("sim_range_violations"),
-    )
-    n_cand = probed.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
-    return (
-        inv_assign.crossJoin(inv_serve)
-        .crossJoin(n_cand)
-        .select(
-            "n_points",
-            "n_assigned",
-            F.lit(8).cast("long").alias("n_clusters"),
-            "argmin_violations",
-            "sim_range_violations",
-            (F.col("n_returned") == F.least(F.lit(5), F.col("n_cand"))).alias(
-                "returned_ok"
-            ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ END-TO-END — the two halves composed into the production ANN
-# serving path (operators/similarity.ivfpq_topk; Jégou et al. 2011):
+# IVF-PQ END-TO-END — k-means coarse quantizer and product
+# quantization composed into the production ANN serving path
+# (operators/similarity.ivfpq_topk; Jégou et al. 2011):
 # learned coarse quantizer → inverted lists → PQ-encoded RESIDUALS per
 # list → probed-list ADC scan via per-list lookup tables → exact
 # re-rank. Training is iterative, so the gate checks the invariant
@@ -3101,170 +2079,6 @@ def purchase_attribution_bounded_asof(
 
 
 # ---------------------------------------------------------------------------
-# Forward as-of join — time-to-convert: for every click, the NEXT
-# purchase by the same user (mirror of the backward attribution join
-# above; same single union+sort exchange, time traversed descending).
-# DuckDB's native ASOF with a < inequality is the oracle twin.
-# ---------------------------------------------------------------------------
-@_register(
-    "click_to_purchase_asof",
-    """
-    WITH c AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'click'),
-    p AS (SELECT user_id, ts AS purchase_ts, MAX(event_id) AS purchase_event_id
-          FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
-    SELECT c.event_id, c.user_id, p.purchase_event_id,
-           CAST((epoch_us(p.purchase_ts) - epoch_us(c.ts) + 500) // 1000
-                AS BIGINT) AS millis_to_purchase
-    FROM c ASOF LEFT JOIN p
-      ON c.user_id = p.user_id AND c.ts < p.purchase_ts
-    ORDER BY c.event_id
-    """,
-)
-def click_to_purchase_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.windows import as_of_join
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", F.col("ts").alias("purchase_ts"))
-        .agg(F.max("event_id").alias("purchase_event_id"))
-    )
-    joined = as_of_join(
-        clicks,
-        purchases,
-        on="user_id",
-        left_ts="ts",
-        right_ts="purchase_ts",
-        right_payload=["purchase_event_id", "purchase_ts"],
-        strict=True,
-        direction="forward",
-    )
-    # exact integer half-up millis (see purchase_attribution_asof)
-    return joined.select(
-        "event_id",
-        "user_id",
-        "purchase_event_id",
-        F.expr(
-            "(unix_micros(purchase_ts) - unix_micros(ts) + 500)"
-            " div CAST(1000 AS BIGINT)"
-        ).alias("millis_to_purchase"),
-    ).orderBy("event_id")
-
-
-# ---------------------------------------------------------------------------
-# CUBE — all four grouping combinations in one pass (next to the
-# ROLLUP query in relational.py; replaces a 4-query dashboard fan-out).
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_status_priority_cube",
-    """
-    SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """,
-)
-def orders_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy(
-            F.asc_nulls_first("o_orderstatus"),
-            F.asc_nulls_first("o_orderpriority"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Benchmark-contamination check — a training-corpus must-have: which
-# train docs exactly match a held-out benchmark set (fingerprint
-# equality)? Benchmark = every 97th doc (synthetic stand-in for an
-# external eval suite); broadcast its fingerprint set, left-semi join.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_contamination_check",
-    """
-    WITH fp AS (
-      SELECT doc_id, source,
-             md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), '\\s+', ' ', 'g'))) AS fp
-      FROM documents
-    ),
-    bench AS (SELECT DISTINCT fp FROM fp WHERE doc_id % 97 = 0)
-    SELECT source,
-           COUNT(*) AS n_train_docs,
-           COUNT(*) FILTER (WHERE fp IN (SELECT fp FROM bench))
-             AS n_contaminated
-    FROM fp WHERE doc_id % 97 <> 0
-    GROUP BY source ORDER BY source
-    """,
-)
-def docs_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "fp", fingerprint(F.col("text"))
-    )
-    bench = (
-        docs.filter(F.col("doc_id") % 97 == 0)
-        .select("fp")
-        .distinct()
-        .withColumn("__contaminated", F.lit(1))
-    )
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    return (
-        train.join(F.broadcast(bench), "fp", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_train_docs"),
-            F.count("__contaminated").alias("n_contaminated"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Boilerplate detection — most frequent word-5-grams across the corpus
-# (the repeated-template signal pretraining pipelines scrub). Shingles
-# stay inside the row until the frequency groupBy; only grams leave.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_top_boilerplate_ngrams",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    grams AS (
-      SELECT unnest([array_to_string(w[i:i+4], ' ')
-                     FOR i IN range(1, greatest(len(w) - 3, 1))]) AS gram
-      FROM toks
-    )
-    SELECT gram, COUNT(*) AS n_occurrences
-    FROM grams GROUP BY gram
-    ORDER BY n_occurrences DESC, gram LIMIT 10
-    """,
-)
-def docs_top_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.dedup import shingles_of_words
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.split(F.col("text"), " ").alias("w")
-    )
-    grams = docs.select(
-        F.explode(shingles_of_words(F.col("w"), n=5)).alias("gram")
-    )
-    return (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .orderBy(F.desc("n_occurrences"), F.asc("gram"))
-        .limit(10)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Window FRAME spec — 7-row moving sum per user (ROWS BETWEEN 6
 # PRECEDING AND CURRENT ROW). The rolling stat is kept in exact
 # integer cents (FLOOR(value·100+0.5)) so sliding-window
@@ -3298,295 +2112,6 @@ def events_user_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents).over(w).alias("mov7_sum_cents"),
         )
         .orderBy("user_id", "event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Int8 symmetric quantization of the embedding column — the standard
-# 4× storage compression of a vector store (scale = 127/max|x| per
-# vector, q = clamp(round(x·scale))) — with reconstruction-error
-# audit stats per embedding model version. Everything is elementwise
-# IEEE arithmetic (identical in both engines: no reassociation, no
-# libm beyond abs/floor) and errors quantize to integer micros, so
-# the gate compares exact integers. Scale shape: a pure map over the
-# vectors (no shuffle) + one scalar-sized final aggregate.
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_quantization_error",
-    """
-    WITH q AS (
-      SELECT vec_id,
-             [CAST(x AS DOUBLE) FOR x IN embedding] AS v,
-             127.0 / GREATEST(list_max([abs(CAST(x AS DOUBLE))
-                                        FOR x IN embedding]), 1e-12) AS s
-      FROM embeddings
-    ),
-    err AS (
-      SELECT vec_id,
-             [CAST(FLOOR(abs(
-                  LEAST(127, GREATEST(-127, FLOOR(x * s + 0.5))) / s - x
-              ) * 1000000 + 0.5) AS BIGINT) FOR x IN v] AS e
-      FROM q
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(list_sum(e)) AS BIGINT) AS sum_err_micros,
-           CAST(MAX(list_max(e)) AS BIGINT) AS max_err_micros
-    FROM err
-    """,
-)
-def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    s = F.lit(127.0) / F.greatest(
-        F.array_max(F.transform(v, F.abs)), F.lit(1e-12)
-    )
-    # q/s - x per element, |err| in integer micros; FLOOR(x+0.5) is the
-    # cross-engine rounding rule (ROUND differs on half-way negatives)
-    e = F.transform(
-        v,
-        lambda x: F.floor(
-            F.abs(
-                F.least(
-                    F.lit(127.0), F.greatest(F.lit(-127.0), F.floor(x * s + 0.5))
-                )
-                / s
-                - x
-            )
-            * 1000000
-            + 0.5
-        ).cast("long"),
-    )
-    per_vec = emb.select(
-        F.aggregate(e, F.lit(0).cast("long"), lambda a, x: a + x).alias("se"),
-        F.array_max(e).alias("me"),
-    )
-    return per_vec.agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.sum("se").cast("long").alias("sum_err_micros"),
-        F.max("me").cast("long").alias("max_err_micros"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Embedding centroid aggregation — the k-means inner step as one
-# distributed pass: explode (vector, dim) pairs, aggregate per
-# (cluster, dim). Stats stay in EXACT integer micro-units (sum of
-# round(x·1e6)) so the cross-engine hash can't wobble on float
-# summation order; the float centroid is sum_micro / n / 1e6.
-# Restricted to the first 8 dims to keep the gate's output compact.
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_cluster_centroids",
-    """
-    SELECT vec_id % 4 AS cluster, d AS dim,
-           COUNT(*) AS n_vectors,
-           CAST(SUM(CAST(FLOOR(CAST(embedding[d] AS DOUBLE) * 1000000 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS sum_micro
-    FROM embeddings, generate_series(1, 8) AS t(d)
-    GROUP BY cluster, dim ORDER BY cluster, dim
-    """,
-)
-def embedding_cluster_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = emb.select(
-        (F.col("vec_id") % 4).alias("cluster"),
-        F.posexplode(F.slice(to_double(F.col("embedding")), 1, 8)).alias(
-            "pos", "x"
-        ),
-    )
-    return (
-        pairs.select(
-            "cluster",
-            (F.col("pos") + 1).cast("long").alias("dim"),
-            # FLOOR(x+0.5), not ROUND: engines disagree on round-half
-            # tie rules for doubles; this formula is identical in both
-            F.floor(F.col("x") * 1000000 + 0.5).cast("long").alias("micro"),
-        )
-        .groupBy("cluster", "dim")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.sum("micro").alias("sum_micro"),
-        )
-        .orderBy("cluster", "dim")
-    )
-
-
-# ---------------------------------------------------------------------------
-# K-means over embeddings — the one genuinely ITERATIVE algorithm in
-# the surface (rows-only driver check: no closed-form SQL twin).
-# Scale shape: per iteration ONE pass over the data — centroids
-# broadcast inside an Arrow-batched argmin, then a (cluster, dim)
-# aggregation recomputes means; only k×dim floats ever reach the
-# driver. Deterministic: init = vectors 0..k-1, ties → lowest cluster.
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_kmeans_clusters",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
-           CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_assigned,
-           CAST(4 AS BIGINT) AS n_clusters,
-           CAST(0 AS BIGINT) AS argmin_violations
-    FROM embeddings
-    """,
-)
-def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-means is iterative — no single SQL statement reproduces the
-    centroids — so the gated output is the invariant set any correct
-    run satisfies, which the oracle CAN recompute: every vector gets
-    exactly one assignment (n_points / n_assigned vs COUNT(*)), and
-    the assignment is the argmin over the final centroids, re-checked
-    through an INDEPENDENT code path — a Catalyst aggregate/zip_with
-    distance expression (JVM) against the Arrow-batched numpy
-    assignment (similarity.py:_assign_udf). Cross-implementation
-    disagreement shows up as argmin_violations > 0 → hash red.
-    Raw per-cluster stats stay available via embedding_cluster_centroids."""
-    from epl_cas_etl_2026_spark.operators.similarity import kmeans_fit, to_double
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = kmeans_fit(emb, k=4, iters=3, return_centroids=True)
-    v = to_double(F.col("embedding"))
-    dists = [
-        F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    checked = assigned.join(emb.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id",
-        "sq_dist",
-        F.least(*dists).alias("best_expr"),
-    )
-    return checked.agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.count_distinct("vec_id").alias("n_assigned"),
-        F.lit(4).cast("long").alias("n_clusters"),
-        F.sum(
-            # the UDF's chosen distance must equal the expression-side
-            # minimum up to float reassociation noise
-            F.when(F.col("sq_dist") > F.col("best_expr") + 1e-6, 1).otherwise(0)
-        ).cast("long").alias("argmin_violations"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sequence packing — assign docs to fixed-capacity context windows by
-# cumulative token count (deterministic doc_id order): bin id =
-# floor(cumsum_before / capacity). One window cumsum, no driver loop;
-# the streaming-friendly stand-in for greedy first-fit packing (whose
-# strict sequential dependence doesn't distribute). Reports packing
-# efficiency: bins, fill, docs per bin.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_pack_sequences",
-    """
-    WITH toks AS (
-      SELECT doc_id, len(string_split(text, ' ')) AS n_tok FROM documents
-    ),
-    packed AS (
-      SELECT doc_id, n_tok,
-             CAST(FLOOR((SUM(n_tok) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok)
-                  / 2048) AS BIGINT) AS bin
-      FROM toks
-    ),
-    bins AS (
-      SELECT bin, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
-      FROM packed GROUP BY bin
-    )
-    SELECT COUNT(*) AS n_bins,
-           CAST(MIN(n_docs) AS BIGINT) AS min_docs_per_bin,
-           CAST(MAX(n_docs) AS BIGINT) AS max_docs_per_bin,
-           CAST(SUM(bin_tokens) AS BIGINT) AS total_tokens
-    FROM bins
-    """,
-)
-def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.windows import two_phase_cumsum
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_tok")
-    )
-    # distributed global cumsum (range partition + local window +
-    # prefix offsets) — NO single-partition window in the plan
-    packed = two_phase_cumsum(toks, "doc_id", "n_tok").withColumn(
-        "bin",
-        F.floor((F.col("cumsum") - F.col("n_tok")) / 2048).cast("long"),
-    )
-    bins = packed.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("bin_tokens"),
-    )
-    return bins.agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.min("n_docs").cast("long").alias("min_docs_per_bin"),
-        F.max("n_docs").cast("long").alias("max_docs_per_bin"),
-        F.sum("bin_tokens").cast("long").alias("total_tokens"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Long-document chunking with overlap — token windows of size W with
-# stride W-O (the context-window chunker): one row → ceil fan-out via
-# a guarded sequence, chunk token counts exact.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_chunk_with_overlap",
-    """
-    WITH toks AS (
-      SELECT doc_id, len(string_split(text, ' ')) AS n_tok FROM documents
-    ),
-    chunks AS (
-      SELECT doc_id, n_tok, c AS chunk_index,
-             LEAST(64, n_tok - c * 48) AS chunk_tokens
-      FROM toks, generate_series(0, 1000) AS t(c)
-      WHERE c * 48 < n_tok AND (c = 0 OR c * 48 + 16 < n_tok)
-    )
-    SELECT COUNT(*) AS n_chunks,
-           COUNT(DISTINCT doc_id) AS n_docs,
-           CAST(SUM(chunk_tokens) AS BIGINT) AS total_chunk_tokens,
-           CAST(MAX(chunk_index) + 1 AS BIGINT) AS max_chunks_per_doc
-    FROM chunks
-    """,
-)
-def docs_chunk_with_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    window_tokens, overlap = 64, 16
-    stride = window_tokens - overlap
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_tok")
-    )
-    # chunk c starts at c*stride; emit while the start is inside the
-    # doc AND (first chunk, or the chunk adds > overlap new tokens)
-    n_chunks = F.greatest(
-        F.lit(1),
-        F.ceil((F.col("n_tok") - F.lit(overlap)) / F.lit(stride)).cast("int"),
-    )
-    idx = F.when(
-        n_chunks > 0, F.sequence(F.lit(0), n_chunks - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    chunks = toks.select(
-        "doc_id",
-        "n_tok",
-        F.explode(idx).alias("chunk_index"),
-    ).withColumn(
-        "chunk_tokens",
-        F.least(
-            F.lit(window_tokens),
-            F.col("n_tok") - F.col("chunk_index") * stride,
-        ),
-    )
-    return chunks.agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum("chunk_tokens").cast("long").alias("total_chunk_tokens"),
-        (F.max("chunk_index") + 1).cast("long").alias("max_chunks_per_doc"),
     )
 
 
@@ -3718,108 +2243,6 @@ def docs_clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Source-mixture weighting: the data-mixing step of a pretraining
-# corpus build — given a total token budget (half the corpus here),
-# give each source an equal token share and derive the per-source
-# sampling rate that hits it. One shuffle (groupBy source); the
-# global-total window runs over the tiny post-agg frame (n_sources
-# rows). Rates are computed from exact integer token counts with one
-# double division, identical in both engines.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_mixture_weights",
-    """
-    WITH per_src AS (
-      SELECT source, COUNT(*) AS n_docs,
-             CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tokens
-      FROM documents GROUP BY source
-    ),
-    tot AS (
-      SELECT *,
-             SUM(tokens) OVER () AS total_tokens,
-             COUNT(*) OVER () AS n_sources
-      FROM per_src
-    )
-    SELECT source, n_docs, tokens,
-           ROUND(LEAST(1.0, (CAST(total_tokens AS DOUBLE) * 0.5 / n_sources)
-                            / CAST(tokens AS DOUBLE)), 6) AS sample_rate,
-           CAST(FLOOR(CAST(tokens AS DOUBLE)
-                * ROUND(LEAST(1.0, (CAST(total_tokens AS DOUBLE) * 0.5
-                                    / n_sources)
-                              / CAST(tokens AS DOUBLE)), 6)) AS BIGINT)
-             AS expected_tokens
-    FROM tot ORDER BY source
-    """,
-)
-def docs_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    per_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).alias("tokens"),
-    )
-    w = Window.partitionBy()  # post-agg: n_sources rows
-    tot = per_src.withColumn(
-        "total_tokens", F.sum("tokens").over(w)
-    ).withColumn("n_sources", F.count(F.lit(1)).over(w))
-    target = F.col("total_tokens").cast("double") * 0.5 / F.col("n_sources")
-    rate = F.round(
-        F.least(F.lit(1.0), target / F.col("tokens").cast("double")), 6
-    )
-    return (
-        tot.select(
-            "source",
-            "n_docs",
-            "tokens",
-            rate.alias("sample_rate"),
-            F.floor(F.col("tokens").cast("double") * rate)
-            .cast("long")
-            .alias("expected_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Deterministic fixed-k-per-stratum sample: the "inspect 5 docs per
-# source" audit query. Ordering by md5(doc_id) is a seeded shuffle
-# both engines reproduce bit-identically; row_number runs per-source
-# (parallel windows), never global. Complements the rate-based
-# docs_stratified_sample.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_per_source_sample",
-    """
-    WITH ranked AS (
-      SELECT source, n_chars,
-             ROW_NUMBER() OVER (PARTITION BY source
-                                ORDER BY md5(CAST(doc_id AS VARCHAR)),
-                                         doc_id) AS rn
-      FROM documents
-    )
-    SELECT source, COUNT(*) AS n_sampled,
-           CAST(SUM(n_chars) AS BIGINT) AS sample_chars
-    FROM ranked WHERE rn <= 5
-    GROUP BY source ORDER BY source
-    """,
-)
-def docs_per_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.sum("n_chars").alias("sample_chars"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Per-user z-score outliers — anomaly flagging over event values.
 # Population moments per user via ONE window shuffle (no join-back
 # pass); the outlier test |v-mean| > 2*sigma is evaluated as the
@@ -3880,86 +2303,6 @@ def events_user_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_outliers") > 0)
         .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# GROUPING SETS with grouping_id — the report that wants EXACTLY the
-# two marginals + grand total, not the full cube (at scale this is a
-# single pass emitting 3 aggregation streams, vs 4 for CUBE — the
-# planner expands only the named sets). grouping_id() labels which
-# set each row came from, disambiguating real NULL keys from subtotal
-# rows. SQL-surface query (DataFrame API exposes cube/rollup only).
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_grouping_sets_marginals",
-    """
-    SELECT o_orderstatus, o_orderpriority,
-           CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority)
-                AS INTEGER) AS gid,
-           COUNT(*) AS n_orders
-    FROM orders
-    GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """,
-)
-def orders_grouping_sets_marginals(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from epl_cas_etl_2026_spark.sources.parquet import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(grouping_id(o_orderstatus, o_orderpriority) AS INT)
-                 AS gid,
-               COUNT(*) AS n_orders
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY gid, o_orderstatus NULLS FIRST,
-                 o_orderpriority NULLS FIRST
-        """
-    )
-
-
-# ---------------------------------------------------------------------------
-# Decile binning via ntile — the remaining rank-family window surface
-# (rank/dense/row_number/lag/lead/ntile). Runs per-segment (parallel
-# windows, never global); the ORDER BY carries c_custkey as a
-# tiebreak because ntile on a non-total order is engine-dependent at
-# equal keys. min/max per bin are exact — no float-sum drift.
-# ---------------------------------------------------------------------------
-@_register(
-    "customer_acctbal_deciles",
-    """
-    WITH binned AS (
-      SELECT c_mktsegment, c_acctbal,
-             NTILE(10) OVER (PARTITION BY c_mktsegment
-                             ORDER BY c_acctbal, c_custkey) AS decile
-      FROM customer
-    )
-    SELECT c_mktsegment, decile,
-           COUNT(*) AS n_customers,
-           ROUND(MIN(c_acctbal), 2) AS lo,
-           ROUND(MAX(c_acctbal), 2) AS hi
-    FROM binned
-    GROUP BY c_mktsegment, decile
-    ORDER BY c_mktsegment, decile
-    """,
-)
-def customer_acctbal_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    return (
-        cust.withColumn("decile", F.ntile(10).over(w))
-        .groupBy("c_mktsegment", "decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.min("c_acctbal"), 2).alias("lo"),
-            F.round(F.max("c_acctbal"), 2).alias("hi"),
-        )
-        .orderBy("c_mktsegment", "decile")
     )
 
 
@@ -5385,53 +3728,6 @@ def events_user_rolling_median(
 
 
 # ---------------------------------------------------------------------------
-# String-parsing surface — regexp_extract + split_part as SCAN-STAGE
-# expressions (reference analogue: the catalog-normalization string
-# pipeline, etl_sync.py's nombre cleanup, generalized to structured
-# identifier parsing). Brand numbers come out of 'Brand#NN' by regex
-# group capture; priority ranks out of 'N-LABEL' by delimiter
-# position; both engines share the regex dialect for this class and
-# 1-based group/field indexing. Parsing happens BEFORE the groupBy,
-# inside whole-stage codegen — the classic ELT normalize-then-
-# aggregate, zero extra passes.
-# ---------------------------------------------------------------------------
-@_register(
-    "parts_string_parse_stats",
-    """
-    SELECT CAST(regexp_extract(p_brand, 'Brand#(\\d+)', 1) AS BIGINT)
-             AS brand_num,
-           CAST(COUNT(*) AS BIGINT) AS n_parts,
-           CAST(COUNT(DISTINCT split_part(p_name, ' ', 1)) AS BIGINT)
-             AS n_name_heads,
-           CAST(SUM(CAST(FLOOR(CAST(p_retailprice AS DOUBLE) * 100 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS sum_retail_cents
-    FROM part
-    GROUP BY brand_num ORDER BY brand_num
-    """,
-)
-def parts_string_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    return (
-        part.select(
-            F.regexp_extract(F.col("p_brand"), r"Brand#(\d+)", 1)
-            .cast("long")
-            .alias("brand_num"),
-            F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("head"),
-            F.floor(F.col("p_retailprice").cast("double") * 100 + 0.5)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("brand_num")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.count_distinct(F.col("head")).alias("n_name_heads"),
-            F.sum("cents").alias("sum_retail_cents"),
-        )
-        .orderBy("brand_num")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Triangle count + global clustering coefficient over the near-dup
 # graph — the canonical distributed-graph aggregate (wedge-closure
 # rate tells you whether near-dup pairs form coherent duplicate
@@ -5708,232 +4004,6 @@ def docs_near_dup_triangles_doulion(
             .alias("est_triangles"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Product-quantization index build (operators/similarity.pq_fit /
-# pq_encode — Jégou et al. 2011) under the k-means-style invariant
-# gate: PQ training is iterative (no closed-form SQL twin), so the
-# gated output is the invariant set any correct build satisfies and
-# the oracle CAN restate: complete coverage (every vector gets m
-# sub-codes), codes in range, and — the real check — every assigned
-# code is the argmin over its subspace's codebook, re-verified through
-# an INDEPENDENT code path (broadcast-joined JVM zip_with distances vs
-# the Arrow/numpy assignment). Disagreement → violations > 0 → hash
-# red. The ADC top-k serving path (pq_adc_topk) is exercised by
-# tests/test_analytics_props.py's recall check.
-# ---------------------------------------------------------------------------
-@_register(
-    "embedding_pq_codes_invariants",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
-           CAST(COUNT(*) * 8 AS BIGINT) AS n_sub_rows,
-           CAST(8 AS BIGINT) AS m_subspaces,
-           CAST(16 AS BIGINT) AS k_codes,
-           CAST(0 AS BIGINT) AS code_range_violations,
-           CAST(0 AS BIGINT) AS argmin_violations
-    FROM embeddings
-    """,
-)
-def embedding_pq_codes_invariants(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from epl_cas_etl_2026_spark.operators.similarity import pq_encode, pq_fit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_fit(emb, dim=64, m=8, k=16, iters=2)
-    codes = pq_encode(emb, cb, dim=64, m=8)
-    cb_rows = [
-        (s, j, [float(x) for x in cb[s][j]])
-        for s in range(8)
-        for j in range(16)
-    ]
-    cbdf = spark.createDataFrame(
-        cb_rows, "sub_id int, cand_code int, centroid array<double>"
-    )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("subvec"), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = (
-        codes.join(F.broadcast(cbdf), "sub_id")
-        .select("vec_id", "sub_id", "code", "sq_dist", dist.alias("d"))
-        .groupBy("vec_id", "sub_id", "code", "sq_dist")
-        .agg(F.min("d").alias("best_expr"))
-    )
-    return best.agg(
-        F.count_distinct("vec_id").alias("n_points"),
-        F.count(F.lit(1)).alias("n_sub_rows"),
-        F.lit(8).cast("long").alias("m_subspaces"),
-        F.lit(16).cast("long").alias("k_codes"),
-        F.sum(
-            F.when((F.col("code") < 0) | (F.col("code") >= 16), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("code_range_violations"),
-        F.sum(
-            F.when(F.col("sq_dist") > F.col("best_expr") + 1e-6, 1).otherwise(
-                0
-            )
-        )
-        .cast("long")
-        .alias("argmin_violations"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# First-fit-decreasing sequence packing — the quality upgrade of
-# docs_pack_sequences' cumsum binning: FFD guarantees ≤ 11/9·OPT + 1
-# bins (classic bin-packing bound) where order-of-arrival binning has
-# no bound at all. Packing is sequential by nature, so the corpus is
-# sharded (deterministic doc_id mod) and FFD runs as a per-shard FOLD
-# over the size-descending item list (accumulator = bin loads; "first
-# bin that fits" = array_position over a predicate transform). Equal
-# sizes are interchangeable in the fold, so the size-desc sort alone
-# makes the result deterministic. Reports bins vs the ceil(total/C)
-# lower bound and the fill ratio — the packing-efficiency evidence.
-# 100 TB: shard count scales freely; each shard's fold is O(docs ×
-# bins) on a few-hundred-element array, embarrassingly parallel.
-# ---------------------------------------------------------------------------
-_FFD_CAP = 2048
-
-
-@_register(
-    "docs_pack_ffd_stats",
-    f"""
-    WITH t AS (
-      SELECT doc_id % 8 AS shard,
-             len(list_filter(string_split(text, ' '), x -> x <> ''))
-               AS n_tok
-      FROM documents
-    ),
-    per AS (
-      SELECT shard,
-             CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-             list(CAST(n_tok AS BIGINT) ORDER BY n_tok DESC) AS items
-      FROM t GROUP BY shard
-    ),
-    packed AS (
-      SELECT shard, n_docs, total_tokens,
-             list_reduce(list_transform(items, x -> [x]),
-               (acc, x) -> CASE
-                 WHEN COALESCE(list_position(
-                        list_transform(acc, v -> v + x[1] <= {_FFD_CAP}),
-                        true), 0) = 0
-                   THEN acc || x
-                 ELSE list_transform(range(1, len(acc) + 1), i ->
-                   CASE WHEN i = list_position(
-                          list_transform(acc, v -> v + x[1] <= {_FFD_CAP}),
-                          true)
-                        THEN acc[i] + x[1] ELSE acc[i] END)
-               END) AS bins
-      FROM per
-    )
-    SELECT shard, n_docs, total_tokens,
-           CAST(len(bins) AS BIGINT) AS n_bins_ffd,
-           CAST(CEIL(total_tokens * 1.0 / {_FFD_CAP}) AS BIGINT)
-             AS lower_bound,
-           CAST(FLOOR(total_tokens * 1.0 / (len(bins) * {_FFD_CAP})
-                      * 1000000 + 0.5) AS BIGINT) AS fill_ppm
-    FROM packed ORDER BY shard
-    """,
-)
-def docs_pack_ffd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        (F.col("doc_id") % 8).alias("shard"),
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_tok"),
-    )
-    per = t.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        F.reverse(F.array_sort(F.collect_list("n_tok"))).alias("items"),
-    )
-
-    bins = first_fit_pack(F.col("items"), _FFD_CAP)
-    return per.select(
-        "shard",
-        "n_docs",
-        "total_tokens",
-        F.size(bins).cast("long").alias("n_bins_ffd"),
-        F.ceil(F.col("total_tokens") / F.lit(float(_FFD_CAP)))
-        .cast("long")
-        .alias("lower_bound"),
-        F.floor(
-            F.col("total_tokens")
-            / (F.size(bins) * F.lit(_FFD_CAP))
-            * 1000000
-            + 0.5
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-    ).orderBy("shard")
-
-
-# ---------------------------------------------------------------------------
-# JSONL source round-trip — the "another source format" surface: write
-# the documents table as line-delimited JSON, read it back through
-# Spark's JSON source with an EXPLICIT schema (schema inference is a
-# full extra pass at 100 TB — never rely on it) plus PERMISSIVE
-# corrupt-record capture (two planted garbage lines land in
-# _corrupt_rec instead of failing the job — the dead-letter pattern).
-# The cross-field checksum Σ doc_id·n_chars proves field PAIRING
-# survived serialization, not just row counts; the oracle recomputes
-# everything from the original parquet.
-# ---------------------------------------------------------------------------
-@_register(
-    "docs_jsonl_roundtrip_stats",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(2 AS BIGINT) AS n_corrupt,
-           CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
-           CAST(SUM(doc_id * n_chars) AS BIGINT) AS pair_checksum,
-           CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-    FROM documents
-    """,
-)
-def docs_jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars", "text"
-    )
-    tmp = tempfile.mkdtemp(prefix="jsonl_rt_")
-    try:
-        out = os.path.join(tmp, "docs_jsonl")
-        docs.write.mode("overwrite").json(out)
-        with open(os.path.join(out, "part-corrupt.json"), "w") as f:
-            f.write('{"doc_id": broken\nnot json at all}\n')
-        back = spark.read.schema(
-            "doc_id long, lang string, n_chars long, text string, "
-            "_corrupt_rec string"
-        ).option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", "_corrupt_rec"
-        ).json(out)
-        stats = back.agg(
-            F.sum(F.when(F.col("_corrupt_rec").isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_rows"),
-            F.sum(F.when(F.col("_corrupt_rec").isNotNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_corrupt"),
-            F.sum("doc_id").alias("sum_doc_id"),
-            F.sum(F.col("doc_id") * F.col("n_chars")).alias("pair_checksum"),
-            F.count_distinct("lang").alias("n_langs"),
-        )
-        rows = stats.collect()
-        schema = stats.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -7090,90 +5160,6 @@ def events_markov_transitions(
 
 
 # ---------------------------------------------------------------------------
-# ORC source round-trip — the columnar sibling of the JSONL round-trip
-# above: write orders through Spark's native ORC sink, read it back
-# with an EXPLICIT schema, and prove field pairing survived with the
-# Σ key·cents cross-field checksum. ORC is the other columnar format a
-# lakehouse ingests from (Hive-era estates); the oracle recomputes
-# everything from the original parquet, so the hash match certifies
-# the ORC writer+reader preserved every row and pairing bit-exactly.
-# 100 TB: format round-trips are scan+write bound; nothing shuffles.
-# ---------------------------------------------------------------------------
-@_register(
-    "orders_orc_roundtrip_stats",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(o_orderkey) AS BIGINT) AS sum_orderkey,
-           CAST(SUM(((o_orderkey % 1000000007)
-                     * (CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
-                        % 1000000007)) % 1000000007)
-                AS BIGINT) AS pair_checksum,
-           CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS n_statuses
-    FROM orders
-    """,
-)
-def orders_orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC write→read round-trip with a cross-field pairing checksum.
-
-    Scratch-path contract: the round-trip directory resolves from the
-    ``spark.epl.scratch.dir`` conf when set (on a real cluster point it
-    at a shared filesystem URI — s3a://…/tmp, hdfs:///tmp — so every
-    executor reads what every executor wrote); unset, it falls back to
-    a driver-local ``tempfile.mkdtemp``, which is only correct on
-    single-node ``local[*]`` deployments like this harness, where the
-    driver and all executor threads share one filesystem.
-    """
-    import os as _os
-    import shutil
-    import tempfile
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    scratch = spark.conf.get("spark.epl.scratch.dir", None)
-    if scratch:
-        tmp = scratch.rstrip("/") + "/orc_rt"
-    else:
-        tmp = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
-        out = _os.path.join(tmp, "orders_orc")
-        orders.write.mode("overwrite").orc(out)
-        back = spark.read.schema(
-            "o_orderkey long, o_orderstatus string, o_totalprice double"
-        ).orc(out)
-        stats = back.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("sum_orderkey"),
-            # modular pairing checksum: the raw Σ key·cents overflows
-            # int64 past ~sf0.5 (ANSI ArithmeticException; DuckDB's
-            # HUGEINT sum masks it) — reduce each factor and the
-            # product mod 1e9+7 so every intermediate stays < p²
-            F.sum(
-                (
-                    (F.col("o_orderkey") % 1000000007)
-                    * (
-                        F.floor(F.col("o_totalprice") * 100 + 0.5).cast(
-                            "long"
-                        )
-                        % 1000000007
-                    )
-                )
-                % 1000000007
-            )
-            .cast("long")
-            .alias("pair_checksum"),
-            F.count_distinct("o_orderstatus")
-            .cast("long")
-            .alias("n_statuses"),
-        )
-        rows = stats.collect()
-        schema = stats.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
-
-
-# ---------------------------------------------------------------------------
 # Schema-evolution read (mergeSchema) — the daily lake problem: a
 # landing zone where early files lack a column later files carry.
 # Two parquet parts are written with DIFFERENT but compatible schemas
@@ -7184,9 +5170,9 @@ def orders_orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # derives the same answer from the orders table directly (the
 # roundtrip is the thing under test, not the data).
 #
-# Scratch-path convention follows orders_orc_roundtrip_stats:
-# ``spark.epl.scratch.dir`` (shared-FS URI on a real cluster) with a
-# driver-local tempdir fallback that is correct on local[*] only.
+# Scratch path: ``spark.epl.scratch.dir`` (shared-FS URI on a real
+# cluster) with a driver-local tempdir fallback that is correct on
+# local[*] only.
 # ---------------------------------------------------------------------------
 @_register(
     "orders_schema_evolution_stats",
@@ -7454,14 +5440,13 @@ def orders_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TIME-BOUNDED strict funnel — the production funnel next to the
-# unbounded one above: each step must happen within 1 h of the
-# previous step's FIRST completion (signup → click ≤ 1 h → purchase
-# ≤ 1 h after that click). The bound changes semantics materially: a
-# user who clicks 2 h after signup is a step-1-only user here but
-# converts in the unbounded funnel. Same per-user MIN-chain shape
-# (groupBy + equi-join per step, no windows); the window predicate is
-# exact integer µs.
+# TIME-BOUNDED strict funnel (signup → click → purchase): each step
+# must happen within 1 h of the previous step's FIRST completion
+# (click ≤ 1 h after signup, purchase ≤ 1 h after that click). The
+# bound changes semantics materially: a user who clicks 2 h after
+# signup is a step-1-only user here but would convert in an unbounded
+# funnel. Per-user MIN-chain shape (groupBy + equi-join per step, no
+# windows); the window predicate is exact integer µs.
 # ---------------------------------------------------------------------------
 _FUNNEL_BOUND_US = 3_600_000_000  # 1 hour
 

@@ -711,8 +711,8 @@ def embedding_retrieval_eval_ndcg(
 
 # ---------------------------------------------------------------------------
 # RAG context assembly — the serving-side capstone composing three
-# gated primitives: chunk long documents into token windows (the
-# docs_chunk_with_overlap geometry, stride 48 / window 64), score each
+# gated primitives: chunk long documents into overlapping token
+# windows (stride 48 / window 64), score each
 # chunk by standing-query-term occurrences IN THE CHUNK SLICE (not the
 # whole doc), and greedily pack the top-ranked chunks into a fixed
 # context budget (512 tokens) — rank order, prefix cumsum, stop at the

@@ -6,11 +6,10 @@ dimension) version compression from an event stream.
   (key, bucket) is the EXACT distinct-count materialization that,
   unlike COUNT(DISTINCT), is re-aggregable: per-partition bitmaps
   OR-merge across shards, days, or late-arriving increments without
-  re-reading history — the incremental-rollup twin of
-  orders_incremental_rollup's mergeable partial aggs, now for
-  distincts. 100 TB shape: one groupBy to bucketed bitmaps (each
-  bitmap covers 2^15 ids → bounded cell size), one OR-merge groupBy;
-  both map-side combined. The DuckDB oracle is plain
+  re-reading history — a mergeable partial aggregate for distincts.
+  100 TB shape: one groupBy to bucketed bitmaps (each bitmap covers
+  2^15 ids → bounded cell size), one OR-merge groupBy; both map-side
+  combined. The DuckDB oracle is plain
   COUNT(DISTINCT) — equality proves the bitmap path exact, not
   approximate.
 
@@ -474,9 +473,8 @@ def orders_zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental JOIN-view maintenance: the delta algebra for a
 # materialized join view V = A ⋈ B under batch appends —
 # ΔV = (ΔA ⋈ B_old) ∪ (A_old ⋈ ΔB) ∪ (ΔA ⋈ ΔB) — verified against
-# the direct recompute on the full inputs. Extends
-# orders_incremental_rollup's mergeable-aggregate maintenance to the
-# JOIN operator; the emitted invariant row carries both paths' counts
+# the direct recompute on the full inputs: mergeable maintenance for
+# the JOIN operator; the emitted invariant row carries both paths' counts
 # and exact-cents sums plus their equality booleans, so the hash gate
 # certifies the algebra, not just row counts. 100 TB shape: the three
 # delta joins touch only delta-sized probe sides (the expensive

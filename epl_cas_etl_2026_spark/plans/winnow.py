@@ -15,7 +15,7 @@ fingerprints (~2/(w+1) of grams, here w=k=4 → ~40 B/doc) ever leave
 the row. The per-source rollup is one map-side-combined groupBy; the
 overlap self-join shuffles only slim (doc_id, hash16) pairs, with a
 document-frequency cap on join keys so a boilerplate hash can never
-create a quadratic bucket (same guard as docs_top_boilerplate_ngrams).
+create a quadratic bucket.
 
 Cross-engine determinism: hashes are the first 16 bits of md5 of the
 gram text, decoded with the instr/substr arithmetic both engines

@@ -73,8 +73,12 @@ _GATE_MODULES = {
     "test_layout",
     # the sync job's tests: without them no ETL test runs in the
     # default tier, and a change that breaks run_incremental_sync
-    # would pass it (22 tests, ~70 s at 4 cores)
+    # would pass it (21 tests, ~70 s at 4 cores)
     "test_etl_pipeline",
+    # the dashboard endpoints' DuckDB parity tests: without them no
+    # endpoint-vs-oracle check runs in the default tier (22 tests,
+    # ~2 min at 4 cores)
+    "test_api",
 }
 
 

@@ -197,59 +197,16 @@ def test_greedy_pair_merge_edge_cases(spark):
         assert got[i] == py_greedy(ws, w1, w2), (i, ws)
 
 
-def test_first_fit_pack_matches_python(spark):
-    """The FFD fold vs a pure-Python first-fit, including
-    exact-fit/overflow boundaries."""
-    from pyspark.sql import functions as F
-
-    from epl_cas_etl_2026_spark.functions.text import first_fit_pack
-
-    cases = [
-        [60, 50, 40, 30, 20, 10],
-        [100, 100, 100],
-        [51, 51, 51, 49, 49, 49],
-        [1] * 7,
-        [],
-    ]
-
-    def py_ff(items, cap=100):
-        bins = []
-        for x in items:
-            for j, b in enumerate(bins):
-                if b + x <= cap:
-                    bins[j] = b + x
-                    break
-            else:
-                bins.append(x)
-        return bins
-
-    df = spark.createDataFrame(
-        [(i, [int(x) for x in items]) for i, items in enumerate(cases)],
-        "i int, items array<long>",
-    )
-    got = {
-        r["i"]: list(r["b"])
-        for r in df.select(
-            "i", first_fit_pack(F.col("items"), 100).alias("b")
-        ).collect()
-    }
-    for i, items in enumerate(cases):
-        assert got[i] == py_ff(items), (i, items)
-
-
 def test_folds_randomized_against_python(spark):
-    """200 seeded random streams per fold, all checked in ONE Spark
-    job each — broad coverage of merge/packing edge interactions
-    (runs of equal tokens, exact fits, singletons) beyond the crafted
+    """200 seeded random token streams for the pair-merge fold, all
+    checked in ONE Spark job — broad coverage of merge edge
+    interactions (runs of equal tokens, singletons) beyond the crafted
     cases above."""
     import random
 
     from pyspark.sql import functions as F
 
-    from epl_cas_etl_2026_spark.functions.text import (
-        first_fit_pack,
-        greedy_pair_merge,
-    )
+    from epl_cas_etl_2026_spark.functions.text import greedy_pair_merge
 
     rng = random.Random(42)
     merge_cases = []
@@ -286,32 +243,6 @@ def test_folds_randomized_against_python(spark):
     }
     for i, ws, w1, w2 in merge_cases:
         assert got[i] == py_greedy(ws, w1, w2), (i, ws, w1, w2)
-
-    pack_cases = [
-        (i, [rng.randint(1, 100) for _ in range(rng.randint(0, 20))])
-        for i in range(200)
-    ]
-
-    def py_ff(items, cap=100):
-        bins = []
-        for x in items:
-            for j, b in enumerate(bins):
-                if b + x <= cap:
-                    bins[j] = b + x
-                    break
-            else:
-                bins.append(x)
-        return bins
-
-    df2 = spark.createDataFrame(pack_cases, "i int, items array<long>")
-    got2 = {
-        r["i"]: list(r["b"])
-        for r in df2.select(
-            "i", first_fit_pack(F.col("items"), 100).alias("b")
-        ).collect()
-    }
-    for i, items in pack_cases:
-        assert got2[i] == py_ff(items), (i, items)
 
 
 def test_ivfpq_recall_and_probe_discipline(spark):

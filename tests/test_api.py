@@ -369,36 +369,6 @@ def test_ranking_sucursales_parity_and_dynamic_filters(domain):
     assert "Suc B" not in locales and "Suc A" in locales
 
 
-def test_dashboard_stats_parity(domain):
-    tables, con = domain
-    df = api.dashboard_stats(tables, "operativas", periodo_id=2)
-    sql = f"""
-    WITH f AS (
-      SELECT * FROM supervisiones_operativas WHERE periodo_id = 2
-    ), tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n
-      FROM sucursales WHERE COALESCE(activo, false)
-    )
-    SELECT CAST(COUNT(f.id) AS BIGINT) AS total_supervisiones,
-           {_det_avg('f.calificacion_general')} AS promedio_general,
-           CAST(COUNT(DISTINCT f.sucursal_id) AS BIGINT)
-             AS sucursales_supervisadas,
-           CAST(SUM(CASE WHEN calificacion_general >= 90 THEN 1 ELSE 0 END) AS BIGINT) AS excelente,
-           CAST(SUM(CASE WHEN calificacion_general >= 80 AND calificacion_general < 90 THEN 1 ELSE 0 END) AS BIGINT) AS bueno,
-           CAST(SUM(CASE WHEN calificacion_general >= 70 AND calificacion_general < 80 THEN 1 ELSE 0 END) AS BIGINT) AS regular,
-           CAST(SUM(CASE WHEN calificacion_general < 70 THEN 1 ELSE 0 END) AS BIGINT) AS critico,
-           (SELECT n FROM tot) AS sucursales_total,
-           ROUND(COUNT(DISTINCT f.sucursal_id) * 100.0
-                 / NULLIF((SELECT n FROM tot), 0), 1) AS cobertura_pct
-    FROM f
-    """
-    _compare(df, con, sql)
-    r = df.first()
-    # 90.0 lands in excelente, 70.0 in regular, 0 in critico (edges);
-    # the NULL score counts in no bucket
-    assert (r.excelente, r.bueno, r.regular, r.critico) == (2, 1, 3, 2)
-
-
 def test_map_markers_parity(domain):
     tables, con = domain
     df = api.map_markers(tables, "operativas", periodo_id=2)
@@ -794,6 +764,9 @@ def test_kpis_parity(domain):
     """
     _compare(df, con, sql)
     r = df.first()
+    # 90.0 lands in excelente, 70.0 in regular, 0 in critico (edges);
+    # the NULL score counts in no bucket
+    assert (r.excelente, r.bueno, r.regular, r.critico) == (2, 1, 3, 2)
     # displayed promedio = the period average when a period is given
     assert r.promedio == r.promedio_periodo
     assert r.promedio_acumulado != r.promedio  # history includes P1
@@ -993,11 +966,11 @@ def test_api_serves_etl_sync_output(spark, tmp_path):
     assert rows["Centro"].posicion == 1
     assert rows["Sin datos"].posicion is None  # unranked tail from sync
 
-    stats = api.dashboard_stats(tables, "operativas", periodo_id=1).first()
+    stats = api.kpis(tables, "operativas", periodo_id=1).first()
     assert stats.total_supervisiones == 2
     assert stats.sucursales_supervisadas == 1
-    assert stats.sucursales_total == 2
-    assert stats.cobertura_pct == 50.0
+    assert stats.total_sucursales == 2
+    assert stats.cobertura == 50.0
 
 
 def test_set_periodo_activo(domain):

@@ -310,3 +310,29 @@ def test_sucursales_positions_match_reference_loop(spark):
         else:
             assert r["posicion"] == exp_pos[i], (i, r["posicion"], exp_pos[i])
             assert abs(r["promedio"] - disp[i]) < 1e-9, i
+
+
+# an unknown <tipo> path parameter is a ValueError from api._fact on
+# every endpoint, never a KeyError from the fact-table lookup
+_BAD_TIPO_CALLS = {
+    "heatmap_matrix": lambda t: api.heatmap_matrix(t, "bogus"),
+    "branch_latest": lambda t: api.branch_latest(t, 1, "bogus", periodo_id=1),
+    "branch_trend": lambda t: api.branch_trend(t, 1, "bogus"),
+    "grupo_detalle_sucursales": lambda t: api.grupo_detalle_sucursales(
+        t, 1, "bogus", periodo_id=1
+    ),
+    "grupo_detalle_stats": lambda t: api.grupo_detalle_stats(
+        t, 1, "bogus", periodo_id=1
+    ),
+    "supervision_header": lambda t: api.supervision_header(t, 1, "bogus"),
+    "periodos_with_data": lambda t: api.periodos_with_data(t, "bogus"),
+    "periodo_contexto": lambda t: api.periodo_contexto(
+        t, "bogus", hoy=D(2026, 2, 1)
+    ),
+}
+
+
+@pytest.mark.parametrize("endpoint", sorted(_BAD_TIPO_CALLS))
+def test_unknown_tipo_raises_value_error(quirk_tables, endpoint):
+    with pytest.raises(ValueError, match="tipo"):
+        _BAD_TIPO_CALLS[endpoint](quirk_tables)

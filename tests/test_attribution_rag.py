@@ -180,36 +180,3 @@ def test_rag_pack_scores_chunk_slice_not_whole_doc(spark, tmp_path):
     assert {(r["chunk_index"], r["score"]) for r in rows} == {
         (0, 1), (1, 1)
     }
-
-
-def test_orc_roundtrip_exact_stats(spark, tmp_path):
-    """5-row fixture through the ORC sink/source: counts, sums and the
-    key·cents pairing checksum must match hand-computed values."""
-    rows = [
-        (1, 10, "O", 10.005, None, "1-URGENT"),
-        (2, 11, "F", 20.004, None, "2-HIGH"),
-        (3, 12, "O", 0.0, None, "3-MEDIUM"),
-        (4, 13, "P", 99.999, None, "4-NOT SPECIFIED"),
-        (5, 14, "F", 1.25, None, "5-LOW"),
-    ]
-    schema = (
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
-    )
-    d = _write(spark, tmp_path, "orders", rows, schema)
-    from epl_cas_etl_2026_spark.plans.extensions import (
-        orders_orc_roundtrip_stats,
-    )
-
-    got = orders_orc_roundtrip_stats(spark, d).collect()[0].asDict()
-    # 10.005 / 20.004 are not exactly representable as doubles, so the
-    # expectation recomputes floor(x*100+0.5) on the SAME doubles
-    # rather than assuming the decimal reading
-    import math
-    cents = {k: math.floor(v * 100 + 0.5)
-             for k, v in ((1, 10.005), (2, 20.004), (3, 0.0),
-                          (4, 99.999), (5, 1.25))}
-    assert got["n_rows"] == 5
-    assert got["sum_orderkey"] == 15
-    assert got["pair_checksum"] == sum(k * c for k, c in cents.items())
-    assert got["n_statuses"] == 3

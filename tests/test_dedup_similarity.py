@@ -7,13 +7,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from epl_cas_etl_2026_spark.functions.text import (
-    fingerprint,
-    quality_class,
-    token_count,
-)
+from epl_cas_etl_2026_spark.functions.text import quality_class, token_count
 from epl_cas_etl_2026_spark.operators.dedup import (
-    exact_dedup_stats,
     keep_first_exact,
     near_dup_pairs,
     shingles,
@@ -41,8 +36,6 @@ def docs(spark):
 
 
 def test_exact_dedup(spark, docs):
-    stats = exact_dedup_stats(docs).collect()[0]
-    assert (stats["n_docs"], stats["n_distinct"], stats["n_exact_dups"]) == (5, 4, 1)
     kept = keep_first_exact(docs, "doc_id")
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 4, 5]
 
@@ -79,11 +72,9 @@ def test_simhash_close_for_near_dups(spark, docs):
 def test_text_helpers(spark, docs):
     row = docs.filter(F.col("doc_id") == 1).select(
         token_count(F.col("text")).alias("n"),
-        fingerprint(F.col("text")).alias("fp"),
         quality_class(F.col("text")).alias("q"),
     ).collect()[0]
     assert row["n"] == 9
-    assert len(row["fp"]) == 32
     assert row["q"] == "keep"
     short = docs.filter(F.col("doc_id") == 5).select(
         quality_class(F.col("text")).alias("q")).collect()[0]
@@ -575,109 +566,3 @@ def test_minhash_estimate_error_third_impl(spark, tmp_path):
         ) == (n, s, mn, mx, err)
         assert r["est_milli"] == 1000 * est // 16
 
-
-def test_simhash_calibration_matches_pure_python(spark, tmp_path):
-    """Third implementation for docs_simhash_estimate_error (r11): the
-    whole pipeline — md5 simhash, 4×15-bit banding, the deterministic
-    5% candidate sample, hamming, the cos LUT, and the exact
-    indicator-vector cosine in millis — replayed in pure Python over a
-    planted corpus, compared row-for-row against the Spark plan."""
-    import hashlib
-
-    from epl_cas_etl_2026_spark.plans.extensions import (
-        _SIMHASH_EST_MILLI,
-        docs_simhash_estimate_error,
-    )
-
-    # LUT sanity: half-up cos(pi*d/60) millis, strictly decreasing
-    assert len(_SIMHASH_EST_MILLI) == 61
-    assert _SIMHASH_EST_MILLI[0] == 1000
-    assert _SIMHASH_EST_MILLI[30] == 0
-    assert _SIMHASH_EST_MILLI[60] == -1000
-    assert all(
-        a > b for a, b in zip(_SIMHASH_EST_MILLI, _SIMHASH_EST_MILLI[1:])
-    )
-
-    # planted corpus: a near-dup family (1-token edits of a long base)
-    # at ids ≡ 0 (mod 20) — every within-family pair passes the
-    # (a*31+b) % 20 = 0 sample — plus two family members at ids 7/13
-    # whose colliding pairs the sample must EXCLUDE, plus unrelated
-    # docs (the replay applies the same predicate, so a Spark side
-    # that skipped the filter would fail the row-for-row compare)
-    base = (
-        "the shared pipeline ingests raw documents and emits scored "
-        "batches through the dedup index every night without fail"
-    )
-    ids = [i * 20 for i in range(14)] + [7, 13]
-    rows = []
-    for j, i in enumerate(ids):
-        toks = base.split(" ")
-        toks[j % len(toks)] = f"v{j}"
-        t = " ".join(toks)
-        rows.append((i, t, "en", "s", len(t)))
-    for i in (281, 282, 283):
-        t = f"unrelated text number {i} about nothing shared q{i} z{i}"
-        rows.append((i, t, "en", "s", len(t)))
-    d = str(tmp_path / "docs")
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long",
-    ).write.parquet(d + "/documents.parquet")
-
-    got = {
-        r["hamming"]: r
-        for r in docs_simhash_estimate_error(spark, d).collect()
-    }
-
-    # pure-Python replay
-    def simhash(text):
-        votes = [0] * 60
-        for tok in set(text.split(" ")):
-            h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-            for i in range(60):
-                votes[i] += 1 if (h >> i) & 1 else -1
-        return sum(1 << i for i in range(60) if votes[i] > 0)
-
-    hashes = {i: simhash(t) for i, t, *_ in rows}
-    sets = {i: set(t.split(" ")) for i, t, *_ in rows}
-    all_ids = sorted(hashes)
-    curve = {}
-    n_cands = 0
-    n_sample_excluded = 0
-    for a in all_ids:
-        for b in all_ids:
-            if a >= b:
-                continue
-            shares_band = any(
-                (hashes[a] >> (k * 15)) & 32767
-                == (hashes[b] >> (k * 15)) & 32767
-                for k in range(4)
-            )
-            if not shares_band:
-                continue
-            if (a * 31 + b) % 20 != 0:
-                n_sample_excluded += 1
-                continue
-            n_cands += 1
-            dist = bin(hashes[a] ^ hashes[b]).count("1")
-            inter = len(sets[a] & sets[b])
-            sim = inter / math.sqrt(len(sets[a]) * len(sets[b]))
-            exact = math.floor(round(sim, 6) * 1000 + 0.5)
-            est = _SIMHASH_EST_MILLI[dist]
-            c = curve.setdefault(dist, [est, 0, 0, 10**9, -(10**9), 0])
-            c[1] += 1
-            c[2] += exact
-            c[3] = min(c[3], exact)
-            c[4] = max(c[4], exact)
-            c[5] += abs(est - exact)
-    assert n_cands >= 5, "planted family must survive the sample"
-    assert n_sample_excluded >= 1, "ids 7/13 must exercise the filter"
-    assert set(got) == set(curve)
-    for dist, (est, n, s, mn, mx, err) in curve.items():
-        r = got[dist]
-        assert (
-            r["est_cos_milli"], r["n_pairs"], r["sum_exact_milli"],
-            r["min_exact_milli"], r["max_exact_milli"],
-            r["sum_abs_err_milli"],
-        ) == (est, n, s, mn, mx, err)

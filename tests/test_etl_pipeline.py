@@ -417,39 +417,6 @@ def test_append_idempotent_prunes_sink_scan(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
-def test_quality_checks_count_violations(spark):
-    from epl_cas_etl_2026_spark.operators.quality import (
-        allowed_values_violations,
-        check_constraints,
-        fk_violations,
-        not_null_violations,
-        range_violations,
-        unique_violations,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "O", 10.0), (1, "X", -5.0), (2, None, 200.0), (None, "F", 50.0)],
-        "id int, status string, amount double",
-    )
-    row = check_constraints(
-        df,
-        [
-            not_null_violations("id"),
-            unique_violations(df, "id"),
-            allowed_values_violations("status", ["O", "F"]),
-            range_violations("amount", 0, 100),
-        ],
-    ).collect()[0]
-    assert row["id__nulls"] == 1
-    assert row["id__dup_rows"] == 2  # 4 rows (1 null excluded by countDistinct... see below
-    assert row["status__bad_value"] == 1
-    assert row["amount__out_of_range"] == 2
-
-    parent = spark.createDataFrame([(1,)], "pid int")
-    orphans = fk_violations(df, "id", parent, "pid").collect()[0]
-    assert orphans["id__orphans"] == 1  # id=2 has no parent; nulls skipped
-
-
 def test_sync_error_path_audits_and_reraises(spark, tmp_path):
     import pytest as _pytest
 

@@ -39,7 +39,7 @@ NO_CARTESIAN = [
     "purchase_attribution_asof",
     "docs_near_dup_pairs",
     "embedding_near_dup_cosine",
-    "docs_contamination_check",
+    "docs_benchmark_decontaminate",
     "orders_global_rank_two_phase",
 ]
 
@@ -90,7 +90,7 @@ def test_two_phase_rank_no_single_partition(spark, sf_oracle):
 
 
 def test_contamination_benchmark_side_broadcast(spark, sf_oracle):
-    plan = _plan(spark, sf_oracle, "docs_contamination_check")
+    plan = _plan(spark, sf_oracle, "docs_benchmark_decontaminate")
     assert "BroadcastHashJoin" in plan
 
 

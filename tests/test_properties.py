@@ -175,45 +175,9 @@ def test_kmeans_deterministic_and_total(spark):
     assert all(0 <= r["cluster"] < 3 and r["sq_dist"] >= 0 for r in a1)
 
 
-@given(
-    vals=st.lists(
-        st.tuples(st.sampled_from(["a", "b", "c"]), st.integers(0, 10_000)),
-        min_size=1,
-        max_size=12,
-    ),
-    cut=st.integers(min_value=0, max_value=12),
-)
-@settings(**_SETTINGS)
-def test_incremental_merge_equals_direct(spark, vals, cut):
-    from epl_cas_etl_2026_spark.operators.incremental import (
-        merge_aggs,
-        partial_aggs,
-    )
-
-    rows = [(k, float(v)) for k, v in vals]
-    cut = min(cut, len(rows))
-    full = spark.createDataFrame(rows, "k string, v double")
-    p1 = spark.createDataFrame(rows[:cut] or [("zz", 0.0)], "k string, v double").filter("k != 'zz'")
-    p2 = spark.createDataFrame(rows[cut:] or [("zz", 0.0)], "k string, v double").filter("k != 'zz'")
-    direct = {
-        r["k"]: (str(r["sum_v"]), r["n_rows"])
-        for r in partial_aggs(full, ["k"], ["v"]).collect()
-    }
-    merged = {
-        r["k"]: (str(r["sum_v"]), r["n_rows"])
-        for r in merge_aggs(
-            partial_aggs(p1, ["k"], ["v"]),
-            partial_aggs(p2, ["k"], ["v"]),
-            ["k"],
-        ).collect()
-    }
-    assert direct == merged  # decimal sums merge EXACTLY, not approximately
-
-
 # ---------------------------------------------------------------------------
 # New-op properties: z-score outlier inequality matches the float
-# definition; mixture weights respect their invariants; the per-key
-# sample is input-order invariant.
+# definition.
 # ---------------------------------------------------------------------------
 values = st.lists(
     st.floats(min_value=0.0, max_value=1000.0, allow_nan=False, width=32),
@@ -262,60 +226,6 @@ def test_zscore_integer_inequality_matches_float_definition(spark, vals):
     )
     got = m.filter(dev * dev > var4).count()
     assert got == expect
-
-
-@given(
-    toks=st.lists(
-        st.integers(min_value=1, max_value=10_000), min_size=1, max_size=6
-    )
-)
-@settings(**_SETTINGS)
-def test_mixture_weight_invariants(spark, toks):
-    """Rates stay in (0, 1]; expected tokens never exceed actual; a
-    source under its equal share keeps rate 1 (never upsampled)."""
-    rows = [(f"s{i}", "x " * t) for i, t in enumerate(toks)]
-    df = spark.createDataFrame(rows, "source string, text string")
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        from epl_cas_etl_2026_spark.plans.extensions import (
-            docs_mixture_weights,
-        )
-
-        out = docs_mixture_weights(spark, d).collect()
-    total = sum(r.tokens for r in out)
-    share = total * 0.5 / len(out)
-    for r in out:
-        assert 0 < r.sample_rate <= 1.0
-        assert r.expected_tokens <= r.tokens
-        if r.tokens <= share:
-            assert r.sample_rate == 1.0
-
-
-@given(seed=st.randoms())
-@settings(**_SETTINGS)
-def test_per_source_sample_is_input_order_invariant(spark, seed):
-    """The md5-seeded k-per-stratum sample picks the same docs no
-    matter how the input is ordered (determinism the md5 sort key
-    buys; a LIMIT-style sample would not survive this)."""
-    rows = [(i, f"s{i % 3}", (i * 7) % 50 + 10) for i in range(30)]
-    shuffled = rows[:]
-    seed.shuffle(shuffled)
-    import tempfile
-
-    from epl_cas_etl_2026_spark.plans.extensions import docs_per_source_sample
-
-    def run(data):
-        with tempfile.TemporaryDirectory() as d:
-            spark.createDataFrame(
-                data, "doc_id long, source string, n_chars long"
-            ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-            return [
-                tuple(r) for r in docs_per_source_sample(spark, d).collect()
-            ]
-
-    assert run(rows) == run(shuffled)
 
 
 def _write_docs(spark, tmp_path, rows):

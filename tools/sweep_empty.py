@@ -20,13 +20,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EXPECTED_VALUEERRORS = {
-    "embedding_kmeans_clusters",
-    "embedding_ann_ivf_kmeans",
-    # pq_fit's deterministic init (codebooks from rows id 0..k-1) has
-    # the same by-design guard as kmeans_fit: empty input raises a
-    # clear ValueError instead of training on nothing
-    "embedding_pq_codes_invariants",
-    # the composed IVF-PQ serving path inherits kmeans_fit's guard
+    # kmeans_fit and pq_fit take their deterministic init from rows id
+    # 0..k-1: empty input raises a clear ValueError instead of training
+    # on nothing. The composed IVF-PQ serving path inherits the guard.
     "embedding_ivfpq_topk",
     # round-8 persisted-index pair: build (and serve's build-on-first-
     # touch) run pq_fit, inheriting its deterministic-init guard
