@@ -4,8 +4,9 @@ Reference flow (etl_sync.py:341-404): checkpoint read → paginated REST
 extract → per-row transform/dedup/insert → checkpoint advance → audit.
 Spark-native flow: the same semantics as SET operations —
 
-  * dedup on the natural key = ONE left-anti join against the sink
-    (replaces a SELECT per record, etl_sync.py:215-217)
+  * dedup on the natural key = one broadcast semi-join that finds the
+    sink keys the batch holds, then one broadcast anti-join against
+    them (replaces a SELECT per record, etl_sync.py:215-217)
   * FK resolution = broadcast join on zenput_location_id (replaces a
     scalar subquery per INSERT, etl_sync.py:240-241)
   * period assignment = broadcast range join with row_number()==1
@@ -38,9 +39,9 @@ def dedup_against_sink(
     order_col: str | None = "fecha_supervision",
 ) -> DataFrame:
     """Drop rows whose natural key already exists in the sink, and
-    in-batch duplicates. One anti-join — the set-wise form of the
-    reference's per-row existence SELECT (etl_sync.py:215-217,
-    276-278).
+    in-batch duplicates. One pass over the sink (``_absent_from``) —
+    the set-wise form of the reference's per-row existence SELECT
+    (etl_sync.py:215-217, 276-278).
 
     In-batch survivor is DETERMINISTIC: earliest ``order_col`` (then
     the key itself as tie-break) wins, mirroring the reference's
@@ -60,9 +61,35 @@ def dedup_against_sink(
         batch_deduped = new_rows.dropDuplicates([key])
     if existing is None:
         return batch_deduped
-    return batch_deduped.join(
-        existing.select(key).distinct(), key, "left_anti"
-    )
+    return _absent_from(batch_deduped, existing, key, probe=new_rows)
+
+
+def _absent_from(
+    rows: DataFrame, sink: DataFrame, key: str, probe: DataFrame | None = None
+) -> DataFrame:
+    """``rows`` whose ``key`` is not in ``sink``, with the sink streamed
+    once and never shuffled: a semi-join against the broadcast batch
+    keys finds the sink keys the batch holds, then the batch anti-joins
+    against those broadcast hits. Both broadcasts are O(batch), the
+    hits usually near empty. ``probe`` (default ``rows``) is the frame
+    whose keys are broadcast: a pinned superset of ``rows`` keeps the
+    plan of ``rows`` from running a second time just for its keys."""
+    keys = (rows if probe is None else probe).select(key)
+    hits = sink.select(key).join(F.broadcast(keys), key, "left_semi")
+    return rows.join(F.broadcast(hits), key, "left_anti")
+
+
+def since(sink: DataFrame, col: str, lo) -> DataFrame:
+    """The sink rows a batch whose earliest ``col`` is ``lo`` can
+    collide with: collisions only ever come from the current extract
+    window (etl_sync.py:215-217), so the sink scan keeps
+    ``col >= lo`` — a pushed parquet filter (row-group pruning), which
+    keeps the anti-join O(batch window), not O(sink). Rows with a NULL
+    ``col`` are kept: no bound says where they fall. ``lo`` None (an
+    empty batch, or one with no ``col`` values) prunes nothing."""
+    if lo is None:
+        return sink
+    return sink.filter((F.col(col) >= F.lit(lo)) | F.col(col).isNull())
 
 
 # ---------------------------------------------------------------------------
@@ -166,41 +193,58 @@ def append_idempotent(
     df: DataFrame,
     path: str,
     key: str,
-    prune_col: str | None = None,
 ) -> int:
-    """S5 — idempotent append: left-anti against current sink contents
-    then append (the parquet stand-in for Delta MERGE NOT MATCHED;
-    reference ON CONFLICT DO NOTHING, etl_sync.py:250-254).
-    Returns rows actually written.
-
-    Scale note: without pruning, every batch anti-joins the FULL
-    distinct sink key set — linear in sink size, which degrades as the
-    sink grows. The reference only ever collides within recent
-    extracts (etl_sync.py:215-217 checks keys from the current
-    watermark window), so when ``prune_col`` names a monotone-ish
-    column present in both batch and sink (e.g. fecha_supervision),
-    the existing-keys scan is restricted to ``prune_col >= min(batch)``
-    — a pushed-down parquet filter (row-group / partition pruning), so
-    the anti-join build side stays O(batch window), not O(sink)."""
+    """S5 — idempotent append: drop the rows whose key the sink already
+    holds, then append (the parquet stand-in for Delta MERGE NOT
+    MATCHED; reference ON CONFLICT DO NOTHING, etl_sync.py:250-254).
+    Returns rows actually written. The sink is streamed once and never
+    shuffled (``_absent_from``)."""
     to_write = df
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        if prune_col is not None and prune_col in df.columns:
-            lo = df.agg(F.min(prune_col).alias("lo")).collect()[0]["lo"]
-            if lo is not None:
-                existing = existing.filter(F.col(prune_col) >= F.lit(lo))
-        existing = existing.select(key).distinct()
-        to_write = df.join(existing, key, "left_anti")
+        # read as the batch's key type: a declared schema skips the job
+        # Spark runs to infer one from the parquet footers
+        existing = spark.read.schema(df.select(key).schema).parquet(path)
+        to_write = _absent_from(df, existing, key)
     to_write = to_write.cache()
-    n = to_write.count()
-    if n or not os.path.exists(path):
-        # a zero-row first run still materializes the sink (schema-only
-        # parquet): downstream readers see an empty TABLE, not a
-        # PATH_NOT_FOUND — the contract a warehouse table has from its
-        # first load, empty feed or not
-        to_write.write.mode("append").parquet(path)
-    to_write.unpersist()
+    try:
+        n = to_write.count()
+        append_rows(to_write, path, n)
+    finally:
+        to_write.unpersist()
     return n
+
+
+#: rows per sink data file: a daily run writes one file per sink, and
+#: a backfill of millions of rows writes files of a few tens of MB
+ROWS_PER_FILE = 1_000_000
+
+
+def append_rows(df: DataFrame, path: str, n: int) -> None:
+    """Append the ``n`` rows of ``df`` to the parquet sink at ``path``
+    as ``max(1, ceil(n / ROWS_PER_FILE))`` files, whatever the
+    partitioning ``df`` inherits (a shuffle's 32 partitions would write
+    32 small files). Zero rows write nothing to an existing sink, but a
+    zero-row first run still materializes it (schema-only parquet):
+    downstream readers see an empty TABLE, not a PATH_NOT_FOUND — the
+    contract a warehouse table has from its first load, empty feed or
+    not."""
+    if n or not os.path.exists(path):
+        df.coalesce(max(1, -(-n // ROWS_PER_FILE))).write.mode("append").parquet(path)
+
+
+def one_row(spark: SparkSession, schema, values) -> DataFrame:
+    """One row of ``schema`` built on the JVM, in one partition: a
+    ``createDataFrame`` list is a Python RDD, and writing it starts a
+    Python worker (~360 ms against ~160 ms for this form). The CASE
+    WHEN keeps each column nullable, as ``schema`` declares it: a bare
+    literal would write a REQUIRED parquet column."""
+    on = F.col("id") == 0
+    return spark.range(0, 1, 1, 1).select(
+        *[
+            F.when(on, F.lit(v)).cast(f.dataType).alias(f.name)
+            for f, v in zip(schema.fields, values)
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -209,15 +253,21 @@ def append_idempotent(
 def read_checkpoint(spark: SparkSession, path: str, formulario: str):
     """sync_checkpoints read (etl_sync.py:356-360): latest watermark
     for a form, None on first sync."""
+    from epl_cas_etl_2026_spark.schemas import SYNC_CHECKPOINT_SCHEMA
+
     if not os.path.exists(path):
         return None
-    cp = (
-        spark.read.parquet(path)
+    # the latest non-NULL mark = max(): a top-1 is one job, where a
+    # global aggregate is a shuffle stage and a result stage
+    latest = (
+        spark.read.schema(SYNC_CHECKPOINT_SCHEMA)
+        .parquet(path)
         .filter(F.col("formulario") == formulario)
-        .agg(F.max("ultima_fecha").alias("wm"))
-        .collect()[0]["wm"]
+        .orderBy(F.desc_nulls_last("ultima_fecha"))
+        .select("ultima_fecha")
+        .take(1)
     )
-    return cp
+    return latest[0]["ultima_fecha"] if latest else None
 
 
 def advance_checkpoint(
@@ -227,10 +277,9 @@ def advance_checkpoint(
     readers take max()."""
     from epl_cas_etl_2026_spark.schemas import SYNC_CHECKPOINT_SCHEMA
 
-    row = spark.createDataFrame(
-        [(formulario, new_wm)], SYNC_CHECKPOINT_SCHEMA
-    )
-    row.write.mode("append").parquet(path)
+    one_row(spark, SYNC_CHECKPOINT_SCHEMA, (formulario, new_wm)).write.mode(
+        "append"
+    ).parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -258,18 +307,10 @@ def audit_log(
     # everywhere, like xxhash64(natural key) on the data path.
     run_key = f"{workflow}|{inicio}".encode("utf-8")
     run_id = zlib.crc32(run_key) % (2**62)
-    row = spark.createDataFrame(
-        [
-            (
-                run_id,
-                workflow,
-                inicio,
-                fin,
-                registros_nuevos,
-                estado,
-            )
-        ],
+    row = one_row(
+        spark,
         SYNC_LOG_SCHEMA,
+        (run_id, workflow, inicio, fin, registros_nuevos, estado),
     )
     row.write.mode("append").parquet(path)
 

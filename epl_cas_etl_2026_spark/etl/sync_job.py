@@ -4,23 +4,37 @@
 One call = one sync run:
 
   1. read the checkpoint high-water mark (T1)
-  2. read landing JSONL, keep records newer than the watermark
-  3. parse nested JSON → typed rows (S9), extract the overall score (F11)
-  4. dedup against the sink on the natural key (J6/T2)
+  2. scan the landing JSONL once: parse the nested JSON into typed rows
+     (S9), keep records newer than the watermark, and score each from
+     its own answers array (F11, a Column — no explode or join); pin
+     this window
+  3. the pinning job also observes the window's min fecha_supervision
+     (the sink prune bound) and its max (the new watermark)
+  4. dedup against the master sink rows since that bound, and within
+     the batch, on the natural key (J6/T2)
   5. resolve the branch FK via broadcast lookup (J5)
   6. recover missing locations from sibling rows (J8) when a donor
      frame is given (the security-form flow)
-  7. assign the calendar period via the range join (J7/T4)
-  8. append master + exploded detail rows idempotently (S4/S5)
+  7. assign the calendar period via the range join (J7/T4); pin the
+     batch
+  8. append the exploded detail rows idempotently (S5), then the master
+     rows straight from the pinned batch (S4) — one file per sink
   9. advance the checkpoint, write the audit row (T7); on error the
      audit records 'error' and the exception re-raises so an external
      scheduler alerts (reference etl_sync.py:397-404)
 
 Every step is a set operation over the whole batch — where the
-reference paid one Postgres round-trip per record, this pays one Spark
-job per sink. At 100 TB of landed JSON, the landing read partitions by
-file and everything downstream shuffles only at the dedup anti-join
-and detail groupBys.
+reference paid one Postgres round-trip per record, this writes one
+parquet file per sink per run (``pipeline.ROWS_PER_FILE`` rows each at
+most). Each sink is streamed once and neither sink is shuffled: the
+dedup scans of both are broadcast semi-joins against the batch's keys.
+
+The landing scan reads the whole landing dir on every run, not just
+the files that arrived since the last one: the watermark is on
+submission time (``fecha_supervision``), not file time, and a file can
+carry late re-deliveries of earlier days (which the dedup drops) next
+to new submissions, so no file can be skipped by its name or mtime.
+The scan is the run's only pass over the landing JSON.
 """
 
 from __future__ import annotations
@@ -28,18 +42,20 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.etl.pipeline import (
     advance_checkpoint,
     append_idempotent,
+    append_rows,
     assign_periodo,
     audit_log,
     dedup_against_sink,
     read_checkpoint,
     recover_location,
     resolve_sucursal_fk,
+    since,
     surrogate_id,
 )
 from epl_cas_etl_2026_spark.etl.zenput import (
@@ -47,6 +63,13 @@ from epl_cas_etl_2026_spark.etl.zenput import (
     extract_detail_items,
     parse_submissions,
 )
+
+
+def _release(pinned: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame: its plan is
+    a LogicalRDD over the checkpointed RDD, which stays registered
+    (and holds executor memory) until it is unpersisted."""
+    pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_incremental_sync(
@@ -71,42 +94,78 @@ def run_incremental_sync(
     audit_path = os.path.join(warehouse_dir, "sync_log")
 
     inicio = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    pins: list[DataFrame] = []
     try:
         watermark = read_checkpoint(spark, ckpt_path, formulario)
 
-        raw = spark.read.text(landing_dir)
-        subs = parse_submissions(raw)
+        subs = parse_submissions(spark.read.text(landing_dir))
         if watermark is not None:
             subs = subs.filter(F.col("fecha_supervision") > F.lit(watermark))
-
-        scored = subs.join(
-            extract_calificacion_general(subs), "zenput_submission_id", "left"
+        # Two pins per run, the window and the batch, both released in
+        # the finally below. The window pin makes the landing scan the
+        # run's only one; an Observation rides on its job: min
+        # fecha_supervision bounds the sink prune, max is the new
+        # watermark.
+        bounds = Observation("window")
+        window = (
+            subs.withColumn("calificacion_general", extract_calificacion_general())
+            .observe(
+                bounds,
+                F.min("fecha_supervision").alias("lo"),
+                F.max("fecha_supervision").alias("hi"),
+            )
+            .localCheckpoint(eager=True)
         )
+        pins.append(window)
+        lo, new_wm = bounds.get["lo"], bounds.get["hi"]
 
-        existing = (
-            spark.read.parquet(master_path)
-            if os.path.exists(master_path)
-            else None
-        )
-        fresh = dedup_against_sink(scored, existing)
-
+        # prune: collisions only ever come from the current extract
+        # window (etl_sync.py:215-217), so the master scan keeps the
+        # rows since the window's earliest submission. The declared
+        # schema skips the job Spark runs to infer one from the footers.
+        existing = None
+        if os.path.exists(master_path):
+            keys = window.select("zenput_submission_id", "fecha_supervision")
+            sink = spark.read.schema(keys.schema).parquet(master_path)
+            existing = since(sink, "fecha_supervision", lo)
+        fresh = dedup_against_sink(window, existing)
         if donor_master is not None:
             fresh = recover_location(fresh, donor_master)
         fresh = resolve_sucursal_fk(fresh, sucursales)
         fresh = assign_periodo(fresh, periodos)
-
-        # Pin the batch BEFORE mutating the sink. A plain persist() is
-        # NOT enough: Spark's append command refreshes the file-status
-        # cache for master_path and invalidates every cached plan that
-        # reads it — including `fresh`, whose dedup anti-join scans the
-        # master sink. The post-append recompute would then see the
-        # batch's own keys already in the sink (read-your-own-writes)
-        # and silently drop every detail row. localCheckpoint truncates
-        # the lineage so downstream stages reuse the materialized batch
-        # regardless of sink mutations. At production scale the
+        # The batch pin: `fresh` is the batch anti-joined against the
+        # master as it stood before this run wrote anything. Recomputed
+        # after the master append, it would see its own keys in the
+        # sink (read-your-own-writes) and come back empty. A plain
+        # persist() is NOT enough: Spark's append command refreshes the
+        # file-status cache for the sink path and invalidates every
+        # cached plan that reads it. localCheckpoint truncates the
+        # lineage, so later jobs reuse the materialized rows regardless
+        # of sink mutations; its Observation counts them. Details are
+        # written first and the master last: a run that dies between
+        # the two leaves its submissions out of the master, so the
+        # re-run's batch holds them again and the detail append's
+        # anti-join keeps the detail rows already written from landing
+        # twice. Master first would lose those details for good (the
+        # re-run's batch would exclude them). At production scale the
         # equivalent is a staging write or Delta MERGE, which snapshots
         # the sink version instead.
-        fresh = fresh.localCheckpoint(eager=True)
+        size = Observation("batch")
+        fresh = fresh.observe(size, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        pins.append(fresh)
+        n_new = size.get["n"]
+
+        details = extract_detail_items(fresh, catalog).select(
+            surrogate_id(F.col("zenput_submission_id")).alias("supervision_id"),
+            "item_id",
+            "porcentaje",
+            F.concat_ws(
+                "|", "zenput_submission_id", F.col("item_id").cast("string")
+            ).alias("__detail_key"),
+        )
+        append_idempotent(spark, details, detail_path, "__detail_key")
 
         master = fresh.select(
             surrogate_id(F.col("zenput_submission_id")).alias("id"),
@@ -119,29 +178,8 @@ def run_incremental_sync(
             F.col("lat_entrega"),
             F.col("lon_entrega"),
         )
-        # prune_col: collisions only ever come from the current extract
-        # window (etl_sync.py:215-217), so the sink-side key scan is
-        # restricted to the batch's date range — a pushed parquet
-        # filter keeps the anti-join build side O(batch), not O(sink)
-        n_new = append_idempotent(
-            spark,
-            master,
-            master_path,
-            "zenput_submission_id",
-            prune_col="fecha_supervision",
-        )
+        append_rows(master, master_path, n_new)
 
-        details = extract_detail_items(fresh, catalog).select(
-            surrogate_id(F.col("zenput_submission_id")).alias("supervision_id"),
-            "item_id",
-            "porcentaje",
-            F.concat_ws(
-                "|", "zenput_submission_id", F.col("item_id").cast("string")
-            ).alias("__detail_key"),
-        )
-        append_idempotent(spark, details, detail_path, "__detail_key")
-
-        new_wm = subs.agg(F.max("fecha_supervision")).collect()[0][0]
         if new_wm is not None:
             advance_checkpoint(spark, ckpt_path, formulario, new_wm)
 
@@ -152,3 +190,6 @@ def run_incremental_sync(
         fin = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         audit_log(spark, audit_path, formulario, inicio, fin, 0, "error")
         raise
+    finally:
+        for pinned in pins:
+            _release(pinned)

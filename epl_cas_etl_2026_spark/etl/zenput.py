@@ -5,9 +5,10 @@ The reference walks each submission dict row-at-a-time in Python
 (etl_sync.py:206-224 field extraction, 141-158 answers→areas explode,
 160-177 priority score extraction, 179-194 KPIs). Here the whole feed
 is one DataFrame of nested structs and every extraction is a set-wise
-Column expression — one explode, no per-row Python, whole-stage
-codegen'd. At 100 TB of landed JSON this is the difference between a
-day and minutes.
+Column expression — the score reads the answers array in place, the
+area details take one explode, and no row goes through Python. At
+100 TB of landed JSON this is the difference between a day and
+minutes.
 
 AREA/KPI code resolution (reference AREA_MAP etl_sync.py:34-63,
 fuzzy 2-pass matching etl_sync.py:128-139) is a broadcast join against
@@ -17,7 +18,7 @@ dict probe.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.scalars import normalize_title
@@ -71,32 +72,30 @@ def formula_answers(submissions: DataFrame) -> DataFrame:
     )
 
 
-def extract_calificacion_general(submissions: DataFrame) -> DataFrame:
-    """F11 — score extraction (etl_sync.py:160-177): the reference
-    iterates the answers array IN ORDER and, per answer, checks the
-    title against both accepted names ('PORCENTAJE %' then
-    'CALIFICACION PORCENTAJE %') — so the FIRST answer matching
-    EITHER title wins; answer position outranks the title list.
-    A null value on that first match is returned as-is (the reference
-    does not skip None here, unlike extract_areas).
+#: the overall-score answer titles (etl_sync.py:167-176)
+SCORE_TITLES = ("PORCENTAJE %", "CALIFICACION PORCENTAJE %")
+
+
+def extract_calificacion_general() -> Column:
+    """F11 — score extraction (etl_sync.py:160-177) as a Column over a
+    submission's own ``answers`` array: the reference iterates the
+    answers IN ORDER and, per answer, checks the title against both
+    accepted names ('PORCENTAJE %' then 'CALIFICACION PORCENTAJE %')
+    — so the FIRST formula answer matching EITHER title wins; answer
+    position outranks the title list. A null value on that first match
+    is returned as-is (the reference does not skip None here, unlike
+    extract_areas).
+
+    No explode, window or join: each row scores from its own array, so
+    of two copies of one submission each carries its own score, and
+    the copy the dedup keeps keeps its score.
     """
-    ans = formula_answers(submissions)
-    title_up = F.upper(F.trim(F.col("title")))
-    prioritized = ans.filter(
-        title_up.isin("PORCENTAJE %", "CALIFICACION PORCENTAJE %")
+    hits = F.filter(
+        "answers",
+        lambda a: (a["field_type"] == "formula")
+        & F.upper(F.trim(a["title"])).isin(*SCORE_TITLES),
     )
-    w = Window.partitionBy("zenput_submission_id").orderBy("answer_pos")
-    best = (
-        prioritized.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "zenput_submission_id",
-            F.col("value").alias("calificacion_general"),
-        )
-    )
-    return submissions.select("zenput_submission_id").distinct().join(
-        best, "zenput_submission_id", "left"
-    )
+    return F.get(hits, 0)["value"].cast("double").alias("calificacion_general")
 
 
 def extract_detail_items(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,7 +77,9 @@ def test_parse_and_score_extraction(spark, raw_feed):
     assert parsed.count() == 3
     scores = {
         r["zenput_submission_id"]: r["calificacion_general"]
-        for r in extract_calificacion_general(parsed).collect()
+        for r in parsed.select(
+            "zenput_submission_id", extract_calificacion_general()
+        ).collect()
     }
     # F11 priority: 'PORCENTAJE %' first, else 'CALIFICACION PORCENTAJE %'
     assert scores["1"] == 87.5
@@ -313,7 +316,9 @@ def test_score_first_answer_wins_over_title_priority(spark):
     feed = spark.createDataFrame([(json.dumps(s),) for s in subs], "value string")
     scores = {
         r["zenput_submission_id"]: r["calificacion_general"]
-        for r in extract_calificacion_general(parse_submissions(feed)).collect()
+        for r in parse_submissions(feed)
+        .select("zenput_submission_id", extract_calificacion_general())
+        .collect()
     }
     assert scores["9"] == 55.0
 
@@ -393,28 +398,30 @@ def test_audit_run_id_deterministic(spark, tmp_path):
     assert id1 == id2  # crc32-based, not salted Python hash()
 
 
-def test_append_idempotent_prunes_sink_scan(spark, tmp_path):
-    from epl_cas_etl_2026_spark.etl.pipeline import append_idempotent
+def test_since_prunes_sink_scan_and_keeps_undated_rows(spark, tmp_path):
+    """The master dedup reads only the sink rows since the batch's
+    earliest submission: a filter pushed into the parquet scan, which
+    still passes the rows whose prune column is NULL."""
+    from epl_cas_etl_2026_spark.etl.pipeline import since
 
     path = str(tmp_path / "sink")
-    batch1 = spark.createDataFrame(
-        [("a", dt.datetime(2026, 2, 1)), ("b", dt.datetime(2026, 2, 2))],
-        "k string, fecha_supervision timestamp",
-    )
-    assert append_idempotent(spark, batch1, path, "k", prune_col="fecha_supervision") == 2
-    batch2 = spark.createDataFrame(
-        [("b", dt.datetime(2026, 2, 2)), ("c", dt.datetime(2026, 2, 3))],
-        "k string, fecha_supervision timestamp",
-    )
-    # plan assertion: the sink scan must carry a pushed-down filter on
-    # the prune column so the anti-join build side is O(batch window)
-    existing = spark.read.parquet(path).filter(
-        F.col("fecha_supervision") >= dt.datetime(2026, 2, 2)
-    )
+    schema = "zenput_submission_id string, fecha_supervision timestamp"
+    spark.createDataFrame(
+        [("a", dt.datetime(2026, 2, 1)), ("b", dt.datetime(2026, 2, 2)), ("u", None)],
+        schema,
+    ).write.parquet(path)
+    existing = since(spark.read.parquet(path), "fecha_supervision", dt.datetime(2026, 2, 2))
     plan = existing._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "fecha_supervision" in plan
-    assert append_idempotent(spark, batch2, path, "k", prune_col="fecha_supervision") == 1
-    assert spark.read.parquet(path).count() == 3
+    assert "PushedFilters: [Or(GreaterThanOrEqual(fecha_supervision" in plan, plan
+    assert sorted(r.zenput_submission_id for r in existing.collect()) == ["b", "u"]
+    batch = spark.createDataFrame(
+        [("b", dt.datetime(2026, 2, 2)), ("c", dt.datetime(2026, 2, 3)), ("u", None)],
+        schema,
+    )
+    fresh = dedup_against_sink(batch, existing)
+    assert [r.zenput_submission_id for r in fresh.collect()] == ["c"]
+    # no bound (an empty batch) prunes nothing
+    assert since(spark.read.parquet(path), "fecha_supervision", None).count() == 3
 
 
 def test_sync_error_path_audits_and_reraises(spark, tmp_path):
@@ -463,7 +470,7 @@ def test_submission_without_answers_survives(spark):
     feed = spark.createDataFrame([(json.dumps(sub),)], "value string")
     parsed = parse_submissions(feed)
     assert parsed.count() == 1
-    scored = extract_calificacion_general(parsed).collect()
+    scored = parsed.select(extract_calificacion_general()).collect()
     assert scored[0]["calificacion_general"] is None
     catalog = spark.createDataFrame([(1, "CF", "CUARTO FRIO", 1)], CATALOGO_SCHEMA)
     assert extract_detail_items(parsed, catalog).count() == 0
@@ -513,3 +520,160 @@ def test_append_idempotent_zero_row_first_run_materializes_sink(spark, tmp_path)
     rows = spark.createDataFrame([(1, "a")], "k long, v string")
     assert append_idempotent(spark, rows, path, "k") == 1
     assert spark.read.parquet(path).count() == 1
+
+
+# ---------------------------------------------------------------------------
+# One landing scan, one pinned batch, one file per sink.
+# ---------------------------------------------------------------------------
+def _sync_dims(spark):
+    sucursales = spark.createDataFrame(
+        [(10, "Centro", "1", "NL", "MTY", 1, True, "local", 25.0, -100.0, "LOC-001")],
+        SUCURSALES_SCHEMA,
+    )
+    periodos = spark.createDataFrame(
+        [(1, "P1", "Periodo 1", dt.date(2026, 2, 1), dt.date(2026, 2, 28), True)],
+        PERIODOS_SCHEMA,
+    )
+    catalog = spark.createDataFrame(
+        [(1, "CF", "CUARTO FRIO", 1), (2, "FR", "FREIDORAS", 2)],
+        CATALOGO_SCHEMA,
+    )
+    return sucursales, periodos, catalog
+
+
+def _day_file(landing, day: int, n: int) -> None:
+    """``n`` submissions on 2026-02-``day`` (ids day*1000 + j), each
+    with a score and both catalog areas."""
+    answers = [
+        {"field_type": "formula", "title": "PORCENTAJE %", "value": "80.0"},
+        {"field_type": "formula", "title": "CUARTO FRIO PORCENTAJE %", "value": "70.0"},
+        {"field_type": "formula", "title": "FREIDORAS PORCENTAJE %", "value": "90.0"},
+    ]
+    (landing / f"2026-02-{day:02d}.jsonl").write_text(
+        "\n".join(
+            json.dumps(_submission(
+                day * 1000 + j, answers=answers,
+                date=f"2026-02-{day:02d}T{8 + j % 12:02d}:{j // 12:02d}:00Z"))
+            for j in range(n)
+        ) + "\n"
+    )
+
+
+def _data_files(path) -> int:
+    return sum(
+        1 for f in os.listdir(path) if not f.startswith((".", "_"))
+    )
+
+
+def test_in_batch_copies_score_from_the_kept_copy(spark, tmp_path):
+    """Two copies of one submission in one batch, with different
+    answers: the earlier copy is the one dedup keeps, and its own
+    answers give both its score and its detail rows. (The score used
+    to be a join keyed by id alone, where the first matching answer
+    across all copies won.)"""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    def copy(date, score, area):
+        return json.dumps(_submission(5, date=date, answers=[
+            {"field_type": "formula", "title": "PORCENTAJE %", "value": score},
+            {"field_type": "formula", "title": "FREIDORAS PORCENTAJE %", "value": area},
+        ]))
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "p0.jsonl").write_text(
+        copy("2026-02-10T09:00:00Z", "40.0", "41.0") + "\n"
+        + copy("2026-02-10T08:00:00Z", "90.0", "91.0") + "\n"
+    )
+    wh = str(tmp_path / "wh")
+    assert run_incremental_sync(spark, str(landing), wh, *_sync_dims(spark)) == 1
+    master = spark.read.parquet(f"{wh}/supervisiones_operativas").collect()
+    assert [(r.calificacion_general, r.fecha_supervision.hour) for r in master] == [(90.0, 8)]
+    detail = spark.read.parquet(f"{wh}/detalle_operativas").collect()
+    assert [(r.item_id, r.porcentaje) for r in detail] == [(2, 91.0)]
+
+
+@pytest.mark.parametrize("sink", ["detalle_operativas", "supervisiones_operativas"])
+def test_sync_crash_after_a_sink_append_loses_nothing(spark, tmp_path, monkeypatch, sink):
+    """A run that dies right after one sink's append completes (before
+    the checkpoint advances) is repaired by the next run: both sinks
+    then hold each submission and each of its areas exactly once, and
+    the failed run leaves no pinned blocks behind. One submission has
+    no date: the pruned master scan must still see it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _day_file(landing, 10, 6)
+    undated = _submission(10_006, date=None, answers=[
+        {"field_type": "formula", "title": "CUARTO FRIO PORCENTAJE %", "value": "70.0"},
+        {"field_type": "formula", "title": "FREIDORAS PORCENTAJE %", "value": "90.0"},
+    ])
+    (landing / "undated.jsonl").write_text(json.dumps(undated) + "\n")
+    wh = str(tmp_path / "wh")
+    dims = _sync_dims(spark)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_after(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if os.path.basename(path) == sink:
+            raise RuntimeError(f"injected crash after the {sink} append")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_after)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_incremental_sync(spark, str(landing), wh, *dims)
+    monkeypatch.undo()
+    leaked = spark.sparkContext._jsc.getPersistentRDDs().size() - persisted
+
+    run_incremental_sync(spark, str(landing), wh, *dims)
+    ids = [r.zenput_submission_id for r in
+           spark.read.parquet(f"{wh}/supervisiones_operativas").collect()]
+    assert sorted(ids) == [str(10_000 + j) for j in range(7)]
+    details = [(r.supervision_id, r.item_id) for r in
+               spark.read.parquet(f"{wh}/detalle_operativas").collect()]
+    assert len(details) == len(set(details)) == 7 * 2
+    estados = [r.estado for r in spark.read.parquet(f"{wh}/sync_log").collect()]
+    assert sorted(estados) == ["error", "success"]
+    assert leaked == 0
+
+
+#: Spark jobs one daily sync launches into existing sinks, measured on
+#: the feed below (local[8], AQE on); a change that adds a pass over
+#: the landing or a sink shows up here
+DAILY_SYNC_JOBS = 22
+
+
+def test_daily_sync_job_and_file_ceiling(spark, tmp_path):
+    """One daily sync into existing sinks writes exactly one data file
+    to each of its four sinks and launches at most DAILY_SYNC_JOBS
+    Spark jobs; it releases what it pins."""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh = tmp_path / "wh"
+    dims = _sync_dims(spark)
+    _day_file(landing, 10, 20)
+    assert run_incremental_sync(spark, str(landing), str(wh), *dims) == 20
+    sinks = ("supervisiones_operativas", "detalle_operativas",
+             "sync_checkpoints", "sync_log")
+    before = {s: _data_files(wh / s) for s in sinks}
+
+    _day_file(landing, 11, 20)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = "test-daily-sync-ceiling"
+    sc.setJobGroup(group, "one daily sync")
+    try:
+        assert run_incremental_sync(spark, str(landing), str(wh), *dims) == 20
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert {s: _data_files(wh / s) - before[s] for s in sinks} == dict.fromkeys(sinks, 1)
+    assert len(jobs) <= DAILY_SYNC_JOBS, sorted(jobs)
+    assert sc._jsc.getPersistentRDDs().size() == persisted
