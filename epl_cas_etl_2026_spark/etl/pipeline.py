@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -193,43 +193,53 @@ def append_idempotent(
     df: DataFrame,
     path: str,
     key: str,
+    n: int,
+    probe: DataFrame | None = None,
 ) -> int:
     """S5 — idempotent append: drop the rows whose key the sink already
     holds, then append (the parquet stand-in for Delta MERGE NOT
     MATCHED; reference ON CONFLICT DO NOTHING, etl_sync.py:250-254).
-    Returns rows actually written. The sink is streamed once and never
-    shuffled (``_absent_from``)."""
-    to_write = df
+    The sink is streamed once and never shuffled (``_absent_from``,
+    which broadcasts the keys of ``probe``, default ``df``).
+
+    ``n`` is the size of the batch ``df`` comes from, as its caller
+    already knows it (the sync's batch pin counts it): it sizes the
+    files (``append_rows``), so nothing here materializes ``df`` ahead
+    of the write and its plan runs once, inside it. Returns the rows
+    written, read from an Observation on the write; 0 without waiting
+    on it when ``n`` is 0 and the sink exists, since then nothing is
+    written."""
     if os.path.exists(path):
         # read as the batch's key type: a declared schema skips the job
         # Spark runs to infer one from the parquet footers
         existing = spark.read.schema(df.select(key).schema).parquet(path)
-        to_write = _absent_from(df, existing, key)
-    to_write = to_write.cache()
-    try:
-        n = to_write.count()
-        append_rows(to_write, path, n)
-    finally:
-        to_write.unpersist()
-    return n
+        df = _absent_from(df, existing, key, probe)
+    written = Observation("written")
+    wrote = append_rows(df.observe(written, F.count(F.lit(1)).alias("n")), path, n)
+    return written.get["n"] if wrote else 0
 
 
 #: rows per sink data file: a daily run writes one file per sink, and
-#: a backfill of millions of rows writes files of a few tens of MB
+#: a backfill of millions of rows writes files of a few tens of MB (the
+#: sync sizes its detail append by the batch's supervisions, so a
+#: detail file holds the areas of up to this many supervisions)
 ROWS_PER_FILE = 1_000_000
 
 
-def append_rows(df: DataFrame, path: str, n: int) -> None:
+def append_rows(df: DataFrame, path: str, n: int) -> bool:
     """Append the ``n`` rows of ``df`` to the parquet sink at ``path``
-    as ``max(1, ceil(n / ROWS_PER_FILE))`` files, whatever the
+    as at most ``max(1, ceil(n / ROWS_PER_FILE))`` files, whatever the
     partitioning ``df`` inherits (a shuffle's 32 partitions would write
-    32 small files). Zero rows write nothing to an existing sink, but a
-    zero-row first run still materializes it (schema-only parquet):
-    downstream readers see an empty TABLE, not a PATH_NOT_FOUND — the
-    contract a warehouse table has from its first load, empty feed or
-    not."""
+    32 small files); the coalesce merges whole partitions, so rows that
+    share a partition share a file. Zero rows write nothing to an
+    existing sink, but a zero-row first run still materializes it
+    (schema-only parquet): downstream readers see an empty TABLE, not
+    a PATH_NOT_FOUND — the contract a warehouse table has from its
+    first load, empty feed or not. Returns whether it wrote."""
     if n or not os.path.exists(path):
         df.coalesce(max(1, -(-n // ROWS_PER_FILE))).write.mode("append").parquet(path)
+        return True
+    return False
 
 
 def one_row(spark: SparkSession, schema, values) -> DataFrame:

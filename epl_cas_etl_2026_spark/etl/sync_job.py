@@ -17,8 +17,9 @@ One call = one sync run:
      frame is given (the security-form flow)
   7. assign the calendar period via the range join (J7/T4); pin the
      batch
-  8. append the exploded detail rows idempotently (S5), then the master
-     rows straight from the pinned batch (S4) — one file per sink
+  8. append the exploded detail rows of each supervision the detail
+     sink does not hold yet (S5), then the master rows straight from
+     the pinned batch (S4) — one file per sink
   9. advance the checkpoint, write the audit row (T7); on error the
      audit records 'error' and the exception re-raises so an external
      scheduler alerts (reference etl_sync.py:397-404)
@@ -27,7 +28,11 @@ Every step is a set operation over the whole batch — where the
 reference paid one Postgres round-trip per record, this writes one
 parquet file per sink per run (``pipeline.ROWS_PER_FILE`` rows each at
 most). Each sink is streamed once and neither sink is shuffled: the
-dedup scans of both are broadcast semi-joins against the batch's keys.
+dedup scans of both are broadcast semi-joins against the pinned batch's
+keys. The master scan is pruned to the window's dates; the detail sink
+has no date column, so its guard reads the sink's whole
+``supervision_id`` column on every run — one long column, but a scan
+that still grows with the days loaded.
 
 The landing scan reads the whole landing dir on every run, not just
 the files that arrived since the last one: the watermark is on
@@ -144,12 +149,12 @@ def run_incremental_sync(
         # of sink mutations; its Observation counts them. Details are
         # written first and the master last: a run that dies between
         # the two leaves its submissions out of the master, so the
-        # re-run's batch holds them again and the detail append's
-        # anti-join keeps the detail rows already written from landing
-        # twice. Master first would lose those details for good (the
-        # re-run's batch would exclude them). At production scale the
-        # equivalent is a staging write or Delta MERGE, which snapshots
-        # the sink version instead.
+        # re-run's batch holds them again and the detail append skips
+        # the supervisions whose rows it already wrote. Master first
+        # would lose those details for good (the re-run's batch would
+        # exclude them). At production scale the equivalent is a
+        # staging write or Delta MERGE, which snapshots the sink
+        # version instead.
         size = Observation("batch")
         fresh = fresh.observe(size, F.count(F.lit(1)).alias("n")).localCheckpoint(
             eager=True
@@ -157,18 +162,22 @@ def run_incremental_sync(
         pins.append(fresh)
         n_new = size.get["n"]
 
+        # The detail guard is per supervision, the reference's unit
+        # (its area rows commit with the master row): a supervision the
+        # detail sink already holds gets none of its rows again. That
+        # is exact because extract_detail_items keeps each
+        # supervision's rows in one partition, which append_rows writes
+        # into one file. The probe keys come from the pinned batch, so
+        # the detail plan runs once, inside the write.
+        sid = surrogate_id(F.col("zenput_submission_id"))
         details = extract_detail_items(fresh, catalog).select(
-            surrogate_id(F.col("zenput_submission_id")).alias("supervision_id"),
-            "item_id",
-            "porcentaje",
-            F.concat_ws(
-                "|", "zenput_submission_id", F.col("item_id").cast("string")
-            ).alias("__detail_key"),
+            sid.alias("supervision_id"), "item_id", "porcentaje"
         )
-        append_idempotent(spark, details, detail_path, "__detail_key")
+        probe = fresh.select(sid.alias("supervision_id"))
+        append_idempotent(spark, details, detail_path, "supervision_id", n_new, probe)
 
         master = fresh.select(
-            surrogate_id(F.col("zenput_submission_id")).alias("id"),
+            sid.alias("id"),
             "zenput_submission_id",
             "sucursal_id",
             "periodo_id",

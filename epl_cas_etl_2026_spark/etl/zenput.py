@@ -34,7 +34,10 @@ def parse_submissions(raw_json_df: DataFrame, json_col: str = "value") -> DataFr
     A line that does not parse, or parses without an ``id`` (the
     natural key), is dropped: ``from_json`` gives it a NULL id, and
     loading it would write an all-NULL master row whose surrogate
-    ``xxhash64(NULL)`` every such row shares.
+    ``xxhash64(NULL)`` every such row shares. A ``date_submitted`` that
+    does not parse loads as NULL, like an undated submission: under
+    ANSI mode a cast would fail the sync, and every later one, since
+    the line stays in the landing dir.
     """
     from epl_cas_etl_2026_spark.schemas import ZENPUT_SUBMISSION_SCHEMA
 
@@ -45,7 +48,7 @@ def parse_submissions(raw_json_df: DataFrame, json_col: str = "value") -> DataFr
         F.col("s.id").cast("string").alias("zenput_submission_id"),
         F.col("s.smetadata.location.id").alias("zenput_location_id"),
         F.col("s.smetadata.created_by.display_name").alias("supervisor"),
-        F.to_timestamp(F.col("s.smetadata.date_submitted")).alias(
+        F.try_to_timestamp(F.col("s.smetadata.date_submitted")).alias(
             "fecha_supervision"
         ),
         F.col("s.smetadata.lat").alias("lat_entrega"),
@@ -117,9 +120,14 @@ def extract_detail_items(
     # answers with a null value (etl_sync.py:150-152 `value is None:
     # continue`) BEFORE the first-wins dedup, so a null-valued first
     # answer must not suppress a later valid one for the same code.
+    # One hash partitioning by submission serves both first-wins
+    # windows below (each is clustered by the submission plus one more
+    # key), so the plan shuffles once, and each submission's detail
+    # rows end in one partition: a write that keeps the partitioning
+    # puts them in one file, from one task.
     ans = ans.filter(
         (F.col("norm_title") != "") & F.col("value").isNotNull()
-    )
+    ).repartition("zenput_submission_id")
 
     cat = catalog.select(
         F.col("id").alias("item_id"),

@@ -167,8 +167,8 @@ def test_append_idempotent_sink(spark, tmp_path, raw_feed):
     # S5/T2: run the load twice → same sink contents.
     path = str(tmp_path / "sink.parquet")
     parsed = parse_submissions(raw_feed).drop("answers")
-    n1 = append_idempotent(spark, parsed, path, "zenput_submission_id")
-    n2 = append_idempotent(spark, parsed, path, "zenput_submission_id")
+    n1 = append_idempotent(spark, parsed, path, "zenput_submission_id", 3)
+    n2 = append_idempotent(spark, parsed, path, "zenput_submission_id", 3)
     assert n1 == 3 and n2 == 0
     assert spark.read.parquet(path).count() == 3
 
@@ -505,6 +505,34 @@ def test_sync_skips_malformed_and_keyless_lines(spark, tmp_path):
     assert [r.zenput_submission_id for r in master] == ["7"]
 
 
+def test_sync_loads_a_malformed_date_as_undated(spark, tmp_path):
+    """A date_submitted that does not parse fails neither the sync nor
+    the runs after it (the line stays in the landing dir): under ANSI
+    mode a plain cast would raise CAST_INVALID_INPUT. The submission
+    loads with a NULL fecha_supervision, like an undated one, and a
+    re-run loads nothing."""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "p0.jsonl").write_text(
+        json.dumps(_submission(1)) + "\n"
+        + json.dumps(_submission(2, date="not a date")) + "\n"
+        + json.dumps(_submission(3, date="2026-02-11T09:00:00Z")) + "\n"
+    )
+    wh = str(tmp_path / "wh")
+    dims = _sync_dims(spark)
+    assert run_incremental_sync(spark, str(landing), wh, *dims) == 3
+    master = {
+        r.zenput_submission_id: r.fecha_supervision
+        for r in spark.read.parquet(f"{wh}/supervisiones_operativas").collect()
+    }
+    assert master["2"] is None
+    assert master["3"] == dt.datetime(2026, 2, 11, 9, 0)
+    assert run_incremental_sync(spark, str(landing), wh, *dims) == 0
+    assert spark.read.parquet(f"{wh}/supervisiones_operativas").count() == 3
+
+
 def test_append_idempotent_zero_row_first_run_materializes_sink(spark, tmp_path):
     """An empty first load must still create the sink table (schema-only
     parquet): downstream readers get an empty table, not PATH_NOT_FOUND
@@ -513,12 +541,12 @@ def test_append_idempotent_zero_row_first_run_materializes_sink(spark, tmp_path)
 
     path = str(tmp_path / "sink")
     empty = spark.createDataFrame([], "k long, v string")
-    assert append_idempotent(spark, empty, path, "k") == 0
+    assert append_idempotent(spark, empty, path, "k", 0) == 0
     out = spark.read.parquet(path)
     assert out.count() == 0 and set(out.columns) == {"k", "v"}
     # and a later non-empty append still works against the empty sink
     rows = spark.createDataFrame([(1, "a")], "k long, v string")
-    assert append_idempotent(spark, rows, path, "k") == 1
+    assert append_idempotent(spark, rows, path, "k", 1) == 1
     assert spark.read.parquet(path).count() == 1
 
 
@@ -642,9 +670,9 @@ def test_sync_crash_after_a_sink_append_loses_nothing(spark, tmp_path, monkeypat
 
 
 #: Spark jobs one daily sync launches into existing sinks, measured on
-#: the feed below (local[8], AQE on); a change that adds a pass over
-#: the landing or a sink shows up here
-DAILY_SYNC_JOBS = 22
+#: the feed below (local[4] and local[8], AQE on); a change that adds a
+#: pass over the landing or a sink shows up here
+DAILY_SYNC_JOBS = 16
 
 
 def test_daily_sync_job_and_file_ceiling(spark, tmp_path):
@@ -677,3 +705,98 @@ def test_daily_sync_job_and_file_ceiling(spark, tmp_path):
     assert {s: _data_files(wh / s) - before[s] for s in sinks} == dict.fromkeys(sinks, 1)
     assert len(jobs) <= DAILY_SYNC_JOBS, sorted(jobs)
     assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_detail_rows_of_a_supervision_share_one_file(spark, tmp_path, monkeypatch):
+    """The detail guard skips every supervision the detail sink already
+    holds, which is exact only if each supervision's rows are written
+    by one task into one file: a commit cut short then leaves all of
+    them or none. Small ROWS_PER_FILE makes one sync write several
+    detail files; at this size AQE would merge the shuffle into one
+    partition, so its coalescing is off here, as a production-size
+    batch has many partitions anyway."""
+    import pyarrow.parquet as pq
+
+    from epl_cas_etl_2026_spark.etl import pipeline
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _day_file(landing, 10, 20)
+    detail = tmp_path / "wh" / "detalle_operativas"
+    monkeypatch.setattr(pipeline, "ROWS_PER_FILE", 5)
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        run_incremental_sync(spark, str(landing), str(tmp_path / "wh"), *_sync_dims(spark))
+    finally:
+        spark.conf.set(conf, before)
+
+    files = [f for f in os.listdir(detail) if not f.startswith((".", "_"))]
+    per_file = [
+        set(pq.read_table(detail / f, columns=["supervision_id"]).column(0).to_pylist())
+        for f in files
+    ]
+    assert len([ids for ids in per_file if ids]) > 1, files
+    assert sum(len(ids) for ids in per_file) == len(set().union(*per_file)) == 20
+    assert spark.read.parquet(str(detail)).columns == ["supervision_id", "item_id", "porcentaje"]
+
+
+def test_detail_write_runs_the_detail_plan_once(spark, tmp_path, monkeypatch):
+    """A daily sync's detail write takes its guard's probe keys from
+    the pinned batch, so its plan holds one copy of the detail
+    extraction: one catalog nested-loop join and one shuffle, the hash
+    partitioning by submission both first-wins windows reuse."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh = str(tmp_path / "wh")
+    dims = _sync_dims(spark)
+    _day_file(landing, 10, 4)
+    run_incremental_sync(spark, str(landing), wh, *dims)
+
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        if os.path.basename(path) == "detalle_operativas":
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    _day_file(landing, 11, 4)
+    assert run_incremental_sync(spark, str(landing), wh, *dims) == 4
+    [plan] = plans
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert plan.count("Exchange hashpartitioning(") == 1, plan
+    assert "Exchange hashpartitioning(zenput_submission_id#" in plan, plan
+    assert "LeftAnti" in plan, plan
+
+
+def test_sync_job_binds_the_names_the_benchmark_wraps():
+    """perfbench/sync.py wraps these names on ``etl.sync_job`` in traced
+    runs (its PIPELINE and ZENPUT tuples); a missing one crashes
+    ``perfbench/run.py --workload sync --trace 1``. Read with ast, so
+    the benchmark is not imported."""
+    import ast
+
+    from epl_cas_etl_2026_spark.etl import sync_job
+
+    src = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "sync.py")
+    with open(src) as f:
+        tree = ast.parse(f.read())
+    tuples = {
+        node.targets[0].id: ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and isinstance(node.targets[0], ast.Name)
+        and node.targets[0].id in ("PIPELINE", "ZENPUT")
+    }
+    assert set(tuples) == {"PIPELINE", "ZENPUT"}
+    names = [n for t in tuples.values() for n in t]
+    assert "append_idempotent" in names
+    assert [n for n in names if not callable(getattr(sync_job, n, None))] == []
