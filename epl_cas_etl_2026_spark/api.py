@@ -30,9 +30,14 @@ Semantics preserved from the reference, trap-by-trap:
   its period averages (A11, app.py:1186-1189), and the 'EPL CAS' row
   is the unweighted mean over group averages per period (A12).
 
-Scale: dims broadcast (20/86/29 rows); facts shuffle once per
-aggregate grain; every ranking window is post-aggregation
-(entity-grained) and guarded by competition_rank's row-count check.
+Scale: every table is read through :func:`_table`. A one-split table
+(one parquet file, as the dashboard warehouse's dims and facts are) is
+planned as one partition, so aggregates, windows and sorts over it
+need no shuffle; only heatmap_matrix's grouping sets still shuffle. A
+table with several splits keeps the distributed plan: dims broadcast,
+facts shuffle once per aggregate grain. Every ranking window is
+post-aggregation (entity-grained) and guarded by competition_rank's
+row-count check.
 """
 
 from __future__ import annotations
@@ -72,10 +77,27 @@ PREVIEW_ALLOWLIST = frozenset(
 )
 
 
+def _table(tables: dict, name: str) -> DataFrame:
+    """``tables[name]``, planned as ONE partition when it already is one.
+
+    Precondition for the rewrite: the table's scan has exactly one
+    split (``getNumPartitions() == 1``, the same test
+    ``sources.parquet.spread_scan`` makes). Then ``coalesce(1)`` moves
+    no row and keeps row order, but its ``SinglePartition`` output
+    meets every aggregate, window and sort requirement above it, so no
+    shuffle Exchange is planned over the table. Filters and column
+    pruning still push through it into the scan. A table with several
+    splits comes back unchanged and keeps its shuffles."""
+    df = tables[name]
+    if df.rdd.getNumPartitions() == 1:
+        return df.coalesce(1)
+    return df
+
+
 def _fact(tables: dict, tipo: str, periodo_id: int | None) -> DataFrame:
     if tipo not in FACT_TABLES:
         raise ValueError(f"tipo must be one of {sorted(FACT_TABLES)}")
-    f = tables[FACT_TABLES[tipo]]
+    f = _table(tables, FACT_TABLES[tipo])
     if periodo_id is not None:
         # filter the FACT side pre-join — the J2 ON-clause trap:
         # a post-join WHERE would drop zero-supervision dim rows
@@ -158,7 +180,7 @@ def ranking_grupos(
       promedio DESC NULLS LAST, entidad ASC (tie order is
       display-only — positions are tie-shared either way).
     """
-    g = _active(tables["grupos_operativos"]).select(
+    g = _active(_table(tables, "grupos_operativos")).select(
         F.col("id").alias("grupo_id"),
         F.upper(F.col("nombre")).startswith("PLOG").alias("is_agrup"),
         # the unfiltered aggregate's stricter membership: case-sensitive
@@ -176,7 +198,7 @@ def ranking_grupos(
         g = g.filter(
             F.col("territorio").isin(*_territorio_keep(territorio_filtro))
         )
-    s = _active(tables["sucursales"]).select(
+    s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"),
         F.col("grupo_operativo_id"),
     )
@@ -188,17 +210,26 @@ def ranking_grupos(
     base = g.join(
         s, g.grupo_id == s.grupo_operativo_id, "left"
     ).join(f, s.sucursal_id == f.f_sucursal_id, "left")
-    # per-member-group partials first (branches belong to exactly one
-    # group, so per-group distincts sum exactly across the collapse)
-    per_group = base.groupBy(
-        "grupo_id", "entidad", "is_agrup", "in_like", "territorio"
-    ).agg(
+    # per-(member group, branch) partials, then per-member-group ones
+    # (branches belong to exactly one group, so per-group branch counts
+    # sum exactly across the collapse). Counting branch rows of the
+    # first grain replaces two countDistincts, whose Expand would drop
+    # a one-partition scan's SinglePartition and plan shuffles; the
+    # decimal partial sums stay exact, and a group with no branches
+    # (one NULL sucursal_id row) still counts 0
+    keys = ["grupo_id", "entidad", "is_agrup", "in_like", "territorio"]
+    per_branch = base.groupBy(*keys, "sucursal_id").agg(
         F.sum(F.col("calificacion_general").cast("decimal(18,6)")).alias("sum_calif"),
         F.count("calificacion_general").cast("long").alias("n_calif"),
         F.count("sup_id").cast("long").alias("n_sup"),
-        F.countDistinct("sucursal_id").cast("long").alias("suc_all"),
-        F.countDistinct(
-            F.when(F.col("sup_id").isNotNull(), F.col("sucursal_id"))
+    )
+    per_group = per_branch.groupBy(*keys).agg(
+        F.sum("sum_calif").alias("sum_calif"),
+        F.sum("n_calif").alias("n_calif"),
+        F.sum("n_sup").alias("n_sup"),
+        F.count("sucursal_id").cast("long").alias("suc_all"),
+        F.count(
+            F.when(F.col("n_sup") > 0, F.col("sucursal_id"))
         ).cast("long").alias("suc_con"),
     )
     # which member groups feed the entity-level aggregate: the FILTERED
@@ -289,7 +320,7 @@ def ranking_grupos_members(
     reference's tie loop is exactly competition-rank semantics).
     Entity-level rows are :func:`ranking_grupos`; this is the
     ``grupos`` list of its 'agrupacion' items."""
-    g = _active(tables["grupos_operativos"]).select(
+    g = _active(_table(tables, "grupos_operativos")).select(
         F.col("id").alias("grupo_id"),
         F.col("nombre"),
         F.when(
@@ -297,7 +328,7 @@ def ranking_grupos_members(
         ).alias("entidad"),
         territorio(F.col("nombre")).alias("territorio"),
     ).filter(F.col("entidad").isNotNull())
-    s = _active(tables["sucursales"]).select(
+    s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"), F.col("grupo_operativo_id")
     )
     f = _fact(tables, tipo, periodo_id).select(
@@ -379,7 +410,7 @@ def ranking_sucursales(
     - the COALESCE(clasificacion, 'local') default is display-only
       (app.py:719), applied AFTER filtering.
     """
-    s = _active(tables["sucursales"]).select(
+    s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"),
         F.col("nombre").alias("sucursal"),
         "grupo_operativo_id",
@@ -402,7 +433,7 @@ def ranking_sucursales(
         )
         if col_value is not None:
             s = s.filter(F.col("raw_clasificacion") == col_value)
-    g = tables["grupos_operativos"].select(
+    g = _table(tables, "grupos_operativos").select(
         F.col("id").alias("g_id"), F.col("nombre").alias("grupo")
     )
     f = _fact(tables, tipo, periodo_id).select(
@@ -507,7 +538,7 @@ def heatmap_matrix(
     name, not promedio_general DESC (app.py:1187) — the wide frame is
     re-sorted client-side and a stable key order keeps the gate hash
     deterministic."""
-    g = _active(tables["grupos_operativos"]).select(
+    g = _active(_table(tables, "grupos_operativos")).select(
         F.col("id").alias("grupo_id"), F.col("nombre").alias("grupo")
     )
     # None and 'todas' both mean unfiltered, matching the
@@ -527,12 +558,12 @@ def heatmap_matrix(
                     *_territorio_keep(territorio)
                 )
             )
-    p = tables["periodos_cas"].select(
+    p = _table(tables, "periodos_cas").select(
         F.col("id").alias("periodo_id"),
         F.col("codigo"),
         F.col("fecha_inicio"),
     )
-    s = _active(tables["sucursales"]).select(
+    s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"), "grupo_operativo_id"
     )
     f = _fact(tables, tipo, None).select(
@@ -635,7 +666,7 @@ def kpis(
       with a zero-total guard (app.py:385).
     """
     f = _fact(tables, tipo, periodo_id)
-    f_all = tables[FACT_TABLES[tipo]]
+    f_all = _table(tables, FACT_TABLES[tipo])
     per_agg = f.agg(
         F.coalesce(det_avg(F.col("calificacion_general")), F.lit(0.0)).alias(
             "prom_sel"
@@ -657,10 +688,10 @@ def kpis(
             "promedio_acumulado"
         )
     )
-    tot_s = _active(tables["sucursales"]).agg(
+    tot_s = _active(_table(tables, "sucursales")).agg(
         F.count(F.lit(1)).cast("long").alias("total_sucursales")
     )
-    tot_g = _active(tables["grupos_operativos"]).agg(
+    tot_g = _active(_table(tables, "grupos_operativos")).agg(
         F.count(F.lit(1)).cast("long").alias("total_grupos")
     )
     row = per_agg.crossJoin(acum).crossJoin(tot_s).crossJoin(tot_g)
@@ -709,7 +740,7 @@ def map_markers(
     tests the exact decimal SUM, not the rounded average
     (calificaciones are nonnegative)."""
     s = (
-        _active(tables["sucursales"])
+        _active(_table(tables, "sucursales"))
         .filter(
             F.col("latitud").isNotNull() & F.col("longitud").isNotNull()
         )
@@ -721,7 +752,7 @@ def map_markers(
             F.col("longitud").alias("lng"),
         )
     )
-    g = tables["grupos_operativos"].select(
+    g = _table(tables, "grupos_operativos").select(
         F.col("id").alias("g_id"), F.col("nombre").alias("grupo")
     )
     f = _fact(tables, tipo, periodo_id).select(
@@ -773,13 +804,13 @@ def alerts(
       sucursales with NO s.activo filter — inactive branches' scores
       count toward the group average (app.py:1251-1256).
     """
-    s_all = tables["sucursales"].select(
+    s_all = _table(tables, "sucursales").select(
         F.col("id").alias("sucursal_id"),
         F.col("nombre").alias("s_nombre"),
         "grupo_operativo_id",
         F.coalesce(F.col("activo"), F.lit(False)).alias("s_activo"),
     )
-    g_all = tables["grupos_operativos"].select(
+    g_all = _table(tables, "grupos_operativos").select(
         F.col("id").alias("g_id"),
         F.col("nombre").alias("g_nombre"),
         F.coalesce(F.col("activo"), F.lit(False)).alias("g_activo"),
@@ -904,8 +935,8 @@ def branch_areas(
     latest = branch_latest(tables, sucursal_id, tipo, periodo_id).select(
         F.col("id").alias("supervision_id")
     )
-    detail = tables[detail_name]
-    cat = tables[catalog_name]
+    detail = _table(tables, detail_name)
+    cat = _table(tables, catalog_name)
     return (
         latest.join(detail, "supervision_id")
         .join(F.broadcast(cat), detail[fk] == cat.id)
@@ -923,10 +954,10 @@ def sucursal_info(tables: dict, sucursal_id: int) -> DataFrame:
     """GET /api/sucursal/<id>/<tipo> header block (app.py:829-836):
     the branch row with its group LEFT-joined (no activo filters —
     the detail header shows inactive branches/groups too)."""
-    s = tables["sucursales"].filter(F.col("id") == sucursal_id).select(
+    s = _table(tables, "sucursales").filter(F.col("id") == sucursal_id).select(
         "id", "nombre", "numero", "estado", "ciudad", "grupo_operativo_id"
     )
-    g = tables["grupos_operativos"].select(
+    g = _table(tables, "grupos_operativos").select(
         F.col("id").alias("grupo_id"), F.col("nombre").alias("grupo_nombre")
     )
     return s.join(
@@ -941,7 +972,7 @@ def periodos_list(tables: dict, n: int = 10) -> DataFrame:
     """GET /api/periodos (app.py:307-325): the raw period rows, latest
     n by id DESC (the reference's SELECT * ... ORDER BY id DESC
     LIMIT 10)."""
-    return tables["periodos_cas"].orderBy(F.desc("id")).limit(n)
+    return _table(tables, "periodos_cas").orderBy(F.desc("id")).limit(n)
 
 
 def grupo_detalle_sucursales(
@@ -966,7 +997,7 @@ def grupo_detalle_sucursales(
     - active branches only; ORDER BY promedio DESC.
     """
     s = (
-        _active(tables["sucursales"])
+        _active(_table(tables, "sucursales"))
         .filter(F.col("grupo_operativo_id") == grupo_id)
         .select(F.col("id").alias("sucursal_id"), F.col("nombre"))
     )
@@ -1008,10 +1039,10 @@ def grupo_detalle_stats(
     joins over ALL branches, active or not, ``or 0`` on NULL —
     app.py:772-784), and the branch/supervision totals the reference
     derives from the (active-only) branch table."""
-    g = tables["grupos_operativos"].filter(F.col("id") == grupo_id).select(
+    g = _table(tables, "grupos_operativos").filter(F.col("id") == grupo_id).select(
         F.col("id").alias("gid"), F.col("nombre")
     )
-    s_all = tables["sucursales"].select(
+    s_all = _table(tables, "sucursales").select(
         F.col("id").alias("sucursal_id"), "grupo_operativo_id"
     )
     f = _fact(tables, tipo, periodo_id)
@@ -1065,7 +1096,7 @@ def supervision_header(
     the ``x if x else 0`` score coalescing, and the dd/MM/yyyy date
     label ('-' when NULL)."""
     f = _fact(tables, tipo, None).filter(F.col("id") == supervision_id)
-    p = tables["periodos_cas"].select(
+    p = _table(tables, "periodos_cas").select(
         F.col("id").alias("pid"), F.col("nombre").alias("periodo")
     )
     return f.join(
@@ -1097,10 +1128,10 @@ def supervision_areas_by_id(
             f"tipo must be one of {sorted(SUPERVISION_DETAIL_TABLES)}"
         )
     detail_name, catalog_name, fk, order_col = SUPERVISION_DETAIL_TABLES[tipo]
-    detail = tables[detail_name].filter(
+    detail = _table(tables, detail_name).filter(
         F.col("supervision_id") == supervision_id
     )
-    cat = tables[catalog_name]
+    cat = _table(tables, catalog_name)
     pct = F.coalesce(F.col("porcentaje"), F.lit(0.0))
     return (
         detail.join(F.broadcast(cat), detail[fk] == cat.id)
@@ -1117,7 +1148,7 @@ def supervision_areas_by_id(
 def periodos_with_data(tables: dict, tipo: str = "operativas") -> DataFrame:
     """Periods having supervisions — the reference's GROUP-BY-all-cols
     dedup expressed as a left-semi join (A9, app.py:253-259)."""
-    p = tables["periodos_cas"]
+    p = _table(tables, "periodos_cas")
     f = _fact(tables, tipo, None).select("periodo_id")
     return (
         p.join(f, p.id == f.periodo_id, "left_semi")
@@ -1130,7 +1161,7 @@ def estados(tables: dict) -> DataFrame:
     """GET /api/estados (app.py:327-339): branch counts per state —
     active-only, NULL states excluded (P4 + A8), ordered by estado."""
     return (
-        _active(tables["sucursales"])
+        _active(_table(tables, "sucursales"))
         .filter(F.col("estado").isNotNull())
         .groupBy("estado")
         .agg(F.count(F.lit(1)).cast("long").alias("total"))
@@ -1164,7 +1195,7 @@ def periodo_contexto(tables: dict, tipo: str = "operativas", hoy=None) -> DataFr
     """
     if hoy is None:
         raise ValueError("pass hoy explicitly (the reference's date.today())")
-    p = tables["periodos_cas"].select(
+    p = _table(tables, "periodos_cas").select(
         "id", "codigo", "nombre", "fecha_inicio", "fecha_fin", "activo"
     )
     f = _fact(tables, tipo, None)
@@ -1201,7 +1232,7 @@ def periodo_contexto(tables: dict, tipo: str = "operativas", hoy=None) -> DataFr
     sup = f.groupBy("periodo_id").agg(
         F.countDistinct("sucursal_id").cast("long").alias("supervisadas")
     )
-    tot = _active(tables["sucursales"]).agg(
+    tot = _active(_table(tables, "sucursales")).agg(
         F.count(F.lit(1)).cast("long").alias("n_activas")
     )
     return (
@@ -1231,7 +1262,7 @@ def periodos_selector(tables: dict, n: int = 6) -> DataFrame:
     """The periodo-contexto selector list (app.py:269-274): latest n
     periods by fecha_inicio DESC (id DESC deterministic tiebreak)."""
     return (
-        tables["periodos_cas"]
+        _table(tables, "periodos_cas")
         .select("id", "codigo", "nombre", "fecha_inicio", "fecha_fin")
         .orderBy(F.desc("fecha_inicio"), F.desc("id"))
         .limit(n)
@@ -1247,7 +1278,7 @@ def preview(tables: dict, table_name: str, n: int = 100) -> DataFrame:
     """Admin table preview behind the P9 allowlist (app.py:1310-1318)."""
     if table_name not in PREVIEW_ALLOWLIST:
         raise ValueError(f"table not allowed: {table_name}")
-    return tables[table_name].limit(n)
+    return _table(tables, table_name).limit(n)
 
 
 def set_periodo_activo(tables: dict, periodo_id: int) -> DataFrame:
@@ -1259,7 +1290,7 @@ def set_periodo_activo(tables: dict, periodo_id: int) -> DataFrame:
     everything."""
     from epl_cas_etl_2026_spark.etl.pipeline import set_active_period
 
-    p = tables["periodos_cas"]
+    p = _table(tables, "periodos_cas")
     if p.filter(F.col("id") == periodo_id).limit(1).count() == 0:
         raise ValueError(f"periodo {periodo_id} does not exist")
     return set_active_period(p, periodo_id)

@@ -7,6 +7,7 @@ compare used for the driver gate."""
 from __future__ import annotations
 
 import datetime as dt
+import inspect
 import os
 
 import duckdb
@@ -19,11 +20,15 @@ TS = dt.datetime
 
 
 @pytest.fixture(scope="module")
-def domain(spark, tmp_path_factory):
+def domain_files(spark, tmp_path_factory):
     """Domain tables with the FIXTURES.md traps: PLOG regroup names,
     territory keywords + fallback, inactive dims, NULL clasificacion,
     NULL coords, zero-supervision branches/groups, NULL and 0 scores,
-    exact rank ties, bucket-edge scores (70/80/90)."""
+    exact rank ties, bucket-edge scores (70/80/90).
+
+    Returns the in-memory frames, a DuckDB connection with a view per
+    table, and the directory holding each table as one parquet file
+    (the files the views read)."""
     root = str(tmp_path_factory.mktemp("domain"))
     periodos = spark.createDataFrame(
         [
@@ -157,7 +162,26 @@ def domain(spark, tmp_path_factory):
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}/*.parquet')"
         )
-    return tables, con
+    return tables, con, root
+
+
+def one_split_tables(spark, frames: dict, root: str) -> dict:
+    """The parquet copies of ``frames`` under ``root``, opened with
+    ``spark.read.parquet``: one split per table, the shape of a
+    warehouse the sync job writes."""
+    return {
+        name: spark.read.parquet(os.path.join(root, f"{name}.parquet"))
+        for name in frames
+    }
+
+
+@pytest.fixture(scope="module")
+def domain(domain_files):
+    """The in-memory frames: several partitions per table, so every
+    endpoint keeps its distributed plan (see ``TestOneSplitScans`` for
+    the one-partition plan over the same rows)."""
+    frames, con, _ = domain_files
+    return frames, con
 
 
 # DuckDB twin of functions/scalars.det_avg_sql at 2dp
@@ -907,8 +931,6 @@ def test_api_serves_etl_sync_output(spark, tmp_path):
 
     import datetime as _dt
 
-    from pyspark.sql import functions as F
-
     from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
     from epl_cas_etl_2026_spark.schemas import (
         CATALOGO_SCHEMA,
@@ -953,11 +975,7 @@ def test_api_serves_etl_sync_output(spark, tmp_path):
     tables = {
         "grupos_operativos": grupos,
         "sucursales": sucursales,
-        "supervisiones_operativas": master.withColumn(
-            "id", F.col("surrogate_id")
-        )
-        if "surrogate_id" in master.columns
-        else master,
+        "supervisiones_operativas": master,
     }
     ranked = api.ranking_sucursales(tables, "operativas", periodo_id=1)
     rows = {r.sucursal: r for r in ranked.collect()}
@@ -1034,3 +1052,59 @@ def test_ranking_grupos_members_parity(domain):
     assert rows["PLOG NUEVO LEON"].posicion_interna is None
     assert rows["PLOG NUEVO LEON"].color == "gray"
     assert rows["PLOG NUEVO LEON"].territorio == "local"
+
+
+#: py4j commands that building ranking_grupos may send. Measured 710
+#: over the frames and 679 over the one-split scans; with call-site
+#: capture on (and two countDistincts), 1846
+RANKING_GRUPOS_BUILD_CALLS = 1000
+
+
+def test_ranking_grupos_build_py4j_ceiling(domain, monkeypatch):
+    """Building an endpoint's DataFrame is driver round trips, one py4j
+    command each. With PySpark's DataFrame call-site capture on, every
+    ``functions.*``/Column call adds several (session.py). The cyclic
+    collector stays off while counting: the commands that free JVM
+    objects of unrelated garbage would land in the count at random."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    tables, _ = domain
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counted(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    try:
+        api.ranking_grupos(
+            tables, "operativas", periodo_id=2, territorio_filtro="local"
+        )
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert calls <= RANKING_GRUPOS_BUILD_CALLS, calls
+
+
+class TestOneSplitScans:
+    """Every test above that takes ``domain``, over the parquet copies
+    of the same tables (:func:`one_split_tables`). Each table is one
+    split there, so ``api._table`` plans it as one partition and the
+    endpoints run without shuffles; the module-level runs cover the
+    distributed plan over the in-memory frames."""
+
+    @pytest.fixture(scope="class")
+    def domain(self, spark, domain_files):
+        frames, con, root = domain_files
+        return one_split_tables(spark, frames, root), con
+
+
+for _name, _test in list(globals().items()):
+    if _name.startswith("test_") and "domain" in inspect.signature(_test).parameters:
+        setattr(TestOneSplitScans, _name, staticmethod(_test))

@@ -9,12 +9,14 @@ plan-string snapshots — AQE re-plans freely within them.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import re
 
 import pytest
 
 from epl_cas_etl_2026_spark.plans import QUERIES
+from tests.test_api import domain_files, one_split_tables  # noqa: F401 (fixture)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -477,6 +479,50 @@ def test_heatmap_exchange_budget(spark, sf_smoke):
         .toString()
     )
     assert plan.count("Exchange") <= 8, plan.count("Exchange")
+
+
+#: the dashboard endpoints the perfbench read workload sends, other
+#: than heatmap_matrix, each with every optional filter applied
+_ONE_SPLIT_ENDPOINTS = {
+    "periodo_contexto": {"tipo": "operativas", "hoy": dt.date(2026, 2, 10)},
+    "kpis": {"tipo": "operativas", "periodo_id": 2},
+    "ranking_grupos": {"tipo": "operativas", "periodo_id": 2, "territorio_filtro": "local"},
+    "ranking_sucursales": {"tipo": "operativas", "periodo_id": 2, "territorio_filtro": "local"},
+    "map_markers": {"tipo": "operativas", "periodo_id": 2},
+    "alerts": {"tipo": "seguridad", "periodo_id": 2},
+    "estados": {},
+    "grupo_detalle_stats": {"tipo": "operativas", "periodo_id": 2, "grupo_id": 1},
+    "branch_latest": {"tipo": "operativas", "periodo_id": 2, "sucursal_id": 1},
+    "branch_areas": {"tipo": "seguridad", "periodo_id": 2, "sucursal_id": 1},
+    "supervision_areas_by_id": {"tipo": "operativas", "supervision_id": 2},
+}
+
+
+def _shuffles(df) -> int:
+    """Shuffle Exchanges in the executed plan (BroadcastExchange and
+    reused exchanges are not counted)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\bExchange\b", plan))
+
+
+def test_one_split_tables_plan_no_shuffle(spark, domain_files):
+    """Over one-split tables (the parquet copies of the api domain
+    fixture) every dashboard endpoint but heatmap_matrix plans without
+    a shuffle: api._table plans each scan as one partition, which meets
+    every aggregate, window and sort requirement. The rewrite depends
+    on that precondition, so over the same rows as in-memory frames
+    (as many partitions as cores) ranking_sucursales still shuffles."""
+    from epl_cas_etl_2026_spark import api
+
+    frames, _, root = domain_files
+    scans = one_split_tables(spark, frames, root)
+    shuffles = {
+        name: _shuffles(getattr(api, name)(scans, **kw))
+        for name, kw in _ONE_SPLIT_ENDPOINTS.items()
+    }
+    assert not any(shuffles.values()), shuffles
+    kw = _ONE_SPLIT_ENDPOINTS["ranking_sucursales"]
+    assert _shuffles(api.ranking_sucursales(frames, **kw)) > 0
 
 
 def test_runtime_bloom_filter_injection(spark, sf_oracle):
