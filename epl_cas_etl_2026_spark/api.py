@@ -31,16 +31,20 @@ Semantics preserved from the reference, trap-by-trap:
   is the unweighted mean over group averages per period (A12).
 
 Scale: every table is read through :func:`_table`. A one-split table
-(one parquet file, as the dashboard warehouse's dims and facts are) is
-planned as one partition, so aggregates, windows and sorts over it
-need no shuffle; only heatmap_matrix's grouping sets still shuffle. A
-table with several splits keeps the distributed plan: dims broadcast,
-facts shuffle once per aggregate grain. Every ranking window is
-post-aggregation (entity-grained) and guarded by competition_rank's
-row-count check.
+is planned as one partition, so aggregates, windows and sorts over it
+need no shuffle; only heatmap_matrix's grouping sets still shuffle.
+One split means one small parquet file: perfbench's generated
+warehouse, or a sync sink after its first run. The sync job writes one
+file per sink per run, so from the second run on its sinks have
+several splits. A table with several splits keeps the distributed
+plan: dims broadcast, facts shuffle once per aggregate grain. Every
+ranking window is post-aggregation (entity-grained) and guarded by
+competition_rank's row-count check.
 """
 
 from __future__ import annotations
+
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -77,6 +81,10 @@ PREVIEW_ALLOWLIST = frozenset(
 )
 
 
+#: table frame -> whether its scan is one split (see :func:`_table`)
+_ONE_SPLIT: WeakKeyDictionary = WeakKeyDictionary()
+
+
 def _table(tables: dict, name: str) -> DataFrame:
     """``tables[name]``, planned as ONE partition when it already is one.
 
@@ -87,11 +95,16 @@ def _table(tables: dict, name: str) -> DataFrame:
     meets every aggregate, window and sort requirement above it, so no
     shuffle Exchange is planned over the table. Filters and column
     pruning still push through it into the scan. A table with several
-    splits comes back unchanged and keeps its shuffles."""
+    splits comes back unchanged and keeps its shuffles.
+
+    The split count is read once per table frame (``DataFrame.rdd`` is
+    not cached, and each read costs several py4j round trips), so a
+    caller that keeps its table frames across requests pays it once."""
     df = tables[name]
-    if df.rdd.getNumPartitions() == 1:
-        return df.coalesce(1)
-    return df
+    one_split = _ONE_SPLIT.get(df)
+    if one_split is None:
+        one_split = _ONE_SPLIT[df] = df.rdd.getNumPartitions() == 1
+    return df.coalesce(1) if one_split else df
 
 
 def _fact(tables: dict, tipo: str, periodo_id: int | None) -> DataFrame:

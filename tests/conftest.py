@@ -76,9 +76,12 @@ _GATE_MODULES = {
     # would pass it (21 tests, ~70 s at 4 cores)
     "test_etl_pipeline",
     # the dashboard endpoints' DuckDB parity tests: without them no
-    # endpoint-vs-oracle check runs in the default tier (22 tests,
-    # ~2 min at 4 cores)
+    # endpoint-vs-oracle check runs in the default tier (23 tests,
+    # ~105 s at 4 cores)
     "test_api",
+    # the same endpoint tests over one-split tables, whose plans hold
+    # no shuffle (22 tests, ~60 s at 4 cores)
+    "test_api_one_split",
 }
 
 

@@ -7,7 +7,6 @@ compare used for the driver gate."""
 from __future__ import annotations
 
 import datetime as dt
-import inspect
 import os
 
 import duckdb
@@ -168,20 +167,28 @@ def domain_files(spark, tmp_path_factory):
 def one_split_tables(spark, frames: dict, root: str) -> dict:
     """The parquet copies of ``frames`` under ``root``, opened with
     ``spark.read.parquet``: one split per table, the shape of a
-    warehouse the sync job writes."""
+    one-file warehouse (perfbench's, or a sync sink after one run)."""
     return {
         name: spark.read.parquet(os.path.join(root, f"{name}.parquet"))
         for name in frames
     }
 
 
+def multi_split_tables(frames: dict) -> dict:
+    """``frames`` with two partitions each, whatever the session's core
+    count, so every endpoint keeps its distributed plan."""
+    return {name: df.repartition(2) for name, df in frames.items()}
+
+
 @pytest.fixture(scope="module")
 def domain(domain_files):
-    """The in-memory frames: several partitions per table, so every
-    endpoint keeps its distributed plan (see ``TestOneSplitScans`` for
-    the one-partition plan over the same rows)."""
+    """The tables as in-memory frames of two partitions each, so every
+    endpoint keeps its distributed plan. ``test_api_one_split`` runs
+    the tests of this module that take ``domain`` again over the
+    one-file parquet copies, which ``api._table`` plans as one
+    partition."""
     frames, con, _ = domain_files
-    return frames, con
+    return multi_split_tables(frames), con
 
 
 # DuckDB twin of functions/scalars.det_avg_sql at 2dp
@@ -1054,8 +1061,8 @@ def test_ranking_grupos_members_parity(domain):
     assert rows["PLOG NUEVO LEON"].territorio == "local"
 
 
-#: py4j commands that building ranking_grupos may send. Measured 710
-#: over the frames and 679 over the one-split scans; with call-site
+#: py4j commands that building ranking_grupos may send. Measured 707
+#: over the frames and 680 over the one-split scans; with call-site
 #: capture on (and two countDistincts), 1846
 RANKING_GRUPOS_BUILD_CALLS = 1000
 
@@ -1091,20 +1098,3 @@ def test_ranking_grupos_build_py4j_ceiling(domain, monkeypatch):
         gc.enable()
     assert calls <= RANKING_GRUPOS_BUILD_CALLS, calls
 
-
-class TestOneSplitScans:
-    """Every test above that takes ``domain``, over the parquet copies
-    of the same tables (:func:`one_split_tables`). Each table is one
-    split there, so ``api._table`` plans it as one partition and the
-    endpoints run without shuffles; the module-level runs cover the
-    distributed plan over the in-memory frames."""
-
-    @pytest.fixture(scope="class")
-    def domain(self, spark, domain_files):
-        frames, con, root = domain_files
-        return one_split_tables(spark, frames, root), con
-
-
-for _name, _test in list(globals().items()):
-    if _name.startswith("test_") and "domain" in inspect.signature(_test).parameters:
-        setattr(TestOneSplitScans, _name, staticmethod(_test))

@@ -16,7 +16,11 @@ import re
 import pytest
 
 from epl_cas_etl_2026_spark.plans import QUERIES
-from tests.test_api import domain_files, one_split_tables  # noqa: F401 (fixture)
+from tests.test_api import (  # noqa: F401 (domain_files is a fixture)
+    domain_files,
+    multi_split_tables,
+    one_split_tables,
+)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -510,8 +514,8 @@ def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     fixture) every dashboard endpoint but heatmap_matrix plans without
     a shuffle: api._table plans each scan as one partition, which meets
     every aggregate, window and sort requirement. The rewrite depends
-    on that precondition, so over the same rows as in-memory frames
-    (as many partitions as cores) ranking_sucursales still shuffles."""
+    on that precondition, so over the same rows as in-memory frames of
+    two partitions ranking_sucursales still shuffles."""
     from epl_cas_etl_2026_spark import api
 
     frames, _, root = domain_files
@@ -522,7 +526,7 @@ def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     }
     assert not any(shuffles.values()), shuffles
     kw = _ONE_SPLIT_ENDPOINTS["ranking_sucursales"]
-    assert _shuffles(api.ranking_sucursales(frames, **kw)) > 0
+    assert _shuffles(api.ranking_sucursales(multi_split_tables(frames), **kw)) > 0
 
 
 def test_runtime_bloom_filter_injection(spark, sf_oracle):
