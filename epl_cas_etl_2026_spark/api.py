@@ -31,13 +31,17 @@ Semantics preserved from the reference, trap-by-trap:
   is the unweighted mean over group averages per period (A12).
 
 Scale: every table is read through :func:`_table`. A one-split table
-is planned as one partition, so aggregates, windows and sorts over it
-need no shuffle; only heatmap_matrix's grouping sets still shuffle.
-One split means one small parquet file: perfbench's generated
-warehouse, or a sync sink after its first run. The sync job writes one
-file per sink per run, so from the second run on its sinks have
-several splits. A table with several splits keeps the distributed
-plan: dims broadcast, facts shuffle once per aggregate grain. Every
+is served from an in-memory snapshot of that frame, planned as one
+partition, so aggregates, windows and sorts over it need no shuffle
+and a request re-reads no file. One split means one small parquet
+file: perfbench's generated warehouse, or a sync sink after its first
+run. The sync job writes one file per sink per run, so from the second
+run on its sinks have several splits. A table with several splits
+keeps the distributed plan: dims broadcast, facts shuffle once per
+aggregate grain. The snapshot lives as long as the caller's frame and
+holds about 7x the table's parquet bytes in executor storage memory;
+a caller that opens its tables once per request (``plans/domain_api``)
+pays one full-column read per frame instead of a pruned scan. Every
 ranking window is post-aggregation (entity-grained) and guarded by
 competition_rank's row-count check.
 """
@@ -46,7 +50,7 @@ from __future__ import annotations
 
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.scalars import (
@@ -58,7 +62,6 @@ from epl_cas_etl_2026_spark.functions.scalars import (
 )
 from epl_cas_etl_2026_spark.functions.scalars import territorio as territorio_col
 from epl_cas_etl_2026_spark.operators.ranking import competition_rank
-from epl_cas_etl_2026_spark.operators.reshape import pivot_matrix
 
 FACT_TABLES = {
     "operativas": "supervisiones_operativas",
@@ -81,30 +84,52 @@ PREVIEW_ALLOWLIST = frozenset(
 )
 
 
-#: table frame -> whether its scan is one split (see :func:`_table`)
-_ONE_SPLIT: WeakKeyDictionary = WeakKeyDictionary()
+#: table frame -> the frame a request reads: its snapshot when the
+#: table is one split, else None (see :func:`_table`)
+_SERVED: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _table(tables: dict, name: str) -> DataFrame:
-    """``tables[name]``, planned as ONE partition when it already is one.
+    """``tables[name]``, served from an in-memory snapshot when its scan
+    is one split.
 
-    Precondition for the rewrite: the table's scan has exactly one
-    split (``getNumPartitions() == 1``, the same test
-    ``sources.parquet.spread_scan`` makes). Then ``coalesce(1)`` moves
-    no row and keeps row order, but its ``SinglePartition`` output
-    meets every aggregate, window and sort requirement above it, so no
-    shuffle Exchange is planned over the table. Filters and column
-    pruning still push through it into the scan. A table with several
-    splits comes back unchanged and keeps its shuffles.
+    Precondition: the table's scan has exactly one split
+    (``getNumPartitions() == 1``, the same test
+    ``sources.parquet.spread_scan`` makes). Then the frame is served
+    from ``coalesce(1).localCheckpoint(eager=False)`` of itself:
 
-    The split count is read once per table frame (``DataFrame.rdd`` is
-    not cached, and each read costs several py4j round trips), so a
-    caller that keeps its table frames across requests pays it once."""
+    - ``coalesce(1)`` moves no row and keeps row order, and its
+      ``SinglePartition`` output meets every aggregate, window and sort
+      requirement, so no shuffle Exchange is planned over the table.
+      The checkpoint keeps that partitioning and the table's size
+      statistics, so broadcast choices are unchanged.
+    - The checkpoint is lazy: the first request that reads the table
+      stores its rows (all columns, deserialized) inside its own job,
+      and later requests read them from memory instead of decoding the
+      file again.
+    - It is memoized per table frame, in a weak-keyed dict, so it lives
+      exactly as long as the caller's frame; Spark's ContextCleaner
+      drops its blocks once the frame and every result built on it are
+      garbage in Python and in the JVM (where the scan's objects go
+      only after a finalization pass). A frame opened later over the same path gets its own
+      snapshot, so a file rewritten between the two opens is read anew
+      (``cache()`` would match the new frame to the old one's blocks by
+      path and serve the old rows).
+
+    A table with several splits comes back unchanged and keeps its
+    shuffles. The split count is read once per table frame
+    (``DataFrame.rdd`` is not cached, and each read costs several py4j
+    round trips), so a caller that keeps its table frames across
+    requests pays it once."""
     df = tables[name]
-    one_split = _ONE_SPLIT.get(df)
-    if one_split is None:
-        one_split = _ONE_SPLIT[df] = df.rdd.getNumPartitions() == 1
-    return df.coalesce(1) if one_split else df
+    if df not in _SERVED:
+        _SERVED[df] = (
+            df.coalesce(1).localCheckpoint(eager=False)
+            if df.rdd.getNumPartitions() == 1
+            else None
+        )
+    served = _SERVED[df]
+    return df if served is None else served
 
 
 def _fact(tables: dict, tipo: str, periodo_id: int | None) -> DataFrame:
@@ -572,9 +597,7 @@ def heatmap_matrix(
                 )
             )
     p = _table(tables, "periodos_cas").select(
-        F.col("id").alias("periodo_id"),
-        F.col("codigo"),
-        F.col("fecha_inicio"),
+        F.col("id").alias("periodo_id"), "codigo"
     )
     s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"), "grupo_operativo_id"
@@ -585,9 +608,8 @@ def heatmap_matrix(
     cell = (
         f.join(s, "sucursal_id")
         .join(g, s.grupo_operativo_id == g.grupo_id)
-        # explicit broadcasts: inside a persisted subtree Catalyst
-        # plans without AQE's runtime stats, and the 3-row periodos
-        # dim was observed to fall back to a sort-merge join
+        # the periodos dim is a handful of rows; the hint keeps the join
+        # a broadcast where its frame carries no size statistics
         .join(F.broadcast(p), "periodo_id")
         .groupBy("grupo", "codigo")
         .agg(det_avg(F.col("calificacion_general")).alias("promedio"))
@@ -597,64 +619,72 @@ def heatmap_matrix(
     # CROSS JOIN (app.py:1141-1151) and hangs facts on it; a facts-only
     # matrix would silently drop never-supervised groups
     grid = g.select("grupo").crossJoin(p.select("codigo"))
-    dense = grid.join(cell, ["grupo", "codigo"], "left")
-    # ONE grouping-sets pass over the densified matrix replaces the
-    # three separate consumers (pivot cells, per-group overall, EPL
-    # row) — the fact aggregation runs once and the dim-grained frame
-    # shuffles once instead of three times (measured 19 → 5
-    # executed-plan exchanges at domain scale, hash-identical):
-    #   gid 0 = (grupo, codigo): the matrix cells (pivot input);
-    #   gid 1 = (grupo): per-group overall — A11, the unweighted mean
-    #           of that group's period averages (NULL cells skipped;
-    #           a never-supervised group keeps a NULL overall);
-    #   gid 2 = (codigo): the EPL CAS row — A12, the unweighted mean
-    #           over group averages per period.
-    # localCheckpoint (lazy), NOT persist: three downstream branches
-    # read marg; blocks release when the frame is garbage-collected,
-    # so repeated invocations don't accumulate cache entries the way
-    # .persist() would (the sync_job precedent); the frame is
-    # ~4×|groups|×|periods| rows.
-    marg = (
-        dense.groupingSets(
-            [["grupo", "codigo"], ["grupo"], ["codigo"]],
-            "grupo",
-            "codigo",
-        )
-        .agg(
-            det_avg(F.col("promedio")).alias("promedio"),
-            F.grouping_id().alias("gid"),
-        )
-        .localCheckpoint(eager=False)
+    dense = grid.join(F.broadcast(cell), ["grupo", "codigo"], "left")
+    # one lineage from the densified matrix to the pivot, no union and
+    # no pin: the EPL CAS row (A12, the unweighted mean over group
+    # averages per period) is a window over codigo, emitted once per
+    # period beside that period's first group row; the per-group
+    # overall (A11, the unweighted mean of a row's period averages, NULL
+    # cells skipped) is then one window over grupo, which covers the
+    # EPL row too — the reference accumulates epl_cas from the already
+    # averaged period entries (app.py:1190-1196)
+    by_code = Window.partitionBy("codigo")
+    per_code = dense.select(
+        "grupo",
+        "codigo",
+        "promedio",
+        _det_avg_over(F.col("promedio"), by_code).alias("epl"),
+        (F.row_number().over(by_code.orderBy("grupo")) == 1).alias("is_first"),
     )
-    cells = marg.filter(F.col("gid") == 0).select(
-        "grupo", "codigo", "promedio"
+    row = F.struct(F.col("grupo"), F.col("promedio"))
+    epl = F.struct(
+        F.lit("EPL CAS").alias("grupo"), F.col("epl").alias("promedio")
     )
-    epl_p = marg.filter(F.col("gid") == 2).select(
-        F.lit("EPL CAS").alias("grupo"), "codigo", "promedio"
+    long_df = per_code.select(
+        "codigo",
+        F.explode(
+            F.when(F.col("is_first"), F.array(row, epl)).otherwise(
+                F.array(row)
+            )
+        ).alias("r"),
+    ).select("r.grupo", "codigo", "r.promedio")
+    overall = _det_avg_over(F.col("promedio"), Window.partitionBy("grupo"))
+    # A10: explicit pivot values (the period codes, by fecha_inicio)
+    # spare Spark the distinct-values job it otherwise runs
+    codes = _period_codes(tables)
+    return (
+        long_df.withColumn("promedio_general", overall)
+        .groupBy("grupo", "promedio_general")
+        .pivot("codigo", codes)
+        .agg(F.first("promedio"))
+        .select("grupo", *codes, "promedio_general")
+        .orderBy("grupo")
     )
-    # the EPL row's own overall is the mean of ITS period values —
-    # the reference accumulates epl_cas from the already-averaged
-    # period entries (app.py:1190-1196); |periods| rows
-    epl_overall = epl_p.groupBy("grupo").agg(
-        det_avg(F.col("promedio")).alias("promedio_general")
-    )
-    long_df = cells.unionByName(epl_p)
-    codes = [
-        r.codigo
-        for r in p.orderBy("fecha_inicio", "codigo").collect()
-    ]
-    wide = pivot_matrix(
-        long_df, row_key="grupo", col_key="codigo",
-        value_col="promedio", col_values=codes,
-    )
-    overall = marg.filter(F.col("gid") == 1).select(
-        "grupo", F.col("promedio").alias("promedio_general")
-    ).unionByName(epl_overall)
-    # both sides are entity-grained (|groups|+1 rows); broadcast keeps
-    # the final join shuffle-free (without the hint the checkpointed
-    # marg frame hides cardinality from AQE and Catalyst picks a
-    # sort-merge)
-    return wide.join(F.broadcast(overall), "grupo").orderBy("grupo")
+
+
+def _det_avg_over(c: Column, w: WindowSpec) -> Column:
+    """:func:`det_avg` as a window function: the same exact decimal
+    average, rounded HALF_UP to 2dp."""
+    return F.round(F.avg(c.cast("decimal(18,6)")).over(w), 2).cast("double")
+
+
+#: periodos_cas frame -> its period codes ordered by fecha_inicio, the
+#: heatmap's column order; kept per frame like :data:`_SERVED`, so a
+#: request collects nothing while its frame is built
+_PERIOD_CODES: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def _period_codes(tables: dict) -> list:
+    df = tables["periodos_cas"]
+    if df not in _PERIOD_CODES:
+        _PERIOD_CODES[df] = [
+            r.codigo
+            for r in _table(tables, "periodos_cas")
+            .orderBy("fecha_inicio", "codigo")
+            .select("codigo")
+            .collect()
+        ]
+    return _PERIOD_CODES[df]
 
 
 def kpis(
@@ -805,7 +835,7 @@ def alerts(
 ) -> DataFrame:
     """GET /api/alertas/<tipo> (app.py:1215-1280): critical branches
     (avg < 70) and warning groups (70 <= avg < 80) — the A7 HAVING
-    shape, labeled and unioned (U1).
+    shape, the two levels (U1) labeled in one aggregate over one join.
 
     Join/filter placement mirrors the reference exactly:
 
@@ -831,35 +861,47 @@ def alerts(
     f = _fact(tables, tipo, periodo_id).select(
         "sucursal_id", "calificacion_general"
     )
-    branch_avg = (
-        f.join(s_all.filter("s_activo"), "sucursal_id")
-        .join(g_all, F.col("grupo_operativo_id") == F.col("g_id"))
-        .groupBy("sucursal_id", "s_nombre")
-        .agg(det_avg(F.col("calificacion_general")).alias("promedio"))
-    )
-    critical = branch_avg.filter(F.col("promedio") < 70).select(
-        F.lit("critico").alias("nivel"),
-        F.col("s_nombre").alias("entidad"),
-        F.col("promedio"),
-    )
-    group_avg = (
-        f.join(s_all, "sucursal_id")
-        .join(
-            g_all.filter("g_activo"),
-            F.col("grupo_operativo_id") == F.col("g_id"),
+    # both halves inner-join fact, branch and group, so ONE join feeds
+    # them; each row then feeds the levels its activo flags admit: a
+    # critical branch needs an active branch (any group), a warning
+    # group an active group (any branch)
+    level = F.explode(
+        F.array(
+            F.when(
+                F.col("s_activo"),
+                F.struct(
+                    F.lit("critico").alias("nivel"),
+                    F.col("sucursal_id").alias("key"),
+                    F.col("s_nombre").alias("entidad"),
+                ),
+            ),
+            F.when(
+                F.col("g_activo"),
+                F.struct(
+                    F.lit("advertencia").alias("nivel"),
+                    F.col("g_id").alias("key"),
+                    F.col("g_nombre").alias("entidad"),
+                ),
+            ),
         )
-        .groupBy("g_id", "g_nombre")
+    ).alias("lv")
+    avg = (
+        f.join(s_all, "sucursal_id")
+        .join(g_all, F.col("grupo_operativo_id") == F.col("g_id"))
+        .select(level, "calificacion_general")
+        .filter(F.col("lv").isNotNull())
+        .select("lv.*", "calificacion_general")
+        .groupBy("nivel", "key", "entidad")
         .agg(det_avg(F.col("calificacion_general")).alias("promedio"))
     )
-    warning = group_avg.filter(
-        (F.col("promedio") >= 70) & (F.col("promedio") < 80)
-    ).select(
-        F.lit("advertencia").alias("nivel"),
-        F.col("g_nombre").alias("entidad"),
-        F.col("promedio"),
+    p = F.col("promedio")
+    in_band = F.when(F.col("nivel") == "critico", p < 70).otherwise(
+        (p >= 70) & (p < 80)
     )
-    return critical.unionByName(warning).orderBy(
-        "nivel", "promedio", "entidad"
+    return (
+        avg.filter(in_band)
+        .select("nivel", "entidad", "promedio")
+        .orderBy("nivel", "promedio", "entidad")
     )
 
 

@@ -82,6 +82,9 @@ _GATE_MODULES = {
     # the same endpoint tests over one-split tables, whose plans hold
     # no shuffle (22 tests, ~60 s at 4 cores)
     "test_api_one_split",
+    # the lifetime of the snapshot one-split tables are served from
+    # (3 tests)
+    "test_api_snapshot",
 }
 
 

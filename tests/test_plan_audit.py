@@ -468,10 +468,11 @@ def test_ols_single_scan_pruned(spark, sf_oracle):
 
 
 def test_heatmap_exchange_budget(spark, sf_smoke):
-    """r6 dashboard-latency item: the grouping-sets collapse keeps
-    heatmap_matrix at ONE dim-grained shuffle for all three consumers
-    (cells / per-group overall / EPL row) — executed-plan Exchange
-    count <= 8 at domain scale (the three-consumer shape measured 19)."""
+    """heatmap_matrix is one lineage from the densified matrix to the
+    pivot: the EPL CAS row and the per-group overall are two windows
+    over it, not separate consumers of a pinned subtree — executed-plan
+    Exchange count <= 8 at domain scale (a three-consumer shape measured
+    19)."""
     from epl_cas_etl_2026_spark import api
     from epl_cas_etl_2026_spark.plans.domain_api import domain_tables
 
@@ -485,8 +486,8 @@ def test_heatmap_exchange_budget(spark, sf_smoke):
     assert plan.count("Exchange") <= 8, plan.count("Exchange")
 
 
-#: the dashboard endpoints the perfbench read workload sends, other
-#: than heatmap_matrix, each with every optional filter applied
+#: the 12 dashboard endpoints the perfbench read workload sends, each
+#: with every optional filter applied
 _ONE_SPLIT_ENDPOINTS = {
     "periodo_contexto": {"tipo": "operativas", "hoy": dt.date(2026, 2, 10)},
     "kpis": {"tipo": "operativas", "periodo_id": 2},
@@ -495,6 +496,7 @@ _ONE_SPLIT_ENDPOINTS = {
     "map_markers": {"tipo": "operativas", "periodo_id": 2},
     "alerts": {"tipo": "seguridad", "periodo_id": 2},
     "estados": {},
+    "heatmap_matrix": {"tipo": "operativas", "territorio": "local"},
     "grupo_detalle_stats": {"tipo": "operativas", "periodo_id": 2, "grupo_id": 1},
     "branch_latest": {"tipo": "operativas", "periodo_id": 2, "sucursal_id": 1},
     "branch_areas": {"tipo": "seguridad", "periodo_id": 2, "sucursal_id": 1},
@@ -511,8 +513,8 @@ def _shuffles(df) -> int:
 
 def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     """Over one-split tables (the parquet copies of the api domain
-    fixture) every dashboard endpoint but heatmap_matrix plans without
-    a shuffle: api._table plans each scan as one partition, which meets
+    fixture) every dashboard endpoint plans without a shuffle:
+    api._table serves each table as one partition, which meets
     every aggregate, window and sort requirement. The rewrite depends
     on that precondition, so over the same rows as in-memory frames of
     two partitions ranking_sucursales still shuffles."""
@@ -527,6 +529,34 @@ def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     assert not any(shuffles.values()), shuffles
     kw = _ONE_SPLIT_ENDPOINTS["ranking_sucursales"]
     assert _shuffles(api.ranking_sucursales(multi_split_tables(frames), **kw)) > 0
+
+
+def test_second_build_launches_no_job(spark, domain_files):
+    """Over one-split tables, once every endpoint has served a request,
+    building any endpoint's DataFrame again launches no Spark job: the
+    table snapshots are lazy, and heatmap_matrix's period codes are
+    kept per periodos_cas frame. The benchmark's
+    ``api.build_jobs_per_req`` reads the same job-group count."""
+    from epl_cas_etl_2026_spark import api
+
+    frames, _, root = domain_files
+    scans = one_split_tables(spark, frames, root)
+    for name, kw in _ONE_SPLIT_ENDPOINTS.items():
+        getattr(api, name)(scans, **kw).collect()
+    sc = spark.sparkContext
+    for name, kw in _ONE_SPLIT_ENDPOINTS.items():
+        sc.setJobGroup(f"build-{name}", "second build")
+        try:
+            getattr(api, name)(scans, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {
+        name: len(tracker.getJobIdsForGroup(f"build-{name}"))
+        for name in _ONE_SPLIT_ENDPOINTS
+    }
+    assert not any(jobs.values()), jobs
 
 
 def test_runtime_bloom_filter_injection(spark, sf_oracle):
