@@ -31,26 +31,32 @@ Semantics preserved from the reference, trap-by-trap:
   is the unweighted mean over group averages per period (A12).
 
 Scale: every table is read through :func:`_table`. A one-split table
-is served from an in-memory snapshot of that frame, planned as one
-partition, so aggregates, windows and sorts over it need no shuffle
-and a request re-reads no file. One split means one small parquet
-file: perfbench's generated warehouse, or a sync sink after its first
-run. The sync job writes one file per sink per run, so from the second
-run on its sinks have several splits. A table with several splits
-keeps the distributed plan: dims broadcast, facts shuffle once per
-aggregate grain. The snapshot lives as long as the caller's frame and
-holds about 7x the table's parquet bytes in executor storage memory;
-a caller that opens its tables once per request (``plans/domain_api``)
-pays one full-column read per frame instead of a pruned scan. Every
-ranking window is post-aggregation (entity-grained) and guarded by
-competition_rank's row-count check.
+is planned as one partition, so aggregates, windows and sorts over it
+need no shuffle. One split means one small parquet file: perfbench's
+generated warehouse, or a sync sink after its first run. The sync job
+writes one file per sink per run, so from the second run on its sinks
+have several splits. A table with several splits keeps the distributed
+plan: dims broadcast, facts shuffle once per aggregate grain. A
+one-split table frame that a second request reads, and whose scan is
+at most :data:`SNAPSHOT_MAX_BYTES`, is from then on served from an
+in-memory snapshot, so a caller that keeps its table frames across
+requests re-reads no file. The snapshot lives as long as that frame
+and holds about 7x the table's parquet bytes in executor storage
+memory. A caller that opens its tables once per request
+(``plans/domain_api``) never snapshots: each request reads its pruned,
+filter-pushed scan and nothing is retained. Every ranking window is
+post-aggregation (entity-grained) and guarded by competition_rank's
+row-count check.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
+import threading
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.scalars import (
@@ -84,37 +90,73 @@ PREVIEW_ALLOWLIST = frozenset(
 )
 
 
-#: table frame -> the frame a request reads: its snapshot when the
-#: table is one split, else None (see :func:`_table`)
+#: the largest scan, in bytes of its files, that :func:`_table` keeps an
+#: in-memory snapshot of; the snapshot takes about 7x that in executor
+#: storage memory. perfbench's largest generated table is 2.3 MB.
+SNAPSHOT_MAX_BYTES = 8 << 20
+
+#: table frame -> [the frame requests read, None when that is the
+#: table frame itself; the request that first read it, None once no
+#: snapshot is due] (see :func:`_table`)
 _SERVED: WeakKeyDictionary = WeakKeyDictionary()
+
+#: the request the current thread is building, if any
+_CURRENT = threading.local()
+_REQUEST_IDS = itertools.count()
+
+
+def _request(endpoint):
+    """Mark ``endpoint`` as a request: every table it reads, also
+    through endpoints it calls, is read by one request (see
+    :func:`_table`)."""
+
+    @functools.wraps(endpoint)
+    def request(*args, **kwargs):
+        if getattr(_CURRENT, "request", None) is not None:
+            return endpoint(*args, **kwargs)
+        _CURRENT.request = next(_REQUEST_IDS)
+        try:
+            return endpoint(*args, **kwargs)
+        finally:
+            _CURRENT.request = None
+
+    return request
 
 
 def _table(tables: dict, name: str) -> DataFrame:
-    """``tables[name]``, served from an in-memory snapshot when its scan
-    is one split.
+    """``tables[name]`` as a request reads it: one partition when its
+    scan is one split, and from an in-memory snapshot once a second
+    request reads the same frame.
 
     Precondition: the table's scan has exactly one split
     (``getNumPartitions() == 1``, the same test
-    ``sources.parquet.spread_scan`` makes). Then the frame is served
-    from ``coalesce(1).localCheckpoint(eager=False)`` of itself:
+    ``sources.parquet.spread_scan`` makes). Then:
 
-    - ``coalesce(1)`` moves no row and keeps row order, and its
-      ``SinglePartition`` output meets every aggregate, window and sort
-      requirement, so no shuffle Exchange is planned over the table.
-      The checkpoint keeps that partitioning and the table's size
-      statistics, so broadcast choices are unchanged.
-    - The checkpoint is lazy: the first request that reads the table
-      stores its rows (all columns, deserialized) inside its own job,
-      and later requests read them from memory instead of decoding the
-      file again.
-    - It is memoized per table frame, in a weak-keyed dict, so it lives
-      exactly as long as the caller's frame; Spark's ContextCleaner
-      drops its blocks once the frame and every result built on it are
-      garbage in Python and in the JVM (where the scan's objects go
-      only after a finalization pass). A frame opened later over the same path gets its own
-      snapshot, so a file rewritten between the two opens is read anew
-      (``cache()`` would match the new frame to the old one's blocks by
-      path and serve the old rows).
+    - The first request reads ``coalesce(1)`` of the frame. It moves no
+      row and keeps row order, and its ``SinglePartition`` output meets
+      every aggregate, window and sort requirement, so no shuffle
+      Exchange is planned over the table. Its scan stays pruned to the
+      columns the request reads, with filters pushed down.
+    - A later request over the same frame reads
+      ``coalesce(1).localCheckpoint(eager=False)`` of it, when the scan
+      is at most :data:`SNAPSHOT_MAX_BYTES`. The checkpoint keeps the
+      partitioning and the table's size statistics, so plans and
+      broadcast choices are unchanged. It is lazy: the request that
+      first reads it stores the table's rows (all columns,
+      deserialized) inside its own job, and every request after it
+      reads them from memory instead of decoding the file again.
+      Waiting for a second request keeps the snapshot to callers that
+      keep their frames: a caller that opens its tables per request
+      pays no full-column read and leaves nothing in storage.
+    - The entry is memoized per table frame, in a weak-keyed dict, so
+      the snapshot lives exactly as long as the caller's frame; Spark's
+      ContextCleaner drops its blocks once the frame and every result
+      built on it are garbage in Python and in the JVM (where the
+      scan's objects go only after a finalization pass). A frame
+      opened later over the same path gets its own entry, so a file
+      rewritten between the two opens is read anew (``cache()`` would
+      match the new frame to the old one's blocks by path and serve
+      the old rows).
 
     A table with several splits comes back unchanged and keeps its
     shuffles. The split count is read once per table frame
@@ -122,14 +164,22 @@ def _table(tables: dict, name: str) -> DataFrame:
     round trips), so a caller that keeps its table frames across
     requests pays it once."""
     df = tables[name]
-    if df not in _SERVED:
-        _SERVED[df] = (
-            df.coalesce(1).localCheckpoint(eager=False)
-            if df.rdd.getNumPartitions() == 1
-            else None
-        )
-    served = _SERVED[df]
-    return df if served is None else served
+    request = getattr(_CURRENT, "request", None)
+    if request is None:
+        # outside an endpoint: each read is a request of its own
+        request = next(_REQUEST_IDS)
+    entry = _SERVED.get(df)
+    if entry is None:
+        # the entry must not refer to df, or its weak key never dies
+        one_split = df.rdd.getNumPartitions() == 1
+        entry = _SERVED[df] = [df.coalesce(1), request] if one_split else [None, None]
+    if entry[1] not in (None, request):
+        one = entry[0]
+        size = one._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if size <= SNAPSHOT_MAX_BYTES:
+            entry[0] = one.localCheckpoint(eager=False)
+        entry[1] = None
+    return df if entry[0] is None else entry[0]
 
 
 def _fact(tables: dict, tipo: str, periodo_id: int | None) -> DataFrame:
@@ -164,6 +214,7 @@ def _territorio_keep(filtro: str) -> tuple:
     return keep
 
 
+@_request
 def ranking_grupos(
     tables: dict,
     tipo: str = "operativas",
@@ -346,6 +397,7 @@ def ranking_grupos(
     )
 
 
+@_request
 def ranking_grupos_members(
     tables: dict,
     tipo: str = "operativas",
@@ -425,6 +477,7 @@ def ranking_grupos_members(
     )
 
 
+@_request
 def ranking_sucursales(
     tables: dict,
     tipo: str = "operativas",
@@ -551,6 +604,7 @@ def ranking_sucursales(
     )
 
 
+@_request
 def heatmap_matrix(
     tables: dict,
     tipo: str = "operativas",
@@ -633,7 +687,7 @@ def heatmap_matrix(
         "grupo",
         "codigo",
         "promedio",
-        _det_avg_over(F.col("promedio"), by_code).alias("epl"),
+        det_avg(F.col("promedio"), over=by_code).alias("epl"),
         (F.row_number().over(by_code.orderBy("grupo")) == 1).alias("is_first"),
     )
     row = F.struct(F.col("grupo"), F.col("promedio"))
@@ -648,7 +702,7 @@ def heatmap_matrix(
             )
         ).alias("r"),
     ).select("r.grupo", "codigo", "r.promedio")
-    overall = _det_avg_over(F.col("promedio"), Window.partitionBy("grupo"))
+    overall = det_avg(F.col("promedio"), over=Window.partitionBy("grupo"))
     # A10: explicit pivot values (the period codes, by fecha_inicio)
     # spare Spark the distinct-values job it otherwise runs
     codes = _period_codes(tables)
@@ -660,12 +714,6 @@ def heatmap_matrix(
         .select("grupo", *codes, "promedio_general")
         .orderBy("grupo")
     )
-
-
-def _det_avg_over(c: Column, w: WindowSpec) -> Column:
-    """:func:`det_avg` as a window function: the same exact decimal
-    average, rounded HALF_UP to 2dp."""
-    return F.round(F.avg(c.cast("decimal(18,6)")).over(w), 2).cast("double")
 
 
 #: periodos_cas frame -> its period codes ordered by fecha_inicio, the
@@ -687,6 +735,7 @@ def _period_codes(tables: dict) -> list:
     return _PERIOD_CODES[df]
 
 
+@_request
 def kpis(
     tables: dict, tipo: str = "operativas", periodo_id: int | None = None
 ) -> DataFrame:
@@ -766,6 +815,7 @@ def kpis(
     )
 
 
+@_request
 def map_markers(
     tables: dict, tipo: str = "operativas", periodo_id: int | None = None
 ) -> DataFrame:
@@ -830,6 +880,7 @@ def map_markers(
     ).orderBy("sucursal")
 
 
+@_request
 def alerts(
     tables: dict, tipo: str = "operativas", periodo_id: int | None = None
 ) -> DataFrame:
@@ -905,6 +956,7 @@ def alerts(
     )
 
 
+@_request
 def branch_latest(
     tables: dict,
     sucursal_id: int,
@@ -935,6 +987,7 @@ def branch_latest(
     )
 
 
+@_request
 def branch_trend(
     tables: dict, sucursal_id: int, tipo: str = "operativas", n: int = 4
 ) -> DataFrame:
@@ -974,6 +1027,7 @@ DETAIL_TABLES = {
 }
 
 
+@_request
 def branch_areas(
     tables: dict,
     sucursal_id: int,
@@ -1005,6 +1059,7 @@ def branch_areas(
     )
 
 
+@_request
 def sucursal_info(tables: dict, sucursal_id: int) -> DataFrame:
     """GET /api/sucursal/<id>/<tipo> header block (app.py:829-836):
     the branch row with its group LEFT-joined (no activo filters —
@@ -1023,6 +1078,7 @@ def sucursal_info(tables: dict, sucursal_id: int) -> DataFrame:
     )
 
 
+@_request
 def periodos_list(tables: dict, n: int = 10) -> DataFrame:
     """GET /api/periodos (app.py:307-325): the raw period rows, latest
     n by id DESC (the reference's SELECT * ... ORDER BY id DESC
@@ -1030,6 +1086,7 @@ def periodos_list(tables: dict, n: int = 10) -> DataFrame:
     return _table(tables, "periodos_cas").orderBy(F.desc("id")).limit(n)
 
 
+@_request
 def grupo_detalle_sucursales(
     tables: dict,
     grupo_id: int,
@@ -1083,6 +1140,7 @@ def grupo_detalle_sucursales(
     ).orderBy(F.desc("promedio"), "id")
 
 
+@_request
 def grupo_detalle_stats(
     tables: dict,
     grupo_id: int,
@@ -1143,6 +1201,7 @@ SUPERVISION_DETAIL_TABLES = {
 }
 
 
+@_request
 def supervision_header(
     tables: dict, supervision_id: int, tipo: str = "operativas"
 ) -> DataFrame:
@@ -1169,6 +1228,7 @@ def supervision_header(
     )
 
 
+@_request
 def supervision_areas_by_id(
     tables: dict, supervision_id: int, tipo: str = "operativas"
 ) -> DataFrame:
@@ -1200,6 +1260,7 @@ def supervision_areas_by_id(
     )
 
 
+@_request
 def periodos_with_data(tables: dict, tipo: str = "operativas") -> DataFrame:
     """Periods having supervisions — the reference's GROUP-BY-all-cols
     dedup expressed as a left-semi join (A9, app.py:253-259)."""
@@ -1212,6 +1273,7 @@ def periodos_with_data(tables: dict, tipo: str = "operativas") -> DataFrame:
     )
 
 
+@_request
 def estados(tables: dict) -> DataFrame:
     """GET /api/estados (app.py:327-339): branch counts per state —
     active-only, NULL states excluded (P4 + A8), ordered by estado."""
@@ -1224,6 +1286,7 @@ def estados(tables: dict) -> DataFrame:
     )
 
 
+@_request
 def periodo_contexto(tables: dict, tipo: str = "operativas", hoy=None) -> DataFrame:
     """GET /api/periodo-contexto/<tipo> (app.py:211-305): resolve the
     dashboard's active period and its coverage progress — the first
@@ -1313,6 +1376,7 @@ def periodo_contexto(tables: dict, tipo: str = "operativas", hoy=None) -> DataFr
     )
 
 
+@_request
 def periodos_selector(tables: dict, n: int = 6) -> DataFrame:
     """The periodo-contexto selector list (app.py:269-274): latest n
     periods by fecha_inicio DESC (id DESC deterministic tiebreak)."""
@@ -1329,6 +1393,7 @@ def health(spark: SparkSession) -> DataFrame:
     return spark.sql("SELECT 1 AS ok")
 
 
+@_request
 def preview(tables: dict, table_name: str, n: int = 100) -> DataFrame:
     """Admin table preview behind the P9 allowlist (app.py:1310-1318)."""
     if table_name not in PREVIEW_ALLOWLIST:
@@ -1336,6 +1401,7 @@ def preview(tables: dict, table_name: str, n: int = 100) -> DataFrame:
     return _table(tables, table_name).limit(n)
 
 
+@_request
 def set_periodo_activo(tables: dict, periodo_id: int) -> DataFrame:
     """POST /admin/set-periodo (§3.3, app.py:165-183): deactivate all
     periods, activate one — expressed as a single conditional overwrite

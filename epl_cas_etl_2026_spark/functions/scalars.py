@@ -8,7 +8,7 @@ they cost the same as hand-written SQL at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # Score-bucket thresholds AND labels — the reference's get_color_class
@@ -97,8 +97,9 @@ def pct_of(part: Column, total: Column, scale: int = 1) -> Column:
     return F.round(part * 100.0 / F.nullif(total, F.lit(0)), scale)
 
 
-def det_avg(c: Column, scale: int = 2) -> Column:
-    """Order-deterministic rounded average.
+def det_avg(c: Column, scale: int = 2, over: WindowSpec | None = None) -> Column:
+    """Order-deterministic rounded average; a window function over
+    ``over`` when given.
 
     ``round(avg(double), 2)`` is not reproducible across engines: Spark's
     partial-aggregate summation order differs from DuckDB's, and a 1-ulp
@@ -108,7 +109,10 @@ def det_avg(c: Column, scale: int = 2) -> Column:
     round is then well-defined. Testdata money/value columns carry <= 2
     decimal digits, so decimal(18,6) is lossless.
     """
-    return F.round(F.avg(c.cast("decimal(18,6)")), scale).cast("double")
+    avg = F.avg(c.cast("decimal(18,6)"))
+    if over is not None:
+        avg = avg.over(over)
+    return F.round(avg, scale).cast("double")
 
 
 def det_avg_sql(expr: str, scale: int = 2) -> str:

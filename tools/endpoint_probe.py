@@ -1,6 +1,6 @@
 """Per-endpoint layers of the dashboard's requests, in one process.
 
-    python tools/endpoint_probe.py [--seed 1] [--rounds 8]
+    python tools/endpoint_probe.py [--seed 1] [--rounds 8] [--fresh-frames]
 
 Run from the repository root. It writes perfbench's generated domain
 warehouse (``perfbench/gen.domain_warehouse``) to a temporary
@@ -9,6 +9,8 @@ the endpoints of the ``read`` mix (``perfbench/dashboard.ENDPOINTS``,
 with the same seeded parameters): one untimed request each, then
 ``--rounds`` rounds. A request is the ``api`` call (build) and its
 ``collect()`` (exec); each phase runs under its own Spark job group.
+With ``--fresh-frames`` every request opens its tables anew instead, as
+a caller that keeps no frames (``plans/domain_api``) does.
 
 For each endpoint it prints the median build ms, exec ms, build jobs
 and exec jobs per timed request, and the output digest (rows and a
@@ -45,6 +47,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--rounds", type=int, default=8)
+    ap.add_argument("--fresh-frames", action="store_true",
+                    help="open the tables anew for every request")
     a = ap.parse_args()
     # perfbench's rule: half the CPUs for Spark, the rest for the JVM's
     # own threads and the Python process
@@ -74,6 +78,8 @@ def main() -> int:
         for r in range(a.rounds + 1):
             for name, kw in pool:
                 group = f"probe-{r}-{name}"
+                if a.fresh_frames:
+                    tables = dashboard._Tables(spark, wh)
                 sc.setJobGroup(f"{group}-build", "build")
                 t0 = time.perf_counter()
                 df = getattr(api, name)(tables, **kw)
@@ -122,6 +128,7 @@ def main() -> int:
         }
         print("storage: " + ", ".join(f"{k} {v}" for k, v in storage.items()))
         print(json.dumps({"seed": a.seed, "rounds": a.rounds, "cpus": cpus,
+                          "fresh_frames": a.fresh_frames,
                           "endpoints": per, "mix": mix, "storage": storage}))
     finally:
         spark.stop()
