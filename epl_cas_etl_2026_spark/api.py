@@ -67,7 +67,7 @@ from epl_cas_etl_2026_spark.functions.scalars import (
     territorio,
 )
 from epl_cas_etl_2026_spark.functions.scalars import territorio as territorio_col
-from epl_cas_etl_2026_spark.operators.ranking import competition_rank
+from epl_cas_etl_2026_spark.operators.ranking import competition_rank, intra_group_rank
 
 FACT_TABLES = {
     "operativas": "supervisiones_operativas",
@@ -197,10 +197,15 @@ def _active(df: DataFrame) -> DataFrame:
     return df.filter(F.coalesce(F.col("activo"), F.lit(False)))
 
 
-def _territorio_keep(filtro: str) -> tuple:
-    """The reference's territory filter is INCLUSIVE (app.py:486-492,
+def _territorio_keep(filtro: str | None) -> tuple | None:
+    """The territorio classes a territory filter keeps; None when it
+    keeps everything (None or 'todas'). The only check of a filter's
+    value: an unknown one raises instead of silently returning
+    everything. The reference's filter is INCLUSIVE (app.py:486-492,
     1167-1171): 'local' keeps local+mixto, 'foranea' keeps
     foranea+mixto, 'mixto' keeps only mixto."""
+    if filtro is None or filtro == "todas":
+        return None
     keep = {
         "local": ("local", "mixto"),
         "foranea": ("foranea", "mixto"),
@@ -282,11 +287,10 @@ def ranking_grupos(
         .alias("entidad"),
         territorio(F.col("nombre")).alias("territorio"),
     )
-    filtered = territorio_filtro is not None and territorio_filtro != "todas"
+    keep = _territorio_keep(territorio_filtro)
+    filtered = keep is not None
     if filtered:
-        g = g.filter(
-            F.col("territorio").isin(*_territorio_keep(territorio_filtro))
-        )
+        g = g.filter(F.col("territorio").isin(*keep))
     s = _active(_table(tables, "sucursales")).select(
         F.col("id").alias("sucursal_id"),
         F.col("grupo_operativo_id"),
@@ -457,8 +461,6 @@ def ranking_grupos_members(
         )
         .drop("m_sum", "m_n")
     )
-    from epl_cas_etl_2026_spark.operators.ranking import intra_group_rank
-
     ranked = intra_group_rank(per_group, "entidad", "promedio")
     return ranked.select(
         "entidad",
@@ -509,21 +511,14 @@ def ranking_sucursales(
     )
     if grupo_id is not None:
         s = s.filter(F.col("grupo_operativo_id") == grupo_id)
-    if territorio_filtro is not None and territorio_filtro != "todas":
-        if territorio_filtro not in ("local", "foranea", "mixto"):
-            raise ValueError(
-                "territorio_filtro must be local/foranea/mixto/todas, "
-                f"got {territorio_filtro!r}"
-            )
-        # 'mixto' applies NO filter here — the reference's sucursales
-        # endpoint handles only 'local'/'foranea' (app.py:698-701), so
-        # 'mixto' falls through unfiltered (preserved quirk); unknown
-        # values raise instead of silently returning everything
-        col_value = {"local": "local", "foranea": "foraneo"}.get(
-            territorio_filtro
-        )
-        if col_value is not None:
-            s = s.filter(F.col("raw_clasificacion") == col_value)
+    # 'mixto' applies NO filter here — the reference's sucursales
+    # endpoint handles only 'local'/'foranea' (app.py:698-701), so
+    # 'mixto' falls through unfiltered (preserved quirk); unknown
+    # values raise in _territorio_keep
+    _territorio_keep(territorio_filtro)
+    col_value = {"local": "local", "foranea": "foraneo"}.get(territorio_filtro)
+    if col_value is not None:
+        s = s.filter(F.col("raw_clasificacion") == col_value)
     g = _table(tables, "grupos_operativos").select(
         F.col("id").alias("g_id"), F.col("nombre").alias("grupo")
     )
@@ -634,22 +629,13 @@ def heatmap_matrix(
         F.col("id").alias("grupo_id"), F.col("nombre").alias("grupo")
     )
     # None and 'todas' both mean unfiltered, matching the
-    # territorio_filtro convention of ranking_grupos/ranking_sucursales
-    if territorio is not None and territorio != "todas":
-        if territorio not in ("local", "foranea", "mixto"):
-            raise ValueError(
-                "territorio must be local/foranea/mixto/todas, "
-                f"got {territorio!r}"
-            )
-        # app.py:1167-1171 has no 'mixto' branch — that value falls
-        # through unfiltered (preserved quirk); only local/foranea
-        # apply the inclusive keep-set
-        if territorio != "mixto":
-            g = g.filter(
-                territorio_col(F.col("grupo")).isin(
-                    *_territorio_keep(territorio)
-                )
-            )
+    # territorio_filtro convention of ranking_grupos/ranking_sucursales;
+    # app.py:1167-1171 has no 'mixto' branch — that value falls
+    # through unfiltered (preserved quirk); only local/foranea apply
+    # the inclusive keep-set
+    keep = _territorio_keep(territorio)
+    if keep is not None and territorio != "mixto":
+        g = g.filter(territorio_col(F.col("grupo")).isin(*keep))
     p = _table(tables, "periodos_cas").select(
         F.col("id").alias("periodo_id"), "codigo"
     )
@@ -966,8 +952,6 @@ def branch_latest(
     """GET /api/sucursal/<id>/<tipo> latest supervision (app.py:846-858
     — W4: row_number over fecha DESC, id DESC tie-break) with color
     class; optional period filter (app.py:852-854)."""
-    from pyspark.sql import Window
-
     f = _fact(tables, tipo, periodo_id).filter(
         F.col("sucursal_id") == sucursal_id
     )
@@ -993,8 +977,6 @@ def branch_trend(
 ) -> DataFrame:
     """Trend: last-n supervisions per branch reversed to chronological
     order (W5, app.py:938-960)."""
-    from pyspark.sql import Window
-
     f = _fact(tables, tipo, None).filter(
         F.col("sucursal_id") == sucursal_id
     )

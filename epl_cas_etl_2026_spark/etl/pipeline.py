@@ -33,32 +33,25 @@ from pyspark.sql import functions as F
 # J6 / T2 — idempotent dedup against the sink.
 # ---------------------------------------------------------------------------
 def dedup_against_sink(
-    new_rows: DataFrame,
-    existing: DataFrame | None,
-    key: str = "zenput_submission_id",
-    order_col: str | None = "fecha_supervision",
+    new_rows: DataFrame, existing: DataFrame | None
 ) -> DataFrame:
-    """Drop rows whose natural key already exists in the sink, and
-    in-batch duplicates. One pass over the sink (``_absent_from``) —
-    the set-wise form of the reference's per-row existence SELECT
-    (etl_sync.py:215-217, 276-278).
+    """Drop rows whose natural key (``zenput_submission_id``) already
+    exists in the sink, and in-batch duplicates. One pass over the sink
+    (``_absent_from``) — the set-wise form of the reference's per-row
+    existence SELECT (etl_sync.py:215-217, 276-278).
 
-    In-batch survivor is DETERMINISTIC: earliest ``order_col`` (then
-    the key itself as tie-break) wins, mirroring the reference's
-    first-row-processed-wins loop. Pass ``order_col=None`` to fall
-    back to arbitrary-survivor ``dropDuplicates`` when no stable
-    ordering column exists."""
-    if order_col is not None and order_col in new_rows.columns:
-        w = Window.partitionBy(key).orderBy(
-            F.asc_nulls_last(order_col), F.col(key)
-        )
-        batch_deduped = (
-            new_rows.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        batch_deduped = new_rows.dropDuplicates([key])
+    In-batch survivor is DETERMINISTIC: earliest ``fecha_supervision``
+    (then the key itself as tie-break) wins, mirroring the reference's
+    first-row-processed-wins loop."""
+    key = "zenput_submission_id"
+    w = Window.partitionBy(key).orderBy(
+        F.asc_nulls_last("fecha_supervision"), F.col(key)
+    )
+    batch_deduped = (
+        new_rows.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
     if existing is None:
         return batch_deduped
     return _absent_from(batch_deduped, existing, key, probe=new_rows)

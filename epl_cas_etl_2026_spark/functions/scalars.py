@@ -24,17 +24,16 @@ DEFAULT_BUCKETS: tuple[tuple[float, str], ...] = (
 )
 
 
-def color_class(score: Column, buckets=DEFAULT_BUCKETS, fallback: str = "critical",
-                null_label: str = "gray") -> Column:
+def color_class(score: Column, buckets=DEFAULT_BUCKETS) -> Column:
     """F1 — bucketing CASE (reference get_color_class, app.py:32-42).
 
     NULL guard first: a NULL score is its own class ('gray'), not
     'critical'.
     """
-    expr = F.when(score.isNull(), F.lit(null_label))
+    expr = F.when(score.isNull(), F.lit("gray"))
     for threshold, label in buckets:
         expr = expr.when(score >= F.lit(threshold), F.lit(label))
-    return expr.otherwise(F.lit(fallback))
+    return expr.otherwise(F.lit("critical"))
 
 
 # Territory classification (reference get_territorio, app.py:44-55):

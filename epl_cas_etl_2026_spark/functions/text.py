@@ -52,24 +52,6 @@ def quality_class(text: Column) -> Column:
     )
 
 
-def lang_scores(text: Column, markers: dict[str, tuple[str, ...]]) -> Column:
-    """N-gram/marker-based language-ID heuristic: hits per language's
-    marker list; returns the argmax language (ties → lexicographic)."""
-    toks = words(F.lower(text))
-    best_lang = None
-    best_score = None
-    for lang in sorted(markers):
-        arr = F.array(*[F.lit(m) for m in markers[lang]])
-        score = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        if best_lang is None:
-            best_lang, best_score = F.lit(lang), score
-        else:
-            better = score > best_score
-            best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-            best_score = F.when(better, score).otherwise(best_score)
-    return best_lang
-
-
 def greedy_pair_merge(
     arr: Column, w1: Column, w2: Column, merged: Column
 ) -> Column:

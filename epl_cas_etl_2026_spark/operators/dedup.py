@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from epl_cas_etl_2026_spark.functions.text import words
 from epl_cas_etl_2026_spark.sources.parquet import spread_scan
@@ -57,18 +56,6 @@ def shingles_of_words(w: Column, n: int = 3) -> Column:
         F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))
     return F.transform(idx, lambda i: F.array_join(F.slice(w, i, n), " "))
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array (higher-order expressions; no
-    explode — the array never leaves the row)."""
-    return shingles_of_words(words(text), n)
-
-
-def _md5_hash60(s: Column) -> Column:
-    """Deterministic 60-bit positive hash both Spark and DuckDB can
-    compute identically: first 15 hex chars of md5 → BIGINT."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
 # Kirsch-Mitzenmacher double hashing: ONE digest per shingle, the
@@ -104,19 +91,16 @@ def minhash_signature_agg(
     shingle_n: int = 3,
     use_md5: bool = False,
 ) -> DataFrame:
-    """MinHash signature via explode + groupBy-min — the scale path.
+    """MinHash signature via explode + groupBy-min.
 
-    The pure-expression :func:`minhash_signature` nests higher-order
-    functions (transform-inside-transform re-evaluating ``split`` per
-    shingle), which Spark evaluates INTERPRETED, outside whole-stage
-    codegen — O(words² · n_hashes) per doc and catastrophically slow
-    once the same subtree is inlined per band and per join side.
-    Here each shingle becomes a row once, the ``n_hashes`` hash
-    expressions are flat codegen-able columns, and one partial-agg
-    ``min`` per seed reduces map-side before the single shuffle on
-    ``id_col``. Returns (id, h0..h{n-1}); docs with no shingles
-    (fewer than ``shingle_n`` words) drop out, matching the oracle's
-    ``len(shingles) > 0`` guard.
+    Each shingle becomes a row once, so the ``n_hashes`` hash
+    expressions are flat codegen-able columns (a per-row
+    higher-order-function form nests transform inside transform, runs
+    INTERPRETED outside whole-stage codegen and re-evaluates ``split``
+    per shingle), and one partial-agg ``min`` per seed reduces
+    map-side before the single shuffle on ``id_col``. Returns (id,
+    h0..h{n-1}); docs with no shingles (fewer than ``shingle_n`` words)
+    drop out, matching the oracle's ``len(shingles) > 0`` guard.
     """
     docs = df.select(F.col(id_col), words(F.col(text_col)).alias("__w"))
     sh = docs.select(
@@ -323,40 +307,12 @@ def near_dup_pairs_incremental(
     )
 
 
-def simhash64(text: Column, use_md5: bool = False) -> Column:
-    """64-bit SimHash over word tokens (bit-vote of token hashes).
-    Near-identical docs differ in few bits (Hamming distance).
-
-    With ``use_md5`` the token hash is the md5-derived 60-bit value so
-    the DuckDB oracle reproduces it exactly (top 4 bits unused)."""
-    toks = F.array_distinct(words(text))
-    hashed = (
-        F.transform(toks, _md5_hash60)
-        if use_md5
-        else F.transform(toks, lambda t: F.xxhash64(t))
-    )
-    n_bits = 60 if use_md5 else 63  # stay positive in a signed BIGINT
-    out = F.lit(0).cast("long")
-    for i in range(n_bits):
-        # vote: +1 if bit set, -1 otherwise; sign of the sum is the bit
-        vote = F.aggregate(
-            hashed,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        out = out + F.when(
-            vote > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash60_udf():
-    """Arrow-batched SimHash-60 (md5-token variant) — bit-identical to
-    :func:`simhash64` ``use_md5=True`` and to the DuckDB oracle, but
-    vectorized: the expression form runs 60 interpreted HOF aggregates
-    per row, which is why the expression-based query bounds its input;
-    this one handles the full corpus. One numpy vote matrix per doc."""
+    """Arrow-batched SimHash-60 over distinct word tokens: each bit is
+    the sign of a ±1 vote of the tokens' md5-derived 60-bit hashes,
+    bit-identical to the DuckDB oracle. Vectorized: a Column-expression
+    form would run 60 interpreted HOF aggregates per row. One numpy
+    vote matrix per batch."""
     import hashlib
 
     import numpy as np
@@ -408,7 +364,6 @@ def simhash_near_dup_pairs(
     n_bands: int = 4,
     band_bits: int = 15,
     prehashed=None,
-    pair_filter=None,
 ):
     """SimHash near-dup via band join: split the 60-bit hash into
     ``n_bands`` bands; a pair is a CANDIDATE iff some whole band is
@@ -419,14 +374,6 @@ def simhash_near_dup_pairs(
     ``prehashed``: an already-computed ``(id_col, h)`` frame — callers
     sweeping several banding configs hash the corpus ONCE and share it
     (the Arrow simhash UDF is the expensive stage, not the band join).
-
-    ``pair_filter``: optional boolean Column over (``id_a``, ``id_b``)
-    applied right after the band join, BEFORE the hamming verify and
-    the pair-dedup — the calibration-sampling hook: a deterministic
-    id-arithmetic sample predicate here shrinks the dedup input
-    linearly with the sample rate instead of deduping the full
-    candidate stream first (at web scale the unfiltered candidate
-    stream is orders of magnitude larger than the sampled one).
     """
     if prehashed is not None:
         hashed = prehashed
@@ -464,8 +411,6 @@ def simhash_near_dup_pairs(
         F.col(id_col).alias("id_b"), F.col("h").alias("hb"), "band", "key"
     )
     joined = a.join(b, ["band", "key"]).filter(F.col("id_a") < F.col("id_b"))
-    if pair_filter is not None:
-        joined = joined.filter(pair_filter)
     return (
         joined.withColumn(
             "hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
@@ -565,11 +510,11 @@ def connected_components(
     Both are one groupBy(min) + one join over id pairs; connectivity
     is invariant under each step, and convergence (edge set stable) is
     reached in O(log n) rounds even on CHAIN graphs — the upgrade over
-    min-label propagation (kept as
-    :func:`connected_components_propagation`), whose round count is
-    the graph DIAMETER. On the dense near-dup cluster graphs both
-    converge in a handful of rounds; on adversarial chains this one
-    stays logarithmic. Per-round localCheckpoint truncates the
+    min-label propagation (kept in the tests as the differential
+    baseline), whose round count is the graph DIAMETER. On the dense
+    near-dup cluster graphs both converge in a handful of rounds; on
+    adversarial chains this one stays logarithmic. Per-round
+    localCheckpoint truncates the
     iterative lineage; if ``max_iter`` rounds pass without
     convergence the star forest may still be partially contracted —
     raise max_iter for pathological inputs (20 rounds covers any
@@ -684,98 +629,4 @@ def connected_components(
     e0.unpersist()
     sym0.unpersist()
     nodes.unpersist()
-    return labels
-
-
-def connected_components_propagation(
-    edges,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-):
-    """Connected components by min-label propagation — each round every
-    node takes the min of its own label and its neighbors' labels (one
-    join + one groupBy); rounds needed = graph DIAMETER. Kept as the
-    dense-graph baseline and the differential twin for
-    :func:`connected_components` (the O(log n)-round star contraction);
-    property tests assert both produce identical labelings.
-
-    Returns (node, component) where component = min node id reachable.
-    """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # materialize ONCE: every round joins against sym, and without
-        # this the whole upstream edge pipeline (LSH banding + verify)
-        # re-executes per round — the dominant cost of the loop.
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _label_sum(frame):
-        # exact decimal sum — labels only ever DECREASE (least of own
-        # and neighbor min), so the sum strictly decreases iff any
-        # label changed; comparing sums detects convergence without
-        # the old-vs-new join + count (a full extra shuffle join per
-        # round). decimal(38,0) keeps it exact for 64-bit ids.
-        return frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    # The sum trick is only sound for integral node ids: casting e.g. a
-    # string id to decimal yields NULL, both sums come back None, and
-    # None == None would declare convergence after one round — silently
-    # wrong components. Non-integral ids use a changed-row check over
-    # the already-checkpointed round result instead (no extra join; one
-    # early-exit count job per round).
-    use_sum = isinstance(
-        labels.schema["label"].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    )
-    prev_sum = _label_sum(labels) if use_sum else None
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("label").alias("nl")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("min_nbr"))
-        )
-        # NOTE: pointer jumping (label-of-label path halving) was
-        # measured here and reverted: the extra self-join adds more
-        # per-round scheduler jobs than the saved rounds return
-        # (6 rounds × 1 join beat 4 rounds × 2 joins). For adversarial
-        # long-chain graphs, large-star/small-star is the right upgrade.
-        cand = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.col("label").alias("__old"),
-                F.least(
-                    F.col("label"), F.coalesce("min_nbr", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = cand.select("node", "label")
-        if use_sum:
-            new_sum = _label_sum(labels)
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            converged = (
-                cand.filter(F.col("label") != F.col("__old")).limit(1).count()
-                == 0
-            )
-        if converged:
-            break
     return labels

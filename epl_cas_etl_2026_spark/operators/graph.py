@@ -99,7 +99,6 @@ def bfs_hop_distance(
     node_col: str = "word",
     src: str = "src",
     dst: str = "dst",
-    unpersist_edges: bool = False,
 ) -> DataFrame:
     """Single-source BFS hop distance by frontier expansion: the
     frontier joins the edge list, newly reached nodes (anti-join
@@ -153,12 +152,10 @@ def bfs_hop_distance(
         dist = dist.unionByName(nxt)
         frontier = nxt.select(node_col)
     # hand back a materialized (reachable-set-sized) frame and release
-    # every cached intermediate — no storage leaks across invocations;
-    # unpersist_edges=True additionally releases a caller-persisted
-    # edge frame once the walk is done
+    # every cached intermediate, the (caller-persisted) edge frame
+    # included — no storage leaks across invocations
     result = dist.localCheckpoint(eager=True)
     for f in rounds:
         f.unpersist()
-    if unpersist_edges:
-        edges.unpersist()
+    edges.unpersist()
     return result

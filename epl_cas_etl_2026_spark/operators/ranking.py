@@ -37,8 +37,6 @@ def competition_rank(
     score_col: str,
     rank_col: str = "posicion",
     tiebreak: Sequence[Column] | None = None,
-    partition_by: Sequence[str] | None = None,
-    max_rows_guard: int | None = MAX_GLOBAL_WINDOW_ROWS,
 ) -> DataFrame:
     """W1 + W2 — competition rank, NULLS LAST, unranked NULL tail.
 
@@ -50,30 +48,27 @@ def competition_rank(
     ``tiebreak`` orders *display only* — the reference ranks purely on
     the score (ties share), then orders ties by name (app.py:456).
 
-    With no ``partition_by`` the window is single-partition by design
-    (global rank) — safe only post-aggregation. ``max_rows_guard``
-    embeds a zero-cost runtime check in the same window pass (an extra
-    row_number over the sort the rank already pays for) that fails the
-    job if a fact-grained frame ever reaches this operator; those must
-    use :func:`two_phase_competition_rank`. Set ``None`` to disable.
+    The window is single-partition by design (global rank) — safe only
+    post-aggregation. A zero-cost runtime check in the same window pass
+    (an extra row_number over the sort the rank already pays for) fails
+    the job once more than ``MAX_GLOBAL_WINDOW_ROWS`` rows (read at
+    call time) reach this operator; fact-grained frames must use
+    :func:`two_phase_competition_rank`. Per-group ranks are
+    :func:`intra_group_rank`.
     """
     w = Window.orderBy(F.desc_nulls_last(score_col))
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(F.desc_nulls_last(score_col))
     rank_expr = F.when(
-        F.col(score_col).isNotNull(), F.rank().over(w).cast("long")
+        F.row_number().over(w) > MAX_GLOBAL_WINDOW_ROWS,
+        F.raise_error(
+            F.lit(
+                "competition_rank: unpartitioned window exceeded "
+                f"{MAX_GLOBAL_WINDOW_ROWS} rows and would serialize on one "
+                "task — use two_phase_competition_rank"
+            )
+        ).cast("long"),
+    ).otherwise(
+        F.when(F.col(score_col).isNotNull(), F.rank().over(w).cast("long"))
     )
-    if partition_by is None and max_rows_guard is not None:
-        rank_expr = F.when(
-            F.row_number().over(w) > max_rows_guard,
-            F.raise_error(
-                F.lit(
-                    "competition_rank: unpartitioned window exceeded "
-                    f"{max_rows_guard} rows and would serialize on one "
-                    "task — use two_phase_competition_rank"
-                )
-            ).cast("long"),
-        ).otherwise(rank_expr)
     ranked = df.withColumn(rank_col, rank_expr)
     order = [F.desc_nulls_last(score_col)]
     if tiebreak:

@@ -1,16 +1,16 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-* ``cosine_topk`` — brute-force top-k against one query vector. The
-  scan is embarrassingly parallel (one pass, no shuffle except the
-  final top-k, which Spark plans as TakeOrderedAndProject — per-
-  partition heaps + driver merge of k rows). This IS the correct
-  100 TB baseline for a single query.
-* ``lsh_bucket_assign`` / ``ann_topk_lsh`` — random-hyperplane LSH:
-  each vector gets a sign-bit bucket key; a query probes only its own
-  bucket (and optionally neighboring buckets), cutting the candidate
-  set by ~2^n_planes. Hyperplanes are generated from a seeded RNG so
-  assignment is deterministic and re-computable on read — the scale
-  path when queries are many.
+* ``band_lsh_pairs`` (and ``_auto`` / ``_calibration_pairs``) —
+  banded random-hyperplane LSH near-duplicate pairs: vectors sharing
+  a whole band of sign bits become candidates, verified by exact
+  cosine. Hyperplanes come from a seeded RNG, so band keys are
+  deterministic and re-computable on read.
+* ``kmeans_fit`` — Lloyd's k-means, one distributed pass per
+  iteration; only the centroid matrix reaches the driver.
+* ``pq_fit`` / ``pq_encode`` — product quantization, and the serving
+  paths on top of it: ``ivfpq_topk`` (coarse k-means lists + residual
+  PQ), ``pq_adc_batch_topk`` (fit-in-query) and
+  ``pq_adc_batch_serve`` (from a persisted codebook and codes table).
 
 Per-row vector math is ``zip_with``/``aggregate`` expressions (JVM).
 The DENSE stages — many-plane sign projections, pairwise verify dots,
@@ -30,27 +30,8 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from epl_cas_etl_2026_spark.functions.vectors import cosine, dot, to_double
+from epl_cas_etl_2026_spark.functions.vectors import dot, to_double
 from epl_cas_etl_2026_spark.sources.parquet import spread_scan
-
-
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: tuple[int, ...] = (),
-) -> DataFrame:
-    """Brute-force cosine top-k: one scan + TakeOrderedAndProject."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    out = embeddings.select(
-        F.col(id_col),
-        F.round(cosine(to_double(F.col(vec_col)), q), 6).alias("sim"),
-    )
-    if exclude_ids:
-        out = out.filter(~F.col(id_col).isin(*exclude_ids))
-    return out.orderBy(F.desc("sim"), F.asc(id_col)).limit(k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -59,24 +40,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [
         [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)
     ]
-
-
-def lsh_bucket_assign(
-    embeddings: DataFrame,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """Sign-bit bucket key: bit i = sign(v · plane_i). Pure expression;
-    at scale, write bucketed/partitioned by this key so probes prune."""
-    v = to_double(F.col(vec_col))
-    key = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        pc = F.array(*[F.lit(float(x)) for x in p])
-        key = key + F.when(
-            dot(v, pc) >= 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    return embeddings.withColumn(bucket_col, key)
 
 
 def _band_keys_udf(planes: list[list[float]], n_bands: int, rows_per_band: int):
@@ -324,28 +287,6 @@ def band_lsh_calibration_pairs(
         "id_b",
         est.cast("long").alias("est_matches"),
         _pair_dot_udf()(F.col("na"), F.col("nb")).alias("sim"),
-    )
-
-
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    planes: list[list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: probe only the query's LSH bucket, then exact
-    cosine inside it. Recall < 1.0 by design; candidate set shrinks
-    ~2^n_planes-fold."""
-    qkey = 0
-    for i, p in enumerate(planes):
-        s = sum(a * b for a, b in zip(query_vec, p))
-        if s >= 0:
-            qkey |= 1 << i
-    bucketed = lsh_bucket_assign(embeddings, planes, vec_col)
-    return cosine_topk(
-        bucketed.filter(F.col("bucket") == qkey), query_vec, k, id_col, vec_col
     )
 
 
@@ -667,71 +608,6 @@ def pq_encode(
     ).select(id_col, "sub_id", "subvec", "__a.code", "__a.sq_dist")
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    codebooks,
-    query_id: int = 0,
-    dim: int = 64,
-    m: int = 8,
-    shortlist: int = 50,
-    topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC top-k: the query's m×k lookup table T[s][j] =
-    ||q_s − c_sj||² is computed driver-side (tiny) and folded into the
-    plan as a literal tensor; each candidate's approximate distance is
-    m table lookups summed per row — codes only, no vector math on
-    the corpus side. The ADC shortlist is then re-ranked by EXACT
-    distance over full vectors (standard PQ pipeline)."""
-    import numpy as np
-
-    dsub = dim // m
-    q = (
-        emb.filter(F.col(id_col) == query_id)
-        .select(to_double(F.col(vec_col)).alias("v"))
-        .collect()
-    )
-    if not q:
-        raise ValueError(f"query {id_col}={query_id} not found")
-    qv = np.asarray(q[0]["v"], dtype=np.float64)
-    C = np.asarray(codebooks, dtype=np.float64)  # m × k × dsub
-    T = [
-        [float(((qv[s * dsub : (s + 1) * dsub] - C[s][j]) ** 2).sum())
-         for j in range(C.shape[1])]
-        for s in range(m)
-    ]
-    t_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in T])
-    codes = pq_encode(emb, codebooks, dim, m, id_col, vec_col)
-    approx = (
-        codes.filter(F.col(id_col) != query_id)
-        .select(
-            F.col(id_col),
-            F.element_at(
-                F.element_at(t_lit, F.col("sub_id") + 1), F.col("code") + 1
-            ).alias("t"),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("t").alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
-        .limit(shortlist)
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    exact = F.aggregate(
-        F.zip_with(
-            to_double(F.col(vec_col)), qlit, lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        approx.join(emb.select(id_col, vec_col), id_col)
-        .select(F.col(id_col), "adc_dist", exact.alias("exact_dist"))
-        .orderBy("exact_dist", id_col)
-        .limit(topk)
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ — the two halves composed into the production ANN serving
 # path (Jégou et al. 2011 §IV; the faiss IVFPQ layout): a learned
@@ -908,8 +784,10 @@ def pq_adc_batch_topk(
     """Batch ADC top-k over a query id list, one plan for all queries.
 
     Returns (q_id, id, adc_dist, exact_dist, rank) with rank 1..topk
-    per query by exact distance — per query identical to
-    :func:`pq_adc_topk` (property-pinned by
+    per query by exact distance: the query's m×k ADC lookup table
+    scores every code row, and the ADC shortlist is re-ranked by EXACT
+    distance over full vectors (per query identical to a one-query ADC
+    scan, property-pinned by
     tests/test_analytics_props.py::test_pq_batch_matches_single).
 
     This is the IN-QUERY form: it materializes the codebook frame from

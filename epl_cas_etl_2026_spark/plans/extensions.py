@@ -882,8 +882,8 @@ def _markers_sql(lang: str) -> str:
 def docs_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explode → marker filter → conditional agg: tokens that match no
     # marker (the overwhelming majority) are dropped BEFORE the
-    # shuffle, and every stage is whole-stage-codegen'd — unlike the
-    # higher-order-function argmax (functions/text.lang_scores), which
+    # shuffle, and every stage is whole-stage-codegen'd — unlike a
+    # higher-order-function argmax over each row's token array, which
     # is interpreted per element. Zero-hit docs are restored by a
     # left join on the slim doc_id frame (argmax of all-zero = first
     # language, matching the oracle's CASE ordering).
@@ -1696,8 +1696,9 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-derived through an INDEPENDENT path (driver-side numpy LUT
 # literals, the single-query serving approach, joined back per
 # (q_id, sub_id, code)), per-query exact-distance rank monotonicity,
-# and self-exclusion. Per-query equivalence to pq_adc_topk is pinned
-# by tests/test_analytics_props.py::test_pq_batch_matches_single.
+# and self-exclusion. Per-query equivalence to the one-query baseline
+# tests/baselines.pq_adc_topk is pinned by
+# tests/test_analytics_props.py::test_pq_batch_matches_single.
 # ---------------------------------------------------------------------------
 @_register(
     "embedding_pq_batch_topk",
@@ -1746,7 +1747,8 @@ def embedding_pq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("self_violations"),
     )
     # independent ADC re-derivation: driver-side numpy LUTs (the
-    # single-query pq_adc_topk path), joined back per (q, sub, code)
+    # one-query tests/baselines.pq_adc_topk path), joined back per
+    # (q, sub, code)
     C = np.asarray(codebooks, dtype=np.float64)  # m x k x dsub
     lut2_rows = []
     for r in qrows:
@@ -5595,12 +5597,11 @@ def events_interarrival_rate(
 # PERSISTED-INDEX ANN SERVING (round-8; closes the round-7 verdict's
 # "build-once/serve-many" gap): production ANN does NOT refit the
 # index per query batch — one job writes the PQ codebook and the
-# encoded corpus to versioned tables (sources/versioned.VersionedTable,
-# the same snapshot-commit primitive the CDC/MERGE queries use), and
-# every serving job reads ONLY those artifacts. Two gated queries:
+# encoded corpus once, and every serving job reads ONLY those
+# artifacts. Two gated queries:
 #
 #   * embedding_pq_index_build — pq_fit + pq_encode, both artifacts
-#     committed as versioned snapshots under a root keyed by a
+#     published together as ONE directory under a root keyed by a
 #     fingerprint of the embeddings parquet (a regeneration gets a NEW
 #     root instead of silently serving a stale index). The gated row
 #     certifies the artifact: row counts of both tables, plus a
@@ -5612,32 +5613,25 @@ def events_interarrival_rate(
 #     persisted frames; NO pq_fit/pq_encode in the serve path. The
 #     gated row counts row-level mismatches against the existing
 #     in-query path (fresh pq_fit + pq_adc_batch_topk on the same
-#     snapshot) — serve-from-artifact must equal fit-in-query exactly.
+#     data) — serve-from-artifact must equal fit-in-query exactly.
 #
 # 100 TB: the codes table is ~m bytes/vector (the only corpus-wide
 # serve-time scan); the codebook is m×k rows broadcast. Build cost is
-# paid once per corpus version; vacuum(keep_last=2) bounds disk. The
-# scratch root follows the spark.epl.scratch.dir convention with a
-# stable host-tempdir fallback (stable ACROSS driver processes — the
-# point is that a later session serves what an earlier one built).
+# paid once per corpus version: the index under a root is written
+# once and never rewritten. The root follows the spark.epl.scratch.dir
+# convention with a stable host-tempdir fallback (stable ACROSS driver
+# processes — the point is that a later session serves what an
+# earlier one built).
 # ---------------------------------------------------------------------------
 _PQ_IDX = {"dim": 64, "m": 8, "k": 16, "iters": 2}
 
 
-def _index_scratch_root(
-    spark: SparkSession,
-    sf_dir: str,
-    source_table: str,
-    prefix: str,
-    cfg: dict,
-    fallback: str,
-) -> str:
-    """Content-keyed scratch root for a persisted index family. The
-    fingerprint covers the source parquet's path + size + mtime_ns AND
-    the index config values, so BOTH a data regeneration (even to the
-    same byte size) and an index-parameter change land at a NEW root —
-    a stale or parameter-mismatched persisted artifact can never be
-    silently served."""
+def _pq_index_root(spark: SparkSession, sf_dir: str) -> str:
+    """Content-keyed root of the persisted PQ index. The fingerprint
+    covers the embeddings parquet's path + size + mtime_ns AND the
+    index config values, so BOTH a data regeneration (even to the same
+    byte size) and an index-parameter change land at a NEW root — a
+    stale or parameter-mismatched index can never be silently served."""
     import glob as _glob
     import hashlib as _hashlib
     import json as _json
@@ -5645,46 +5639,38 @@ def _index_scratch_root(
     import tempfile as _tempfile
 
     h = _hashlib.sha256()
-    for p in sorted(_glob.glob(_os.path.join(sf_dir, source_table + ".parquet"))):
+    for p in sorted(_glob.glob(_os.path.join(sf_dir, "embeddings.parquet"))):
         st = _os.stat(p)
         h.update(p.encode())
         h.update(str(st.st_size).encode())
         h.update(str(st.st_mtime_ns).encode())
-    h.update(_json.dumps(cfg, sort_keys=True).encode())
+    h.update(_json.dumps(_PQ_IDX, sort_keys=True).encode())
     scratch = spark.conf.get("spark.epl.scratch.dir", None)
     base = (
         scratch.rstrip("/")
         if scratch
-        else _os.path.join(_tempfile.gettempdir(), fallback)
+        else _os.path.join(_tempfile.gettempdir(), "epl_pq_index")
     )
     return _os.path.join(
         base,
-        f"{prefix}_{_os.path.basename(sf_dir.rstrip('/'))}_{h.hexdigest()[:12]}",
+        f"pq_{_os.path.basename(sf_dir.rstrip('/'))}_{h.hexdigest()[:12]}",
     )
 
 
-def _pq_index_root(spark: SparkSession, sf_dir: str) -> str:
-    return _index_scratch_root(
-        spark, sf_dir, "embeddings", "pq", _PQ_IDX, "epl_pq_index"
-    )
-
-
-def _pq_index_tables(spark: SparkSession, sf_dir: str):
+def _pq_index_build(spark: SparkSession, sf_dir: str) -> str:
+    """Fit + encode + publish the index; returns its directory,
+    ``<root>/index``. Both artifacts are written under a private
+    ``<root>/.tmp_<nonce>/`` and made visible by ONE ``os.rename``, so
+    a reader sees both or neither. A rename onto the non-empty
+    ``index`` of a build that published first fails: this build drops
+    its copy and returns the published one, which holds the same
+    rows (pq_fit's init and tie rules make the index a pure function
+    of the fingerprint-keyed root). A failed build publishes nothing
+    and removes its temporary directory."""
     import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-    from epl_cas_etl_2026_spark.sources.versioned import VersionedTable
-
-    root = _pq_index_root(spark, sf_dir)
-    return (
-        VersionedTable(_os.path.join(root, "codebook")),
-        VersionedTable(_os.path.join(root, "codes")),
-    )
-
-
-def _pq_index_build(spark: SparkSession, sf_dir: str):
-    """Fit + encode + commit both artifacts; returns (cb_vt, codes_vt,
-    codebooks). Deterministic: pq_fit's init and tie rules make the
-    committed artifact a pure function of the embeddings table."""
     from epl_cas_etl_2026_spark.operators.similarity import pq_encode, pq_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5692,33 +5678,49 @@ def _pq_index_build(spark: SparkSession, sf_dir: str):
     codebooks = pq_fit(
         emb, dim=cfg["dim"], m=cfg["m"], k=cfg["k"], iters=cfg["iters"]
     )
-    cb_vt, codes_vt = _pq_index_tables(spark, sf_dir)
-    cbdf = spark.createDataFrame(
-        [
-            (s, j, [float(x) for x in codebooks[s][j]])
-            for s in range(cfg["m"])
-            for j in range(cfg["k"])
-        ],
-        "sub_id int, code int, centroid array<double>",
-    )
-    codes = pq_encode(emb, codebooks, dim=cfg["dim"], m=cfg["m"]).select(
-        "vec_id", "sub_id", "code"
-    )
-    cb_vt.commit(cbdf)
-    codes_vt.commit(codes)
-    cb_vt.vacuum(keep_last=2)
-    codes_vt.vacuum(keep_last=2)
-    return cb_vt, codes_vt, codebooks
+    root = _pq_index_root(spark, sf_dir)
+    index = _os.path.join(root, "index")
+    tmp = _os.path.join(root, f".tmp_{_uuid.uuid4().hex}")
+    try:
+        spark.createDataFrame(
+            [
+                (s, j, [float(x) for x in codebooks[s][j]])
+                for s in range(cfg["m"])
+                for j in range(cfg["k"])
+            ],
+            "sub_id int, code int, centroid array<double>",
+        ).write.parquet(_os.path.join(tmp, "codebook"))
+        pq_encode(emb, codebooks, dim=cfg["dim"], m=cfg["m"]).select(
+            "vec_id", "sub_id", "code"
+        ).write.parquet(_os.path.join(tmp, "codes"))
+        try:
+            _os.rename(tmp, index)
+        except OSError:
+            if not _os.path.isdir(index):
+                raise
+    finally:
+        _shutil.rmtree(tmp, ignore_errors=True)
+    return index
 
 
-def _pq_index_ensure(spark: SparkSession, sf_dir: str):
-    """Serve-side entry: reuse the committed artifacts when present
-    (the build-once/serve-many path); build on first touch. The root
-    is fingerprint-keyed, so 'present' implies 'built from THIS data'."""
-    cb_vt, codes_vt = _pq_index_tables(spark, sf_dir)
-    if cb_vt.latest_version() is None or codes_vt.latest_version() is None:
-        return _pq_index_build(spark, sf_dir)[:2]
-    return cb_vt, codes_vt
+def _pq_index_ensure(spark: SparkSession, sf_dir: str) -> str:
+    """Serve-side entry: the published index when present (the
+    build-once/serve-many path); built on first touch. The root is
+    fingerprint-keyed, so 'present' implies 'built from THIS data'."""
+    import os as _os
+
+    index = _os.path.join(_pq_index_root(spark, sf_dir), "index")
+    return index if _os.path.isdir(index) else _pq_index_build(spark, sf_dir)
+
+
+def _pq_index_frames(spark: SparkSession, index: str):
+    """(codebook, codes) frames of a published index directory."""
+    import os as _os
+
+    return tuple(
+        spark.read.parquet(_os.path.join(index, name))
+        for name in ("codebook", "codes")
+    )
 
 
 @_register(
@@ -5733,13 +5735,14 @@ def _pq_index_ensure(spark: SparkSession, sf_dir: str):
     """,
 )
 def embedding_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+
     from epl_cas_etl_2026_spark.operators.similarity import pq_encode
 
     cfg = _PQ_IDX
-    cb_vt, codes_vt, codebooks = _pq_index_build(spark, sf_dir)
+    index = _pq_index_build(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cbdf = cb_vt.read(spark)
-    codes_back = codes_vt.read(spark)
+    cbdf, codes_back = _pq_index_frames(spark, index)
     # artifact certification: the READ-BACK codes must equal a fresh
     # encode under the READ-BACK codebook (collected driver-side —
     # m×k rows) — catches a torn/stale/reordered artifact, not just
@@ -5776,10 +5779,7 @@ def embedding_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cb_n = cbdf.agg(F.count(F.lit(1)).cast("long").alias("n_codebook_rows"))
     n_pts = emb.agg(F.count(F.lit(1)).cast("long").alias("n_points"))
-    committed = (
-        cb_vt.latest_version() is not None
-        and codes_vt.latest_version() is not None
-    )
+    committed = _os.path.isdir(index)
     return (
         n_pts.crossJoin(cb_n)
         .crossJoin(counts)
@@ -5808,6 +5808,8 @@ def embedding_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+
     from epl_cas_etl_2026_spark.operators.similarity import (
         pq_adc_batch_serve,
         pq_adc_batch_topk,
@@ -5817,9 +5819,8 @@ def embedding_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = _PQ_IDX
     shortlist, topk, n_q = 50, 10, 16
     emb = load_table(spark, sf_dir, "embeddings")
-    cb_vt, codes_vt = _pq_index_ensure(spark, sf_dir)
-    cbdf = cb_vt.read(spark)
-    codes = codes_vt.read(spark)
+    index = _pq_index_ensure(spark, sf_dir)
+    cbdf, codes = _pq_index_frames(spark, index)
     qids = [
         r["vec_id"]
         for r in emb.filter(F.col("vec_id") < n_q)
@@ -5831,7 +5832,7 @@ def embedding_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cbdf, codes, qids,
         dim=cfg["dim"], m=cfg["m"], shortlist=shortlist, topk=topk,
     ).localCheckpoint(eager=False)
-    # the existing in-query path on the same snapshot: fresh fit (pq_fit
+    # the existing in-query path on the same data: fresh fit (pq_fit
     # is deterministic) + inline encode — row-level equality required
     codebooks = pq_fit(
         emb, dim=cfg["dim"], m=cfg["m"], k=cfg["k"], iters=cfg["iters"]
@@ -5887,9 +5888,7 @@ def embedding_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
             "inquery_mismatches",
             "self_violations",
-            F.lit(cb_vt.latest_version() is not None).alias(
-                "served_from_index"
-            ),
+            F.lit(_os.path.isdir(index)).alias("served_from_index"),
         )
     )
 

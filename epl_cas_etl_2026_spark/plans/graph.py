@@ -209,6 +209,5 @@ def docs_word_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _BFS_SOURCE,
         max_depth=_BFS_DEPTH,
         node_col="word",
-        unpersist_edges=True,
     )
     return dist.orderBy("dist", "word")

@@ -28,7 +28,6 @@ token-bounded upstream; a 1M-token doc would need a wider scale).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -110,61 +109,15 @@ _ORACLE_FPS = f"""
 """
 
 
-def _winnow_fp_udf():
-    """Arrow-batched fingerprint computation — the ALTERNATIVE path
-    for corpora with very wide documents (hashlib md5 in C vs the
-    interpreted HOF evaluator scales better as grams/doc grows).
-    Measured on THIS corpus (≈54 tokens/doc) the let-bound expression
-    pipeline wins (2.1 s vs 3.5 s at sf0.1 — Arrow ship + Python
-    worker costs dominate at small per-doc work), so the queries use
-    _FP_EXPR; semantics are IDENTICAL (pinned by
-    tests/test_sketch_fingerprint.py's equivalence test)."""
-    import hashlib
-
-    @F.pandas_udf("array<long>")
-    def winnow_fp(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            ws = [w for w in (t or "").split(" ") if w]
-            n = len(ws)
-            ks = [
-                int(
-                    hashlib.md5(
-                        " ".join(ws[i : i + K]).encode()
-                    ).hexdigest()[:4],
-                    16,
-                )
-                * POS_SCALE
-                + i
-                + 1
-                for i in range(max(n - K + 1, 0))
-            ]
-            n_win = len(ks) - W + 1
-            sel = (
-                {min(ks[s : s + W]) for s in range(n_win)}
-                if n_win > 0
-                else set()
-            )
-            out.append(sorted(sel))
-        return pd.Series(out)
-
-    return winnow_fp
-
-
 def _with_fingerprints(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, source, fp: array<bigint>) where fp holds
     the winnowing-selected keys (hash16 * 2^20 + position). Pure
-    JVM-side expression — the measured-faster path on this corpus."""
+    JVM-side expression: on this corpus (≈54 tokens/doc) it beat an
+    Arrow pandas_udf of the same selection, 2.1 s vs 3.5 s at sf0.1
+    (Arrow shipping and Python worker costs dominate at small per-doc
+    work). That twin is the test baseline in tests/baselines.py."""
     return docs.select(
         "doc_id", "source", F.expr(_FP_EXPR).alias("fp")
-    )
-
-
-def _with_fingerprints_udf(docs: DataFrame) -> DataFrame:
-    """Arrow pandas_udf twin of _with_fingerprints (see
-    _winnow_fp_udf for when to prefer it)."""
-    return docs.select(
-        "doc_id", "source", _winnow_fp_udf()("text").alias("fp")
     )
 
 

@@ -85,6 +85,9 @@ _GATE_MODULES = {
     # the lifetime of the snapshot one-split tables are served from
     # (3 tests)
     "test_api_snapshot",
+    # the persisted PQ index: its atomic publish, the race between two
+    # builds, reuse without refitting (6 tests, ~25 s at 4 cores)
+    "test_pq_index",
 }
 
 

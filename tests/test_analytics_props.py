@@ -95,12 +95,12 @@ def test_pq_adc_recall_and_monotone_mse(spark):
     import numpy as np
 
     from epl_cas_etl_2026_spark.operators.similarity import (
-        pq_adc_topk,
         pq_encode,
         pq_fit,
         to_double,
     )
     from pyspark.sql import functions as F
+    from tests.baselines import pq_adc_topk
 
     emb = load_table(spark, SF, "embeddings")
     # init codebooks = subvectors of rows 0..15 (what pq_fit starts from)
@@ -686,9 +686,9 @@ def test_pq_batch_matches_single(spark):
     batch form is a plan restructuring, not a semantics change."""
     from epl_cas_etl_2026_spark.operators.similarity import (
         pq_adc_batch_topk,
-        pq_adc_topk,
         pq_fit,
     )
+    from tests.baselines import pq_adc_topk
 
     emb = load_table(spark, SF, "embeddings")
     dim, m, k_codes = 64, 8, 16

@@ -1070,20 +1070,24 @@ RANKING_GRUPOS_BUILD_CALLS = 1000
 def test_ranking_grupos_build_py4j_ceiling(domain, monkeypatch):
     """Building an endpoint's DataFrame is driver round trips, one py4j
     command each. With PySpark's DataFrame call-site capture on, every
-    ``functions.*``/Column call adds several (session.py). The cyclic
-    collector stays off while counting: the commands that free JVM
-    objects of unrelated garbage would land in the count at random."""
+    ``functions.*``/Column call adds several (session.py). Only the
+    building thread's commands count: py4j's finalizer thread frees the
+    JVM objects of unrelated garbage concurrently (449 of its commands
+    once landed in the window, after the ``gc.collect()`` below), and
+    the cyclic collector stays off so the build makes no such backlog."""
     import gc
+    import threading
 
     from py4j.clientserver import ClientServerConnection
 
     tables, _ = domain
     send = ClientServerConnection.send_command
+    building = threading.get_ident()
     calls = 0
 
     def counted(self, *args, **kwargs):
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == building
         return send(self, *args, **kwargs)
 
     gc.collect()

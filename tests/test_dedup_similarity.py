@@ -2,23 +2,12 @@
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.text import quality_class, token_count
-from epl_cas_etl_2026_spark.operators.dedup import (
-    keep_first_exact,
-    near_dup_pairs,
-    shingles,
-    simhash64,
-)
-from epl_cas_etl_2026_spark.operators.similarity import (
-    ann_topk_lsh,
-    cosine_topk,
-    hyperplanes,
-)
+from epl_cas_etl_2026_spark.operators.dedup import keep_first_exact, near_dup_pairs
+from tests.baselines import connected_components_propagation
 
 
 @pytest.fixture()
@@ -40,12 +29,6 @@ def test_exact_dedup(spark, docs):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 4, 5]
 
 
-def test_shingles_short_doc_safe(spark, docs):
-    out = docs.select(F.size(shingles(F.col("text"), 3)).alias("n")).collect()
-    by = sorted(r["n"] for r in out)
-    assert by[0] == 0  # 2-word doc → zero shingles, not a crash
-
-
 def test_near_dup_pipeline_finds_planted_pair(spark, docs):
     # band_size=1 → 16 single-hash bands: recall for the planted pair
     # (shingle-set Jaccard 0.4) is 1-(1-0.4)^16 ≈ 0.9997, and the md5
@@ -60,15 +43,6 @@ def test_near_dup_pipeline_finds_planted_pair(spark, docs):
     assert all(a < b for a, b in got)
 
 
-def test_simhash_close_for_near_dups(spark, docs):
-    sh = {r["doc_id"]: r["sh"] for r in docs.select(
-        "doc_id", simhash64(F.col("text")).alias("sh")).collect()}
-    assert sh[1] == sh[2]  # identical text → identical simhash
-    ham_near = bin(sh[1] ^ sh[3]).count("1")
-    ham_far = bin(sh[1] ^ sh[4]).count("1")
-    assert ham_near < ham_far  # near dup closer in Hamming space
-
-
 def test_text_helpers(spark, docs):
     row = docs.filter(F.col("doc_id") == 1).select(
         token_count(F.col("text")).alias("n"),
@@ -79,42 +53,6 @@ def test_text_helpers(spark, docs):
     short = docs.filter(F.col("doc_id") == 5).select(
         quality_class(F.col("text")).alias("q")).collect()[0]
     assert short["q"] == "drop"
-
-
-@pytest.fixture()
-def vectors(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),   # close to 0
-        (2, [0.0, 1.0, 0.0]),   # orthogonal
-        (3, [-1.0, 0.0, 0.0]),  # opposite
-        (4, [0.8, 0.2, 0.0]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_cosine_topk_ordering(spark, vectors):
-    top = cosine_topk(vectors, [1.0, 0.0, 0.0], k=3, exclude_ids=(0,)).collect()
-    assert [r["vec_id"] for r in top] == [1, 4, 2]
-    assert top[0]["sim"] == pytest.approx(0.9 / math.sqrt(0.82), abs=1e-6)
-
-
-def test_ann_lsh_same_bucket_recall(spark, vectors):
-    planes = hyperplanes(dim=3, n_planes=2, seed=7)
-    approx = ann_topk_lsh(vectors, [1.0, 0.0, 0.0], planes, k=2).collect()
-    # the query's own bucket must contain the query-identical vector
-    assert approx and approx[0]["vec_id"] in (0, 1, 4)
-
-
-def test_language_id_first_max_wins(spark):
-    from epl_cas_etl_2026_spark.functions.text import lang_scores
-
-    markers = {"aa": ("x",), "bb": ("y",), "cc": ("z",)}
-    df = spark.createDataFrame(
-        [("x y",), ("y z",), ("q q",)], "text string"
-    ).select(lang_scores(F.col("text"), markers).alias("lang"))
-    # ties resolve to the lexicographically-first language
-    assert [r["lang"] for r in df.collect()] == ["aa", "bb", "aa"]
 
 
 def test_minhash_agg_drops_short_docs(spark, docs):
@@ -285,10 +223,7 @@ def test_connected_components_star_beats_diameter(spark):
     59) fully contracts within 8 alternating large-star/small-star
     rounds — min-label propagation at the same budget provably cannot
     (its round count IS the diameter)."""
-    from epl_cas_etl_2026_spark.operators.dedup import (
-        connected_components,
-        connected_components_propagation,
-    )
+    from epl_cas_etl_2026_spark.operators.dedup import connected_components
 
     n = 60
     edges = spark.createDataFrame(
@@ -315,10 +250,7 @@ def test_connected_components_star_matches_propagation_random(spark):
     edges)."""
     import random
 
-    from epl_cas_etl_2026_spark.operators.dedup import (
-        connected_components,
-        connected_components_propagation,
-    )
+    from epl_cas_etl_2026_spark.operators.dedup import connected_components
 
     rng = random.Random(7)
     for trial in range(3):

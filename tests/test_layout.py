@@ -37,23 +37,25 @@ def test_two_phase_rank_no_single_partition_window(spark, sf_smoke):
     # one task); repartitionByRange + local rank + offsets instead
     assert "SinglePartition" not in plan
 
-    # value equivalence against the single-window reference
-    single = competition_rank(
-        orders, "o_totalprice", max_rows_guard=None
-    ).select("o_orderkey", "posicion")
+    # value equivalence against the single-window reference (the
+    # smoke table is far below its MAX_GLOBAL_WINDOW_ROWS guard)
+    single = competition_rank(orders, "o_totalprice").select(
+        "o_orderkey", "posicion"
+    )
     a = {r["o_orderkey"]: r["posicion"] for r in two.collect()}
     b = {r["o_orderkey"]: r["posicion"] for r in single.collect()}
     assert a == b
 
 
-def test_competition_rank_guard_rejects_fact_frames(spark, sf_smoke):
+def test_competition_rank_guard_rejects_fact_frames(spark, sf_smoke, monkeypatch):
     import pytest
-    from epl_cas_etl_2026_spark.operators.ranking import competition_rank
+    from epl_cas_etl_2026_spark.operators import ranking
 
     orders = load_table(spark, sf_smoke, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    guarded = competition_rank(orders, "o_totalprice", max_rows_guard=100)
+    monkeypatch.setattr(ranking, "MAX_GLOBAL_WINDOW_ROWS", 100)
+    guarded = ranking.competition_rank(orders, "o_totalprice")
     with pytest.raises(Exception, match="two_phase_competition_rank"):
         guarded.collect()
 

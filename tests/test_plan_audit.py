@@ -301,52 +301,83 @@ def test_package_binding_its_own_submodule_resolves():
     assert {(registry, "QUERIES"), (registry, "ORACLES")} <= set(edges)
 
 
-# definitions in plans/ that no registered query reaches, each with the
-# consumer outside the package that keeps it
+# package definitions that no root reaches: the SURVEY S2 REST extract
+# operator, a Spark data source that no sync path registers yet
 _UNREACHED_ALLOWED = {
-    "extensions._SIMHASH_PAIRS_SQL": "tools/rehearse_sf1.py",
-    "winnow._winnow_fp_udf": "reference implementation in test_sketch_fingerprint",
-    "winnow._with_fingerprints_udf": "reference implementation in test_sketch_fingerprint",
+    f"sources.rest_datasource.{name}"
+    for name in ("PAGE_SIZE", "PageRange", "ZenputRestDataSource", "ZenputRestReader", "register")
 }
+
+# non-test code outside the package; every package name it reads is a root
+_OUTSIDE_CONSUMERS = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
 
 
 def test_every_plans_definition_is_reachable():
-    """Every top-level definition in a plans/ module is reached from a
-    registered query or from a ``@_register(...)`` decorator (how
-    oracle constants are read), unless the allowlist names its
-    consumer. Deleting a query family must delete its helpers too."""
+    """Every top-level definition of every package module is reached
+    from a root unless the allowlist names it. The roots: every
+    registered query; every decorator expression (decorators run at
+    import: ``@_register(...)`` reads the oracle constants,
+    ``@_request`` wraps the endpoints); every public ``api`` function;
+    and every package name read by non-test code outside the package
+    (``_OUTSIDE_CONSUMERS``). Deleting a caller must delete what only
+    it reached, or move it into ``tests/`` when a test still compares
+    against it."""
     import ast
+    import importlib
+    import inspect
+    import pkgutil
 
+    import epl_cas_etl_2026_spark as pkg
+    from epl_cas_etl_2026_spark import api
     from epl_cas_etl_2026_spark.plans import gate_policy as gp, registry
 
-    package = "epl_cas_etl_2026_spark.plans"
-    plans_dir = os.path.dirname(gp.__file__)
-    modules = [
-        f"{package}.{f[:-3]}"
-        for f in sorted(os.listdir(plans_dir))
-        if f.endswith(".py") and f[:-3] not in ("__init__", "gate_policy", "registry")
+    modules = [pkg.__name__] + [
+        m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
     ]
-    reached = set().union(*(gp._reachable(fn) for fn in registry.QUERIES.values()))
-    stack = []
+    stack = [node for fn in registry.QUERIES.values() for node in gp._reachable(fn)]
     for mod in modules:
-        with open(os.path.join(plans_dir, mod.rsplit(".", 1)[1] + ".py")) as f:
+        module = importlib.import_module(mod)
+        with open(module.__file__) as f:
             tree = ast.parse(f.read())
         for node in tree.body:
             for dec in getattr(node, "decorator_list", ()):
-                if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "_register":
-                    stack.extend(gp._targets(mod, *gp._references(dec, package)))
+                stack.extend(gp._targets(mod, *gp._references(dec, module.__package__)))
+    stack += [
+        (api.__name__, name)
+        for name, v in vars(api).items()
+        if inspect.isfunction(v) and v.__module__ == api.__name__ and not name.startswith("_")
+    ]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = []
+    for entry in _OUTSIDE_CONSUMERS:
+        path = os.path.join(root, entry)
+        if os.path.isdir(path):
+            paths += [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".py")]
+        else:
+            paths.append(path)
+    for path in paths:
+        with open(path) as f:
+            chains, imported = gp._references(ast.parse(f.read()), "")
+        for head, *attrs in chains:
+            node = head in imported and gp._resolve(*imported[head])
+            for attr in attrs:
+                if node and node[1] is None:
+                    node = gp._resolve(node[0], attr)
+            if node and node[1]:
+                stack.append(node)
+    reached = set()
     while stack:
         node = stack.pop()
         if node not in reached:
             reached.add(node)
             stack.extend(gp._edges(*node))
     unreached = {
-        f"{mod.rsplit('.', 1)[1]}.{name}"
+        f"{mod[len(pkg.__name__) + 1:]}.{name}"
         for mod in modules
         for name in gp._definitions(mod)[0]
-        if (mod, name) not in reached
+        if (mod, name) not in reached and not (name.startswith("__") and name.endswith("__"))
     }
-    assert unreached == set(_UNREACHED_ALLOWED)
+    assert unreached == _UNREACHED_ALLOWED
 
 
 def test_ledger_tool_records_each_round_once(monkeypatch):

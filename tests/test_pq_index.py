@@ -1,28 +1,30 @@
-"""Persisted-index ANN build/serve (round-8): the build-once /
-serve-many contract.
+"""Persisted-index ANN build/serve: the build-once / serve-many
+contract.
 
-The round-7 verdict's last production-shape gap: PQ codebooks and
-codes were rebuilt in-query every run. These tests pin the split:
+PQ codebooks and codes are built once and published as one directory,
+``<root>/index``, under a root keyed by a fingerprint of the
+embeddings table. These tests pin:
 
 * serve from the persisted artifacts == the in-query path with the
   SAME codebooks (pq_adc_batch_serve is a data-source change, not a
   semantics change);
-* a second build commits a NEW version and serving still returns the
-  identical result (snapshot determinism: pq_fit is a pure function of
-  the table);
-* serve-with-no-index auto-builds on first touch, and a FRESH ensure
-  call afterwards reuses the commit instead of rebuilding (version
-  number unchanged).
+* publication is atomic: a build that fails before its rename
+  publishes nothing and leaves no temporary directory, and the next
+  ensure call rebuilds;
+* two builds racing on one root both return certified rows and
+  exactly one ``index`` directory is published;
+* a second ensure call reuses the published index without fitting.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+import pytest
 
 from epl_cas_etl_2026_spark.sources.parquet import load_table
 
@@ -36,6 +38,22 @@ def _rows(df):
     )
 
 
+def _assert_build_row_certified(b):
+    assert b["committed_ok"] is True
+    assert b["reencode_mismatches"] == 0
+    assert b["n_codebook_rows"] == 128
+    assert b["n_code_rows"] == b["n_points"] * 8
+
+
+@pytest.fixture()
+def ext(tmp_path, monkeypatch):
+    """The plans module with its index root under ``tmp_path/root``."""
+    import epl_cas_etl_2026_spark.plans.extensions as ext
+
+    monkeypatch.setattr(ext, "_pq_index_root", lambda _s, _f: str(tmp_path / "root"))
+    return ext
+
+
 def test_serve_from_artifacts_equals_inquery(spark, tmp_path):
     from epl_cas_etl_2026_spark.operators.similarity import (
         pq_adc_batch_serve,
@@ -43,31 +61,27 @@ def test_serve_from_artifacts_equals_inquery(spark, tmp_path):
         pq_encode,
         pq_fit,
     )
-    from epl_cas_etl_2026_spark.sources.versioned import VersionedTable
 
     emb = load_table(spark, SF, "embeddings")
     dim, m, k = 64, 8, 16
     codebooks = pq_fit(emb, dim=dim, m=m, k=k, iters=2)
-    cb_vt = VersionedTable(str(tmp_path / "cb"))
-    codes_vt = VersionedTable(str(tmp_path / "codes"))
-    cb_vt.commit(
-        spark.createDataFrame(
-            [
-                (s, j, [float(x) for x in codebooks[s][j]])
-                for s in range(m)
-                for j in range(k)
-            ],
-            "sub_id int, code int, centroid array<double>",
-        )
-    )
-    codes_vt.commit(
-        pq_encode(emb, codebooks, dim=dim, m=m).select(
-            "vec_id", "sub_id", "code"
-        )
-    )
+    spark.createDataFrame(
+        [
+            (s, j, [float(x) for x in codebooks[s][j]])
+            for s in range(m)
+            for j in range(k)
+        ],
+        "sub_id int, code int, centroid array<double>",
+    ).write.parquet(str(tmp_path / "cb"))
+    pq_encode(emb, codebooks, dim=dim, m=m).select(
+        "vec_id", "sub_id", "code"
+    ).write.parquet(str(tmp_path / "codes"))
     qids = [r["vec_id"] for r in emb.filter("vec_id < 8").collect()]
     served = pq_adc_batch_serve(
-        emb, cb_vt.read(spark), codes_vt.read(spark), qids,
+        emb,
+        spark.read.parquet(str(tmp_path / "cb")),
+        spark.read.parquet(str(tmp_path / "codes")),
+        qids,
         dim=dim, m=m, shortlist=30, topk=5,
     )
     inquery = pq_adc_batch_topk(
@@ -76,48 +90,82 @@ def test_serve_from_artifacts_equals_inquery(spark, tmp_path):
     assert _rows(served) == _rows(inquery)
 
 
-def test_ensure_builds_once_then_reuses(spark, tmp_path, monkeypatch):
-    import epl_cas_etl_2026_spark.plans.extensions as ext
+def test_failed_build_publishes_nothing_then_ensure_rebuilds(
+    spark, tmp_path, monkeypatch, ext
+):
+    def failing_rename(src, dst):
+        raise OSError("injected failure before the publish")
 
-    monkeypatch.setattr(
-        ext,
-        "_pq_index_root",
-        lambda _spark, _sf: str(tmp_path / "idx"),
-    )
-    cb_vt, codes_vt = ext._pq_index_ensure(spark, SF)
-    v_cb, v_codes = cb_vt.latest_version(), codes_vt.latest_version()
-    assert v_cb is not None and v_codes is not None
-    # second ensure: NO rebuild — versions unchanged
-    cb_vt2, codes_vt2 = ext._pq_index_ensure(spark, SF)
-    assert cb_vt2.latest_version() == v_cb
-    assert codes_vt2.latest_version() == v_codes
-    # explicit rebuild commits a NEW version; codes content identical
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", failing_rename)
+        with pytest.raises(OSError, match="injected"):
+            ext._pq_index_build(spark, SF)
+    root = tmp_path / "root"
+    # the fully written temporary directory is gone and nothing is served
+    assert os.listdir(root) == []
+    index = ext._pq_index_ensure(spark, SF)
+    assert index == str(root / "index")
+    assert os.listdir(root) == ["index"]
+    cb, codes = ext._pq_index_frames(spark, index)
+    assert cb.count() == 128
+    assert codes.count() == load_table(spark, SF, "embeddings").count() * 8
+
+
+def test_racing_builds_publish_one_index(spark, tmp_path, monkeypatch, ext):
+    """Both builds write their copy before either renames (a barrier
+    in front of ``os.rename``), so exactly one rename wins and the
+    other build serves the winner's directory."""
+    both_written = threading.Barrier(2, timeout=600)
+    rename = os.rename
+
+    def rename_after_both_wrote(src, dst):
+        both_written.wait()
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_after_both_wrote)
+    rows, errors = [], []
+
+    def build():
+        try:
+            rows.append(ext.embedding_pq_index_build(spark, SF).collect()[0])
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+            both_written.abort()
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=900)
+        assert not t.is_alive()
+    assert errors == []
+    assert len(rows) == 2
+    for b in rows:
+        _assert_build_row_certified(b)
+    assert os.listdir(tmp_path / "root") == ["index"]
+
+
+def test_second_ensure_reuses_the_index_without_fitting(spark, monkeypatch, ext):
+    import epl_cas_etl_2026_spark.operators.similarity as sim
+
+    index = ext._pq_index_ensure(spark, SF)
     before = sorted(
-        (r["vec_id"], r["sub_id"], r["code"])
-        for r in codes_vt.read(spark).collect()
+        tuple(r) for r in ext._pq_index_frames(spark, index)[1].collect()
     )
-    ext._pq_index_build(spark, SF)
-    assert codes_vt.latest_version() == v_codes + 1
+
+    def no_fit(*_a, **_k):
+        raise AssertionError("pq_fit called although the index is published")
+
+    monkeypatch.setattr(sim, "pq_fit", no_fit)
+    assert ext._pq_index_ensure(spark, SF) == index
     after = sorted(
-        (r["vec_id"], r["sub_id"], r["code"])
-        for r in codes_vt.read(spark).collect()
+        tuple(r) for r in ext._pq_index_frames(spark, index)[1].collect()
     )
     assert before == after
 
 
-def test_gated_pair_green_shape(spark, tmp_path, monkeypatch):
-    import epl_cas_etl_2026_spark.plans.extensions as ext
-
-    monkeypatch.setattr(
-        ext,
-        "_pq_index_root",
-        lambda _spark, _sf: str(tmp_path / "idx2"),
-    )
-    b = ext.embedding_pq_index_build(spark, SF).collect()[0]
-    assert b["committed_ok"] is True
-    assert b["reencode_mismatches"] == 0
-    assert b["n_codebook_rows"] == 128
-    assert b["n_code_rows"] == b["n_points"] * 8
+def test_gated_pair_green_shape(spark, ext):
+    _assert_build_row_certified(ext.embedding_pq_index_build(spark, SF).collect()[0])
     s = ext.embedding_pq_index_serve(spark, SF).collect()[0]
     assert s["served_from_index"] is True
     assert s["inquery_mismatches"] == 0
@@ -125,23 +173,19 @@ def test_gated_pair_green_shape(spark, tmp_path, monkeypatch):
     assert s["n_rows"] == s["n_queries"] * 10
 
 
-def test_serve_plan_is_arrow_free(spark, tmp_path, monkeypatch):
+def test_serve_plan_is_arrow_free(spark, ext):
     """The whole point of the persisted index: serving touches no
     Python/Arrow stage (pq_fit and pq_encode are Arrow-batched; the
     serve plan must contain neither — LUT construction is a JVM array
     slice and the corpus side is a parquet scan of the codes table)."""
-    import epl_cas_etl_2026_spark.plans.extensions as ext
     from epl_cas_etl_2026_spark.operators.similarity import (
         pq_adc_batch_serve,
     )
 
-    monkeypatch.setattr(
-        ext, "_pq_index_root", lambda _s, _f: str(tmp_path / "idx3")
-    )
-    cb_vt, codes_vt = ext._pq_index_ensure(spark, SF)
+    cb, codes = ext._pq_index_frames(spark, ext._pq_index_ensure(spark, SF))
     emb = load_table(spark, SF, "embeddings")
     served = pq_adc_batch_serve(
-        emb, cb_vt.read(spark), codes_vt.read(spark), [0, 1],
+        emb, cb, codes, [0, 1],
         dim=64, m=8, shortlist=30, topk=5,
     )
     plan = served._jdf.queryExecution().executedPlan().toString()

@@ -83,14 +83,11 @@ def test_avg_null_injection_invariant(spark, vals, n_nulls):
 )
 @settings(**_SETTINGS)
 def test_dedup_idempotent_under_redelivery(spark, keys, redeliver):
-    page = [(f"k{k}", k) for k in keys]
-    once = spark.createDataFrame(page, "zenput_submission_id string, payload long")
-    many = spark.createDataFrame(
-        page * redeliver, "zenput_submission_id string, payload long"
-    )
-    sink = spark.createDataFrame(
-        [("k0", 0)], "zenput_submission_id string, payload long"
-    )
+    schema = "zenput_submission_id string, fecha_supervision timestamp, payload long"
+    page = [(f"k{k}", None, k) for k in keys]
+    once = spark.createDataFrame(page, schema)
+    many = spark.createDataFrame(page * redeliver, schema)
+    sink = spark.createDataFrame([("k0", None, 0)], schema)
     got_once = sorted(
         r["zenput_submission_id"]
         for r in dedup_against_sink(once, sink).collect()

@@ -147,11 +147,9 @@ def test_winnowing_udf_equals_expression_path(spark, sf_smoke):
     produce identical fingerprint sets for every document."""
     from pyspark.sql import functions as F
 
-    from epl_cas_etl_2026_spark.plans.winnow import (
-        _with_fingerprints,
-        _with_fingerprints_udf,
-    )
+    from epl_cas_etl_2026_spark.plans.winnow import _with_fingerprints
     from epl_cas_etl_2026_spark.sources.parquet import load_table
+    from tests.baselines import with_fingerprints_udf
 
     docs = load_table(spark, sf_smoke, "documents")
     a = {
@@ -160,7 +158,7 @@ def test_winnowing_udf_equals_expression_path(spark, sf_smoke):
     }
     b = {
         r.doc_id: sorted(r.fp)
-        for r in _with_fingerprints_udf(docs).collect()
+        for r in with_fingerprints_udf(docs).collect()
     }
     assert a == b
 

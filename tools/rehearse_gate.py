@@ -70,7 +70,9 @@ def main() -> int:
             )
             return 0
     else:
-        names = list(qs) if args.all else list(qs)[:50]
+        from epl_cas_etl_2026_spark.plans.gate_policy import GATE_CAP
+
+        names = list(qs) if args.all else list(qs)[:GATE_CAP]
     t0 = time.time()
     failures = []
     for name in names:
