@@ -3353,6 +3353,32 @@ def events_robust_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_trailing_cents(
+    spark: SparkSession, sf_dir: str, k: int
+) -> DataFrame:
+    """(event_id, user_id, l): per event, its user's ``value`` in
+    integer cents over the k preceding events and itself, in
+    (ts, event_id) order."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.floor(F.col("value").cast("double") * 100 + 0.5)
+        .cast("long")
+        .alias("cents"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-k, Window.currentRow)
+    )
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.collect_list("cents").over(w).alias("l"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # EWMA over a 16-event trailing window, per user — exponentially
 # weighted moving average with decay 1/2, the time-series smoother
@@ -3387,30 +3413,13 @@ def events_robust_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_user_ewma_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.floor(F.col("value").cast("double") * 100 + 0.5)
-        .cast("long")
-        .alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-15, Window.currentRow)
-    )
     num = F.expr(
         "aggregate(transform(l, (x, i) -> x * pow(2D, i + 1 - size(l))),"
         " 0D, (a, v) -> a + v)"
     )
     denom = F.expr("2D - pow(2D, 1 - size(l))")
     return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.collect_list("cents").over(w).alias("l"),
-        )
+        _user_trailing_cents(spark, sf_dir, 15)
         .select(
             "event_id",
             "user_id",
@@ -3493,19 +3502,6 @@ _HOLT_W_SQL = "[" + ", ".join(
     """,
 )
 def events_user_holt_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.floor(F.col("value").cast("double") * 100 + 0.5)
-        .cast("long")
-        .alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-15, Window.currentRow)
-    )
     wlit = F.array(*[
         F.array(*[F.lit(c) for c in row]) for row in _HOLT_W
     ])
@@ -3516,11 +3512,7 @@ def events_user_holt_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
         " 0D, (a, v) -> a + v)"
     )
     return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.collect_list("cents").over(w).alias("l"),
-        )
+        _user_trailing_cents(spark, sf_dir, 15)
         .withColumn("wrow", F.element_at(wlit, F.size("l")))
         .select(
             "event_id",
@@ -3698,25 +3690,8 @@ def docs_simhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_user_rolling_median(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.floor(F.col("value").cast("double") * 100 + 0.5)
-        .cast("long")
-        .alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-14, Window.currentRow)
-    )
     return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.collect_list("cents").over(w).alias("l"),
-        )
+        _user_trailing_cents(spark, sf_dir, 14)
         .select(
             "event_id",
             "user_id",
@@ -3729,19 +3704,62 @@ def events_user_rolling_median(
     )
 
 
+def _vertex_degrees(e: DataFrame) -> DataFrame:
+    """(v, d): the degree of every vertex of the edge list (a, b)."""
+    return (
+        e.select(F.col("a").alias("v"))
+        .unionByName(e.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _degree_ordered_triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """One row per triangle of the edge list (a, b), whose vertex
+    degrees are ``deg``. Degree-ordered orientation (Suri &
+    Vassilvitskii's MR-friendly scheme): point every edge from its
+    (degree, id)-smaller endpoint to the larger, enumerate wedges only
+    between OUT-neighbors, and close with an oriented edge. Out-degree
+    is bounded by O(√m), so the wedge fan-out is hub-proof — Σ outdeg²
+    instead of Σ deg². The count is identical to an id-ordered
+    enumeration (each triangle has exactly one minimum vertex under
+    the total (degree, id) order)."""
+    ed = (
+        e.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
+        .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
+    )
+    fwd = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
+    o = ed.select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
+    ).localCheckpoint(eager=False)
+    x, y = o.alias("x"), o.alias("y")
+    lt = (F.col("x.dv") < F.col("y.dv")) | (
+        (F.col("x.dv") == F.col("y.dv")) & (F.col("x.v") < F.col("y.v"))
+    )
+    return (
+        x.join(y, (F.col("x.u") == F.col("y.u")) & lt)
+        .join(
+            o.alias("z"),
+            (F.col("z.u") == F.col("x.v")) & (F.col("z.v") == F.col("y.v")),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # Triangle count + global clustering coefficient over the near-dup
 # graph — the canonical distributed-graph aggregate (wedge-closure
 # rate tells you whether near-dup pairs form coherent duplicate
 # CLIQUES or noisy hub stars — a dedup-quality diagnostic). Edges are
-# the simhash pair list (already id_a < id_b); triangles are the
-# ordered 2-path ⋈ closing-edge equi-join (a<b<c counts each triangle
-# exactly once); wedges come from the degree table as Σ d·(d−1)/2.
-# Coefficient = 3·triangles/wedges in ppm. 100 TB note: the 2-path
-# join fans out quadratically on hub vertices — the standard fix
-# (orient edges by DEGREE, join only low→high) is a drop-in once hubs
-# appear; on near-dup graphs band-capping (DF_CAP-style) already
-# bounds degrees upstream.
+# the simhash pair list (already id_a < id_b). The oracle counts
+# triangles as the id-ordered 2-path ⋈ closing-edge equi-join (a<b<c
+# counts each triangle exactly once); the Spark side enumerates them
+# degree-ordered (_degree_ordered_triangles), whose fan-out stays
+# bounded on hub vertices. Wedges come from the degree table as
+# Σ d·(d−1)/2. Coefficient = 3·triangles/wedges in ppm.
 # ---------------------------------------------------------------------------
 @_register(
     "docs_near_dup_triangles",
@@ -3794,12 +3812,7 @@ def docs_near_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .localCheckpoint(eager=False)  # pin: consumed by 4 subtrees
     )
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _vertex_degrees(e)
     wed = deg.agg(
         F.sum(F.col("d") * (F.col("d") - 1) / 2)
         .cast("long")
@@ -3807,37 +3820,8 @@ def docs_near_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_vertices"),
         F.max("d").alias("max_degree"),
     )
-    # Degree-ordered orientation (Suri & Vassilvitskii's MR-friendly
-    # scheme): point every edge from its (degree, id)-smaller endpoint
-    # to the larger, enumerate wedges only between OUT-neighbors, and
-    # close with an oriented edge. Out-degree is bounded by O(√m), so
-    # the wedge fan-out is hub-proof — Σ outdeg² instead of Σ deg².
-    # The count is identical to the oracle's id-ordered enumeration
-    # (each triangle has exactly one minimum vertex under the total
-    # (degree, id) order).
-    ed = (
-        e.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-    )
-    fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)
-    x, y = o.alias("x"), o.alias("y")
-    lt = (F.col("x.dv") < F.col("y.dv")) | (
-        (F.col("x.dv") == F.col("y.dv")) & (F.col("x.v") < F.col("y.v"))
-    )
-    tri = (
-        x.join(y, (F.col("x.u") == F.col("y.u")) & lt)
-        .join(
-            o.alias("z"),
-            (F.col("z.u") == F.col("x.v")) & (F.col("z.v") == F.col("y.v")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    tri = _degree_ordered_triangles(e, deg).agg(
+        F.count(F.lit(1)).alias("n_triangles")
     )
     edges_n = e.agg(F.count(F.lit(1)).alias("n_edges"))
     return (
@@ -3959,38 +3943,10 @@ def docs_near_dup_triangles_doulion(
         == 0
     )
     e = e0.filter(coin).localCheckpoint(eager=False)
-    # degree-ordered orientation on the SAMPLED graph — same hub-proof
-    # enumeration as docs_near_dup_triangles (Suri & Vassilvitskii),
-    # Σ outdeg² ≤ O(m^1.5) work instead of Σ deg² wedges
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ed = (
-        e.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-    )
-    fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)
-    x, y = o.alias("x"), o.alias("y")
-    lt = (F.col("x.dv") < F.col("y.dv")) | (
-        (F.col("x.dv") == F.col("y.dv")) & (F.col("x.v") < F.col("y.v"))
-    )
-    tri = (
-        x.join(y, (F.col("x.u") == F.col("y.u")) & lt)
-        .join(
-            o.alias("z"),
-            (F.col("z.u") == F.col("x.v")) & (F.col("z.v") == F.col("y.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_tri_sampled"))
+    # the same hub-proof enumeration as docs_near_dup_triangles, on
+    # the SAMPLED graph
+    tri = _degree_ordered_triangles(e, _vertex_degrees(e)).agg(
+        F.count(F.lit(1)).cast("long").alias("n_tri_sampled")
     )
     return (
         e0.agg(F.count(F.lit(1)).cast("long").alias("n_edges_full"))
@@ -4681,6 +4637,76 @@ def _jm_q30_spark_q():
     )
 
 
+def _doc_words(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
+    """``documents`` as (doc_id, key, ws): the non-empty words of each
+    document split on single spaces."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        key,
+        F.filter(F.split(F.col("text"), " "), lambda w: w != "").alias(
+            "ws"
+        ),
+    )
+
+
+def _doc_bigrams(docs: DataFrame, key: str) -> DataFrame:
+    """One (doc_id, key, w1, w2) row per adjacent word pair of each
+    document of ``_doc_words``."""
+    return (
+        docs.select(
+            "doc_id",
+            key,
+            F.explode(
+                F.arrays_zip(
+                    F.expr("slice(ws, 1, greatest(size(ws) - 1, 0))"),
+                    F.expr("slice(ws, 2, greatest(size(ws) - 1, 0))"),
+                )
+            ).alias("p"),
+        )
+        .select(
+            "doc_id",
+            key,
+            F.col("p.0").alias("w1"),
+            F.col("p.1").alias("w2"),
+        )
+        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
+    )
+
+
+def _jm_bigram_perdoc(
+    spark: SparkSession, sf_dir: str, key: str
+) -> DataFrame:
+    """(doc_id, key, q): each document's Jelinek-Mercer bigram
+    cross-entropy in millibits, fit on the whole corpus. Docs with
+    fewer than 2 words have no transitions and no row."""
+    docs = _doc_words(spark, sf_dir, key)
+    docs = docs.localCheckpoint(eager=False)  # unigram + bigram consumers
+    uni = (
+        docs.select(F.explode("ws").alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    bg = _doc_bigrams(docs, key)
+    bg = bg.localCheckpoint(eager=False)  # LM fit + scoring consumers
+    pair = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+    pair = pair.localCheckpoint(eager=False)  # head counts + scoring
+    head = pair.groupBy("w1").agg(F.sum("c12").alias("ch"))
+    tot = uni.agg(F.sum("c").alias("n_uni"))
+    # Q30 integer terms per DISTINCT bigram type (vocab-bounded): the
+    # ln chain never touches the transition-grained stream, and the
+    # per-doc reduction is an exact BIGINT sum — no float anywhere
+    terms = _jm_q30_spark_terms(
+        pair.join(head, "w1")
+        .join(uni.withColumnRenamed("word", "w2"), "w2")
+        .crossJoin(F.broadcast(tot))
+    ).select("w1", "w2", "term_q")
+    return (
+        bg.join(terms, ["w1", "w2"])
+        .groupBy("doc_id", key)
+        .agg(_jm_q30_spark_q().alias("q"))
+    )
+
+
 # Oracle-side fragments: `terms` expects CTEs pair(w1,w2,c12),
 # head(w1,ch), uni(word,c), tot(n_uni) to be in scope.
 _JM_Q30_DUCK_TERMS = f"""
@@ -4763,58 +4789,9 @@ _JM_Q30_DUCK_Q = (
 def docs_bigram_lm_perplexity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.filter(F.split(F.col("text"), " "), lambda w: w != "").alias(
-            "ws"
-        ),
-    )
-    docs = docs.localCheckpoint(eager=False)  # unigram + bigram consumers
-    uni = (
-        docs.select(F.explode("ws").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bg = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.arrays_zip(
-                    F.expr("slice(ws, 1, greatest(size(ws) - 1, 0))"),
-                    F.expr("slice(ws, 2, greatest(size(ws) - 1, 0))"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-        )
-        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
-    )
-    bg = bg.localCheckpoint(eager=False)  # LM fit + scoring consumers
-    pair = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    pair = pair.localCheckpoint(eager=False)  # head counts + scoring
-    head = pair.groupBy("w1").agg(F.sum("c12").alias("ch"))
-    tot = uni.agg(F.sum("c").alias("n_uni"))
-    # Q30 integer terms per DISTINCT bigram type (vocab-bounded): the
-    # ln chain never touches the transition-grained stream, and the
-    # per-doc reduction is an exact BIGINT sum — no float anywhere
-    terms = _jm_q30_spark_terms(
-        pair.join(head, "w1")
-        .join(uni.withColumnRenamed("word", "w2"), "w2")
-        .crossJoin(F.broadcast(tot))
-    ).select("w1", "w2", "term_q")
-    perdoc = (
-        bg.join(terms, ["w1", "w2"])
-        .groupBy("doc_id", "source")
-        .agg(_jm_q30_spark_q().alias("q"))
-    )
     return (
-        perdoc.groupBy("source")
+        _jm_bigram_perdoc(spark, sf_dir, "source")
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs_scored"),
             F.sum("q").cast("long").alias("sum_millibits"),
@@ -4901,32 +4878,7 @@ _KN_D = 0.75
 def docs_kneser_ney_bigram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.filter(F.split(F.col("text"), " "), lambda w: w != "").alias(
-            "ws"
-        ),
-    )
-    bg = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.arrays_zip(
-                    F.expr("slice(ws, 1, greatest(size(ws) - 1, 0))"),
-                    F.expr("slice(ws, 2, greatest(size(ws) - 1, 0))"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-        )
-        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
-    )
+    bg = _doc_bigrams(_doc_words(spark, sf_dir, "source"), "source")
     bg = bg.localCheckpoint(eager=False)  # LM fit + scoring consumers
     pair = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     pair = pair.localCheckpoint(eager=False)  # head/cont/types + scoring
@@ -5666,7 +5618,13 @@ def _pq_index_build(spark: SparkSession, sf_dir: str) -> str:
     its copy and returns the published one, which holds the same
     rows (pq_fit's init and tie rules make the index a pure function
     of the fingerprint-keyed root). A failed build publishes nothing
-    and removes its temporary directory."""
+    and removes its temporary directory.
+
+    Once ``index`` is published, the build removes what older builds
+    of the same sf left: the legacy ``codebook/`` and ``codes/`` next
+    to ``index`` and every other ``pq_<sf>_*`` root beside this one.
+    Precondition: no other session serves an older index of the same
+    sf at the same time."""
     import os as _os
     import shutil as _shutil
     import uuid as _uuid
@@ -5700,6 +5658,13 @@ def _pq_index_build(spark: SparkSession, sf_dir: str) -> str:
                 raise
     finally:
         _shutil.rmtree(tmp, ignore_errors=True)
+    for legacy in ("codebook", "codes"):
+        _shutil.rmtree(_os.path.join(root, legacy), ignore_errors=True)
+    base, name = _os.path.split(root)
+    sf_prefix = name.rsplit("_", 1)[0]
+    for other in _os.listdir(base):
+        if other != name and other.rsplit("_", 1)[0] == sf_prefix:
+            _shutil.rmtree(_os.path.join(base, other), ignore_errors=True)
     return index
 
 
@@ -6831,57 +6796,7 @@ def docs_ccnet_perplexity_buckets(
         two_phase_grouped_row_number,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.filter(F.split(F.col("text"), " "), lambda w: w != "").alias(
-            "ws"
-        ),
-    )
-    docs = docs.localCheckpoint(eager=False)  # unigram + bigram consumers
-    uni = (
-        docs.select(F.explode("ws").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bg = (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.arrays_zip(
-                    F.expr("slice(ws, 1, greatest(size(ws) - 1, 0))"),
-                    F.expr("slice(ws, 2, greatest(size(ws) - 1, 0))"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-        )
-        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
-    )
-    bg = bg.localCheckpoint(eager=False)  # LM fit + scoring consumers
-    pair = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    pair = pair.localCheckpoint(eager=False)  # head counts + scoring
-    head_t = pair.groupBy("w1").agg(F.sum("c12").alias("ch"))
-    tot = uni.agg(F.sum("c").alias("n_uni"))
-    # Q30 integer terms per DISTINCT bigram type; the per-doc score is
-    # an exact BIGINT sum — partition-order-independent by construction
-    # (round-9 verdict item 2: no float reduction ahead of the
-    # millibit quantization boundary)
-    terms = _jm_q30_spark_terms(
-        pair.join(head_t, "w1")
-        .join(uni.withColumnRenamed("word", "w2"), "w2")
-        .crossJoin(F.broadcast(tot))
-    ).select("w1", "w2", "term_q")
-    perdoc = (
-        bg.join(terms, ["w1", "w2"])
-        .groupBy("doc_id", "lang")
-        .agg(_jm_q30_spark_q().alias("q"))
-    )
+    perdoc = _jm_bigram_perdoc(spark, sf_dir, "lang")
     # two consumers (ranker + per-lang counts): pin the scored frame so
     # the LM fit+score pipeline runs once, not twice
     perdoc = perdoc.localCheckpoint(eager=False)

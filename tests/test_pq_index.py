@@ -13,7 +13,9 @@ embeddings table. These tests pin:
   ensure call rebuilds;
 * two builds racing on one root both return certified rows and
   exactly one ``index`` directory is published;
-* a second ensure call reuses the published index without fitting.
+* a second ensure call reuses the published index without fitting;
+* a build removes the older roots of its sf and the legacy artifacts
+  in its own root, so the scratch directory holds one index per sf.
 """
 
 from __future__ import annotations
@@ -162,6 +164,35 @@ def test_second_ensure_reuses_the_index_without_fitting(spark, monkeypatch, ext)
         tuple(r) for r in ext._pq_index_frames(spark, index)[1].collect()
     )
     assert before == after
+
+
+def test_a_build_leaves_one_root_per_sf(spark, tmp_path, monkeypatch):
+    """Two builds with different index parameters leave one root of
+    the sf, holding only ``index/``: the second build removes the
+    first build's root and the legacy ``codebook/`` and ``codes/`` an
+    older build left next to its own ``index/``. A root of another sf
+    stays. Precondition of the removal: no other session serves an
+    older index of the same sf at the same time."""
+    import epl_cas_etl_2026_spark.plans.extensions as ext
+
+    other_sf = tmp_path / "pq_sf0.1_0123456789ab"
+    (other_sf / "index").mkdir(parents=True)
+    spark.conf.set("spark.epl.scratch.dir", str(tmp_path))
+    try:
+        first = ext._pq_index_build(spark, SF)
+        monkeypatch.setattr(ext, "_PQ_IDX", {**ext._PQ_IDX, "iters": 1})
+        root = ext._pq_index_root(spark, SF)
+        for legacy in ("codebook", "codes"):
+            os.makedirs(os.path.join(root, legacy))
+        second = ext._pq_index_build(spark, SF)
+    finally:
+        spark.conf.unset("spark.epl.scratch.dir")
+    assert second == os.path.join(root, "index") != first
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [other_sf.name, os.path.basename(root)]
+    )
+    assert os.listdir(root) == ["index"]
+    assert os.listdir(other_sf) == ["index"]
 
 
 def test_gated_pair_green_shape(spark, ext):
