@@ -30,21 +30,16 @@ Semantics preserved from the reference, trap-by-trap:
   its period averages (A11, app.py:1186-1189), and the 'EPL CAS' row
   is the unweighted mean over group averages per period (A12).
 
-Scale: every table is read through :func:`_table`. A one-split table
-is planned as one partition, so aggregates, windows and sorts over it
-need no shuffle. One split means one small parquet file: perfbench's
-generated warehouse, or a sync sink after its first run. The sync job
-writes one file per sink per run, so from the second run on its sinks
-have several splits. A table with several splits keeps the distributed
-plan: dims broadcast, facts shuffle once per aggregate grain. A
-one-split table frame that a second request reads, and whose scan is
-at most :data:`SNAPSHOT_MAX_BYTES`, is from then on served from an
-in-memory snapshot, so a caller that keeps its table frames across
-requests re-reads no file. The snapshot lives as long as that frame
-and holds about 7x the table's parquet bytes in executor storage
-memory. A caller that opens its tables once per request
-(``plans/domain_api``) never snapshots: each request reads its pruned,
-filter-pushed scan and nothing is retained. Every ranking window is
+Scale: every table is read through :func:`_table`, and one size rule
+decides how. A table of at most :data:`SNAPSHOT_MAX_BYTES` of parquet
+files, one file (perfbench's warehouse) or several (a sync sink after
+a few daily runs), is planned as one partition, so aggregates, windows
+and sorts over it need no shuffle; from a frame's second request on it
+is served from an in-memory snapshot of about 7x its parquet bytes. A
+caller that opens its tables once per request (``plans/domain_api``)
+never snapshots. A larger table, or an in-memory frame (no size
+statistics), keeps the distributed plan: dims broadcast, facts shuffle
+once per aggregate grain. Every ranking window is
 post-aggregation (entity-grained) and guarded by competition_rank's
 row-count check.
 """
@@ -68,6 +63,7 @@ from epl_cas_etl_2026_spark.functions.scalars import (
 )
 from epl_cas_etl_2026_spark.functions.scalars import territorio as territorio_col
 from epl_cas_etl_2026_spark.operators.ranking import competition_rank, intra_group_rank
+from epl_cas_etl_2026_spark.schemas import DETAIL_FK
 
 FACT_TABLES = {
     "operativas": "supervisiones_operativas",
@@ -90,9 +86,10 @@ PREVIEW_ALLOWLIST = frozenset(
 )
 
 
-#: the largest scan, in bytes of its files, that :func:`_table` keeps an
-#: in-memory snapshot of; the snapshot takes about 7x that in executor
-#: storage memory. perfbench's largest generated table is 2.3 MB.
+#: the largest table, in bytes of its files, that :func:`_table` plans as
+#: one partition and keeps an in-memory snapshot of; the snapshot takes
+#: about 7x that in executor storage memory. perfbench's largest
+#: generated table is 2.3 MB.
 SNAPSHOT_MAX_BYTES = 8 << 20
 
 #: table frame -> [the frame requests read, None when that is the
@@ -124,45 +121,35 @@ def _request(endpoint):
 
 
 def _table(tables: dict, name: str) -> DataFrame:
-    """``tables[name]`` as a request reads it: one partition when its
-    scan is one split, and from an in-memory snapshot once a second
-    request reads the same frame.
+    """``tables[name]`` as a request reads it. One rule decides how:
+    a frame whose optimized-plan ``sizeInBytes`` is at most
+    :data:`SNAPSHOT_MAX_BYTES` is read as ``coalesce(1)`` of itself on
+    its first request, and from the lazy
+    ``coalesce(1).localCheckpoint(eager=False)`` snapshot from its
+    second request on. A larger frame, or one with no size statistics
+    (Spark reports ``Long.MaxValue``), comes back unchanged.
 
-    Precondition: the table's scan has exactly one split
-    (``getNumPartitions() == 1``, the same test
-    ``sources.parquet.spread_scan`` makes). Then:
+    Precondition: no endpoint's output depends on its input's row
+    order, because ``coalesce(1)`` concatenates the table's splits
+    (``tests/test_plan_audit.py`` compares every endpoint over
+    three-file and one-file copies of the same rows).
 
-    - The first request reads ``coalesce(1)`` of the frame. It moves no
-      row and keeps row order, and its ``SinglePartition`` output meets
-      every aggregate, window and sort requirement, so no shuffle
-      Exchange is planned over the table. Its scan stays pruned to the
-      columns the request reads, with filters pushed down.
-    - A later request over the same frame reads
-      ``coalesce(1).localCheckpoint(eager=False)`` of it, when the scan
-      is at most :data:`SNAPSHOT_MAX_BYTES`. The checkpoint keeps the
-      partitioning and the table's size statistics, so plans and
-      broadcast choices are unchanged. It is lazy: the request that
-      first reads it stores the table's rows (all columns,
-      deserialized) inside its own job, and every request after it
-      reads them from memory instead of decoding the file again.
-      Waiting for a second request keeps the snapshot to callers that
-      keep their frames: a caller that opens its tables per request
-      pays no full-column read and leaves nothing in storage.
-    - The entry is memoized per table frame, in a weak-keyed dict, so
-      the snapshot lives exactly as long as the caller's frame; Spark's
-      ContextCleaner drops its blocks once the frame and every result
-      built on it are garbage in Python and in the JVM (where the
-      scan's objects go only after a finalization pass). A frame
-      opened later over the same path gets its own entry, so a file
-      rewritten between the two opens is read anew (``cache()`` would
-      match the new frame to the old one's blocks by path and serve
-      the old rows).
-
-    A table with several splits comes back unchanged and keeps its
-    shuffles. The split count is read once per table frame
-    (``DataFrame.rdd`` is not cached, and each read costs several py4j
-    round trips), so a caller that keeps its table frames across
-    requests pays it once."""
+    - ``coalesce(1)`` moves no row across the network, and its
+      ``SinglePartition`` output meets every aggregate, window and sort
+      requirement, so no shuffle Exchange is planned over the table.
+      The first request's scan stays pruned and filter-pushed.
+    - The snapshot keeps the partitioning and the size statistics, so
+      plans and broadcast choices are unchanged. The request that
+      first reads it stores all the table's columns inside its own
+      job; later requests read memory instead of the files. A caller
+      that opens its tables per request never makes one.
+    - The size and the snapshot are kept per table frame, in a
+      weak-keyed dict, so the snapshot lives as long as the caller's
+      frame: Spark's ContextCleaner drops its blocks once the frame and
+      every result built on it are garbage in Python and in the JVM
+      (after a finalization pass). A frame opened later over the same
+      path gets its own entry, so a rewritten file is read anew
+      (``cache()`` would match the new frame to the old blocks)."""
     df = tables[name]
     request = getattr(_CURRENT, "request", None)
     if request is None:
@@ -171,13 +158,11 @@ def _table(tables: dict, name: str) -> DataFrame:
     entry = _SERVED.get(df)
     if entry is None:
         # the entry must not refer to df, or its weak key never dies
-        one_split = df.rdd.getNumPartitions() == 1
-        entry = _SERVED[df] = [df.coalesce(1), request] if one_split else [None, None]
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        small = size <= SNAPSHOT_MAX_BYTES
+        entry = _SERVED[df] = [df.coalesce(1), request] if small else [None, None]
     if entry[1] not in (None, request):
-        one = entry[0]
-        size = one._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if size <= SNAPSHOT_MAX_BYTES:
-            entry[0] = one.localCheckpoint(eager=False)
+        entry[0] = entry[0].localCheckpoint(eager=False)
         entry[1] = None
     return df if entry[0] is None else entry[0]
 
@@ -1004,8 +989,8 @@ def branch_trend(
 #: catalogo_kpis, app.py:1028-1034 — a documented reference
 #: inconsistency; this layer follows the /areas route's pair.)
 DETAIL_TABLES = {
-    "operativas": ("supervision_areas", "catalogo_areas", "area_id"),
-    "seguridad": ("seguridad_kpis", "catalogo_kpis_seguridad", "kpi_id"),
+    "operativas": ("supervision_areas", "catalogo_areas", DETAIL_FK["operativas"]),
+    "seguridad": ("seguridad_kpis", "catalogo_kpis_seguridad", DETAIL_FK["seguridad"]),
 }
 
 
@@ -1178,8 +1163,10 @@ def grupo_detalle_stats(
 #: (app.py:1028-1034), NOT the seguridad_kpis pair the /areas branch
 #: route uses — a preserved reference inconsistency.
 SUPERVISION_DETAIL_TABLES = {
-    "operativas": ("supervision_areas", "catalogo_areas", "area_id", "numero"),
-    "seguridad": ("supervision_kpis", "catalogo_kpis", "kpi_id", "id"),
+    "operativas": (
+        "supervision_areas", "catalogo_areas", DETAIL_FK["operativas"], "numero"
+    ),
+    "seguridad": ("supervision_kpis", "catalogo_kpis", DETAIL_FK["seguridad"], "id"),
 }
 
 
@@ -1377,7 +1364,11 @@ def health(spark: SparkSession) -> DataFrame:
 
 @_request
 def preview(tables: dict, table_name: str, n: int = 100) -> DataFrame:
-    """Admin table preview behind the P9 allowlist (app.py:1310-1318)."""
+    """Admin table preview behind the P9 allowlist (app.py:1310-1318).
+
+    Which ``n`` rows come back is unspecified (a ``LIMIT`` with no
+    order, as in the reference), so this endpoint alone is exempt from
+    :func:`_table`'s row-order precondition."""
     if table_name not in PREVIEW_ALLOWLIST:
         raise ValueError(f"table not allowed: {table_name}")
     return _table(tables, table_name).limit(n)

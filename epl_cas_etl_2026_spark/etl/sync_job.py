@@ -18,8 +18,10 @@ One call = one sync run:
   7. assign the calendar period via the range join (J7/T4); pin the
      batch
   8. append the exploded detail rows of each supervision the detail
-     sink does not hold yet (S5), then the master rows straight from
-     the pinned batch (S4) — one file per sink
+     sink does not hold yet (S5), keyed by the formulario's catalog
+     column (``schemas.DETAIL_FK``: ``area_id`` or ``kpi_id``), then
+     the master rows straight from the pinned batch (S4) — one file
+     per sink
   9. advance the checkpoint, write the audit row (T7); on error the
      audit records 'error' and the exception re-raises so an external
      scheduler alerts (reference etl_sync.py:397-404)
@@ -68,6 +70,7 @@ from epl_cas_etl_2026_spark.etl.zenput import (
     extract_detail_items,
     parse_submissions,
 )
+from epl_cas_etl_2026_spark.schemas import DETAIL_FK
 
 
 def _release(pinned: DataFrame) -> None:
@@ -171,7 +174,9 @@ def run_incremental_sync(
         # the detail plan runs once, inside the write.
         sid = surrogate_id(F.col("zenput_submission_id"))
         details = extract_detail_items(fresh, catalog).select(
-            sid.alias("supervision_id"), "item_id", "porcentaje"
+            sid.alias("supervision_id"),
+            F.col("item_id").alias(DETAIL_FK[formulario]),
+            "porcentaje",
         )
         probe = fresh.select(sid.alias("supervision_id"))
         append_idempotent(spark, details, detail_path, "supervision_id", n_new, probe)

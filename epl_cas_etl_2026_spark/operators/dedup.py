@@ -15,9 +15,8 @@ Design for 100 TB:
   exact Jaccard verification runs on candidates only. The expensive
   O(n²) step is gone; what remains shuffles on band keys, which are
   uniformly distributed by construction (hash values).
-* Two hash families: ``xxhash64`` (native, fastest — production path)
-  and an md5-derived 60-bit hash (the DuckDB oracle can compute the
-  identical value — correctness path). Same algorithm either way.
+* One hash family: an md5-derived 60-bit hash, which the DuckDB
+  oracle computes identically.
 """
 
 from __future__ import annotations
@@ -72,14 +71,10 @@ _H2_MOD = 2**56
 _KM_P = 4294967291  # largest prime < 2^32; pre-mod values wrap ~2^29 times
 
 
-def _km_hash_pair(s: Column, use_md5: bool) -> tuple[Column, Column]:
-    if use_md5:
-        m = F.md5(s)
-        h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(m, 17, 15), 16, 10).cast("long") % F.lit(_H2_MOD)
-    else:
-        h1 = F.pmod(F.xxhash64(s), F.lit(2**60))
-        h2 = F.pmod(F.xxhash64(s, F.lit(1)), F.lit(_H2_MOD))
+def _km_hash_pair(s: Column) -> tuple[Column, Column]:
+    m = F.md5(s)
+    h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(m, 17, 15), 16, 10).cast("long") % F.lit(_H2_MOD)
     return h1, h2
 
 
@@ -89,7 +84,6 @@ def minhash_signature_agg(
     text_col: str = "text",
     n_hashes: int = 16,
     shingle_n: int = 3,
-    use_md5: bool = False,
 ) -> DataFrame:
     """MinHash signature via explode + groupBy-min.
 
@@ -114,7 +108,7 @@ def minhash_signature_agg(
     # the per-seed mins partial-aggregate map-side and the groupBy
     # shuffles ~one 16-long row per (doc, partition) — the slim plan.
     sh = spread_scan(sh, F.col(id_col))
-    h1, h2 = _km_hash_pair(F.col("__sh"), use_md5)
+    h1, h2 = _km_hash_pair(F.col("__sh"))
     base = sh.select(F.col(id_col), h1.alias("__h1"), h2.alias("__h2"))
     derived = base.select(
         F.col(id_col),
@@ -137,7 +131,6 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_n: int = 3,
-    use_md5: bool = False,
 ) -> DataFrame:
     """LSH banding: docs sharing any (band_index, band_key) bucket are
     candidate near-duplicate pairs. Returns distinct (id_a < id_b)
@@ -153,7 +146,7 @@ def lsh_candidate_pairs(
     # cache-block-lock pathology does not reproduce on the self-join
     # consumer shape, and the checkpoint costs an extra write job.
     sig_df = minhash_signature_agg(
-        df, id_col, text_col, n_hashes, shingle_n, use_md5
+        df, id_col, text_col, n_hashes, shingle_n
     ).persist()
     band_keys = F.array(
         *[
@@ -198,12 +191,11 @@ def near_dup_pairs(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_n: int = 3,
-    use_md5: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: MinHash → LSH candidates → exact Jaccard
     verify ≥ threshold. Returns (id_a, id_b, jaccard)."""
     cands = lsh_candidate_pairs(
-        docs, id_col, text_col, n_hashes, band_size, shingle_n, use_md5
+        docs, id_col, text_col, n_hashes, band_size, shingle_n
     )
     texts = docs.select(F.col(id_col), F.col(text_col))
     ta = texts.select(
@@ -234,7 +226,6 @@ def near_dup_pairs_incremental(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_n: int = 3,
-    use_md5: bool = False,
 ) -> DataFrame:
     """Incremental near-dup: check a NEW batch against a persisted
     MinHash signature index without re-hashing the existing corpus —
@@ -252,7 +243,7 @@ def near_dup_pairs_incremental(
     """
     n_bands = n_hashes // band_size
     new_sigs = minhash_signature_agg(
-        new_docs, id_col, text_col, n_hashes, shingle_n, use_md5
+        new_docs, id_col, text_col, n_hashes, shingle_n
     )
     band_keys = F.array(
         *[

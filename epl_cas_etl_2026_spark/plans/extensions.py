@@ -361,7 +361,6 @@ def docs_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hashes=16,
         band_size=4,
         shingle_n=3,
-        use_md5=True,
     ).orderBy("id_a", "id_b")
 
 
@@ -385,7 +384,7 @@ def docs_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature index would be a stored table in production; built
     # here from the "old" corpus with the same hash params
     index_sigs = minhash_signature_agg(
-        docs.filter(~is_new), "doc_id", "text", 16, 3, use_md5=True
+        docs.filter(~is_new), "doc_id", "text", 16, 3
     )
     return near_dup_pairs_incremental(
         docs.filter(is_new),
@@ -397,7 +396,6 @@ def docs_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hashes=16,
         band_size=4,
         shingle_n=3,
-        use_md5=True,
     ).orderBy("id_a", "id_b")
 
 
@@ -506,7 +504,7 @@ def docs_minhash_estimate_error(
     # blocks AQE on the cached subtree (r11 session-3 measurement on
     # the KMV query: 23-34 s persist vs 1.2 s checkpoint)
     sigs = minhash_signature_agg(
-        docs, "doc_id", "text", 16, 3, use_md5=True
+        docs, "doc_id", "text", 16, 3
     ).localCheckpoint(eager=False)
     band_keys = F.array(
         *[

@@ -157,6 +157,11 @@ CATALOGO_SCHEMA = T.StructType(
     ]
 )
 
+#: formulario -> the column its detail rows name their catalog item by:
+#: the reference's supervision_areas.area_id and seguridad_kpis.kpi_id
+#: (SURVEY.md §1.2). The sync writes it and the dashboard joins on it.
+DETAIL_FK = {"operativas": "area_id", "seguridad": "kpi_id"}
+
 # Zenput submission (in-flight nested JSON — reference etl_sync.py:141-158,
 # 206-224): answers[] is an array of {field_type, title, value} structs.
 ZENPUT_ANSWER_SCHEMA = T.StructType(

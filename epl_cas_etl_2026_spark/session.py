@@ -7,9 +7,10 @@ from spark-submit.  Scale-relevant defaults:
   * AQE on (runtime shuffle coalescing, skew-join splitting, broadcast
     demotion) — at 100 TB the static ``spark.sql.shuffle.partitions``
     is always wrong for *some* stage; AQE repairs it.
-  * shuffle.partitions sized to the local core count for tests; on a
-    1000-executor cluster this should be ~2-3× total cores (set via
-    submit conf, not here).
+  * shuffle.partitions fixed at 32, which AQE coalesces down for the
+    local core counts tests and benchmarks run at; on a 1000-executor
+    cluster this should be ~2-3× total cores (set via submit conf, not
+    here).
   * Arrow enabled so any Pandas-UDF path is batch-vectorized.
   * UTC session timezone — parquet timestamps compare deterministically
     against the DuckDB oracle.
@@ -34,7 +35,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "epl-cas-etl-2026-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -42,13 +42,11 @@ def get_spark(
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

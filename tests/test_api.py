@@ -997,6 +997,16 @@ def test_api_serves_etl_sync_output(spark, tmp_path):
     assert stats.total_sucursales == 2
     assert stats.cobertura == 50.0
 
+    # the drill-downs join the synced detail sink on the reference's
+    # FK name (area_id for operativas)
+    tables["supervision_areas"] = spark.read.parquet(f"{wh}/detalle_operativas")
+    tables["catalogo_areas"] = catalog
+    areas = api.branch_areas(tables, 10, "operativas", periodo_id=1).collect()
+    assert [tuple(r) for r in areas] == [("CF", "CUARTO FRIO", 92.0, 1)]
+    for sid in [r.id for r in master.collect()]:
+        by_id = api.supervision_areas_by_id(tables, sid, "operativas").collect()
+        assert [tuple(r) for r in by_id] == [("CUARTO FRIO", 92.0, "excellent", 1)]
+
 
 def test_set_periodo_activo(domain):
     tables, _ = domain

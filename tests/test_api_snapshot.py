@@ -1,4 +1,4 @@
-"""The in-memory snapshot ``api._table`` serves a one-split table from.
+"""The in-memory snapshot ``api._table`` serves a small table from.
 
 The snapshot belongs to the table frame: it is made when a second
 request reads the frame, and it has a size bound, so a caller that opens

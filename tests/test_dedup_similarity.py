@@ -35,7 +35,7 @@ def test_near_dup_pipeline_finds_planted_pair(spark, docs):
     # hash family makes the outcome deterministic. The default 4×4
     # banding targets higher-similarity pairs and would miss J=0.4.
     pairs = near_dup_pairs(
-        docs, threshold=0.5, use_md5=True, band_size=1
+        docs, threshold=0.5, band_size=1
     ).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in got  # exact dup certainly caught
@@ -58,7 +58,7 @@ def test_text_helpers(spark, docs):
 def test_minhash_agg_drops_short_docs(spark, docs):
     from epl_cas_etl_2026_spark.operators.dedup import minhash_signature_agg
 
-    sig = minhash_signature_agg(docs, "doc_id", "text", n_hashes=4, use_md5=True)
+    sig = minhash_signature_agg(docs, "doc_id", "text", n_hashes=4)
     ids = sorted(r["doc_id"] for r in sig.collect())
     assert ids == [1, 2, 3, 4]  # doc 5 ("ab") has no 3-shingles
     # identical docs → identical signatures

@@ -618,7 +618,7 @@ def test_in_batch_copies_score_from_the_kept_copy(spark, tmp_path):
     master = spark.read.parquet(f"{wh}/supervisiones_operativas").collect()
     assert [(r.calificacion_general, r.fecha_supervision.hour) for r in master] == [(90.0, 8)]
     detail = spark.read.parquet(f"{wh}/detalle_operativas").collect()
-    assert [(r.item_id, r.porcentaje) for r in detail] == [(2, 91.0)]
+    assert [(r.area_id, r.porcentaje) for r in detail] == [(2, 91.0)]
 
 
 @pytest.mark.parametrize("sink", ["detalle_operativas", "supervisiones_operativas"])
@@ -661,7 +661,7 @@ def test_sync_crash_after_a_sink_append_loses_nothing(spark, tmp_path, monkeypat
     ids = [r.zenput_submission_id for r in
            spark.read.parquet(f"{wh}/supervisiones_operativas").collect()]
     assert sorted(ids) == [str(10_000 + j) for j in range(7)]
-    details = [(r.supervision_id, r.item_id) for r in
+    details = [(r.supervision_id, r.area_id) for r in
                spark.read.parquet(f"{wh}/detalle_operativas").collect()]
     assert len(details) == len(set(details)) == 7 * 2
     estados = [r.estado for r in spark.read.parquet(f"{wh}/sync_log").collect()]
@@ -740,7 +740,7 @@ def test_detail_rows_of_a_supervision_share_one_file(spark, tmp_path, monkeypatc
     ]
     assert len([ids for ids in per_file if ids]) > 1, files
     assert sum(len(ids) for ids in per_file) == len(set().union(*per_file)) == 20
-    assert spark.read.parquet(str(detail)).columns == ["supervision_id", "item_id", "porcentaje"]
+    assert spark.read.parquet(str(detail)).columns == ["supervision_id", "area_id", "porcentaje"]
 
 
 def test_detail_write_runs_the_detail_plan_once(spark, tmp_path, monkeypatch):

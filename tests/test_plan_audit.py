@@ -547,8 +547,9 @@ def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     fixture) every dashboard endpoint plans without a shuffle:
     api._table serves each table as one partition, which meets
     every aggregate, window and sort requirement. The rewrite depends
-    on that precondition, so over the same rows as in-memory frames of
-    two partitions ranking_sucursales still shuffles."""
+    on the table's size statistics, so over the same rows as in-memory
+    frames of two partitions (which have none) ranking_sucursales
+    still shuffles."""
     from epl_cas_etl_2026_spark import api
 
     frames, _, root = domain_files
@@ -560,6 +561,59 @@ def test_one_split_tables_plan_no_shuffle(spark, domain_files):
     assert not any(shuffles.values()), shuffles
     kw = _ONE_SPLIT_ENDPOINTS["ranking_sucursales"]
     assert _shuffles(api.ranking_sucursales(multi_split_tables(frames), **kw)) > 0
+
+
+def _three_file_tables(spark, frames: dict, root: str) -> dict:
+    """``frames`` written under ``root`` as three parquet files per
+    table, the shape of a sync sink after three daily runs, and opened
+    with ``spark.read.parquet``. A row goes to the file its hash picks,
+    so the files' rows are a reshuffle of the one-file copy's."""
+    from pyspark.sql import functions as F
+
+    tables = {}
+    for name, df in frames.items():
+        path = os.path.join(root, name)
+        for k in range(3):
+            part = df.filter(F.pmod(F.xxhash64(*df.columns), F.lit(3)) == k)
+            part.coalesce(1).write.mode("append").parquet(path)
+        tables[name] = spark.read.parquet(path)
+    return tables
+
+
+def test_three_file_tables_plan_no_shuffle_and_match_one_file(
+    spark, domain_files, tmp_path
+):
+    """A table of several small files (a sync sink after a few daily
+    runs) is served like a one-file table: every dashboard endpoint
+    plans without a shuffle over the three-file copies, and returns the
+    same rows, in the same order, as over the one-file copies. The
+    second half checks api._table's precondition: coalesce(1)
+    concatenates the files in whatever order the scan lists them, so
+    no endpoint's output may depend on its input's row order.
+    (``preview`` is exempt: its LIMIT has no order.)"""
+    from epl_cas_etl_2026_spark import api
+
+    frames, _, root = domain_files
+    one_file = one_split_tables(spark, frames, root)
+    three_files = _three_file_tables(spark, frames, str(tmp_path))
+    files = {
+        name: sum(f.endswith(".parquet") for f in os.listdir(tmp_path / name))
+        for name in frames
+    }
+    assert set(files.values()) == {3}, files
+    assert three_files["sucursales"].rdd.getNumPartitions() == 3
+    shuffles = {
+        name: _shuffles(getattr(api, name)(three_files, **kw))
+        for name, kw in _ONE_SPLIT_ENDPOINTS.items()
+    }
+    assert not any(shuffles.values()), shuffles
+    differ = [
+        name
+        for name, kw in _ONE_SPLIT_ENDPOINTS.items()
+        if getattr(api, name)(three_files, **kw).collect()
+        != getattr(api, name)(one_file, **kw).collect()
+    ]
+    assert not differ, differ
 
 
 def test_second_build_launches_no_job(spark, domain_files):
