@@ -24,6 +24,7 @@ at production scale.
 from __future__ import annotations
 
 import os
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -240,7 +241,8 @@ def one_row(spark: SparkSession, schema, values) -> DataFrame:
     ``createDataFrame`` list is a Python RDD, and writing it starts a
     Python worker (~360 ms against ~160 ms for this form). The CASE
     WHEN keeps each column nullable, as ``schema`` declares it: a bare
-    literal would write a REQUIRED parquet column."""
+    literal would write a REQUIRED parquet column. The daily sync's
+    dims avoid Python RDDs the same way (:func:`local_dim`)."""
     on = F.col("id") == 0
     return spark.range(0, 1, 1, 1).select(
         *[
@@ -248,6 +250,34 @@ def one_row(spark: SparkSession, schema, values) -> DataFrame:
             for f, v in zip(schema.fields, values)
         ]
     )
+
+
+#: caller's dim frame -> its JVM-local copy, None when the frame is read
+#: as it is (see :func:`local_dim`)
+_LOCAL_DIMS: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def local_dim(df: DataFrame) -> DataFrame:
+    """``df`` as the sync reads a dimension table. A frame whose
+    analyzed plan is a ``LogicalRDD`` (a ``createDataFrame`` list, a
+    Python RDD that every scan reads through Python tasks) is collected
+    once through Arrow and rebuilt as a ``LocalRelation``, which the JVM
+    scans itself; every later call with the same frame returns that
+    copy. Any other frame (files, JDBC, a ``LocalRelation``, a derived
+    plan) comes back unchanged, so it is read anew on every run.
+
+    Exact because an RDD's rows are fixed. The copy is kept in a
+    weak-keyed dict and refers nothing back to ``df``, so it dies with
+    the caller's frame; it holds no persisted block."""
+    try:
+        local = _LOCAL_DIMS[df]
+    except KeyError:
+        local = None
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            local = df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
+        _LOCAL_DIMS[df] = local
+    return df if local is None else local
 
 
 # ---------------------------------------------------------------------------

@@ -42,6 +42,19 @@ submission time (``fecha_supervision``), not file time, and a file can
 carry late re-deliveries of earlier days (which the dedup drops) next
 to new submissions, so no file can be skipped by its name or mtime.
 The scan is the run's only pass over the landing JSON.
+
+Dims. The three dimension frames (``sucursales``, ``periodos``,
+``catalog``) are tiny, and callers build them with
+``spark.createDataFrame(list)``: a Python RDD, which every broadcast
+of it would read again through Python tasks. ``pipeline.local_dim``
+rebuilds each frame whose analyzed plan is a ``LogicalRDD`` once per
+frame, as a JVM-side ``LocalRelation`` (collected through Arrow), and
+this run and every later run passed the same frame use that copy. It
+is exact because an RDD's rows are fixed; a frame read from files or
+JDBC, or derived from another, is used as given and so read anew on
+every run. The copy lives as long as the caller's frame and persists
+no block. The first run with a new frame pays one collect job per
+rebuilt dim; later runs make no Python pass.
 """
 
 from __future__ import annotations
@@ -59,6 +72,7 @@ from epl_cas_etl_2026_spark.etl.pipeline import (
     assign_periodo,
     audit_log,
     dedup_against_sink,
+    local_dim,
     read_checkpoint,
     recover_location,
     resolve_sucursal_fk,
@@ -104,6 +118,7 @@ def run_incremental_sync(
     inicio = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     pins: list[DataFrame] = []
     try:
+        sucursales, periodos, catalog = map(local_dim, (sucursales, periodos, catalog))
         watermark = read_checkpoint(spark, ckpt_path, formulario)
 
         subs = parse_submissions(spark.read.text(landing_dir))

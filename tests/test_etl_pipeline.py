@@ -707,6 +707,101 @@ def test_daily_sync_job_and_file_ceiling(spark, tmp_path):
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
+def _executed_plans(spark, run) -> list[str]:
+    """Calls ``run()``; returns the physical plan of every SQL execution
+    it started."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    first = max((e.executionId() for e in executions()), default=-1) + 1
+    run()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() >= first]
+
+
+def _python_rdd_scans(plans: list[str]) -> list[str]:
+    """The scans in ``plans`` of a frame built from a Python RDD (a
+    ``createDataFrame`` list)."""
+    return [
+        line for plan in plans for line in plan.splitlines()
+        if "ExistingRDD" in line and "applySchemaToPythonRDD" in line
+    ]
+
+
+def test_driver_built_dims_are_read_once_per_frame(spark, tmp_path):
+    """Dims built with ``createDataFrame(list)`` are Python RDDs. The
+    sync rebuilds each one once per frame as a JVM-local relation with
+    the same schema and rows, so a second daily run with the same
+    frames scans none of them through Python."""
+    from epl_cas_etl_2026_spark.etl.pipeline import local_dim
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh = str(tmp_path / "wh")
+    dims = _sync_dims(spark)
+    _day_file(landing, 10, 20)
+    assert run_incremental_sync(spark, str(landing), wh, *dims) == 20
+
+    _day_file(landing, 11, 20)
+    loaded = []
+    plans = _executed_plans(
+        spark, lambda: loaded.append(run_incremental_sync(spark, str(landing), wh, *dims))
+    )
+    assert loaded == [20]
+    assert _python_rdd_scans(plans) == []
+    assert any("LocalTableScan" in plan for plan in plans)
+    for dim in dims:
+        local = local_dim(dim)
+        assert local is not dim and local_dim(dim) is local
+        assert local.schema == dim.schema
+        assert sorted(local.collect()) == sorted(dim.collect())
+
+
+def test_a_new_dims_frame_is_read_anew(spark, tmp_path):
+    """The local copy is kept per frame, not per table: run 2 gets a new
+    sucursales frame that adds the branch of its submissions, and they
+    resolve it. A parquet-backed dim is used as given, so run 2 still
+    plans its parquet scan."""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    sucursales, periodos, catalog = _sync_dims(spark)
+    cat_path = str(tmp_path / "catalogo")
+    catalog.write.parquet(cat_path)
+    catalog = spark.read.parquet(cat_path)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh = str(tmp_path / "wh")
+    _day_file(landing, 10, 3)
+    assert run_incremental_sync(spark, str(landing), wh, sucursales, periodos, catalog) == 3
+
+    (landing / "2026-02-11.jsonl").write_text("".join(
+        json.dumps(_submission(11_000 + j, loc="LOC-002", date=f"2026-02-11T09:0{j}:00Z")) + "\n"
+        for j in range(3)
+    ))
+    sucursales = spark.createDataFrame(
+        [(10, "Centro", "1", "NL", "MTY", 1, True, "local", 25.0, -100.0, "LOC-001"),
+         (11, "Norte", "2", "NL", "MTY", 1, True, "local", 25.1, -100.1, "LOC-002")],
+        SUCURSALES_SCHEMA,
+    )
+    loaded = []
+    plans = _executed_plans(
+        spark,
+        lambda: loaded.append(
+            run_incremental_sync(spark, str(landing), wh, sucursales, periodos, catalog)
+        ),
+    )
+    assert loaded == [3]
+    master = spark.read.parquet(f"{wh}/supervisiones_operativas")
+    day11 = master.filter(F.col("zenput_submission_id").startswith("110"))
+    assert sorted(r.sucursal_id for r in day11.collect()) == [11, 11, 11]
+    assert any(cat_path in plan for plan in plans)
+
+
 def test_detail_rows_of_a_supervision_share_one_file(spark, tmp_path, monkeypatch):
     """The detail guard skips every supervision the detail sink already
     holds, which is exact only if each supervision's rows are written

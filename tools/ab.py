@@ -12,10 +12,18 @@ stretch of the host falls on both sides alike.
 
 Prints one line per run with the host's pace (the median burst of
 ``common.Pace``, in seconds; lower is faster) and load average, then
-one line per metric: the median over seeds of each side, the relative
-change of the medians and how many seeds moved the same way, and the
-interquartile range of the base side. With ``--trace 1`` the metrics
-are the per-layer ones.
+one line per metric with what a claimed gain must show (ten or more
+pairs, the tree winning nine tenths of them, and medians further apart
+than the base's own spread):
+
+- the median of each side and the relative change of the medians;
+- the pairs the tree won, in the metric's ``better`` direction from
+  ``BENCHMARK.json``, out of all pairs; a tie counts for neither side;
+- each side's first and third quartiles;
+- ``yes`` when |tree median - base median| exceeds the base
+  interquartile range.
+
+With ``--trace 1`` the metrics are the per-layer ones.
 """
 
 from __future__ import annotations
@@ -65,21 +73,38 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
     return q[0], q[2]
 
 
-def report(runs: dict[str, list[dict]]) -> list[str]:
-    """Per-metric lines: base and tree medians, the change of the
-    medians, seeds that moved the same way, and the base IQR."""
+def directions() -> dict[str, str]:
+    """Metric name -> its ``better`` direction (``lower``/``higher``)
+    as ``BENCHMARK.json`` declares it."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+
+
+def report(runs: dict[str, list[dict]], better: dict[str, str]) -> list[str]:
+    """Per-metric lines: base and tree medians and their change, pairs
+    won by the tree in the metric's ``better`` direction (``lower``
+    when ``better`` does not name it; ties count for neither side),
+    each side's quartiles, and whether the medians differ by more than
+    the base IQR. ``runs[side][i]`` of both sides form pair ``i``."""
     names = list(runs["base"][0]["result"]["metrics"])
-    out = [f"{'metric':40s} {'base':>12s} {'tree':>12s} {'change':>8s} {'seeds':>6s} {'base IQR':>12s}"]
+    out = [
+        f"{'metric':40s} {'base':>10s} {'tree':>10s} {'change':>8s} {'won':>6s} "
+        f"{'base q1..q3':>21s} {'tree q1..q3':>21s} {'>IQR':>5s}"
+    ]
     for name in names:
         base = [r["result"]["metrics"][name]["value"] for r in runs["base"]]
         tree = [r["result"]["metrics"][name]["value"] for r in runs["tree"]]
         mb, mt = statistics.median(base), statistics.median(tree)
         change = (mt - mb) / mb * 100.0 if mb else 0.0
-        same = sum((t < b) == (mt < mb) for b, t in zip(base, tree) if t != b)
-        q1, q3 = _quartiles(base)
+        sign = -1.0 if better.get(name, "lower") == "lower" else 1.0
+        won = sum(sign * (t - b) > 0 for b, t in zip(base, tree))
+        bq1, bq3 = _quartiles(base)
+        tq1, tq3 = _quartiles(tree)
+        beyond = "yes" if abs(mt - mb) > bq3 - bq1 else "no"
         out.append(
-            f"{name:40s} {mb:12.4g} {mt:12.4g} {change:+7.1f}% "
-            f"{same:>3d}/{len(base):<2d} {q3 - q1:12.4g}"
+            f"{name:40s} {mb:10.4g} {mt:10.4g} {change:+7.1f}% {won:>3d}/{len(base):<2d} "
+            f"{bq1:10.4g}..{bq3:<9.4g} {tq1:10.4g}..{tq3:<9.4g} {beyond:>5s}"
         )
     return out
 
@@ -114,7 +139,7 @@ def main() -> int:
                 )
         print()
         print(f"{a.workload}: medians over seeds {a.seeds}, base {a.base}")
-        print("\n".join(report(runs)))
+        print("\n".join(report(runs, directions())))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return 0

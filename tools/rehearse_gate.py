@@ -16,6 +16,10 @@ to a shared operator or helper selects every query that reaches it
 without a hand-kept list. An unchanged tree rehearses nothing; a
 one-query edit rehearses that query in seconds instead of the full
 sweep.
+
+Each query prints ``PASS <name> <seconds>`` or ``FAIL <name> <seconds>``
+to stdout as it finishes; the summary line and each failure's message
+follow the last one.
 """
 
 from __future__ import annotations
@@ -81,22 +85,27 @@ def main() -> int:
         # sweep log attributes every warning to the query that emitted
         # it — grep -B1 for the warning to find the marker above it
         print(f"### QUERY {name}", file=sys.stderr, flush=True)
+        t = time.time()
+        error = None
         try:
             sdf = qs[name](spark, args.sf)
             if name in osql:
                 ok, msg = compare(sdf, con, osql[name])
                 if not ok:
-                    failures.append((name, msg[:200]))
+                    error = msg[:200]
             else:
                 sdf.count()  # rows-only query: must at least execute
         except Exception as ex:  # noqa: BLE001 — report, don't abort the sweep
-            failures.append((name, repr(ex)[:200]))
+            error = repr(ex)[:200]
+        print(f"{'FAIL' if error else 'PASS'} {name} {time.time() - t:.1f}", flush=True)
+        if error:
+            failures.append((name, error))
     print(
         f"rehearsed {len(names)} queries at {args.sf} in "
         f"{time.time() - t0:.0f}s — failures: {len(failures)}"
     )
     for n, m in failures:
-        print(f"FAIL {n}: {m}")
+        print(f"  {n}: {m}")
     return 1 if failures else 0
 
 
